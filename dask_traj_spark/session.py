@@ -29,6 +29,31 @@ def _xms_opt(driver_mem: str) -> str:
     return f"-Xms{half}{m.group(2)}"
 
 
+def _host_driver_mem() -> str:
+    """Driver heap for this host: half of the memory the process may
+    use, min(MemAvailable, cgroup memory limit), in whole GiB between
+    1g and 48g. A heap sized for a bigger host cannot start on a
+    smaller one: the JVM reserves -Xms up front and dies at launch."""
+    limits = [os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")]
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemAvailable:"):
+                    limits.append(int(line.split()[1]) * 1024)
+    except OSError:
+        pass
+    for cg in (
+        "/sys/fs/cgroup/memory.max",  # cgroup v2
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+    ):
+        try:
+            with open(cg) as fh:
+                limits.append(int(fh.read()))
+        except (OSError, ValueError):  # absent, or "max" (no limit)
+            pass
+    return f"{max(1, min(48, min(limits) // 2 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "dask-traj-spark",
     master: str | None = None,
@@ -38,10 +63,12 @@ def get_spark(
     """Build (or fetch) the tuned SparkSession.
 
     ``SPARK_GRAFT_CPUS`` (driver contract) overrides local
-    parallelism; on a real cluster ``master`` comes from
-    spark-submit and these configs still apply.
+    parallelism and ``SPARK_DRIVER_MEM`` the driver heap, which
+    otherwise comes from the host (``_host_driver_mem``); on a real
+    cluster ``master`` comes from spark-submit and these configs
+    still apply.
     """
-    driver_mem = os.environ.get("SPARK_DRIVER_MEM", "48g")
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or _host_driver_mem()
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
         master = f"local[{cpus}]" if cpus else "local[*]"

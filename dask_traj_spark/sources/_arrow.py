@@ -1,26 +1,37 @@
-"""Arrow batch emission for trajectory DataSource readers.
+"""The one chunked-frame DataSource every trajectory format reads through.
 
-Spark 4 Python DataSources may yield ``pyarrow.RecordBatch`` objects
-from ``read()`` instead of per-row tuples; for a frame of N atoms
-that replaces N tuple constructions + N row pickles with one
-columnar hand-off (zero-copy into the JVM via Arrow IPC). On a
-275k-row file this is the difference between the scan being
-decode-bound and being serialization-bound — and at 100 TB every
-scan task crosses this boundary once per batch instead of once per
-atom.
+The reference's loader is one idea (core/dask_traj.py:103-140,
+329-361): index a file's frames, cut the index into chunks, decode
+each chunk lazily. Here that idea is a single Spark 4 Python
+DataSource, ``trajframes``, whose ``format`` option names a format
+module in this package. A format module supplies two functions:
 
-All trajectory sources share one output schema
-``(frame_id long, atom_id int, x float, y float, z float)``; the
-helper below converts an iterator of decoded ``(frame_id, xyz)``
-frames into batches of ~``rows_per_batch`` rows (several frames per
-batch — Arrow overhead is per-batch, so tiny frames are coalesced).
+- ``plan_chunks(path, chunks) -> list[payload]`` runs at planning
+  time and returns one picklable payload per frame-chunk (byte
+  offsets for scanned text/XTC formats, ``(start, count)`` for
+  fixed-stride binary formats);
+- ``decode_chunk(path, payload) -> Iterator[(frame_id, xyz)]`` runs
+  in the scan task and yields each frame of its chunk as an
+  ``(n_atoms, 3)`` array in nm.
+
+Loaders call :func:`scan_frames`. Every format shares one output
+schema ``(frame_id long, atom_id int, x float, y float, z float)``,
+and ``read()`` yields ``pyarrow.RecordBatch`` objects instead of
+per-row tuples: for a frame of N atoms that replaces N tuple
+constructions + N row pickles with one columnar hand-off (zero-copy
+into the JVM via Arrow IPC). Batches hold ~``rows_per_batch`` rows
+(several frames per batch — Arrow overhead is per-batch, so tiny
+frames are coalesced).
 """
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Iterable, Iterator
 
 import numpy as np
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 
 def frames_to_record_batches(
@@ -64,3 +75,69 @@ def frames_to_record_batches(
             nrows = 0
     if nrows:
         yield flush()
+
+
+def chunk_list(items: list, chunks: int) -> list[list]:
+    """Cut a per-frame index into consecutive runs of ``chunks``."""
+    return [items[i : i + chunks] for i in range(0, len(items), chunks)]
+
+
+def chunk_range(n_frames: int, chunks: int) -> list[tuple[int, int]]:
+    """``(start, count)`` payloads for a fixed-stride format."""
+    return [(s, chunks) for s in range(0, n_frames, chunks)]
+
+
+def _format_module(fmt: str):
+    return importlib.import_module(f"{__package__}.{fmt}")
+
+
+class _Chunk(InputPartition):
+    def __init__(self, payload):
+        self.payload = payload
+
+
+class _FrameChunkReader(DataSourceReader):
+    # holds the format's name, not its module: the reader is pickled
+    # to the scan tasks and a module object is not picklable
+    def __init__(self, options):
+        self.fmt = options["format"]
+        self.path = options["path"]
+        self.chunks = int(options["chunks"])
+
+    def partitions(self):
+        plan = _format_module(self.fmt).plan_chunks(self.path, self.chunks)
+        return [_Chunk(p) for p in plan]
+
+    def read(self, partition):
+        frames = _format_module(self.fmt).decode_chunk(self.path, partition.payload)
+        yield from frames_to_record_batches(frames)
+
+
+class FrameChunkSource(DataSource):
+    """``spark.read.format("trajframes").option("format", m)
+    .option("path", p).option("chunks", N).load()``"""
+
+    @classmethod
+    def name(cls):
+        return "trajframes"
+
+    def schema(self):
+        return "frame_id long, atom_id int, x float, y float, z float"
+
+    def reader(self, schema):
+        return _FrameChunkReader(self.options)
+
+
+def scan_frames(spark: SparkSession, fmt: str, path: str, chunks: int) -> DataFrame:
+    """Lazy coords scan of ``path`` through format module ``fmt``,
+    one partition per chunk of ``chunks`` frames. Registers the
+    source on every call: a per-session guard cannot tell a stopped
+    session from its successor, and re-registering is cheap."""
+    spark.dataSource.register(FrameChunkSource)
+    return (
+        spark.read.format("trajframes")
+        .option("format", fmt)
+        .option("path", path)
+        .option("chunks", str(chunks))
+        .load()
+    )

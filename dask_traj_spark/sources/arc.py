@@ -4,7 +4,7 @@ Public layout per frame: ``natoms [title]`` line; optionally one
 box line (``a b c alpha beta gamma``); then one line per atom:
 ``serial name x y z type [bonded...]`` (Å, free format). Reference:
 ``file_returns['.arc'] = [xyz, unitcell_lengths, unitcell_angles]``
-(core/dask_traj.py:27). Same chunked-DataSource shape as XYZ; the
+(core/dask_traj.py:27). Same chunked shape as XYZ; the
 box line is auto-detected (6 floats, first token non-integer-like
 position — an atom line always starts with an integer serial AND
 has a name token in position 2).
@@ -15,6 +15,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import SparkSession
 
+from dask_traj_spark.sources._arrow import chunk_list, scan_frames
 from dask_traj_spark.trajectory import Trajectory
 
 ANGSTROM_TO_NM = 0.1
@@ -60,7 +61,7 @@ def index_arc(path: str):
     return frames
 
 
-def _decode_frame_arrays(path: str, specs):
+def decode_chunk(path: str, specs):
     """specs: [(frame_id, atoms_offset, n)] → (frame_id, xyz f32 nm)."""
     with open(path, "rb") as f:
         for fid, offset, n in specs:
@@ -81,57 +82,9 @@ def _decode_frame_arrays(path: str, specs):
             yield fid, xyz
 
 
-try:  # Spark >= 4.0 Python DataSource API
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-    class _ArcPartition(InputPartition):
-        def __init__(self, specs):
-            self.specs = specs
-
-    class ArcDataSourceReader(DataSourceReader):
-        def __init__(self, schema, options):
-            self.path = options.get("path")
-            self.chunks = int(options.get("chunks", 10))
-
-        def partitions(self):
-            idx = [(fid, off, n) for fid, off, n, _b in index_arc(self.path)]
-            return [
-                _ArcPartition(idx[i : i + self.chunks])
-                for i in range(0, len(idx), self.chunks)
-            ]
-
-        def read(self, partition):
-            from dask_traj_spark.sources._arrow import frames_to_record_batches
-
-            yield from frames_to_record_batches(
-                _decode_frame_arrays(self.path, partition.specs)
-            )
-
-    class ArcDataSource(DataSource):
-        """``spark.read.format("arctraj").option("chunks", N).load(p)``"""
-
-        @classmethod
-        def name(cls):
-            return "arctraj"
-
-        def schema(self):
-            return "frame_id long, atom_id int, x float, y float, z float"
-
-        def reader(self, schema):
-            return ArcDataSourceReader(schema, self.options)
-
-    HAVE_DATASOURCE_API = True
-except ImportError:  # pragma: no cover
-    HAVE_DATASOURCE_API = False
-
-
-_REGISTERED: set[int] = set()
-
-
-def register(spark: SparkSession) -> None:
-    if HAVE_DATASOURCE_API and id(spark) not in _REGISTERED:
-        spark.dataSource.register(ArcDataSource)
-        _REGISTERED.add(id(spark))
+def plan_chunks(path: str, chunks: int) -> list[list[tuple]]:
+    specs = [(f, off, n) for f, off, n, _b in index_arc(path)]
+    return chunk_list(specs, chunks)
 
 
 def load_arc(spark: SparkSession, path: str, chunks: int = 10) -> Trajectory:
@@ -139,28 +92,7 @@ def load_arc(spark: SparkSession, path: str, chunks: int = 10) -> Trajectory:
     idx = index_arc(path)
     if not idx:
         raise ValueError(f"empty ARC file: {path}")
-    if HAVE_DATASOURCE_API:
-        register(spark)
-        coords = (
-            spark.read.format("arctraj")
-            .option("path", path)
-            .option("chunks", str(chunks))
-            .load()
-        )
-    else:  # pragma: no cover
-        import pandas as pd
-
-        rows = [
-            (fid, aid, float(x), float(y), float(z))
-            for fid, xyz in _decode_frame_arrays(
-                path, [(f, o, n) for f, o, n, _b in idx]
-            )
-            for aid, (x, y, z) in enumerate(xyz)
-        ]
-        coords = spark.createDataFrame(
-            pd.DataFrame(rows, columns=["frame_id", "atom_id", "x", "y", "z"]),
-            schema="frame_id long, atom_id int, x float, y float, z float",
-        )
+    coords = scan_frames(spark, "arc", path, chunks)
     frames = spark.createDataFrame(
         [(fid, float(fid), fid) for fid, _o, _n, _b in idx],
         "frame_id long, time double, step long",

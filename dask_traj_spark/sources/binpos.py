@@ -15,6 +15,7 @@ import struct
 import numpy as np
 from pyspark.sql import SparkSession
 
+from dask_traj_spark.sources._arrow import chunk_range, scan_frames
 from dask_traj_spark.trajectory import Trajectory
 
 MAGIC = b"fxyz"
@@ -61,84 +62,20 @@ def write_binpos(traj: Trajectory, path: str) -> None:
             f.write(ang[fid].tobytes())
 
 
-try:  # Spark >= 4.0 Python DataSource API
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-    class _BinposPartition(InputPartition):
-        def __init__(self, start, count):
-            self.start = start
-            self.count = count
-
-    class BinposDataSourceReader(DataSourceReader):
-        def __init__(self, schema, options):
-            self.path = options.get("path")
-            self.chunks = int(options.get("chunks", 100))
-            self.info = read_info(self.path)
-
-        def partitions(self):
-            return [
-                _BinposPartition(s, self.chunks)
-                for s in range(0, self.info.n_frames, self.chunks)
-            ]
-
-        def read(self, partition):
-            from dask_traj_spark.sources._arrow import frames_to_record_batches
-
-            yield from frames_to_record_batches(
-                _read_frames(self.path, self.info, partition.start, partition.count)
-            )
-
-    class BinposDataSource(DataSource):
-        """``spark.read.format("binpostraj").option("chunks", N).load(p)``"""
-
-        @classmethod
-        def name(cls):
-            return "binpostraj"
-
-        def schema(self):
-            return "frame_id long, atom_id int, x float, y float, z float"
-
-        def reader(self, schema):
-            return BinposDataSourceReader(schema, self.options)
-
-    HAVE_DATASOURCE_API = True
-except ImportError:  # pragma: no cover
-    HAVE_DATASOURCE_API = False
+def plan_chunks(path: str, chunks: int) -> list[tuple[int, int]]:
+    return chunk_range(read_info(path).n_frames, chunks)
 
 
-_REGISTERED: set[int] = set()
-
-
-def register(spark: SparkSession) -> None:
-    if HAVE_DATASOURCE_API and id(spark) not in _REGISTERED:
-        spark.dataSource.register(BinposDataSource)
-        _REGISTERED.add(id(spark))
+def decode_chunk(path: str, payload: tuple[int, int]):
+    start, count = payload
+    return _read_frames(path, read_info(path), start, count)
 
 
 def load_binpos(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory:
     """Load a .binpos trajectory (xyz only — no time/box in the
     format; time falls back to arange, reference S8)."""
     info = read_info(path)
-    if HAVE_DATASOURCE_API:
-        register(spark)
-        coords = (
-            spark.read.format("binpostraj")
-            .option("path", path)
-            .option("chunks", str(chunks))
-            .load()
-        )
-    else:  # pragma: no cover
-        import pandas as pd
-
-        rows = [
-            (fid, aid, float(x), float(y), float(z))
-            for fid, xyz in _read_frames(path, info, 0, info.n_frames)
-            for aid, (x, y, z) in enumerate(xyz)
-        ]
-        coords = spark.createDataFrame(
-            pd.DataFrame(rows, columns=["frame_id", "atom_id", "x", "y", "z"]),
-            schema="frame_id long, atom_id int, x float, y float, z float",
-        )
+    coords = scan_frames(spark, "binpos", path, chunks)
     frames = spark.createDataFrame(
         [(fid, float(fid), fid) for fid in range(info.n_frames)],
         "frame_id long, time double, step long",

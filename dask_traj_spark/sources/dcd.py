@@ -14,11 +14,11 @@ is wrapped in 4-byte little-endian length prefix/suffix):
   (all x, all y, all z) in Å.
 
 Fixed frame stride ⇒ byte offsets are computable from the header
-alone, so ``partitions()`` needs NO file scan (unlike text XYZ): one
-``InputPartition`` per frame-chunk with a seek offset — the
+alone, so ``plan_chunks`` needs NO file scan (unlike text XYZ): one
+``(start, count)`` payload per frame-chunk, decoded by seek — the
 reference's chunked lazy load (core/dask_traj.py:103-140,329-361)
-expressed as a Spark 4 Python DataSource. Coordinates are converted
-Å → nm on read (G11).
+through the shared frame-chunk DataSource (``_arrow.py``).
+Coordinates are converted Å → nm on read (G11).
 
 Two writers: ``write_dcd`` (driver-side collect → one file, for
 small exports) and ``write_dcd_parts`` (distributed — every
@@ -34,6 +34,7 @@ import struct
 import numpy as np
 from pyspark.sql import SparkSession, functions as F
 
+from dask_traj_spark.sources._arrow import chunk_range, scan_frames
 from dask_traj_spark.trajectory import Trajectory
 
 ANGSTROM_TO_NM = 0.1
@@ -315,86 +316,21 @@ def merge_dcd_parts(directory: str, out_path: str) -> None:
                 out.write(f.read())
 
 
-try:  # Spark >= 4.0 Python DataSource API
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-    class _DCDPartition(InputPartition):
-        def __init__(self, start, count):
-            self.start = start
-            self.count = count
-
-    class DCDDataSourceReader(DataSourceReader):
-        def __init__(self, schema, options):
-            self.path = options.get("path")
-            self.chunks = int(options.get("chunks", 100))
-            self.info = read_info(self.path)
-
-        def partitions(self):
-            # header-only planning: offsets are arithmetic, no scan
-            return [
-                _DCDPartition(s, self.chunks)
-                for s in range(0, self.info.n_frames, self.chunks)
-            ]
-
-        def read(self, partition):
-            from dask_traj_spark.sources._arrow import frames_to_record_batches
-
-            yield from frames_to_record_batches(
-                _read_frames(self.path, self.info, partition.start, partition.count)
-            )
-
-    class DCDDataSource(DataSource):
-        """``spark.read.format("dcdtraj").option("chunks", N).load(p)``"""
-
-        @classmethod
-        def name(cls):
-            return "dcdtraj"
-
-        def schema(self):
-            return "frame_id long, atom_id int, x float, y float, z float"
-
-        def reader(self, schema):
-            return DCDDataSourceReader(schema, self.options)
-
-    HAVE_DATASOURCE_API = True
-except ImportError:  # pragma: no cover - older pyspark
-    HAVE_DATASOURCE_API = False
+def plan_chunks(path: str, chunks: int) -> list[tuple[int, int]]:
+    # header-only planning: offsets are arithmetic, no scan
+    return chunk_range(read_info(path).n_frames, chunks)
 
 
-_REGISTERED: set[int] = set()
-
-
-def register(spark: SparkSession) -> None:
-    if HAVE_DATASOURCE_API and id(spark) not in _REGISTERED:
-        spark.dataSource.register(DCDDataSource)
-        _REGISTERED.add(id(spark))
+def decode_chunk(path: str, payload: tuple[int, int]):
+    start, count = payload
+    return _read_frames(path, read_info(path), start, count)
 
 
 def load_dcd(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory:
     """Load a .dcd binary trajectory (lazy chunked scan). Unit-cell
     records (tiny: 48 bytes/frame) are indexed driver-side into the
     per-frame unitcell dimension."""
-    info = read_info(path)
-    if HAVE_DATASOURCE_API:
-        register(spark)
-        coords = (
-            spark.read.format("dcdtraj")
-            .option("path", path)
-            .option("chunks", str(chunks))
-            .load()
-        )
-    else:  # fallback: driver-side decode (small files only)
-        import pandas as pd
-
-        rows = [
-            (fid, aid, float(x), float(y), float(z))
-            for fid, xyz in _read_frames(path, info, 0, info.n_frames)
-            for aid, (x, y, z) in enumerate(xyz)
-        ]
-        coords = spark.createDataFrame(
-            pd.DataFrame(rows, columns=["frame_id", "atom_id", "x", "y", "z"]),
-            schema="frame_id long, atom_id int, x float, y float, z float",
-        )
+    coords = scan_frames(spark, "dcd", path, chunks)
     unitcell = None
     cells = read_cells(path)
     if cells:

@@ -12,8 +12,8 @@ unitcell_vectors]`` (core/dask_traj.py:49). Frame block layout
 
 Like the XYZ source: one driver index pass records per-frame byte
 offsets (plus time and box, which live in the frame header/footer —
-no coordinate parsing), then the DataSource decodes frame chunks in
-parallel and yields Arrow RecordBatches. GRO is topology-bearing:
+no coordinate parsing), then the shared frame-chunk DataSource
+decodes frame chunks in parallel. GRO is topology-bearing:
 ``load_gro`` attaches the topology parsed from the first frame
 (the reference instead hits an unbound-name bug on topology-bearing
 extensions — SURVEY.md §8; we do the right thing).
@@ -24,6 +24,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import SparkSession
 
+from dask_traj_spark.sources._arrow import chunk_list, scan_frames
 from dask_traj_spark.trajectory import Trajectory
 
 
@@ -73,7 +74,7 @@ def index_gro(path: str) -> list[tuple[int, int, int, float | None, np.ndarray]]
     return frames
 
 
-def _decode_frame_arrays(path: str, specs):
+def decode_chunk(path: str, specs):
     """specs: [(frame_id, offset, n_atoms)] → yield (frame_id,
     xyz (n,3) float32 nm)."""
     with open(path, "rb") as f:
@@ -93,57 +94,9 @@ def _decode_frame_arrays(path: str, specs):
             yield fid, xyz
 
 
-try:  # Spark >= 4.0 Python DataSource API
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-    class _GROPartition(InputPartition):
-        def __init__(self, specs):
-            self.specs = specs
-
-    class GRODataSourceReader(DataSourceReader):
-        def __init__(self, schema, options):
-            self.path = options.get("path")
-            self.chunks = int(options.get("chunks", 10))
-
-        def partitions(self):
-            idx = [(fid, off, n) for fid, off, n, _t, _b in index_gro(self.path)]
-            return [
-                _GROPartition(idx[i : i + self.chunks])
-                for i in range(0, len(idx), self.chunks)
-            ]
-
-        def read(self, partition):
-            from dask_traj_spark.sources._arrow import frames_to_record_batches
-
-            yield from frames_to_record_batches(
-                _decode_frame_arrays(self.path, partition.specs)
-            )
-
-    class GRODataSource(DataSource):
-        """``spark.read.format("grotraj").option("chunks", N).load(p)``"""
-
-        @classmethod
-        def name(cls):
-            return "grotraj"
-
-        def schema(self):
-            return "frame_id long, atom_id int, x float, y float, z float"
-
-        def reader(self, schema):
-            return GRODataSourceReader(schema, self.options)
-
-    HAVE_DATASOURCE_API = True
-except ImportError:  # pragma: no cover
-    HAVE_DATASOURCE_API = False
-
-
-_REGISTERED: set[int] = set()
-
-
-def register(spark: SparkSession) -> None:
-    if HAVE_DATASOURCE_API and id(spark) not in _REGISTERED:
-        spark.dataSource.register(GRODataSource)
-        _REGISTERED.add(id(spark))
+def plan_chunks(path: str, chunks: int) -> list[list[tuple]]:
+    specs = [(f, off, n) for f, off, n, _t, _b in index_gro(path)]
+    return chunk_list(specs, chunks)
 
 
 def load_gro(spark: SparkSession, path: str, chunks: int = 10) -> Trajectory:
@@ -152,28 +105,7 @@ def load_gro(spark: SparkSession, path: str, chunks: int = 10) -> Trajectory:
     idx = index_gro(path)
     if not idx:
         raise ValueError(f"empty GRO file: {path}")
-    if HAVE_DATASOURCE_API:
-        register(spark)
-        coords = (
-            spark.read.format("grotraj")
-            .option("path", path)
-            .option("chunks", str(chunks))
-            .load()
-        )
-    else:  # pragma: no cover
-        import pandas as pd
-
-        rows = [
-            (fid, aid, float(x), float(y), float(z))
-            for fid, xyz in _decode_frame_arrays(
-                path, [(f, o, n) for f, o, n, _t, _b in idx]
-            )
-            for aid, (x, y, z) in enumerate(xyz)
-        ]
-        coords = spark.createDataFrame(
-            pd.DataFrame(rows, columns=["frame_id", "atom_id", "x", "y", "z"]),
-            schema="frame_id long, atom_id int, x float, y float, z float",
-        )
+    coords = scan_frames(spark, "gro", path, chunks)
     # time: from 't=' titles when present, else the arange fallback
     # (reference S8, core/dask_traj.py:267-273)
     frames = spark.createDataFrame(

@@ -38,7 +38,7 @@ import json
 
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.schemas import COORDS_SCHEMA
+from dask_traj_spark.sources._arrow import scan_frames
 from dask_traj_spark.trajectory import Trajectory
 
 try:  # pragma: no cover - h5py absent in the test container
@@ -119,11 +119,33 @@ def _topology_from_json(spark: SparkSession, topo_json: str):
     )
 
 
+def plan_chunks(path: str, chunks: int) -> list[tuple[str, int, int]]:
+    """``(dataset, start, count)`` payloads: MDTraj's ``coordinates``
+    when the file holds it, else the LH5 ``XYZList``."""
+    with _H5File(path) as f:
+        name = "coordinates" if "coordinates" in f else "XYZList"
+        n_frames = f.shape(name)[0]
+    return [(name, s, min(chunks, n_frames - s)) for s in range(0, n_frames, chunks)]
+
+
+def decode_chunk(path: str, payload: tuple[str, int, int]):
+    """Slice one frame range; LH5's int16 fixed point is nm × 1000."""
+    import numpy as np
+
+    name, start, count = payload
+    with _H5File(path) as f:
+        xyz = f.read(name, start, count)
+    if name == "XYZList":
+        xyz = xyz.astype("float32") / np.float32(1000.0)
+    for i, frame in enumerate(xyz):
+        yield start + i, frame
+
+
 def load_hdf5(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory:
-    """Load an MDTraj HDF5 trajectory. Frame chunks parallelize via
-    ``mapInPandas`` over a chunk-spec DataFrame (each task opens the
-    file and slices its own frame range) through the h5py-or-vendored
-    backend adapter."""
+    """Load an MDTraj HDF5 trajectory. Frame chunks parallelize
+    through the shared frame-chunk source (each task opens the file
+    and slices its own frame range) via the h5py-or-vendored backend
+    adapter."""
     with _H5File(path) as f:
         n_frames, n_atoms, _ = f.shape("coordinates")
         have_time = "time" in f
@@ -141,37 +163,7 @@ def load_hdf5(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory:
             raw = f._h["topology"][0]
             topo_json = raw.decode() if isinstance(raw, bytes) else str(raw)
 
-    specs = [
-        (s, min(chunks, n_frames - s)) for s in range(0, n_frames, chunks)
-    ]
-    spec_df = spark.createDataFrame(specs, "start long, count long")
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            with _H5File(path) as f:
-                for start, count in zip(pdf["start"], pdf["count"]):
-                    xyz = f.read("coordinates", int(start), int(count))
-                    nf, na, _ = xyz.shape
-                    flat = xyz.reshape(nf * na, 3)
-                    import numpy as np
-
-                    yield pd.DataFrame(
-                        {
-                            "frame_id": np.repeat(
-                                np.arange(start, start + nf, dtype="int64"), na
-                            ),
-                            "atom_id": np.tile(np.arange(na, dtype="int32"), nf),
-                            "x": flat[:, 0],
-                            "y": flat[:, 1],
-                            "z": flat[:, 2],
-                        }
-                    )
-
-    coords = spec_df.repartition(max(1, len(specs))).mapInPandas(
-        gen, schema=COORDS_SCHEMA
-    )
+    coords = scan_frames(spark, "hdf5", path, chunks)
     frames = spark.createDataFrame(
         [
             (i, float(time[i]) if time else float(i), i)
@@ -201,43 +193,11 @@ def load_lh5(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory:
     Public layout (MDTraj's LH5 format doc): one root dataset
     ``XYZList`` of int16 with shape (n_frames, n_atoms, 3); physical
     coordinates in nm are the stored fixed-point values divided by
-    1000. No time, no unit cell. Same chunked read shape and backend
+    1000. No time, no unit cell. Same chunked scan and backend
     adapter as :func:`load_hdf5`."""
     with _H5File(path) as f:
-        n_frames, n_atoms, _ = f.shape("XYZList")
-
-    specs = [
-        (s, min(chunks, n_frames - s)) for s in range(0, n_frames, chunks)
-    ]
-    spec_df = spark.createDataFrame(specs, "start long, count long")
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            with _H5File(path) as f:
-                for start, count in zip(pdf["start"], pdf["count"]):
-                    raw = f.read("XYZList", int(start), int(count))
-                    xyz = raw.astype("float32") / np.float32(1000.0)
-                    nf, na, _ = xyz.shape
-                    flat = xyz.reshape(nf * na, 3)
-                    yield pd.DataFrame(
-                        {
-                            "frame_id": np.repeat(
-                                np.arange(start, start + nf, dtype="int64"), na
-                            ),
-                            "atom_id": np.tile(np.arange(na, dtype="int32"), nf),
-                            "x": flat[:, 0],
-                            "y": flat[:, 1],
-                            "z": flat[:, 2],
-                        }
-                    )
-
-    coords = spec_df.repartition(max(1, len(specs))).mapInPandas(
-        gen, schema=COORDS_SCHEMA
-    )
-    return Trajectory(coords)
+        f.shape("XYZList")  # fail on the driver if the dataset is absent
+    return Trajectory(scan_frames(spark, "hdf5", path, chunks))
 
 
 def write_h5_traj(

@@ -18,7 +18,7 @@ tilted bounds (xy/xz/yz) → triclinic vectors. Scaled coordinates
 (``xs ys zs``) are rejected explicitly.
 
 Index pass records byte offsets (coordinates skipped); decode runs
-in partitions via the usual chunked DataSource + Arrow batches.
+in partitions via the shared frame-chunk DataSource (``_arrow.py``).
 """
 
 from __future__ import annotations
@@ -26,6 +26,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import SparkSession
 
+from dask_traj_spark.sources._arrow import chunk_list, scan_frames
 from dask_traj_spark.trajectory import Trajectory
 
 ANGSTROM_TO_NM = 0.1
@@ -115,7 +116,7 @@ def _coord_indices(cols: list[str]) -> tuple[int, int, int, int]:
     return idi, xi, yi, zi
 
 
-def _decode_frame_arrays(path: str, specs):
+def decode_chunk(path: str, specs):
     """specs: [(frame_id, atoms_offset, n, cols)] → yield
     (frame_id, xyz (n,3) float32 nm), rows sorted by atom id."""
     with open(path, "rb") as f:
@@ -139,60 +140,9 @@ def _decode_frame_arrays(path: str, specs):
             yield fid, (xyz[order] * ANGSTROM_TO_NM).astype(np.float32)
 
 
-try:  # Spark >= 4.0 Python DataSource API
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-    class _LmpPartition(InputPartition):
-        def __init__(self, specs):
-            self.specs = specs
-
-    class LammpstrjDataSourceReader(DataSourceReader):
-        def __init__(self, schema, options):
-            self.path = options.get("path")
-            self.chunks = int(options.get("chunks", 10))
-
-        def partitions(self):
-            idx = [
-                (fid, off, n, cols)
-                for fid, off, n, _s, _b, cols in index_lammpstrj(self.path)
-            ]
-            return [
-                _LmpPartition(idx[i : i + self.chunks])
-                for i in range(0, len(idx), self.chunks)
-            ]
-
-        def read(self, partition):
-            from dask_traj_spark.sources._arrow import frames_to_record_batches
-
-            yield from frames_to_record_batches(
-                _decode_frame_arrays(self.path, partition.specs)
-            )
-
-    class LammpstrjDataSource(DataSource):
-        """``spark.read.format("lammpstraj").option("chunks", N).load(p)``"""
-
-        @classmethod
-        def name(cls):
-            return "lammpstraj"
-
-        def schema(self):
-            return "frame_id long, atom_id int, x float, y float, z float"
-
-        def reader(self, schema):
-            return LammpstrjDataSourceReader(schema, self.options)
-
-    HAVE_DATASOURCE_API = True
-except ImportError:  # pragma: no cover
-    HAVE_DATASOURCE_API = False
-
-
-_REGISTERED: set[int] = set()
-
-
-def register(spark: SparkSession) -> None:
-    if HAVE_DATASOURCE_API and id(spark) not in _REGISTERED:
-        spark.dataSource.register(LammpstrjDataSource)
-        _REGISTERED.add(id(spark))
+def plan_chunks(path: str, chunks: int) -> list[list[tuple]]:
+    specs = [(f, off, n, cols) for f, off, n, _s, _b, cols in index_lammpstrj(path)]
+    return chunk_list(specs, chunks)
 
 
 def load_lammpstrj(spark: SparkSession, path: str, chunks: int = 10) -> Trajectory:
@@ -202,28 +152,7 @@ def load_lammpstrj(spark: SparkSession, path: str, chunks: int = 10) -> Trajecto
     idx = index_lammpstrj(path)
     if not idx:
         raise ValueError(f"empty lammpstrj file: {path}")
-    if HAVE_DATASOURCE_API:
-        register(spark)
-        coords = (
-            spark.read.format("lammpstraj")
-            .option("path", path)
-            .option("chunks", str(chunks))
-            .load()
-        )
-    else:  # pragma: no cover
-        import pandas as pd
-
-        rows = [
-            (fid, aid, float(x), float(y), float(z))
-            for fid, xyz in _decode_frame_arrays(
-                path, [(f, o, n, c) for f, o, n, _s, _b, c in idx]
-            )
-            for aid, (x, y, z) in enumerate(xyz)
-        ]
-        coords = spark.createDataFrame(
-            pd.DataFrame(rows, columns=["frame_id", "atom_id", "x", "y", "z"]),
-            schema="frame_id long, atom_id int, x float, y float, z float",
-        )
+    coords = scan_frames(spark, "lammpstrj", path, chunks)
     frames = spark.createDataFrame(
         [(fid, float(step), step) for fid, _o, _n, step, _b, _c in idx],
         "frame_id long, time double, step long",

@@ -12,15 +12,19 @@ column-pruned by the Parquet source itself):
     <dir>/unitcell.parquet    optional
     <dir>/topology.parquet    optional
 
-Text ``.xyz`` files load through the custom Python DataSource in
-``xyz.py`` (chunked ``partitions()``, analogous to the reference's
-``load_chunks`` — core/dask_traj.py:103-140). Unknown extensions
+Trajectory files load through the one chunked-frame Python
+DataSource in ``_arrow.py`` (``scan_frames``; analogous to the
+reference's ``load_chunks`` — core/dask_traj.py:103-140): each
+format module supplies only ``plan_chunks`` and ``decode_chunk``.
+``load`` picks the loader from the extension through the
+``SUPPORTED_EXTENSIONS`` → ``LOADERS`` tables. Unknown extensions
 raise NotImplementedError exactly like the reference's
 unimplemented-format path (core/dask_traj.py:167-169).
 """
 
 from __future__ import annotations
 
+import importlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -60,6 +64,31 @@ KNOWN_UNIMPLEMENTED = {
     ".pdb", ".pdb.gz", ".xml", ".mol2", ".hoomdxml",
     ".hdf", ".gsd", ".stk", ".dtr", ".tng",
 }
+#: loader kind → (module in this package, load function)
+LOADERS = {
+    "parquet_dir": ("loaders", "load_tables"),
+    "xyz": ("xyz", "load_xyz"),
+    "dcd": ("dcd", "load_dcd"),
+    "xtc": ("xtc", "load_xtc"),
+    "trr": ("trr", "load_trr"),
+    "gro": ("gro", "load_gro"),
+    "binpos": ("binpos", "load_binpos"),
+    "lammpstrj": ("lammpstrj", "load_lammpstrj"),
+    "restart": ("amber", "load_restart"),
+    "mdcrd": ("amber", "load_mdcrd"),
+    "netcdf": ("netcdf3", "load_netcdf"),
+    "ncrestart": ("netcdf3", "load_ncrestart"),
+    "arc": ("arc", "load_arc"),
+    "hdf5": ("hdf5", "load_hdf5"),
+    "lh5": ("hdf5", "load_lh5"),
+}
+
+
+def loader_for(kind: str):
+    """The load function for a ``SUPPORTED_EXTENSIONS`` kind
+    (imported on first use)."""
+    module, fn = LOADERS[kind]
+    return getattr(importlib.import_module(f"{__package__}.{module}"), fn)
 
 
 def load(spark_or_path, path: str | None = None, **options) -> Trajectory:
@@ -90,66 +119,11 @@ def load(spark_or_path, path: str | None = None, **options) -> Trajectory:
             )
         raise NotImplementedError(f"Unknown trajectory format {ext!r}")
     if kind == "parquet_dir":
-        traj = load_tables(spark, path)
-    elif kind == "xyz":
-        from dask_traj_spark.sources.xyz import load_xyz
-
-        traj = load_xyz(spark, path, **options)
-    elif kind == "dcd":
-        from dask_traj_spark.sources.dcd import load_dcd
-
-        traj = load_dcd(spark, path, **options)
-    elif kind == "xtc":
-        from dask_traj_spark.sources.xtc import load_xtc
-
-        traj = load_xtc(spark, path, **options)
-    elif kind == "trr":
-        from dask_traj_spark.sources.trr import load_trr
-
-        traj = load_trr(spark, path, **options)
-    elif kind == "gro":
-        from dask_traj_spark.sources.gro import load_gro
-
-        traj = load_gro(spark, path, **options)
-    elif kind == "binpos":
-        from dask_traj_spark.sources.binpos import load_binpos
-
-        traj = load_binpos(spark, path, **options)
-    elif kind == "lammpstrj":
-        from dask_traj_spark.sources.lammpstrj import load_lammpstrj
-
-        traj = load_lammpstrj(spark, path, **options)
-    elif kind == "restart":
-        from dask_traj_spark.sources.amber import load_restart
-
-        traj = load_restart(spark, path, **options)
+        options = {}  # a table directory has no frame chunks to tune
     elif kind == "mdcrd":
-        from dask_traj_spark.sources.amber import load_mdcrd
-
-        traj = load_mdcrd(spark, path, top=top, **options)
-        top = None  # consumed (supplies the atom count + topology)
-    elif kind == "netcdf":
-        from dask_traj_spark.sources.netcdf3 import load_netcdf
-
-        traj = load_netcdf(spark, path, **options)
-    elif kind == "ncrestart":
-        from dask_traj_spark.sources.netcdf3 import load_ncrestart
-
-        traj = load_ncrestart(spark, path, **options)
-    elif kind == "arc":
-        from dask_traj_spark.sources.arc import load_arc
-
-        traj = load_arc(spark, path, **options)
-    elif kind == "hdf5":
-        from dask_traj_spark.sources.hdf5 import load_hdf5
-
-        traj = load_hdf5(spark, path, **options)
-    elif kind == "lh5":
-        from dask_traj_spark.sources.hdf5 import load_lh5
-
-        traj = load_lh5(spark, path, **options)
-    else:
-        raise AssertionError(kind)
+        # the topology supplies the atom count, so mdcrd consumes it
+        options["top"], top = top, None
+    traj = loader_for(kind)(spark, path, **options)
     if top is not None:
         # reference S1: load(traj, top=...) parses the topology file
         # eagerly and validates it against the trajectory

@@ -29,6 +29,7 @@ import struct
 import numpy as np
 from pyspark.sql import SparkSession
 
+from dask_traj_spark.sources._arrow import chunk_range, scan_frames
 from dask_traj_spark.trajectory import Trajectory
 
 ANGSTROM_TO_NM = 0.1
@@ -148,67 +149,18 @@ class NC3File:
         ).reshape(v.shape)
 
 
-def _read_frames(path: str, start: int, count: int):
+def plan_chunks(path: str, chunks: int) -> list[tuple[int, int]]:
+    return chunk_range(NC3File(path).numrecs, chunks)
+
+
+def decode_chunk(path: str, payload: tuple[int, int]):
+    start, count = payload
     nc = NC3File(path)
     end = min(start + count, nc.numrecs)
     with open(path, "rb") as f:
         for fid in range(start, end):
             xyz = nc.read_record(f, "coordinates", fid).astype(np.float64)
             yield fid, (xyz * ANGSTROM_TO_NM).astype(np.float32)
-
-
-try:  # Spark >= 4.0 Python DataSource API
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-    class _NCPartition(InputPartition):
-        def __init__(self, start, count):
-            self.start = start
-            self.count = count
-
-    class NCDataSourceReader(DataSourceReader):
-        def __init__(self, schema, options):
-            self.path = options.get("path")
-            self.chunks = int(options.get("chunks", 100))
-            self.n_frames = NC3File(self.path).numrecs
-
-        def partitions(self):
-            return [
-                _NCPartition(s, self.chunks)
-                for s in range(0, self.n_frames, self.chunks)
-            ]
-
-        def read(self, partition):
-            from dask_traj_spark.sources._arrow import frames_to_record_batches
-
-            yield from frames_to_record_batches(
-                _read_frames(self.path, partition.start, partition.count)
-            )
-
-    class NCDataSource(DataSource):
-        """``spark.read.format("nctraj").option("chunks", N).load(p)``"""
-
-        @classmethod
-        def name(cls):
-            return "nctraj"
-
-        def schema(self):
-            return "frame_id long, atom_id int, x float, y float, z float"
-
-        def reader(self, schema):
-            return NCDataSourceReader(schema, self.options)
-
-    HAVE_DATASOURCE_API = True
-except ImportError:  # pragma: no cover
-    HAVE_DATASOURCE_API = False
-
-
-_REGISTERED: set[int] = set()
-
-
-def register(spark: SparkSession) -> None:
-    if HAVE_DATASOURCE_API and id(spark) not in _REGISTERED:
-        spark.dataSource.register(NCDataSource)
-        _REGISTERED.add(id(spark))
 
 
 def load_netcdf(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory:
@@ -218,26 +170,7 @@ def load_netcdf(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory
     nc = NC3File(path)
     if "coordinates" not in nc.vars:
         raise ValueError(f"{path}: no 'coordinates' variable (not AMBER layout)")
-    if HAVE_DATASOURCE_API:
-        register(spark)
-        coords = (
-            spark.read.format("nctraj")
-            .option("path", path)
-            .option("chunks", str(chunks))
-            .load()
-        )
-    else:  # pragma: no cover
-        import pandas as pd
-
-        rows = [
-            (fid, aid, float(x), float(y), float(z))
-            for fid, xyz in _read_frames(path, 0, nc.numrecs)
-            for aid, (x, y, z) in enumerate(xyz)
-        ]
-        coords = spark.createDataFrame(
-            pd.DataFrame(rows, columns=["frame_id", "atom_id", "x", "y", "z"]),
-            schema="frame_id long, atom_id int, x float, y float, z float",
-        )
+    coords = scan_frames(spark, "netcdf3", path, chunks)
     with open(path, "rb") as f:
         times = (
             [float(nc.read_record(f, "time", r)) for r in range(nc.numrecs)]

@@ -25,6 +25,7 @@ import struct
 import numpy as np
 from pyspark.sql import SparkSession
 
+from dask_traj_spark.sources._arrow import chunk_range, scan_frames
 from dask_traj_spark.trajectory import Trajectory
 
 MAGIC = 1993
@@ -196,87 +197,21 @@ def _write_trr_file(
             f.write(xyz[fid].astype(">f4").tobytes())
 
 
-try:  # Spark >= 4.0 Python DataSource API
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-    class _TRRPartition(InputPartition):
-        def __init__(self, start, count):
-            self.start = start
-            self.count = count
-
-    class TRRDataSourceReader(DataSourceReader):
-        def __init__(self, schema, options):
-            self.path = options.get("path")
-            self.chunks = int(options.get("chunks", 100))
-            self.info = read_info(self.path)
-
-        def partitions(self):
-            return [
-                _TRRPartition(s, self.chunks)
-                for s in range(0, self.info.n_frames, self.chunks)
-            ]
-
-        def read(self, partition):
-            from dask_traj_spark.sources._arrow import frames_to_record_batches
-
-            yield from frames_to_record_batches(
-                (fid, xyz)
-                for fid, _step, _t, _box, xyz in _read_frames(
-                    self.path, self.info, partition.start, partition.count
-                )
-            )
-
-    class TRRDataSource(DataSource):
-        """``spark.read.format("trrtraj").option("chunks", N).load(p)``"""
-
-        @classmethod
-        def name(cls):
-            return "trrtraj"
-
-        def schema(self):
-            return "frame_id long, atom_id int, x float, y float, z float"
-
-        def reader(self, schema):
-            return TRRDataSourceReader(schema, self.options)
-
-    HAVE_DATASOURCE_API = True
-except ImportError:  # pragma: no cover
-    HAVE_DATASOURCE_API = False
+def plan_chunks(path: str, chunks: int) -> list[tuple[int, int]]:
+    return chunk_range(read_info(path).n_frames, chunks)
 
 
-_REGISTERED: set[int] = set()
-
-
-def register(spark: SparkSession) -> None:
-    if HAVE_DATASOURCE_API and id(spark) not in _REGISTERED:
-        spark.dataSource.register(TRRDataSource)
-        _REGISTERED.add(id(spark))
+def decode_chunk(path: str, payload: tuple[int, int]):
+    start, count = payload
+    for fid, _step, _t, _box, xyz in _read_frames(path, read_info(path), start, count):
+        yield fid, xyz
 
 
 def load_trr(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory:
     """Load a .trr trajectory (chunked lazy scan + driver-side
     frame/box index)."""
     info = read_info(path)
-    if HAVE_DATASOURCE_API:
-        register(spark)
-        coords = (
-            spark.read.format("trrtraj")
-            .option("path", path)
-            .option("chunks", str(chunks))
-            .load()
-        )
-    else:  # pragma: no cover
-        import pandas as pd
-
-        rows = [
-            (fid, aid, float(x), float(y), float(z))
-            for fid, _s, _t, _b, xyz in _read_frames(path, info, 0, info.n_frames)
-            for aid, (x, y, z) in enumerate(xyz)
-        ]
-        coords = spark.createDataFrame(
-            pd.DataFrame(rows, columns=["frame_id", "atom_id", "x", "y", "z"]),
-            schema="frame_id long, atom_id int, x float, y float, z float",
-        )
+    coords = scan_frames(spark, "trr", path, chunks)
     meta = list(_read_meta(path, info))
     frames = spark.createDataFrame(
         [(fid, float(t), int(step)) for fid, step, t, _b in meta],

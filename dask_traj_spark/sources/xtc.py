@@ -20,7 +20,7 @@ a faithful pure-Python implementation of that public algorithm
 
 Frame blocks are variable-length ⇒ ``index_xtc`` scans headers once
 (seek-skip per frame, reading ~60 bytes each) to build the offset
-index; ``partitions()`` then gives chunked parallel reads exactly
+index; ``plan_chunks`` then gives chunked parallel reads exactly
 like the DCD/XYZ sources. Decoding runs inside partitions —
 parallel across frame-chunks.
 
@@ -43,6 +43,7 @@ import struct
 import numpy as np
 from pyspark.sql import SparkSession
 
+from dask_traj_spark.sources._arrow import chunk_list, scan_frames
 from dask_traj_spark.trajectory import Trajectory
 
 MAGIC = 1995
@@ -607,7 +608,11 @@ def _write_xtc_file(
                 f.write(b"\x00" * pad)
 
 
-def _decode_range(path: str, offsets: list[tuple[int, int]]):
+def plan_chunks(path: str, chunks: int) -> list[list[tuple[int, int]]]:
+    return chunk_list([(fi.frame_id, fi.offset) for fi in index_xtc(path)], chunks)
+
+
+def decode_chunk(path: str, offsets: list[tuple[int, int]]):
     """Yield (frame_id, xyz) for [(frame_id, byte_offset)]."""
     with open(path, "rb") as f:
         for fid, off in offsets:
@@ -616,84 +621,12 @@ def _decode_range(path: str, offsets: list[tuple[int, int]]):
             yield fid, xyz
 
 
-try:  # Spark >= 4.0 Python DataSource API
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-    class _XTCPartition(InputPartition):
-        def __init__(self, offsets):
-            self.offsets = offsets
-
-    class XTCDataSourceReader(DataSourceReader):
-        def __init__(self, schema, options):
-            self.path = options.get("path")
-            self.chunks = int(options.get("chunks", 100))
-
-        def partitions(self):
-            idx = [(fi.frame_id, fi.offset) for fi in index_xtc(self.path)]
-            return [
-                _XTCPartition(idx[i : i + self.chunks])
-                for i in range(0, len(idx), self.chunks)
-            ]
-
-        def read(self, partition):
-            from dask_traj_spark.sources._arrow import frames_to_record_batches
-
-            yield from frames_to_record_batches(
-                _decode_range(self.path, partition.offsets)
-            )
-
-    class XTCDataSource(DataSource):
-        """``spark.read.format("xtctraj").option("chunks", N).load(p)``"""
-
-        @classmethod
-        def name(cls):
-            return "xtctraj"
-
-        def schema(self):
-            return "frame_id long, atom_id int, x float, y float, z float"
-
-        def reader(self, schema):
-            return XTCDataSourceReader(schema, self.options)
-
-    HAVE_DATASOURCE_API = True
-except ImportError:  # pragma: no cover
-    HAVE_DATASOURCE_API = False
-
-
-_REGISTERED: set[int] = set()
-
-
-def register(spark: SparkSession) -> None:
-    if HAVE_DATASOURCE_API and id(spark) not in _REGISTERED:
-        spark.dataSource.register(XTCDataSource)
-        _REGISTERED.add(id(spark))
-
-
 def load_xtc(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory:
     """Load a .xtc trajectory: chunked lazy coords scan via the
-    custom source; frames (step/time) and per-frame box come from
-    the driver-side header index (no coordinate decode)."""
+    shared frame-chunk source; frames (step/time) and per-frame box
+    come from the driver-side header index (no coordinate decode)."""
     idx = index_xtc(path)
-    if HAVE_DATASOURCE_API:
-        register(spark)
-        coords = (
-            spark.read.format("xtctraj")
-            .option("path", path)
-            .option("chunks", str(chunks))
-            .load()
-        )
-    else:  # pragma: no cover - older pyspark
-        import pandas as pd
-
-        rows = [
-            (fid, aid, float(x), float(y), float(z))
-            for fid, xyz in _decode_range(path, [(fi.frame_id, fi.offset) for fi in idx])
-            for aid, (x, y, z) in enumerate(xyz)
-        ]
-        coords = spark.createDataFrame(
-            pd.DataFrame(rows, columns=["frame_id", "atom_id", "x", "y", "z"]),
-            schema="frame_id long, atom_id int, x float, y float, z float",
-        )
+    coords = scan_frames(spark, "xtc", path, chunks)
     frames = spark.createDataFrame(
         [(fi.frame_id, float(fi.time), int(fi.step)) for fi in idx],
         "frame_id long, time double, step long",

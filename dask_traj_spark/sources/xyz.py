@@ -1,18 +1,16 @@
-"""XYZ-format trajectory source — a Spark 4 custom Python DataSource.
+"""XYZ-format trajectory source.
 
 The analog of the reference's chunked lazy loader (S1-S3:
-``/root/reference/dask_traj/core/dask_traj.py:61-140`` builds one
-delayed ``read_chunk`` per frame-chunk; ``:329-361`` seeks and
-decodes one chunk). Here the same shape is expressed through the
-``pyspark.sql.datasource`` API:
+``core/dask_traj.py:61-140`` builds one delayed ``read_chunk`` per
+frame-chunk; ``:329-361`` seeks and decodes one chunk), through the
+shared frame-chunk DataSource in ``_arrow.py``:
 
-- ``partitions()`` → one ``InputPartition`` per frame-chunk (driver
-  scans the file once to index frame byte offsets — the equivalent
-  of the reference's eager ``len(f)`` frame count; for cluster-scale
-  files the index would live in a sidecar, the read path is
-  unchanged);
-- ``read(partition)`` → seek to the chunk's byte offset, decode its
-  frames, yield long-format coords rows.
+- ``plan_chunks`` → one payload per frame-chunk (the driver scans the
+  file once to index frame byte offsets — the equivalent of the
+  reference's eager ``len(f)`` frame count; for cluster-scale files
+  the index would live in a sidecar, the read path is unchanged);
+- ``decode_chunk`` → seek to the chunk's byte offsets and decode its
+  frames.
 
 XYZ text format: per frame, a line with n_atoms, a comment line,
 then n_atoms lines of ``element x y z`` (Å). Coordinates are scaled
@@ -24,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from dask_traj_spark.sources._arrow import chunk_list, scan_frames
 from dask_traj_spark.trajectory import Trajectory
 
 ANGSTROM_TO_NM = 0.1
@@ -84,97 +83,21 @@ def _decode_frame_arrays(path: str, specs: list[tuple[int, int, int]], scale: fl
                         f"malformed XYZ atom line in frame {fid}"
                     )
                 rows.append(parts[1:4])
-            # parse + scale in float64 then narrow, matching the
-            # row-path semantics (f64 product cast to FLOAT on ingest)
+            # parse + scale in float64, then narrow once to FLOAT
             xyz = (np.array(rows, dtype=np.float64) * scale).astype(np.float32)
             yield fid, xyz
 
 
-def _decode_frames(path: str, specs: list[tuple[int, int, int]], scale: float):
-    """Yield (frame_id, atom_id, x, y, z) rows for the given frame specs."""
-    for fid, xyz in _decode_frame_arrays(path, specs, scale):
-        for atom_id in range(xyz.shape[0]):
-            yield (
-                int(fid),
-                int(atom_id),
-                float(xyz[atom_id, 0]),
-                float(xyz[atom_id, 1]),
-                float(xyz[atom_id, 2]),
-            )
+def plan_chunks(path: str, chunks: int) -> list[list[tuple[int, int, int]]]:
+    return chunk_list(index_xyz(path), chunks)
 
 
-try:  # Spark >= 4.0 Python DataSource API
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-    class _XYZPartition(InputPartition):
-        def __init__(self, specs):
-            self.specs = specs
-
-    class XYZDataSourceReader(DataSourceReader):
-        def __init__(self, schema, options):
-            self.path = options.get("path")
-            self.chunks = int(options.get("chunks", 10))
-            self.scale = float(options.get("scale", ANGSTROM_TO_NM))
-
-        def partitions(self):
-            idx = index_xyz(self.path)
-            return [
-                _XYZPartition(idx[i : i + self.chunks])
-                for i in range(0, len(idx), self.chunks)
-            ]
-
-        def read(self, partition):
-            from dask_traj_spark.sources._arrow import frames_to_record_batches
-
-            yield from frames_to_record_batches(
-                _decode_frame_arrays(self.path, partition.specs, self.scale)
-            )
-
-    class XYZDataSource(DataSource):
-        """``spark.read.format("xyztraj").option("chunks", N).load(p)``"""
-
-        @classmethod
-        def name(cls):
-            return "xyztraj"
-
-        def schema(self):
-            return "frame_id long, atom_id int, x float, y float, z float"
-
-        def reader(self, schema):
-            return XYZDataSourceReader(schema, self.options)
-
-    HAVE_DATASOURCE_API = True
-except ImportError:  # pragma: no cover - older pyspark
-    HAVE_DATASOURCE_API = False
-
-
-_REGISTERED: set[int] = set()
-
-
-def register(spark: SparkSession) -> None:
-    if HAVE_DATASOURCE_API and id(spark) not in _REGISTERED:
-        spark.dataSource.register(XYZDataSource)
-        _REGISTERED.add(id(spark))
+def decode_chunk(path: str, specs: list[tuple[int, int, int]]):
+    return _decode_frame_arrays(path, specs, ANGSTROM_TO_NM)
 
 
 def load_xyz(spark: SparkSession, path: str, chunks: int = 10) -> Trajectory:
     """Load an .xyz text trajectory as a Trajectory (lazy scan via
-    the custom source; time falls back to synthetic frame numbering
-    — reference S8, core/dask_traj.py:267-273)."""
-    if HAVE_DATASOURCE_API:
-        register(spark)
-        coords = (
-            spark.read.format("xyztraj")
-            .option("path", path)
-            .option("chunks", str(chunks))
-            .load()
-        )
-    else:  # fallback: driver-side decode (small files only)
-        import pandas as pd
-
-        rows = list(_decode_frames(path, index_xyz(path), ANGSTROM_TO_NM))
-        coords = spark.createDataFrame(
-            pd.DataFrame(rows, columns=["frame_id", "atom_id", "x", "y", "z"]),
-            schema="frame_id long, atom_id int, x float, y float, z float",
-        )
-    return Trajectory(coords)
+    the shared frame-chunk source; time falls back to synthetic frame
+    numbering — reference S8, core/dask_traj.py:267-273)."""
+    return Trajectory(scan_frames(spark, "xyz", path, chunks))

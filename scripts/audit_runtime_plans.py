@@ -41,19 +41,12 @@ else:
         sys.exit(f"not a directory: {args[0]}")
     sf_dir, names = "/root/testdata/sf0.001", args
 
-from pyspark.sql import SparkSession  # noqa: E402
+from dask_traj_spark.session import get_spark, release_caches  # noqa: E402
 
-spark = (
-    SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-    .config("spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    .config("spark.driver.memory", "48g")
-    .appName("audit_runtime_plans")
-    .getOrCreate()
-)
+spark = get_spark(app_name="audit_runtime_plans")
 spark.sparkContext.setLogLevel("ERROR")
 
 import __spark_entry__ as ent  # noqa: E402
-from dask_traj_spark.session import release_caches  # noqa: E402
 
 
 def walk(node, counts):

@@ -44,18 +44,12 @@ while i < len(args):
 
 sys.path.insert(0, repo)
 
-from pyspark.sql import SparkSession, functions as F  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
 
-spark = (
-    SparkSession.builder.master("local[32]")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.driver.memory", "48g")
-    .appName("profile_ops")
-    .getOrCreate()
-)
+from dask_traj_spark.session import get_spark, release_caches  # noqa: E402
+
+spark = get_spark(app_name="profile_ops")
 spark.sparkContext.setLogLevel("ERROR")
-
-from dask_traj_spark.session import release_caches  # noqa: E402
 
 
 def _noop(df):

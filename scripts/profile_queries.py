@@ -27,15 +27,9 @@ while i < len(args):
 
 sys.path.insert(0, repo)
 
-from pyspark.sql import SparkSession  # noqa: E402
+from dask_traj_spark.session import get_spark  # noqa: E402
 
-spark = (
-    SparkSession.builder.master("local[32]")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.driver.memory", "48g")
-    .appName("profile_queries")
-    .getOrCreate()
-)
+spark = get_spark(app_name="profile_queries")
 spark.sparkContext.setLogLevel("ERROR")
 
 from dask_traj_spark.queries import queries  # noqa: E402

@@ -48,21 +48,14 @@ def test_dcd_round_trip(spark, small_traj, tmp_path):
 
 
 def test_dcd_partitions_are_chunked(spark, small_traj, tmp_path):
-    from dask_traj_spark.sources.dcd import (
-        HAVE_DATASOURCE_API,
-        DCDDataSourceReader,
-        write_dcd,
-    )
+    from dask_traj_spark.sources.dcd import plan_chunks, write_dcd
 
-    if not HAVE_DATASOURCE_API:
-        pytest.skip("no datasource API")
     traj, _ = small_traj
     path = str(tmp_path / "t.dcd")
     write_dcd(traj, path)
-    reader = DCDDataSourceReader(None, {"path": path, "chunks": "5"})
-    parts = reader.partitions()
+    parts = plan_chunks(path, 5)
     assert len(parts) == 3  # 12 frames / 5 per chunk
-    assert [p.start for p in parts] == [0, 5, 10]
+    assert [start for start, _count in parts] == [0, 5, 10]
 
 
 def test_load_dispatch_dcd(spark, small_traj, tmp_path):

@@ -121,20 +121,20 @@ def fixtures(tmp_path_factory):
         list(T._read_meta(p, info))
 
     def read_xyz(p):
-        list(XY._decode_frames(p, XY.index_xyz(p), 0.1))
+        list(XY._decode_frame_arrays(p, XY.index_xyz(p), 0.1))
 
     def read_gro(p):
-        list(G._decode_frame_arrays(
+        list(G.decode_chunk(
             p, [(f, o, n) for f, o, n, _t, _b in G.index_gro(p)]
         ))
 
     def read_lmp(p):
-        list(L._decode_frame_arrays(
+        list(L.decode_chunk(
             p, [(f, o, n, c) for f, o, n, _s, _b, c in L.index_lammpstrj(p)]
         ))
 
     def read_arc(p):
-        list(R._decode_frame_arrays(
+        list(R.decode_chunk(
             p, [(f, o, n) for f, o, n, _b in R.index_arc(p)]
         ))
 

@@ -63,11 +63,11 @@ def test_gro_box_and_topology(spark, gro_file):
 
 
 def test_gro_partitioned_scan(spark, gro_file):
-    from dask_traj_spark.sources.gro import GRODataSourceReader
+    from dask_traj_spark.sources.gro import plan_chunks
 
     path, _ = gro_file
-    parts = GRODataSourceReader(None, {"path": path, "chunks": "3"}).partitions()
-    assert [len(p.specs) for p in parts] == [3, 1]
+    parts = plan_chunks(path, 3)
+    assert [len(p) for p in parts] == [3, 1]
 
 
 def test_gro_time_fallback_without_t(spark, tmp_path):

@@ -216,6 +216,23 @@ def test_tng_recognized_unimplemented(spark, tmp_path):
         load(spark, p)
 
 
+def test_every_supported_extension_resolves_to_a_loader():
+    """No session needed: every kind in the extension table has an
+    importable loader, so ``load`` never meets a kind it cannot
+    dispatch, and every chunked format module keeps both halves of
+    the frame-chunk contract."""
+    import importlib
+
+    from dask_traj_spark.sources.loaders import SUPPORTED_EXTENSIONS, loader_for
+
+    for ext, kind in SUPPORTED_EXTENSIONS.items():
+        assert callable(loader_for(kind)), ext
+    for fmt in ("xyz", "xtc", "dcd", "trr", "gro", "arc", "binpos",
+                "lammpstrj", "netcdf3", "hdf5"):
+        mod = importlib.import_module(f"dask_traj_spark.sources.{fmt}")
+        assert callable(mod.plan_chunks) and callable(mod.decode_chunk), fmt
+
+
 def test_select_atoms_sql_predicate(traj_triclinic):
     """select_atoms: SQL predicate over the topology dimension →
     dense renumbered subset (the mdtraj topology.select use-case)."""

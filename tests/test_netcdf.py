@@ -52,11 +52,11 @@ def test_round_trip(spark, nc_file):
 
 
 def test_partitions(nc_file):
-    from dask_traj_spark.sources.netcdf3 import NCDataSourceReader
+    from dask_traj_spark.sources.netcdf3 import plan_chunks
 
     p, _ = nc_file
-    parts = NCDataSourceReader(None, {"path": p, "chunks": "3"}).partitions()
-    assert [(pp.start, pp.count) for pp in parts] == [(0, 3), (3, 3), (6, 3)]
+    parts = plan_chunks(p, 3)
+    assert parts == [(0, 3), (3, 3), (6, 3)]
 
 
 def test_rejects_non_netcdf(tmp_path):

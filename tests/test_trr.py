@@ -50,16 +50,11 @@ def test_trr_round_trip_exact(spark, trr_file):
 
 
 def test_trr_partitioned_scan(spark, trr_file):
-    from dask_traj_spark.sources.trr import (
-        HAVE_DATASOURCE_API,
-        TRRDataSourceReader,
-    )
+    from dask_traj_spark.sources.trr import plan_chunks
 
-    if not HAVE_DATASOURCE_API:
-        pytest.skip("no datasource API")
     p, _ = trr_file
-    parts = TRRDataSourceReader(None, {"path": p, "chunks": "4"}).partitions()
-    assert [pp.start for pp in parts] == [0, 4, 8]
+    parts = plan_chunks(p, 4)
+    assert [start for start, _count in parts] == [0, 4, 8]
 
 
 def test_trr_rejects_garbage(tmp_path):

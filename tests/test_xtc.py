@@ -144,6 +144,7 @@ def test_unknown_format_still_raises(spark):
         dts.load(spark, "/tmp/nope.h5")
 
 
+@needs_fixture
 def test_delta_run_reencode_matches_gromacs_fixture(tmp_path):
     """Differential on real molecular data: decode the GROMACS-
     written fixture, re-encode with the delta-run compressor, decode
