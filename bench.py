@@ -1,1079 +1,698 @@
 #!/usr/bin/env python
 """Headline benchmark — prints ONE JSON line for the driver.
 
-Two tiers:
+Every timed entry is one ``Row`` of an ordered entry table: a name, a
+thunk, an iteration count, a warm-up count, the record it lands in
+(headline ``queries``, ``times_detail`` or ``scale_10x``) and, for a
+10x row, the name of its 1x partner.  ``Bench.timed`` runs any row;
+``Bench.build`` assembles ``bench_detail.json`` and the capped
+headline.  Four tiers run in order, every time:
 
-1. **canonical** — the BASELINE.md workload shape: 1,251 frames ×
+1. ``CANONICAL`` — the BASELINE.md workload shape: 1,251 frames ×
    22,561 atoms, distances over 124,750 pairs
-   (combinations(range(500), 2)) with orthorhombic MIC. Coordinates
+   (combinations(range(500), 2)) with orthorhombic MIC.  Coordinates
    are generated deterministically JVM-side (xxhash64 grid — no
-   Python in the generation path) in packed frame order and cached;
-   the Arrow-vectorized kernel then computes the full (1251, 124750)
-   distance matrix with array-per-frame output into a noop sink.
-   Reference numbers to beat: 6.32 s compute / 7.29 s end-to-end
-   (LocalCluster 4proc×12threads; BASELINE.md).
+   Python in the generation path) in packed frame order; the
+   Arrow-vectorized kernel returns long-format rows
+   ``(frame_id, pair_id, dist)`` into a noop sink.  Timed over a
+   cached trajectory (``canonical_distances``) and as one uncached
+   generate → atom-filter → kernel pass (``canonical_onepass``, the
+   headline value).  Reference numbers to beat: 6.32 s compute /
+   7.29 s end-to-end (LocalCluster 4proc×12threads; BASELINE.md).
+2. ``SUITE`` — oracle-registry queries and production-mode operators
+   at ``$SPARK_GRAFT_SF_DIR``, one warm-up then best-of-3.
+3. ``SCALE`` — tier 1/2 workloads re-run at 10x the input;
+   ``linearity`` = t_10x / (10 · t_1x) for every 10x row and its 1x
+   partner (~1.0 linear, >2 super-linear).
+4. ``LOCAL12`` — the canonical one-pass again on a ``local[12]``
+   session, the apples-to-apples comparison with the reference's
+   12-thread LocalCluster.
 
-2. **oracle-suite ops** at ``$SPARK_GRAFT_SF_DIR`` — the SQL-form
-   operators the correctness gate runs (triclinic-MIC distances,
-   angles, COM, all-frames closest contact), timed with a noop sink.
+Every row is bracketed by a fixed-work CPU probe (one probe closes a
+row and opens the next), so host noise is attributable per entry
+from ``bench_detail.json`` alone.
 
-Output: {"metric": "canonical_e2e", "value": <load+compute sec>,
-"unit": "sec", "queries": {...per-query sec...}, "sf": <sf>}
+Output: {"metric": "canonical_e2e", "value": <one-pass sec>,
+"unit": "sec", "queries": {...per-entry sec...}, "sf": <sf>, ...}
 """
 
 from __future__ import annotations
 
+import glob
+import itertools
 import json
+import math
 import os
+import re
+import shutil
 import sys
+import tempfile
 import time
+from functools import cached_property, partial
+from typing import Callable, NamedTuple
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
+from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from dask_traj_spark.functions import text  # noqa: E402
+from dask_traj_spark.operators import bpe, curation, dedup, graph, rmsd  # noqa: E402
+from dask_traj_spark.operators import similarity as sim  # noqa: E402
+from dask_traj_spark.operators.distance import compute_distances  # noqa: E402
+from dask_traj_spark.queries import queries  # noqa: E402
+from dask_traj_spark.session import get_spark, release_caches  # noqa: E402
+from dask_traj_spark.trajectory import Trajectory  # noqa: E402
+
 N_FRAMES = 1251
+WARM_FRAMES = 160
 N_ATOMS = 22561
-N_SEL = 500  # combinations(range(500), 2) = 124,750 pairs
+PAIRS = list(itertools.combinations(range(500), 2))  # 124,750 pairs
 BOX_L = 2.0
+PW_FRAMES = 1000
+HEADLINE_CAP = 1800  # bytes; the driver tail-captures ~2000
+HEADLINE, DETAIL, SCALE_10X = "queries", "times_detail", "scale_10x"
 
 
-def _canonical_traj(spark):
-    """Deterministic 1251×22561 trajectory, all JVM-side."""
-    from dask_traj_spark.trajectory import Trajectory
+class Row(NamedTuple):
+    """One timed entry.  ``run(ctx)`` is timed together with the noop
+    sink of a DataFrame it returns; ``run=None`` runs the registry
+    query of the same name."""
 
-    # generate per-frame then explode atoms so every partition holds
-    # whole frames (the packed=True contract)
-    gid = F.col("frame_id") * N_ATOMS + F.col("atom_id")
-    grid = lambda salt: (  # noqa: E731
-        F.pmod(F.xxhash64(gid, F.lit(salt)), F.lit(4096)) / 4096.0 * BOX_L
-    )
-    # partitions scale with frames (~20 frames/task): a fixed count
-    # made per-task frame blocks grow linearly with the tier, and the
-    # 10x run went 2.6x super-linear from Python-worker memory
-    # pressure alone; at constant block size the scale-up is linear
-    n_parts = max(64, min(2048, N_FRAMES // 20))
+    name: str
+    run: Callable[[Inputs], object] | None = None
+    n: int = 3
+    warmup: int = 0
+    record: str = HEADLINE
+    base: str | None = None  # 1x partner of a 10x row
+
+
+def _suite(name: str, run=None, record: str = HEADLINE) -> Row:
+    # one throwaway iteration then best-of-3: iteration 0 pays plan
+    # JIT + codegen + page-cache warm-up (measured up to 4× steady)
+    return Row(name, run, n=3, warmup=1, record=record)
+
+
+def _scale(name: str, base: str | None, run, n: int = 1) -> Row:
+    return Row(name, run, n=n, record=SCALE_10X, base=base)
+
+
+def _grid_traj(spark, n_frames, n_atoms, n_parts, salts, dtype, **kw) -> Trajectory:
+    """Deterministic coordinates in [0, BOX_L), all JVM-side: atoms are
+    exploded per frame, so every partition holds whole frames in
+    (frame_id, atom_id) order."""
+    gid = F.col("frame_id") * n_atoms + F.col("atom_id")
     coords = (
-        spark.range(N_FRAMES, numPartitions=n_parts)
+        spark.range(n_frames, numPartitions=n_parts)
         .select(
             F.col("id").alias("frame_id"),
-            F.explode(F.sequence(F.lit(0), F.lit(N_ATOMS - 1))).alias("atom_id"),
+            F.explode(F.sequence(F.lit(0), F.lit(n_atoms - 1))).alias("atom_id"),
         )
         .select(
             "frame_id",
             F.col("atom_id").cast("int").alias("atom_id"),
-            grid(0).cast("float").alias("x"),
-            grid(1).cast("float").alias("y"),
-            grid(2).cast("float").alias("z"),
+            *[
+                (F.pmod(F.xxhash64(gid, F.lit(s)), F.lit(4096)) / 4096.0 * BOX_L)
+                .cast(dtype)
+                .alias(ax)
+                for s, ax in zip(salts, "xyz")
+            ],
         )
     )
-    uc_vals = {
-        "a": BOX_L, "b": BOX_L, "c": BOX_L,
-        "alpha": 90.0, "beta": 90.0, "gamma": 90.0,
-        "ax": BOX_L, "ay": 0.0, "az": 0.0,
-        "bx": 0.0, "by": BOX_L, "bz": 0.0,
-        "cx": 0.0, "cy": 0.0, "cz": BOX_L,
-    }
-    uc = spark.range(N_FRAMES).select(
+    return Trajectory(coords, **kw)
+
+
+def _canonical_traj(spark, n_frames: int) -> Trajectory:
+    """The canonical ``n_frames`` × 22,561-atom trajectory in an
+    orthorhombic BOX_L box."""
+    uc = dict(a=BOX_L, b=BOX_L, c=BOX_L, alpha=90.0, beta=90.0, gamma=90.0)
+    uc.update(ax=BOX_L, ay=0.0, az=0.0, bx=0.0, by=BOX_L, bz=0.0)
+    uc.update(cx=0.0, cy=0.0, cz=BOX_L)
+    unitcell = spark.range(n_frames).select(
         F.col("id").alias("frame_id"),
-        *[F.lit(v).cast("float").alias(k) for k, v in uc_vals.items()],
+        *[F.lit(v).cast("float").alias(k) for k, v in uc.items()],
     )
-    # range-generated coords are already frame-contiguous + sorted
-    return Trajectory(coords, unitcell=uc, packed=True)
+    # partitions scale with frames (~20 frames/task): a fixed count
+    # made per-task frame blocks grow with the tier, and the 10x run
+    # went 2.6x super-linear from Python-worker memory pressure alone
+    n_parts = max(64, min(2048, n_frames // 20))
+    return _grid_traj(
+        spark, n_frames, N_ATOMS, n_parts, (0, 1, 2), "float",
+        unitcell=unitcell, packed=True,
+    )
 
 
-def _noop(df):
+def _distances(traj: Trajectory) -> DataFrame:
+    return compute_distances(
+        traj, PAIRS, periodic=True, form="vectorized", n_atoms=N_ATOMS
+    )
+
+
+def _canonical_pass(c: Inputs, n_frames: int = N_FRAMES) -> DataFrame:
+    """Generation → atom filter → kernel in one uncached pass — the
+    analog of the reference's lazy-load-then-compute end-to-end."""
+    return _distances(_canonical_traj(c.spark, n_frames))
+
+
+def _pw_traj(c: Inputs, n_frames: int, n_parts: int) -> Trajectory:
+    """``n_frames`` × 100 atoms for the pairwise-RMSD rows."""
+    return _grid_traj(c.spark, n_frames, 100, n_parts, (11, 12, 13), "double")
+
+
+def _rep10(df: DataFrame, id_col: str, perturb: bool = False) -> DataFrame:
+    """Ten copies with disjoint ids (copy 0 keeps the original ids, so
+    query vectors are unchanged); ``perturb`` suffixes every token
+    with the copy number so the duplicated FRACTION stays constant."""
+    out = df.select(
+        "*", F.explode(F.sequence(F.lit(0), F.lit(9))).alias("rep")
+    ).withColumn(id_col, F.col(id_col) + F.col("rep") * F.lit(10_000_000))
+    if perturb:
+        suffix = "transform(split(text, ' '), x -> concat(x, '_', rep))"
+        out = out.withColumn("text", F.expr(f"array_join({suffix}, ' ')"))
+    return out.drop("rep")
+
+
+def _skew(docs: DataFrame) -> DataFrame:
+    """20% of docs share one boilerplate template, so one LSH band
+    bucket holds ~20% of the corpus — the shape MAX_BUCKET's cap
+    exists for."""
+    boiler = F.concat(
+        F.lit(
+            "terms of service apply to all users of this site "
+            "please read carefully before continuing varies "
+        ),
+        (F.col("doc_id") % 7).cast("string"),
+    )
+    return docs.withColumn(
+        "text", F.when(F.col("doc_id") % 5 == 0, boiler).otherwise(F.col("text"))
+    )
+
+
+class Inputs:
+    """The session plus lazily built inputs shared by the row thunks."""
+
+    def __init__(self, spark, sf_dir: str) -> None:
+        self.spark, self.sf_dir = spark, sf_dir
+        self._tmp: list[str] = []
+
+    @cached_property
+    def registry(self) -> dict:
+        return queries()
+
+    @cached_property
+    def traj(self) -> Trajectory:
+        return _canonical_traj(self.spark, N_FRAMES)
+
+    @cached_property
+    def docs(self) -> DataFrame:
+        return self.spark.read.parquet(f"{self.sf_dir}/documents.parquet")
+
+    @cached_property
+    def emb(self) -> DataFrame:
+        return self.spark.read.parquet(f"{self.sf_dir}/embeddings.parquet")
+
+    @cached_property
+    def docs10(self) -> DataFrame:
+        return _rep10(self.docs, "doc_id")
+
+    @cached_property
+    def emb10(self) -> DataFrame:
+        return _rep10(self.emb, "vec_id")
+
+    @cached_property
+    def fair10(self) -> DataFrame:
+        """10x corpus at a constant duplicated fraction, materialized
+        to parquet so the rows measure the operator, not the
+        perturbation transform (inline it dominated d11 3x)."""
+        self._tmp.append(tempfile.mkdtemp(prefix="d11_10x_"))
+        path = f"{self._tmp[-1]}/docs"
+        _rep10(self.docs, "doc_id", perturb=True).write.mode("overwrite").parquet(path)
+        return self.spark.read.parquet(path)
+
+    def close(self) -> None:
+        for path in self._tmp:
+            shutil.rmtree(path, ignore_errors=True)
+
+
+# ---- steps: untimed actions between rows --------------------------------
+def _drop_canonical_cache(c: Inputs) -> None:
+    c.traj.frame_packed().unpersist()
+
+
+def _write_fair10(c: Inputs) -> None:
+    c.fair10  # noqa: B018 — materialize outside every timed window
+
+
+# ---- production-mode operator calls (the registry entries are the
+# oracle gates' sorted-vocab / pinned-parameter variants) ---------------
+_topk = partial(sim.cosine_topk_vectorized, query_ids=list(range(10)), k=10)
+_sem_dedup = partial(sim.semantic_dedup, threshold=0.3)
+_winnow = partial(text.winnow_fingerprints, k=3, w=4)
+_wmatch = partial(dedup.winnow_matches, k=3, w=4)
+_lsh = partial(dedup.near_duplicates_minhash, threshold=0.8)
+_bm25 = partial(text.bm25_topk, query="hash join merge order", k=5)
+_bpe = partial(bpe.bpe_train, n_merges=8)  # runs its own actions
+
+
+def _d20(docs: DataFrame) -> DataFrame:
+    return dedup.cross_corpus_neardup(
+        docs.where(F.col("doc_id") % 7 != 0),
+        docs.where(F.col("doc_id") % 7 == 0),
+        threshold=0.9,
+    )
+
+
+def _d22(c: Inputs) -> DataFrame:
+    # minhash pairs → components → quality-apportioned weights
+    pairs = dedup.near_duplicates_minhash(c.docs, threshold=0.9)
+    pairs = pairs.select(F.col("doc1").alias("id1"), F.col("doc2").alias("id2"))
+    return dedup.quality_soft_dedup_weights(c.docs, pairs)
+
+
+def _d23(c: Inputs) -> DataFrame:
+    # tol-stopped PageRank on the symmetrized hashed winnow-match graph
+    edge = lambda s, d: F.struct(F.col(s).alias("src"), F.col(d).alias("dst"))  # noqa: E731
+    both = F.array(edge("doc1", "doc2"), edge("doc2", "doc1"))
+    edges = _wmatch(c.docs).select(F.explode(both).alias("e")).select("e.src", "e.dst")
+    return graph.pagerank(edges, n_iter=40, tol=1.0 / 4096, damping=0.5)
+
+
+def _d24(c: Inputs) -> DataFrame:
+    # dangling-mass redistribution on the DIRECTED winnow graph:
+    # doc2-only vertices are genuine sinks
+    edges = _wmatch(c.docs).select(
+        F.col("doc1").alias("src"), F.col("doc2").alias("dst")
+    )
+    return graph.pagerank(edges, n_iter=8, damping=0.5, dangling="redistribute")
+
+
+def _dsir(docs: DataFrame) -> DataFrame:
+    return curation.dsir_importance(docs, docs.where(F.col("doc_id") % 20 == 0))
+
+
+CANONICAL = [
+    Row("canonical_load", lambda c: c.traj.frame_packed().cache().count(), n=1),
+    # the first of 3 is also recorded as canonical_distances_cold:
+    # residual JIT / worker-pool effects even after the warm-up pass
+    Row("canonical_distances", lambda c: _distances(c.traj)),
+    _drop_canonical_cache,
+    Row("canonical_onepass", _canonical_pass, n=5),
+]
+
+SUITE = [
+    *map(
+        _suite,
+        (
+            "g1_distances_mic_triclinic", "g3_angles", "g5_center_of_mass",
+            "g7_closest_contact", "x1_frame_rmsd", "d1_exact_dedup",
+            "t4_fingerprint", "r1_pricing_summary", "r2_topk_revenue",
+            "r24_forecast_revenue", "t8_heuristic_filter",
+            "c4_sequence_packing", "d6_semantic_dedup",
+            "d11_duplicate_spans", "d14_maximal_matches", "t16_bm25_topk",
+            "d13_bloom_cross_corpus", "c8_quantile_prune",
+            "t17_dsir_importance", "c9_weighted_sample",
+            "c12_context_chunks", "t23_perplexity_buckets",
+        ),
+    ),
+    _suite("v_cosine_topk_vectorized", lambda c: _topk(c.emb)),
+    # AUTO cluster count + mandatory cap: the production default
+    _suite("d6_semantic_dedup_auto", lambda c: _sem_dedup(c.emb)),
+    _suite("t22_winnowing_hashed", lambda c: _winnow(c.docs)),
+    _suite("d17_winnow_matches_hashed", lambda c: _wmatch(c.docs)),
+    # detail-only: the headline queries dict is at its byte cap
+    *(
+        _suite(name, record=DETAIL)
+        for name in (
+            "t26_top_ngram_fraction", "t27_dup_ngram_char_fraction",
+            "e9_inter_event_gaps", "m15_audio_clipping", "v9_filtered_topk",
+        )
+    ),
+    _suite("d20_cross_corpus_hashed", lambda c: _d20(c.docs), record=DETAIL),
+    _suite("d22_quality_soft_dedup_hashed", _d22, record=DETAIL),
+    _suite("d23_pagerank_tol_hashed", _d23, record=DETAIL),
+    _suite("d24_pagerank_dangling_hashed", _d24, record=DETAIL),
+]
+
+# 1x partners that no suite row measures run here, best-of-3, in the
+# same production mode as their 10x row.  Replicated ids (docs10) are
+# the fair 10x shape for per-doc work; fair10 keeps the duplicated
+# fraction constant where replication would make everything a dup.
+SCALE = [
+    _scale(
+        "canonical_onepass_10x", "canonical_onepass",
+        partial(_canonical_pass, n_frames=10 * N_FRAMES), n=3,
+    ),
+    _scale("v_cosine_topk_vectorized_10x", "v_cosine_topk_vectorized",
+           lambda c: _topk(c.emb10)),
+    _scale("d1_exact_dedup_10x", "d1_exact_dedup",
+           lambda c: dedup.exact_duplicates(c.docs10)),
+    # replicated ids are LSH's adversarial case: every bucket 10x deeper
+    Row("d2_minhash_lsh", lambda c: _lsh(c.docs)),
+    _scale("d2_minhash_lsh_10x", "d2_minhash_lsh", lambda c: _lsh(c.docs10), n=3),
+    _write_fair10,
+    _scale("d11_duplicate_spans_10x", "d11_duplicate_spans",
+           lambda c: dedup.duplicate_spans(c.fair10), n=2),
+    # every window duplicated: a denser workload, kept out of linearity
+    _scale("d11_duplicate_spans_10x_alldup", None,
+           lambda c: dedup.duplicate_spans(c.docs10)),
+    Row("d14_maximal_matches_hashed", lambda c: dedup.maximal_matches(c.docs)),
+    _scale("d14_maximal_matches_10x", "d14_maximal_matches_hashed",
+           lambda c: dedup.maximal_matches(c.fair10)),
+    _scale("d20_cross_corpus_10x", "d20_cross_corpus_hashed", lambda c: _d20(c.fair10)),
+    _scale("t22_winnowing_10x", "t22_winnowing_hashed", lambda c: _winnow(c.docs10)),
+    _scale("t27_dup_ngram_10x", "t27_dup_ngram_char_fraction",
+           lambda c: text.dup_ngram_char_fraction(c.docs10, n=5)),
+    # pairwise-RMSD crossover, SQL sufficient statistics vs blocked
+    # gram matmul: the measured basis for the >10^4-frame routing
+    # advice (the SQL form at 4k frames is recorded once, in build())
+    _scale("x16_pairwise_sql_1k", None,
+           lambda c: rmsd.pairwise_rmsd(_pw_traj(c, PW_FRAMES, 32))),
+    _scale("x16b_pairwise_blocked_1k", None,
+           lambda c: rmsd.pairwise_rmsd_blocked(_pw_traj(c, PW_FRAMES, 32), block=256)),
+    _scale("x16b_pairwise_blocked_4k", None,
+           lambda c: rmsd.pairwise_rmsd_blocked(_pw_traj(c, 4 * PW_FRAMES, 64), block=512)),
+    _scale("x16c_pairwise_auto_4k", None,
+           lambda c: rmsd.pairwise_rmsd_auto(_pw_traj(c, 4 * PW_FRAMES, 64), block=512)),
+    _scale("c4_sequence_packing_10x", "c4_sequence_packing",
+           lambda c: curation.pack_sequences(c.docs10, budget=512, order_mode="mult")),
+    _scale("d6_semantic_dedup_auto_10x", "d6_semantic_dedup_auto",
+           lambda c: _sem_dedup(c.emb10)),
+    Row("d13_bloom_membership", lambda c: dedup.bloom_membership(c.docs, c.docs)),
+    _scale("d13_bloom_membership_10x", "d13_bloom_membership",
+           lambda c: dedup.bloom_membership(c.docs10, c.docs10)),
+    Row("t16_bm25", lambda c: _bm25(c.docs)),
+    _scale("t16_bm25_10x", "t16_bm25", lambda c: _bm25(c.docs10)),
+    Row("d2_minhash_lsh_skew", lambda c: _lsh(_skew(c.docs)), n=1),
+    _scale("d2_minhash_lsh_skew_10x", "d2_minhash_lsh_skew",
+           lambda c: _lsh(_skew(c.docs10))),
+    Row("t18_bpe_train", lambda c: _bpe(c.docs)),
+    _scale("t18_bpe_train_10x", "t18_bpe_train", lambda c: _bpe(c.docs10)),
+    Row("t17_dsir_hashed", lambda c: _dsir(c.docs)),
+    _scale("t17_dsir_hashed_10x", "t17_dsir_hashed", lambda c: _dsir(c.docs10)),
+]
+
+LOCAL12 = [Row("canonical_onepass_local12", _canonical_pass, n=5)]
+
+TIERS = (CANONICAL, SUITE, SCALE, LOCAL12)
+ROWS = [r for tier in TIERS for r in tier if isinstance(r, Row)]
+
+# scale_10x keeps the probes around its two longest workloads
+SCALE_PROBES = {
+    "canonical": ("canonical_onepass_10x", "canonical_onepass_10x"),
+    "d2": ("d2_minhash_lsh", "d2_minhash_lsh_10x"),
+}
+
+
+def _noop(df: DataFrame) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
 def _cpu_probe() -> float:
     """Fixed single-thread workload (~0.3 s on an unthrottled core).
-    Run at bench start AND end: the round-4 host throttles ~5× under
-    sustained all-core load and recovers when idle, so a slow tier-2
-    number with end_probe >> start_probe is host throttling, not an
-    engine regression.  The ratio ships in the JSON."""
+    Hosts throttle under sustained all-core load and recover when
+    idle, so a slow entry whose bracketing probes are also slow is
+    host noise, not an engine regression."""
     import numpy as np
 
     a = np.random.default_rng(0).random((512, 512), dtype=np.float32)
-    t0 = time.time()
+    t0 = time.perf_counter()
     for _ in range(40):
         a = a @ a
         a /= np.abs(a).max() + 1.0
     x = 0
     for i in range(2_000_000):
         x += i
-    return round(time.time() - t0, 3)
+    return round(time.perf_counter() - t0, 3)
+
+
+def _load_json(path: str) -> dict:
+    try:
+        with open(path) as f:
+            rec = json.load(f)
+    except (OSError, ValueError):
+        return {}
+    return rec if isinstance(rec, dict) else {}
+
+
+def _prior_bests(master: str, here: str = HERE) -> tuple[dict, str | None]:
+    """Best earlier time per entry on the same ``master``: the min over
+    the latest ``BENCH_r<NN>.json`` headline and the previous
+    ``bench_detail.json`` iterations.  A source recorded under another
+    master, or under none, is skipped: a wider host's time says
+    nothing about a regression here.  Returns (bests, the BENCH file
+    used or None)."""
+    sources, used = [], None
+    # variant files (BENCH_r12_c8.json) are other runs, not the round's
+    benches = sorted(
+        p
+        for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
+        if re.fullmatch(r"BENCH_r\d+\.json", os.path.basename(p))
+    )
+    if benches:
+        rec = _load_json(benches[-1])
+        rec = rec.get("parsed") or rec  # the driver wraps the headline
+        if rec.get("master") == master:
+            used = os.path.basename(benches[-1])
+            sources.append(rec.get("queries") or {})
+    detail = _load_json(os.path.join(here, "bench_detail.json"))
+    if detail.get("master") == master:
+        sources.append({k: min(v) for k, v in detail.get("iters", {}).items() if v})
+    best: dict = {}
+    for src in sources:
+        for k, v in src.items():
+            if isinstance(v, (int, float)):
+                best[k] = min(float(v), best.get(k, math.inf))
+    return best, used
+
+
+def _cap_headline(headline: dict) -> str:
+    """The headline LINE, cut to ``HEADLINE_CAP`` bytes: first the hot
+    names, then whole optional sections; the driver contract
+    (metric/value/unit/queries/sf) is never dropped."""
+    line = json.dumps(headline, separators=(",", ":"))
+    if len(line) > HEADLINE_CAP and headline.get("probe"):
+        headline["probe"]["hot"] = []
+        headline["truncated"] = True
+        line = json.dumps(headline, separators=(",", ":"))
+    for drop in ("probe", "master", "warm", "detail", "linearity", "spread"):
+        if len(line) <= HEADLINE_CAP:
+            break
+        headline.pop(drop, None)
+        headline["truncated"] = True
+        line = json.dumps(headline, separators=(",", ":"))
+    return line
+
+
+class Bench:
+    """Run state: the three records, per-row iterations and probes."""
+
+    def __init__(self, ctx: Inputs | None, start_probe: float) -> None:
+        self.ctx = ctx
+        self.rec: dict[str, dict] = {HEADLINE: {}, DETAIL: {}, SCALE_10X: {}}
+        self.iters: dict[str, list[float]] = {}
+        self.bracket: dict[str, list[float]] = {}
+        self.probes = {"start_s": start_probe}
+        self.last_probe = start_probe
+        self.retimed: dict[str, list[float]] = {}
+
+    def mark(self, key: str) -> None:
+        self.probes[key] = self.last_probe = _cpu_probe()
+
+    def run(self, tier: list) -> None:
+        for item in tier:
+            if isinstance(item, Row):
+                self.timed(item)
+            else:
+                item(self.ctx)  # an untimed step
+
+    def _once(self, row: Row) -> float:
+        """One timed call; the operators' tracked caches are released
+        outside the window (dead caches pinned across ~30 entries
+        measurably degraded the whole JVM)."""
+        run = row.run or (lambda c: c.registry[row.name](c.spark, c.sf_dir))
+        t0 = time.perf_counter()
+        out = run(self.ctx)
+        if isinstance(out, DataFrame):
+            _noop(out)
+        dt = round(time.perf_counter() - t0, 3)
+        release_caches()
+        return dt
+
+    def timed(self, row: Row) -> None:
+        before = self.last_probe
+        for _ in range(row.warmup):
+            self._once(row)
+        its = [self._once(row) for _ in range(row.n)]
+        self.last_probe = _cpu_probe()
+        self.record(row, its, [before, self.last_probe])
+
+    def record(self, row: Row, its: list[float], bracket: list[float]) -> None:
+        self.bracket[row.name] = bracket
+        rec = self.rec[row.record]
+        if row.n > 1 and row.record == SCALE_10X:
+            rec[f"{row.name}_iters"] = its
+        elif row.n > 1:
+            self.iters[row.name] = its
+        rec[row.name] = min(its)
+
+    def retime(self, rows: list, prior: dict) -> None:
+        """A best-of entry slower than 2x its prior best gets 2 extra
+        iterations, and the min over all is recorded.  Sub-0.2 s
+        entries are skipped: at that scale 2x is scheduler jitter."""
+        for row in rows:
+            if not isinstance(row, Row) or row.name not in self.iters:
+                continue
+            rec = self.rec[row.record]
+            cur, prev = rec[row.name], prior.get(row.name)
+            if prev and cur >= 0.2 and cur > 2.0 * prev:
+                self.iters[row.name] += [self._once(row) for _ in range(2)]
+                rec[row.name] = min(self.iters[row.name])
+                self.retimed[row.name] = [cur, rec[row.name]]
+
+    def linearity(self) -> dict[str, float]:
+        """t_10x / (10 · t_1x) per 10x row.  Keys drop ``_10x``; a row
+        whose 1x side is detail-only gets its short id (``t27``),
+        which keeps the headline under its byte cap."""
+        rows = {r.name: r for r in ROWS}
+        out = {}
+        for row in ROWS:
+            if row.base and row.name in self.rec[SCALE_10X]:
+                base = rows[row.base]
+                short = base.record == DETAIL
+                key = base.name.split("_")[0] if short else row.name[: -len("_10x")]
+                t1 = self.rec[base.record][base.name]
+                out[key] = round(self.rec[SCALE_10X][row.name] / (10 * t1), 2)
+        return out
+
+    def build(self, sf, master: str, prior_source: str | None) -> tuple[dict, str]:
+        """(the bench_detail.json record, the capped headline line)."""
+        # hot flags suite entries; the other rows' brackets are in the
+        # detail record for attribution.  The brackets form a chain (one
+        # probe closes a row and opens the next): take each probe once.
+        suite = {r.name: self.bracket[r.name] for r in SUITE}
+        probes = sorted([b[1] for b in suite.values()] + [*self.probes.values()])
+        med = probes[len(probes) // 2]
+        # worst first: the capped headline must show the worst offenders
+        hot = sorted(
+            (n for n, b in suite.items() if max(b) > 2 * med), key=lambda n: -max(suite[n])
+        )
+        scale = dict(self.rec[SCALE_10X])
+        for tag, (first, last) in SCALE_PROBES.items():
+            scale[f"probe_before_{tag}_s"] = self.bracket[first][0]
+            scale[f"probe_after_{tag}_s"] = self.bracket[last][1]
+        # measured once on an idle local[32] host: 230.9 s vs 11.3 s
+        # blocked — too slow to re-run every time
+        scale["x16_pairwise_sql_4k_recorded_once"] = 230.9
+        scale["linearity"] = self.linearity()
+        detail = {
+            "iters": self.iters,
+            "times_detail": self.rec[DETAIL],
+            "scale_10x": scale,
+            "cpu_probe": self.probes,
+            "probe_bracket": self.bracket,
+            "probe_median_s": med,
+            "probe_hot": hot,
+            # [warm-up, timed iterations] per row; a retimed row adds 2
+            "best_of": {r.name: [r.warmup, r.n] for r in ROWS},
+            "retimed": self.retimed,
+            "retime_prior_source": prior_source,
+            "master": master,
+            "cpus": os.environ.get("SPARK_GRAFT_CPUS"),
+        }
+        times = dict(self.rec[HEADLINE])
+        times["canonical_distances_cold"] = self.iters["canonical_distances"][0]
+        headline = {
+            "metric": "canonical_e2e",
+            "value": times["canonical_onepass"],
+            "unit": "sec",
+            "queries": times,
+            "sf": sf,
+            # warm session (worker pool + JIT pre-warmed), as the
+            # reference's notebook timings are; BASELINE.md's numbers
+            # are 12 threads — compare canonical_onepass_local12
+            "warm": True,
+            "master": master,
+            # wide spread = warm-up; tight-but-high + hot probes = host
+            "spread": {"onepass": self.iters["canonical_onepass"]},
+            "linearity": scale["linearity"],
+            "probe": {
+                "start_s": self.probes["start_s"],
+                "end_s": self.probes.get("end_s"),
+                "median_s": med,
+                "hot_n": len(hot),
+                "hot": hot[:4],  # hot_n is the true count
+            },
+            "retimed_n": len(self.retimed),
+            "detail": "bench_detail.json",
+        }
+        return detail, _cap_headline(headline)
+
+
+def _write_detail(detail: dict) -> None:
+    """bench_detail.json plus a per-core-count copy, so a second run at
+    another width does not overwrite the first's record."""
+    path = os.path.join(HERE, "bench_detail.json")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    try:
+        for p in [path] + ([path.replace(".json", f"_c{cpus}.json")] if cpus else []):
+            with open(p, "w") as f:
+                json.dump(detail, f, indent=1)
+    except OSError:
+        pass  # read-only checkout: the headline line still carries the record
+
+
+def _session(**kw):
+    spark = get_spark(**kw)
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
 
 def main() -> None:
-    import itertools
-
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
         sf = None
 
-    from dask_traj_spark import queries as q
-    from dask_traj_spark.operators.distance import compute_distances
-    from dask_traj_spark.session import get_spark
-
-    probe_start = _cpu_probe()
-    t_start = time.time()
-    spark = get_spark(app_name="dask-traj-spark-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    times: dict[str, float] = {"session_start": round(time.time() - t_start, 3)}
-
-    # Warm the Python worker pool + module imports with a FULL-WIDTH
-    # run of the same code path at 1/8 the frame count (the reference's
-    # notebook timings are warm-session too — the JVM, BLAS and OS
-    # cache are all hot).  A miniature 1-pair warm is NOT enough:
-    # measured on the round-4 host, the first full-size pass through
-    # the Python workers pays ~4-30 s of one-time cost (worker-pool
-    # growth to peak concurrency + first-large-Arrow-batch memory-pool
-    # expansion per worker) that a tiny warm batch never triggers, so
-    # best-of-2 recorded a half-warm number (21 s vs a 3-6 s steady
-    # state for the cached canonical tier).
-    global N_FRAMES
-    pairs = list(itertools.combinations(range(N_SEL), 2))
-    real_frames = N_FRAMES
-    N_FRAMES = 160
-    mini = _canonical_traj(spark)
-    _noop(
-        compute_distances(
-            mini, pairs, periodic=True, form="vectorized", n_atoms=N_ATOMS
-        )
-    )
-    N_FRAMES = real_frames
-
-    # ---- tier 1: canonical BASELINE workload ------------------------
-    t0 = time.time()
-    traj = _canonical_traj(spark)
-    traj.frame_packed().cache().count()
-    times["canonical_load"] = round(time.time() - t0, 3)
-
-    # three timed iterations: the first includes residual JIT/
-    # page-cache/worker-pool effects ("cold" — measured up to 2-4×
-    # the steady state even after the full-width warm run), best-of
-    # is the steady-state throughput number (the reference's notebook
-    # timings are equally steady-state).
-    runs = []
-    for _ in range(3):
-        t0 = time.time()
-        d = compute_distances(
-            traj, pairs, periodic=True, form="vectorized", n_atoms=N_ATOMS
-        )
-        _noop(d)
-        runs.append(time.time() - t0)
-    times["canonical_distances_cold"] = round(runs[0], 3)
-    times["canonical_distances"] = round(min(runs), 3)
-    iters_canonical_distances = [round(t, 3) for t in runs]
-    traj.frame_packed().unpersist()
-
-    # one-pass e2e: generation → atom-filter → kernel fused in a
-    # single uncached pass — the honest analog of the reference's
-    # lazy-load-then-compute end-to-end number (7.29 s in BASELINE).
-    onepass = []
-    for _ in range(5):
-        t0 = time.time()
-        fresh = _canonical_traj(spark)
-        _noop(
-            compute_distances(
-                fresh, pairs, periodic=True, form="vectorized", n_atoms=N_ATOMS
-            )
-        )
-        onepass.append(time.time() - t0)
-    times["canonical_onepass"] = round(min(onepass), 3)
-    iters_canonical_onepass = [round(t, 3) for t in onepass]
-
-    probes = {"start_s": probe_start, "after_tier1_s": _cpu_probe()}
-
-    # ---- tier 2: oracle-suite SQL-form operators at sf ----------------
-    # ONE THROWAWAY iteration then best-of-3, with every timed
-    # iteration recorded in the JSON (``iters``): iteration 0 pays
-    # plan JIT + codegen + page-cache warm-up (measured up to 4× the
-    # steady state), and BENCH_r04 proved best-of-3 *including* the
-    # warm-up iteration still catches throttle artifacts for queries
-    # late in the suite order (r2 recorded 4.39 s vs a 1.3-1.6 s
-    # steady state).  The recorded spread lets a reader verify no
-    # entry is >1.5× its own steady state.
-    iters: dict[str, list[float]] = {
-        "canonical_distances": iters_canonical_distances,
-        "canonical_onepass": iters_canonical_onepass,
-    }
-    # per-query probe brackets (VERDICT r9 item 3): the r9 driver run
-    # had a contiguous 4-query block 4-10x slower than the committed
-    # same-code run while its NEIGHBORS were fast — per-tier probes
-    # can't attribute a mid-tier load window.  One fixed-work probe
-    # between suite entries (shared: entry i's "after" is entry
-    # i+1's "before") makes host noise attributable per query from
-    # bench_detail.json alone.
-    probe_bracket: dict[str, list[float]] = {}
-    _last_probe = [None]  # shared "after previous = before next"
-
-    # times_detail: entries measured with the full timed() discipline
-    # but recorded ONLY in bench_detail.json — the headline "queries"
-    # dict is byte-capped (the driver's ~2000-byte tail capture), so
-    # post-cap additions go here instead of growing the line past it.
-    times_detail: dict[str, float] = {}
-
-    # thunks kept for the end-of-run self-clearing re-time pass
-    # (VERDICT r11 item 3)
-    _thunks: dict[str, object] = {}
-
-    # Between-iteration cache hygiene: each thunk call builds (and
-    # materializes) its operators' tracked persists fresh, so the
-    # PREVIOUS call's caches are unreachable garbage — but they stay
-    # pinned in the block manager until released, and across ~30
-    # tier-2 entries x 4 calls each the accumulated dead caches
-    # measurably degrade the whole JVM (run-5/6 probe brackets: the
-    # fixed probe ran 10x slower by the time the iterative entries
-    # were reached).  Released OUTSIDE the timed window.
-    from dask_traj_spark.session import release_caches as _release_caches
-
-    def timed(
-        name: str, fn, n: int = 3, warmup: int = 1, headline: bool = True
-    ) -> None:
-        before = _last_probe[0] if _last_probe[0] is not None else _cpu_probe()
-        for _ in range(warmup):
-            fn()
-            _release_caches()
-        its = []
-        for _ in range(n):
-            t0 = time.time()
-            fn()
-            its.append(round(time.time() - t0, 3))
-            _release_caches()
-        after = _cpu_probe()
-        _last_probe[0] = after
-        probe_bracket[name] = [before, after]
-        iters[name] = its
-        _thunks[name] = fn
-        (times if headline else times_detail)[name] = min(its)
-
-    registry = q.queries()
-    for name in (
-        "g1_distances_mic_triclinic",
-        "g3_angles",
-        "g5_center_of_mass",
-        "g7_closest_contact",
-        "x1_frame_rmsd",
-        "d1_exact_dedup",
-        "t4_fingerprint",
-        "r1_pricing_summary",
-        "r2_topk_revenue",
-        "r24_forecast_revenue",
-        "t8_heuristic_filter",
-        "c4_sequence_packing",
-        "d6_semantic_dedup",
-        "d11_duplicate_spans",
-        "d14_maximal_matches",
-        "t16_bm25_topk",
-        "d13_bloom_cross_corpus",
-        "c8_quantile_prune",
-        "t17_dsir_importance",
-        "c9_weighted_sample",
-        "c12_context_chunks",
-        "t23_perplexity_buckets",
-    ):
-        timed(name, lambda name=name: _noop(registry[name](spark, sf_dir)))
-
-    # vectorized ANN at sf scale (matmul path, not the SQL form)
-    from dask_traj_spark.operators.similarity import (
-        cosine_topk_vectorized,
-        semantic_dedup,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    timed(
-        "v_cosine_topk_vectorized",
-        lambda: _noop(cosine_topk_vectorized(emb, list(range(10)), k=10)),
-    )
-
-    # d6 with the AUTO cluster count + mandatory cap (the production
-    # default path — the registry entry above pins n_bits for its
-    # static oracle instead)
-    timed(
-        "d6_semantic_dedup_auto",
-        lambda: _noop(semantic_dedup(emb, threshold=0.3)),
-    )
-
-    # winnowing in the PRODUCTION hashed mode (zero-shuffle HOF
-    # fingerprinting + the capped fp self-join) — the registry
-    # entries are the sorted-vocab oracle gates and would measure
-    # the gate funnel instead
-    from dask_traj_spark.functions.text import winnow_fingerprints
-    from dask_traj_spark.operators.dedup import winnow_matches
-
-    docs_w = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    timed(
-        "t22_winnowing_hashed",
-        lambda: _noop(winnow_fingerprints(docs_w, k=3, w=4)),
-    )
-    timed(
-        "d17_winnow_matches_hashed",
-        lambda: _noop(winnow_matches(docs_w, k=3, w=4)),
-    )
-
-    # ---- session-6 additions (detail-only: the headline queries
-    # dict is at its byte cap; these land in bench_detail.json) ----
-    for name in (
-        "t26_top_ngram_fraction",
-        "t27_dup_ngram_char_fraction",
-        "e9_inter_event_gaps",
-        "m15_audio_clipping",
-        "v9_filtered_topk",
-    ):
-        timed(
-            name,
-            lambda name=name: _noop(registry[name](spark, sf_dir)),
-            headline=False,
-        )
-    # d20 in the PRODUCTION hashed mode (the registry entry is the
-    # sorted-vocab oracle gate and would measure the gate funnel)
-    from dask_traj_spark.operators.dedup import cross_corpus_neardup
-
-    timed(
-        "d20_cross_corpus_hashed",
-        lambda: _noop(
-            cross_corpus_neardup(
-                docs_w.where(F.col("doc_id") % 7 != 0),
-                docs_w.where(F.col("doc_id") % 7 == 0),
-                threshold=0.9,
-            )
-        ),
-        headline=False,
-    )
-    # d22 in the PRODUCTION hashed mode (r11): minhash pairs →
-    # components → quality-apportioned weights, end to end
-    from dask_traj_spark.operators.dedup import (
-        near_duplicates_minhash,
-        quality_soft_dedup_weights,
-    )
-
-    def _d22_hashed():
-        pairs = near_duplicates_minhash(docs_w, threshold=0.9).select(
-            F.col("doc1").alias("id1"), F.col("doc2").alias("id2")
-        )
-        _noop(quality_soft_dedup_weights(docs_w, pairs))
-
-    timed("d22_quality_soft_dedup_hashed", _d22_hashed, headline=False)
-    # d23's operator mode: tol-stopped PageRank on the PRODUCTION
-    # hashed winnow-match dup graph (the d18 graph, data-dependent
-    # round count instead of fixed-8)
-    from dask_traj_spark.operators.graph import pagerank
-
-    def _d23_tol():
-        wm = winnow_matches(docs_w, k=3, w=4)
-        ge = wm.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("doc1").alias("src"), F.col("doc2").alias("dst")
-                    ),
-                    F.struct(
-                        F.col("doc2").alias("src"), F.col("doc1").alias("dst")
-                    ),
-                )
-            ).alias("e")
-        ).select("e.src", "e.dst")
-        _noop(pagerank(ge, n_iter=40, tol=1.0 / 4096, damping=0.5))
-
-    timed("d23_pagerank_tol_hashed", _d23_tol, headline=False)
-
-    # d24's operator mode: dangling-mass redistribution on the
-    # DIRECTED (unsymmetrized) hashed winnow graph — doc2-only
-    # vertices are genuine sinks, so the per-round sink-mass
-    # aggregate is load-bearing
-    def _d24_dangling():
-        wm = winnow_matches(docs_w, k=3, w=4)
-        _noop(
-            pagerank(
-                wm.select(
-                    F.col("doc1").alias("src"), F.col("doc2").alias("dst")
-                ),
-                n_iter=8,
-                damping=0.5,
-                dangling="redistribute",
-            )
-        )
-
-    timed("d24_pagerank_dangling_hashed", _d24_dangling, headline=False)
-    probes["after_tier2_s"] = _cpu_probe()
-
-    # ---- tier 3: 10x scale evidence (VERDICT r3 item 2) ---------------
-    # Every 100-TB posture claim needs at least one measured scale-up.
-    # Each entry re-runs a tier-1/2 workload at 10x the input and the
-    # JSON reports linearity = t_10x / (10 * t_1x): ~1.0 is perfectly
-    # linear, >2 means super-linear degradation (the judge's gate).
-    # Single timed iteration each — they run on a fully warm session,
-    # and the 10x canonical alone is ~35 s of wall time.
-    scale = {}
-    if os.environ.get("SPARK_GRAFT_SCALE_TIER", "1") != "0":
-        # tier boundary hygiene: tier 2's shuffle-heavy suite leaves
-        # shuffle/broadcast references that ContextCleaner only frees
-        # on a JVM GC, and with a 48g heap none happens naturally —
-        # measured r8 (idle local[32]): 10x canonical right after a
-        # MinHash suite ran 73/42/34 s vs 25/18 s after a forced GC
-        # (and the r7 bench recorded 110/76/46 s for the same code).
-        # One explicit GC here makes the scale tier measure the
-        # OPERATOR's scaling, not tier-2's retained garbage; the
-        # session-level periodicGC (5 min) is the production analog.
-        spark.sparkContext._jvm.System.gc()
-        # 10x canonical: 12,510 frames x 22,561 atoms, one-pass.
-        # Bracketed by its OWN cpu probes (VERDICT r4: the recorded
-        # 10x linearity of 1.35 vs a measured 0.89 could not be
-        # reconciled without knowing whether the host throttled
-        # DURING this specific ~20-40 s workload).
-        scale["probe_before_canonical_s"] = _cpu_probe()
-        N_FRAMES = real_frames * 10
-        # best-of-3 with every iteration recorded: single-shot 10x
-        # numbers swung 0.89-1.39x linearity across runs of identical
-        # code — iteration noise dominates at this duration, and the
-        # linearity headline deserves the same discipline as tier 2.
-        # Ground truth from an isolated fresh-session experiment
-        # (3 iters per tier, clean probes): 1x 2.4-2.6 s, 10x
-        # 17.6-20.1 s -> linearity 0.74, genuinely SUB-linear (625
-        # tasks load-balance better than 64).
-        its10 = []
-        for _ in range(3):
-            t0 = time.time()
-            fresh = _canonical_traj(spark)
-            _noop(
-                compute_distances(
-                    fresh, pairs, periodic=True, form="vectorized",
-                    n_atoms=N_ATOMS
-                )
-            )
-            its10.append(round(time.time() - t0, 3))
-        scale["canonical_onepass_10x_iters"] = its10
-        scale["canonical_onepass_10x"] = min(its10)
-        N_FRAMES = real_frames
-        scale["probe_after_canonical_s"] = _cpu_probe()
-
-        # 10x corpus: replicate with disjoint ids (rep 0 = originals,
-        # so the query vectors are unchanged)
-        rep = F.explode(F.sequence(F.lit(0), F.lit(9))).alias("rep")
-        emb10 = emb.select("*", rep).withColumn(
-            "vec_id", F.col("vec_id") + F.col("rep") * F.lit(10_000_000)
-        ).drop("rep")
-        t0 = time.time()
-        _noop(cosine_topk_vectorized(emb10, list(range(10)), k=10))
-        scale["v_cosine_topk_vectorized_10x"] = round(time.time() - t0, 3)
-
-        from dask_traj_spark.operators.dedup import (
-            exact_duplicates,
-            near_duplicates_minhash,
-        )
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        docs10 = docs.select("*", rep).withColumn(
-            "doc_id", F.col("doc_id") + F.col("rep") * F.lit(10_000_000)
-        ).drop("rep")
-        t0 = time.time()
-        _noop(exact_duplicates(docs10))
-        scale["d1_exact_dedup_10x"] = round(time.time() - t0, 3)
-
-        # MinHash-LSH near-dup at 1x and 10x: the bucketed-join shape
-        # whose skew caps are the 100-TB posture claim — replicated
-        # ids are the adversarial case (every bucket 10x deeper).
-        # Best-of-3 with recorded iterations AND its own cpu-probe
-        # bracket (VERDICT r5 item 3: the single-shot r5 numbers
-        # regressed 3-6x on a visibly throttling host and could not
-        # be adjudicated without per-iteration + probe evidence).
-        scale["probe_before_d2_s"] = _cpu_probe()
-        its_d2 = []
-        for _ in range(3):
-            t0 = time.time()
-            _noop(near_duplicates_minhash(docs, threshold=0.8))
-            its_d2.append(round(time.time() - t0, 3))
-            _release_caches()
-        iters["d2_minhash_lsh"] = its_d2
-        times["d2_minhash_lsh"] = min(its_d2)
-        its_d2_10 = []
-        for _ in range(3):
-            t0 = time.time()
-            _noop(near_duplicates_minhash(docs10, threshold=0.8))
-            its_d2_10.append(round(time.time() - t0, 3))
-            _release_caches()
-        scale["d2_minhash_lsh_10x_iters"] = its_d2_10
-        scale["d2_minhash_lsh_10x"] = min(its_d2_10)
-        scale["probe_after_d2_s"] = _cpu_probe()
-
-        # duplicate-span detection at 10x.  Two shapes:
-        # - FAIR (drives the linearity entry): per-copy token
-        #   perturbation keeps the duplicated FRACTION constant, and
-        #   the corpus is materialized to parquet first so the
-        #   measurement is d11 itself, not the perturbation
-        #   transform (measured: inline perturbation dominated the
-        #   first cut of this metric 3x).
-        # - ALL-DUP (recorded beside it): the replicated-id corpus
-        #   where EVERY window is duplicated — output covers 100% of
-        #   positions, a categorically denser workload, so it stays
-        #   out of the linearity gate.
-        import shutil
-        import tempfile
-
-        from dask_traj_spark.operators.dedup import duplicate_spans
-
-        d10p_dir = tempfile.mkdtemp(prefix="d11_10x_")
-        (
-            docs.select("*", rep)
-            .withColumn(
-                "doc_id",
-                F.col("doc_id") + F.col("rep") * F.lit(10_000_000),
-            )
-            .withColumn(
-                "text",
-                F.expr(
-                    "array_join(transform(split(text, ' '), "
-                    "x -> concat(x, '_', rep)), ' ')"
-                ),
-            )
-            .drop("rep")
-            .write.mode("overwrite")
-            .parquet(f"{d10p_dir}/docs")
-        )
-        d10p = spark.read.parquet(f"{d10p_dir}/docs")
-        its_d11 = []
-        for _ in range(2):
-            t0 = time.time()
-            _noop(duplicate_spans(d10p))
-            its_d11.append(round(time.time() - t0, 3))
-        scale["d11_duplicate_spans_10x_iters"] = its_d11
-        scale["d11_duplicate_spans_10x"] = min(its_d11)
-        t0 = time.time()
-        _noop(duplicate_spans(docs10))
-        scale["d11_duplicate_spans_10x_alldup"] = round(time.time() - t0, 3)
-
-        # d14 maximal matches on the SAME fair 10x corpus (duplicated
-        # fraction constant; the occurrence cap bounds the pair join,
-        # so this measures the capped-join + diagonal-islands scaling).
-        # Both sides of the linearity ratio run the HASHED production
-        # mode — the suite's 1x entry above is the exact-mode oracle
-        # gate and would skew the ratio.
-        from dask_traj_spark.operators.dedup import maximal_matches
-
-        # Measurement fix (recorded in OPTIMIZATION_r13.md): the
-        # scale tier's 1x sides used to be SINGLE-SHOT, and r11→r12
-        # produced phantom sub-2x "regressions" on byte-identical
-        # code that the retime pass (>2x only) could not clear
-        # (t18 0.82×, t17 0.50× were adjudicated as host noise via
-        # the 8-core run).  These entries now get best-of-n with
-        # every iteration recorded in bench_detail.json — same
-        # workload, same noop action, same scale factor; iteration 0
-        # is what the old methodology would have recorded.
-        def timed_1x(name: str, fn, n: int = 3) -> None:
-            its = []
-            for _ in range(n):
-                t0 = time.time()
-                fn()
-                its.append(round(time.time() - t0, 3))
-                _release_caches()
-            iters[name] = its
-            _thunks[name] = fn
-            times[name] = min(its)
-
-        timed_1x("d14_maximal_matches_hashed", lambda: _noop(maximal_matches(docs)))
-        t0 = time.time()
-        _noop(maximal_matches(d10p))
-        scale["d14_maximal_matches_10x"] = round(time.time() - t0, 3)
-
-        # d20 cross-corpus near-dup on the SAME fair 10x corpus
-        # (duplicated fraction constant — plain replication would
-        # make everything a near-dup of everything); hashed
-        # production mode on both sides of the ratio
-        t0 = time.time()
-        _noop(
-            cross_corpus_neardup(
-                d10p.where(F.col("doc_id") % 7 != 0),
-                d10p.where(F.col("doc_id") % 7 == 0),
-                threshold=0.9,
-            )
-        )
-        scale["d20_cross_corpus_10x"] = round(time.time() - t0, 3)
-        shutil.rmtree(d10p_dir, ignore_errors=True)
-
-        # t22 winnowing at 10x: fingerprint selection is per-doc
-        # work, so the replicated-id corpus is already the fair
-        # shape (no perturbation needed; duplication changes only
-        # d17's downstream join, not t22's selection cost)
-        t0 = time.time()
-        _noop(winnow_fingerprints(docs10, k=3, w=4))
-        scale["t22_winnowing_10x"] = round(time.time() - t0, 3)
-
-        # t27 duplicate-n-gram char coverage at 10x: per-doc work
-        # (within-doc duplicates), so the replicated-id corpus is
-        # the fair shape, same argument as t22
-        from dask_traj_spark.functions.text import dup_ngram_char_fraction
-
-        t0 = time.time()
-        _noop(dup_ngram_char_fraction(docs10, n=5))
-        scale["t27_dup_ngram_10x"] = round(time.time() - t0, 3)
-
-        # pairwise-RMSD crossover: the x16 SQL sufficient-statistics
-        # form vs the x16b blocked-gram matmul on the SAME synthetic
-        # 1000-frame x 100-atom trajectory.  The SQL form's atom-
-        # keyed self-join emits n²/2 aggregate groups from a 100x
-        # row-amplified join (~50M intermediate rows here); the
-        # blocked form does (n/block)²/2 dense matmuls.  Recording
-        # both is the measured basis for the documented >10^4-frame
-        # routing advice.
-        from dask_traj_spark.operators.rmsd import (
-            pairwise_rmsd,
-            pairwise_rmsd_blocked,
-        )
-        from dask_traj_spark.trajectory import Trajectory
-
-        PW_FRAMES, PW_ATOMS = 1000, 100
-
-        def _pw_traj(n_frames: int, n_parts: int) -> "Trajectory":
-            gidp = F.col("frame_id") * PW_ATOMS + F.col("atom_id")
-            return Trajectory(
-                spark.range(n_frames, numPartitions=n_parts)
-                .select(
-                    F.col("id").alias("frame_id"),
-                    F.explode(
-                        F.sequence(F.lit(0), F.lit(PW_ATOMS - 1))
-                    ).alias("atom_id"),
-                )
-                .select(
-                    "frame_id",
-                    F.col("atom_id").cast("int").alias("atom_id"),
-                    *[
-                        (
-                            F.pmod(F.xxhash64(gidp, F.lit(s)), F.lit(4096))
-                            / 2048.0
-                        ).cast("double").alias(ax)
-                        for s, ax in ((11, "x"), (12, "y"), (13, "z"))
-                    ],
-                )
-            )
-
-        pw_traj = _pw_traj(PW_FRAMES, 32)
-        t0 = time.time()
-        _noop(pairwise_rmsd(pw_traj))
-        scale["x16_pairwise_sql_1k"] = round(time.time() - t0, 3)
-        t0 = time.time()
-        _noop(pairwise_rmsd_blocked(pw_traj, block=256))
-        scale["x16b_pairwise_blocked_1k"] = round(time.time() - t0, 3)
-        # the far side of the crossover: 4000 frames, blocked only.
-        # The SQL form at 4000 frames was measured ONCE in isolation
-        # (2026-08-14, idle local[32]): 230.9 s vs blocked 11.3 s —
-        # a 20x win that is too expensive to re-run every round, so
-        # only the blocked side is re-measured here and the SQL
-        # number stands as the recorded ground truth for the
-        # routing advice.
-        t0 = time.time()
-        _noop(pairwise_rmsd_blocked(_pw_traj(PW_FRAMES * 4, 64), block=512))
-        scale["x16b_pairwise_blocked_4k"] = round(time.time() - t0, 3)
-        scale["x16_pairwise_sql_4k_recorded_once"] = 230.9
-        # the auto-dispatcher at 4k frames must land on the blocked
-        # side of the crossover: the number that matters is that it
-        # tracks the blocked form's seconds, not the SQL form's
-        # recorded 230.9 s.  (It runs right after blocked_4k on a
-        # fully warm worker pool, so it typically reads FASTER than
-        # the blocked_4k entry — that delta is warm-up, not the
-        # dispatcher.)
-        from dask_traj_spark.operators.rmsd import pairwise_rmsd_auto
-
-        t0 = time.time()
-        _noop(pairwise_rmsd_auto(_pw_traj(PW_FRAMES * 4, 64), block=512))
-        scale["x16c_pairwise_auto_4k"] = round(time.time() - t0, 3)
-
-        # 10x sequence packing: the distributed prefix sum's scale
-        # evidence (range partition -> local cumsum -> offsets) —
-        # the step that WOULD degenerate if it were a global window
-        from dask_traj_spark.operators.curation import pack_sequences
-
-        t0 = time.time()
-        _noop(pack_sequences(docs10, budget=512, order_mode="mult"))
-        scale["c4_sequence_packing_10x"] = round(time.time() - t0, 3)
-
-        # 10x semantic dedup on the AUTO path: cluster count grows
-        # with the corpus (20k vecs -> more sign bits), so candidate
-        # pairs stay ~n*TARGET/2 — the fix for the r4 "fixed 64-way
-        # fan-out" scale-killer needs measured evidence
-        t0 = time.time()
-        _noop(semantic_dedup(emb10, threshold=0.3))
-        scale["d6_semantic_dedup_auto_10x"] = round(time.time() - t0, 3)
-
-        # 10x cross-corpus Bloom membership: the bitmap is n_bits/64
-        # rows HOWEVER big the corpus (build shuffle and broadcast
-        # are scale-invariant); the linear part is the probe side
-        from dask_traj_spark.operators.dedup import bloom_membership
-
-        timed_1x("d13_bloom_membership", lambda: _noop(bloom_membership(docs, docs)))
-        t0 = time.time()
-        _noop(bloom_membership(docs10, docs10))
-        scale["d13_bloom_membership_10x"] = round(time.time() - t0, 3)
-
-        # 10x BM25: the explode filters to the query's terms in the
-        # same map stage, so shuffled volume is matching tokens only
-        from dask_traj_spark.functions.text import bm25_topk
-
-        timed_1x("t16_bm25", lambda: _noop(bm25_topk(docs, "hash join merge order", k=5)))
-        t0 = time.time()
-        _noop(bm25_topk(docs10, "hash join merge order", k=5))
-        scale["t16_bm25_10x"] = round(time.time() - t0, 3)
-
-        # SKEWED-corpus MinHash-LSH (VERDICT r4 item 8): 20% of docs
-        # share one boilerplate template, so one band bucket holds
-        # ~20% of the corpus — the adversarial shape MAX_BUCKET's cap
-        # exists for.  Without the cap the bucket join would emit
-        # O((0.2n)²) pairs; with it the excess bucket is dropped and
-        # scaling stays sub-quadratic.
-        boiler = F.when(
-            F.col("doc_id") % 5 == 0,
-            F.concat(
-                F.lit(
-                    "terms of service apply to all users of this site "
-                    "please read carefully before continuing varies "
-                ),
-                (F.col("doc_id") % 7).cast("string"),
-            ),
-        ).otherwise(F.col("text"))
-        docs_skew = docs.withColumn("text", boiler)
-        docs10_skew = docs10.withColumn("text", boiler)
-        t0 = time.time()
-        _noop(near_duplicates_minhash(docs_skew, threshold=0.8))
-        times["d2_minhash_lsh_skew"] = round(time.time() - t0, 3)
-        t0 = time.time()
-        _noop(near_duplicates_minhash(docs10_skew, threshold=0.8))
-        scale["d2_minhash_lsh_skew_10x"] = round(time.time() - t0, 3)
-
-        # BPE training, 1x and 10x (direct operator calls — the
-        # registry gate caches per session): rounds cost one keyed
-        # exchange over the WORD table, so corpus growth only enters
-        # through the word-frequency aggregation
-        from dask_traj_spark.operators.bpe import bpe_train
-
-        timed_1x("t18_bpe_train", lambda: bpe_train(docs, n_merges=8))
-        t0 = time.time()
-        bpe_train(docs10, n_merges=8)
-        scale["t18_bpe_train_10x"] = round(time.time() - t0, 3)
-
-        # 10x DSIR importance (production hashed-bucket path): the
-        # model stays n_buckets rows however big the corpus, so the
-        # linear part is the token stream's two map passes
-        from dask_traj_spark.operators.curation import dsir_importance
-
-        timed_1x(
-            "t17_dsir_hashed",
-            lambda: _noop(dsir_importance(docs, docs.where(F.col("doc_id") % 20 == 0))),
-        )
-        t0 = time.time()
-        _noop(dsir_importance(docs10, docs10.where(F.col("doc_id") % 20 == 0)))
-        scale["t17_dsir_hashed_10x"] = round(time.time() - t0, 3)
-
-        scale["linearity"] = {
-            "c4_sequence_packing": round(
-                scale["c4_sequence_packing_10x"]
-                / (10 * times["c4_sequence_packing"]), 2
-            ),
-            "canonical_onepass": round(
-                scale["canonical_onepass_10x"] / (10 * times["canonical_onepass"]), 2
-            ),
-            "v_cosine_topk_vectorized": round(
-                scale["v_cosine_topk_vectorized_10x"]
-                / (10 * times["v_cosine_topk_vectorized"]), 2
-            ),
-            "d1_exact_dedup": round(
-                scale["d1_exact_dedup_10x"] / (10 * times["d1_exact_dedup"]), 2
-            ),
-            "d2_minhash_lsh": round(
-                scale["d2_minhash_lsh_10x"] / (10 * times["d2_minhash_lsh"]), 2
-            ),
-            "d2_minhash_lsh_skew": round(
-                scale["d2_minhash_lsh_skew_10x"]
-                / (10 * times["d2_minhash_lsh_skew"]), 2
-            ),
-            "d6_semantic_dedup_auto": round(
-                scale["d6_semantic_dedup_auto_10x"]
-                / (10 * times["d6_semantic_dedup_auto"]), 2
-            ),
-            "d13_bloom_membership": round(
-                scale["d13_bloom_membership_10x"]
-                / (10 * times["d13_bloom_membership"]), 2
-            ),
-            "t16_bm25": round(
-                scale["t16_bm25_10x"] / (10 * times["t16_bm25"]), 2
-            ),
-            "d11_duplicate_spans": round(
-                scale["d11_duplicate_spans_10x"]
-                / (10 * times["d11_duplicate_spans"]), 2
-            ),
-            "d14_maximal_matches": round(
-                scale["d14_maximal_matches_10x"]
-                / (10 * times["d14_maximal_matches_hashed"]), 2
-            ),
-            "t17_dsir_hashed": round(
-                scale["t17_dsir_hashed_10x"]
-                / (10 * times["t17_dsir_hashed"]), 2
-            ),
-            "t18_bpe_train": round(
-                scale["t18_bpe_train_10x"]
-                / (10 * times["t18_bpe_train"]), 2
-            ),
-            "t22_winnowing": round(
-                scale["t22_winnowing_10x"]
-                / (10 * times["t22_winnowing_hashed"]), 2
-            ),
-            # session-6 additions: 1x sides live in bench_detail's
-            # times_detail (headline byte cap) — MINIMAL keys here:
-            # the first run with descriptive keys pushed the line 6
-            # bytes past the cap and cost the probe section
-            "t27": round(
-                scale["t27_dup_ngram_10x"]
-                / (10 * times_detail["t27_dup_ngram_char_fraction"]), 2
-            ),
-            "d20": round(
-                scale["d20_cross_corpus_10x"]
-                / (10 * times_detail["d20_cross_corpus_hashed"]), 2
-            ),
-        }
-        probes["after_scale_s"] = _cpu_probe()
-
-    # ---- self-clearing re-time pass (VERDICT r11 item 3) --------------
-    # Four r11 entries (t8, r24, t16, d13) read as 1.5-3.6x
-    # regressions on byte-identical code and needed a judge-side warm
-    # re-measure to clear as host noise.  Any suite entry whose
-    # best-of exceeds 2x its PREVIOUS round's recorded best (prior
-    # bench_detail iters, falling back to the latest BENCH_r*.json)
-    # gets 2 extra late-suite iterations (still on the MAIN session —
-    # the local[12] tier below stops it); the min over all 5 is
-    # what the round records.  Sub-0.2 s entries are skipped — at
-    # that scale 2x is scheduler jitter, not a regression signal.
-    def _prior_bests() -> dict:
-        here = os.path.dirname(os.path.abspath(__file__))
-        out: dict = {}
-        try:
-            import glob as _glob
-            import re as _re
-
-            # anchor on the canonical BENCH_r<NN>.json name: the bare
-            # glob also matched variant files like BENCH_r12_c8.json,
-            # which sort AFTER the canonical name — so the retime pass
-            # would have compared a 32-core run against 8-core priors
-            # (VERDICT r12 item 6).  Variants are excluded, and the
-            # file actually used is recorded in bench_detail.json.
-            benches = sorted(
-                p
-                for p in _glob.glob(os.path.join(here, "BENCH_r*.json"))
-                if _re.fullmatch(r"BENCH_r\d+\.json", os.path.basename(p))
-            )
-            if benches:
-                _prior_src[0] = os.path.basename(benches[-1])
-                with open(benches[-1]) as f:
-                    rec = json.load(f)
-                # the driver wraps the headline under "parsed"; a raw
-                # headline file has "queries" at top level
-                qd = (rec.get("queries") or
-                      (rec.get("parsed") or {}).get("queries") or {})
-                for k, v in qd.items():
-                    if isinstance(v, (int, float)):
-                        out[k] = float(v)
-        except Exception:
-            pass
-        try:
-            # fresher and covers detail-only entries; read BEFORE this
-            # run overwrites the file
-            with open(os.path.join(here, "bench_detail.json")) as f:
-                for k, v in json.load(f).get("iters", {}).items():
-                    if isinstance(v, list) and v:
-                        out[k] = min(float(x) for x in v)
-        except Exception:
-            pass
-        return out
-
-    retimed: dict[str, list[float]] = {}
-    _prior_src = [None]  # which BENCH_r<NN>.json the retime pass read
-    _prior = _prior_bests()
-    for name, fn in _thunks.items():
-        rec = times if name in times else times_detail
-        cur, prev = rec.get(name), _prior.get(name)
-        if cur is None or prev is None or prev <= 0.0 or cur < 0.2:
-            continue
-        if cur > 2.0 * prev:
-            extra = []
-            for _ in range(2):
-                t0 = time.time()
-                fn()
-                extra.append(round(time.time() - t0, 3))
-                _release_caches()
-            iters[name] = iters[name] + extra
-            rec[name] = min(iters[name])
-            retimed[name] = [cur, rec[name]]
-
-    master = spark.sparkContext.master
-
-    # Optional apples-to-apples run vs BASELINE.md's 12-thread
-    # LocalCluster: re-run the canonical one-pass on local[12].
-    # Enabled by default (it adds one workload's wall time); set
-    # SPARK_GRAFT_BASELINE_RUN=0 to skip.
-    if os.environ.get("SPARK_GRAFT_BASELINE_RUN", "1") != "0":
-        spark.stop()
-        spark12 = get_spark(
-            app_name="dask-traj-spark-bench-12", master="local[12]",
-            shuffle_partitions=12,
-        )
-        spark12.sparkContext.setLogLevel("ERROR")
-        # warm the worker pool the same way as the main run
-        N_FRAMES = 160
-        mini = _canonical_traj(spark12)
-        _noop(
-            compute_distances(
-                mini, pairs, periodic=True, form="vectorized", n_atoms=N_ATOMS
-            )
-        )
-        N_FRAMES = real_frames
-        its12 = []
-        for _ in range(5):
-            t0 = time.time()
-            fresh = _canonical_traj(spark12)
-            _noop(
-                compute_distances(
-                    fresh, pairs, periodic=True, form="vectorized", n_atoms=N_ATOMS
-                )
-            )
-            its12.append(round(time.time() - t0, 3))
-        iters["canonical_onepass_local12"] = its12
-        times["canonical_onepass_local12"] = min(its12)
-        spark12.stop()
-
-    probes["end_s"] = _cpu_probe()
-
-    # ---- output contract (VERDICT r5 item 3, re-broken r9, re-fixed) --
-    # The driver tail-captures the last ~2000 bytes of stdout and
-    # parses the LAST line as the bench JSON.  The r9 headline (with
-    # canonical_spread + the full scale_10x dict inlined) grew to
-    # ~2.4 KB and the capture started mid-JSON -> "parsed": null.
-    # So: the LAST stdout line is a compact headline hard-capped
-    # below the window (progressively dropping optional sections if
-    # it ever outgrows the cap — queries/value/sf are never
-    # dropped), and the full record (per-iteration spreads, the
-    # whole scale_10x tier, per-query probe brackets) goes to
-    # bench_detail.json, committed per round as evidence.
-    # probe_hot: queries whose bracket probe exceeded 2x the
-    # session-median probe — the driver-visible "this entry ran
-    # under host load" flag (normally empty).
-    # the bracket probes form a CHAIN (entry i's "after" IS entry
-    # i+1's "before"), so flattening the pairs would double-count
-    # every interior probe and bias the median toward mid-suite
-    # values; take each chain value once (all the "after"s plus the
-    # very first "before") plus the tier probes
-    chain = [b[1] for b in probe_bracket.values()]
-    if probe_bracket:
-        chain.append(next(iter(probe_bracket.values()))[0])
-    all_probes = sorted(chain + list(probes.values()))
-    med_probe = all_probes[len(all_probes) // 2] if all_probes else 0.0
-    # severity order (worst bracket first): the capped headline
-    # field must surface the WORST offenders, not the alphabet head
-    probe_hot = sorted(
-        (n for n, b in probe_bracket.items() if max(b) > 2 * med_probe),
-        key=lambda n: -max(probe_bracket[n]),
-    )
-    headline = {
-        "metric": "canonical_e2e",
-        "value": times["canonical_onepass"],
-        "unit": "sec",
-        "queries": times,
-        "sf": sf,
-        # methodology: warm session (worker pool + JIT pre-warmed);
-        # canonical tier best-of-3 / one-pass best-of-5, oracle-suite
-        # tier 1 throwaway + best-of-3 with a fixed-work cpu probe
-        # bracketing every entry, 10x tier best-of-3 for canonical +
-        # d2 / single-shot for the rest.  BASELINE.md's reference
-        # numbers are 12 threads — compare canonical_onepass_local12.
-        "warm": True,
-        "master": master,
-        # the acceptance metric's own spread stays driver-visible
-        # (BENCH_r08 swung 1.87->5.51 s on identical code): wide
-        # spread = warm-up, tight-but-high + hot probes = host noise.
-        # local12/10x iteration spreads moved to bench_detail.json
-        # (r10 s6): with them inline the line chronically outgrew the
-        # 1800-byte cap whenever the hot list was non-empty, and the
-        # drop loop then cost the WHOLE probe section — worse than
-        # losing two secondary spreads
-        "spread": {"onepass": iters_canonical_onepass},
-        "linearity": scale.get("linearity", {}),
-        # hot list capped at 4 names (was 6 — still outgrew the cap
-        # together with the secondary spreads): under heavy host load
-        # it held 10 names (~250 bytes) — growing the line exactly
-        # when the byte budget is tightest; hot_n carries the true
-        # count and the full list is in bench_detail.json
-        "probe": {
-            "start_s": probes.get("start_s"),
-            "end_s": probes.get("end_s"),
-            "median_s": med_probe,
-            "hot_n": len(probe_hot),
-            "hot": probe_hot[:4],
-        },
-        # entries re-timed by the self-clearing pass (>2x their prior
-        # round): count only; old->new pairs live in bench_detail
-        "retimed_n": len(retimed),
-        "detail": "bench_detail.json",
-    }
-    detail = {
-        "iters": iters,
-        "times_detail": times_detail,
-        "scale_10x": scale,
-        "cpu_probe": probes,
-        "probe_bracket": probe_bracket,
-        "probe_median_s": med_probe,
-        "probe_hot": probe_hot,
-        "best_of": {
-            "canonical": 3,
-            "oracle_suite": "warmup1+3",
-            "scale_10x": "canonical 3, d2 (plain 1x/10x) 3, others 1",
-            "retime": ">2x prior round -> +2 iters (VERDICT r11 item 3)",
-        },
-        "retimed": retimed,
-        "retime_prior_source": _prior_src[0],
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS"),
-    }
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "bench_detail.json"
-    )
+    bench = Bench(None, _cpu_probe())
+    t0 = time.perf_counter()
+    spark = _session(app_name="dask-traj-spark-bench")
+    bench.rec[HEADLINE]["session_start"] = round(time.perf_counter() - t0, 3)
+    bench.ctx = Inputs(spark, sf_dir)
     try:
-        with open(detail_path, "w") as f:
-            json.dump(detail, f, indent=1)
-        # Also keep a per-core-count copy: the driver benches the same
-        # tree at two core counts, and the second run used to overwrite
-        # the first run's detail file — so the 10x-tier absolute times
-        # (the entries long enough for the 8-vs-32 scaling comparison
-        # to be informative; VERDICT r12 item 4) survived for only one
-        # of the two runs.  Additive only: bench_detail.json keeps its
-        # name and contents.
-        cpus_tag = os.environ.get("SPARK_GRAFT_CPUS")
-        if cpus_tag:
-            with open(
-                detail_path.replace(".json", f"_c{cpus_tag}.json"), "w"
-            ) as f:
-                json.dump(detail, f, indent=1)
-    except OSError:
-        pass  # read-only checkout: the headline line still carries the record
-    # hard cap: the headline LINE must fit the driver's capture
-    # window whatever future fields grow.  Drop optional sections
-    # in (reverse) value order until it fits; the required driver
-    # contract (metric/value/unit/queries/sf) is never dropped.
-    line = json.dumps(headline, separators=(",", ":"))
-    # cheapest cut first: the hot NAMES (~40 bytes each, full list in
-    # bench_detail) — r11 run 3 showed the old order dropping the
-    # ENTIRE probe section exactly when hot entries existed, i.e.
-    # losing hot_n in the one case the driver needs it
-    if len(line) > 1800:
-        headline["probe"]["hot"] = []
-        headline["truncated"] = True
-        line = json.dumps(headline, separators=(",", ":"))
-    # then whole sections: probe's brackets live in bench_detail,
-    # while linearity/spread ARE the acceptance-relevant sections
-    for drop in ("probe", "master", "warm", "detail", "linearity", "spread"):
-        if len(line) <= 1800:
-            break
-        headline.pop(drop, None)
-        headline["truncated"] = True
-        line = json.dumps(headline, separators=(",", ":"))
+        # Warm the worker pool with a FULL-WIDTH canonical pass at 1/8
+        # the frames: a tiny warm-up never triggers the one-time
+        # worker-pool growth and first-large-Arrow-batch costs
+        # (measured 4-30 s on the first full-size pass).
+        _noop(_canonical_pass(bench.ctx, WARM_FRAMES))
+        bench.run(CANONICAL)
+        bench.mark("after_tier1_s")
+        bench.run(SUITE)
+        bench.mark("after_tier2_s")
+        # the suite's shuffle/broadcast garbage is freed only on a JVM
+        # GC; without one the 10x canonical measured 2-3x slower
+        spark.sparkContext._jvm.System.gc()
+        bench.run(SCALE)
+        bench.mark("after_scale_s")
+        master = spark.sparkContext.master
+        prior, prior_source = _prior_bests(master)
+        bench.retime(SUITE + SCALE, prior)
+    finally:
+        bench.ctx.close()
+    spark.stop()
+
+    spark12 = _session(
+        app_name="dask-traj-spark-bench-12", master="local[12]", shuffle_partitions=12
+    )
+    bench.ctx = Inputs(spark12, sf_dir)
+    _noop(_canonical_pass(bench.ctx, WARM_FRAMES))
+    bench.run(LOCAL12)
+    spark12.stop()
+    bench.mark("end_s")
+
+    detail, line = bench.build(sf, master, prior_source)
+    _write_detail(detail)
     sys.stdout.flush()
     print(line)
 

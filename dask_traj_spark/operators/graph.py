@@ -104,6 +104,12 @@ def pagerank(
     sink-semi-join + a 1-row broadcast aggregate.  Citing the classic
     formulation: p_{t+1}(v) = (1−d)/N + Σ_{u→v} snap(d·p_t(u)/deg(u))
     [+ snap(d·D_t/N) when redistributing].
+
+    ``checkpoint_every`` (default 2) is how many fixed-count rounds
+    share one ``localCheckpoint``; 0 never checkpoints (the plan-audit
+    mode).  ``dangling="redistribute"`` clamps any value above 1 to 1,
+    since its rank table feeds three consumers a round and batched
+    rounds re-execute; ``tol`` mode checkpoints every round anyway.
     """
     n_iter = int(n_iter)
     if n_iter < 1:

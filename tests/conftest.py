@@ -28,12 +28,8 @@ ELEMENTS = [("H", 1.008), ("C", 12.011), ("N", 14.007), ("O", 15.999), ("S", 32.
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(
-        app_name="dask-traj-spark-tests",
-        master="local[8]",
-        shuffle_partitions=8,
-    )
-    yield s
+    # width comes from SPARK_GRAFT_CPUS (the Tier-1 command sets it)
+    yield get_spark(app_name="dask-traj-spark-tests")
 
 
 @pytest.fixture(scope="session")

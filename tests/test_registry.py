@@ -5,6 +5,7 @@ These tests pin the rotation bookkeeping so a new registration can't
 silently push a must-score query out of the window.
 """
 
+import json
 import re
 from pathlib import Path
 
@@ -14,26 +15,24 @@ WINDOW = 50
 
 # The full round-13 head, per the written r13 seating plan
 # (plan comment above _SCORING_TAIL; emitted as HEAD_r13.json per
-# VERDICT r12 item 7): the six r8-green deferrals, the full
-# r9-green extension set, and the first 8 r10-green entries.
+# VERDICT r12 item 7), grouped as that plan seats it.  The registry
+# head interleaves the groups: this list pins membership, and
+# HEAD_r13.json pins the order.
 MUST_SCORE_R13 = [
     # (1) the six r8-green entries deferred from the r12 head
-    "d1_exact_dedup",
-    "d4_ngram_jaccard_neardup",
-    "v1_cosine_topk",
-    "v3_cosine_topk_ivf",
-    "v4_ann_recall",
-    "e8_asof_tolerance",
-    # (2) the full r9-green extension set, stalest-first
+    "m11b_decode_jpeg_progressive",
+    "r8_cube_quantities",
+    "r4_running_revenue_window",
+    "r6_intersect_status",
     "e4_session_concurrency",
-    "x1_frame_rmsd",
+    "m9_frame_diffs",
+    # (2) the full r9-green extension set, stalest-first (36 entries)
+    "d4_ngram_jaccard_neardup",
+    "e8_asof_tolerance",
     "x16_pairwise_rmsd",
-    "x16b_pairwise_rmsd_blocked",
     "x16c_pairwise_rmsd_auto",
-    "x2_rmsd_topk",
     "x3_rmsd_aligned_contract",
     "sx1_stream_neardup_batch_twin",
-    "c2_decontamination",
     "t15_tfidf_top_terms",
     "c4_sequence_packing",
     "x5_rdf_histogram",
@@ -48,20 +47,14 @@ MUST_SCORE_R13 = [
     "sx6_stream_semantic_dedup_twin",
     "t13_mojibake",
     "c7_curation_chain",
-    "m9_frame_diffs",
-    "m11b_decode_jpeg_progressive",
     "d8_containment_neardup",
     "d10_simhash_hamming_pairs",
-    "r4_running_revenue_window",
-    "r8_cube_quantities",
-    "r6_intersect_status",
     "r15_large_volume_orders",
     "r16_disjunctive_revenue",
     "r23_priority_exists",
     "r24_forecast_revenue",
     "r25_market_share",
     "r26_profit_by_nation_year",
-    # (3) the remaining 8 slots from the r10-green set, stalest-first
     "r27_returned_items",
     "r28_important_balances",
     "r29_priority_lineshare",
@@ -70,6 +63,15 @@ MUST_SCORE_R13 = [
     "r32_promo_part_suppliers",
     "r33_waiting_suppliers",
     "r34_approx_quantiles",
+    # (3) the remaining 8 slots from the r10-green set, stalest-first
+    "d1_exact_dedup",
+    "v1_cosine_topk",
+    "v3_cosine_topk_ivf",
+    "v4_ann_recall",
+    "x1_frame_rmsd",
+    "x16b_pairwise_rmsd_blocked",
+    "x2_rmsd_topk",
+    "c2_decontamination",
 ]
 
 
@@ -78,6 +80,14 @@ def test_scoring_window_holds_must_score_queries():
     window = set(names[:WINDOW])
     missing = [n for n in MUST_SCORE_R13 if n not in window]
     assert not missing, f"pushed out of the scored window: {missing}"
+
+
+def test_head_file_matches_the_registry_window():
+    # HEAD_r13.json is the seated head the driver joins its diff
+    # against; it must be the registry's first WINDOW entries, in order.
+    root = Path(__file__).resolve().parents[1]
+    head = json.loads(root.joinpath("HEAD_r13.json").read_text())["head"]
+    assert head == list(q.queries())[:WINDOW]
 
 
 def test_scoring_window_exactly_full():
