@@ -36,6 +36,7 @@ from dask_traj_spark.operators.mic import (
     add_mic_distance,
     orthogonality_expr,
 )
+from dask_traj_spark.operators.unitcell import lengths_angles_np
 
 _BOX_COLS = ["ax", "ay", "az", "bx", "by", "bz", "cx", "cy", "cz"]
 _VECTORIZED_THRESHOLD = 512
@@ -237,21 +238,21 @@ BOX_JOIN_FRAMES = 10_000_000
 def _frame_count_hint(traj) -> int:
     """Frame count for dispatch decisions, as cheaply as possible.
 
-    Order: the Trajectory's already-cached ``n_frames`` (free) → the
-    per-frame dimension table's count (tiny, and exact — seeds the
-    cache) → the (max-min+1) frame-id span over coords.  The span is
+    Order: the Trajectory's exact ``n_frames`` when it is free or
+    cheap — cached, read by the loader's frame index, or the count
+    of the per-frame dimension table (tiny; seeds the cache) → the
+    (max-min+1) frame-id span over coords.  The span is
     a partial min/max aggregate — no shuffle, one scan, vs the exact
     distinct-count's hash-aggregate exchange — and is an UPPER bound
     when frame ids are sparse, which only biases dispatch toward the
     branch that scales (blocked gram / box-column join): the safe
     side to err on at scale."""
-    nf = traj.__dict__.get("n_frames")
-    if nf is not None:
-        return nf
-    if traj._frames is not None:
-        nf = traj._frames.count()
-        traj.__dict__["n_frames"] = nf  # exact: one row per frame
-        return nf
+    if (
+        "n_frames" in traj.__dict__
+        or traj.index is not None
+        or traj._frames is not None
+    ):
+        return traj.n_frames
     # the span is cached under its OWN key (never as n_frames — it is
     # an upper bound, not the exact count): without the cache every
     # periodic geometry call on a frames-less Trajectory would re-scan
@@ -282,6 +283,10 @@ class _BoxLookup:
 
     @classmethod
     def from_traj(cls, traj):
+        if traj.index is not None and traj.index.box is not None:
+            # the loader's own box vectors: no Spark job
+            ang = lengths_angles_np(traj.index.box)[:, 3:]
+            return cls(traj.index.frame_ids, traj.index.box, kernels.is_orthogonal_np(ang))
         pdf = (
             traj.unitcell_full()
             .select("frame_id", *_BOX_COLS, "alpha", "beta", "gamma")

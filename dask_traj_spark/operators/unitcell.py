@@ -15,6 +15,7 @@ form: a=(ax,0,0), b=(bx,by,0), c=(cx,cy,cz). Values with
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 
 _SNAP_TOL = 1e-6
@@ -77,6 +78,31 @@ def lengths_angles_exprs(
         "beta": F.degrees(F.acos(clamp(dot_ca / (nc * na)))),
         "gamma": F.degrees(F.acos(clamp(dot_ab / (na * nb)))),
     }
+
+
+def lengths_angles_np(box: np.ndarray) -> np.ndarray:
+    """NumPy twin of :func:`with_lengths_and_angles` for box vectors
+    the driver already holds: (F, 3, 3) → (F, 6) float32 (a, b, c,
+    alpha, beta, gamma). The same float64 operations in the same
+    order as :func:`lengths_angles_exprs`, the same clamp, degrees
+    and float32 cast, so the result matches the SQL columns bit for
+    bit."""
+    v = np.asarray(box, dtype=np.float32).astype(np.float64)
+    (ax, ay, az), (bx, by, bz), (cx, cy, cz) = (
+        (v[:, r, 0], v[:, r, 1], v[:, r, 2]) for r in range(3)
+    )
+    na = np.sqrt(ax * ax + ay * ay + az * az)
+    nb = np.sqrt(bx * bx + by * by + bz * bz)
+    nc = np.sqrt(cx * cx + cy * cy + cz * cz)
+    dot_bc = bx * cx + by * cy + bz * cz
+    dot_ca = cx * ax + cy * ay + cz * az
+    dot_ab = ax * bx + ay * by + az * bz
+    # a zero-length vector gives NaN here where the SQL form raises
+    # DIVIDE_BY_ZERO; callers keep such boxes on the SQL path
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = [dot_bc / (nb * nc), dot_ca / (nc * na), dot_ab / (na * nb)]
+    ang = [np.degrees(np.arccos(np.clip(c, -1.0, 1.0))) for c in cos]
+    return np.stack([na, nb, nc, *ang], axis=-1).astype(np.float32)
 
 
 def with_box_vectors(unitcell: DataFrame) -> DataFrame:

@@ -14,7 +14,8 @@ module in this package. A format module supplies two functions:
   in the scan task and yields each frame of its chunk as an
   ``(n_atoms, 3)`` array in nm.
 
-Loaders call :func:`scan_frames`. Every format shares one output
+Loaders call :func:`scan_frames`, or :func:`load_indexed` when the
+driver already indexed the file's frames. Every format shares one output
 schema ``(frame_id long, atom_id int, x float, y float, z float)``,
 and ``read()`` yields ``pyarrow.RecordBatch`` objects instead of
 per-row tuples: for a frame of N atoms that replaces N tuple
@@ -32,6 +33,16 @@ from collections.abc import Iterable, Iterator
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+
+from dask_traj_spark.operators.mic import BOX_COLS
+from dask_traj_spark.operators.unitcell import lengths_angles_np
+from dask_traj_spark.trajectory import FrameIndex, Trajectory
+
+_FRAMES_SCHEMA = "frame_id long, time double, step long"
+_BOX_SCHEMA = "frame_id long, " + ", ".join(f"{c} float" for c in BOX_COLS)
+_CELL_SCHEMA = (
+    "frame_id long, a float, b float, c float, alpha float, beta float, gamma float"
+)
 
 
 def frames_to_record_batches(
@@ -131,9 +142,12 @@ class FrameChunkSource(DataSource):
 def scan_frames(spark: SparkSession, fmt: str, path: str, chunks: int) -> DataFrame:
     """Lazy coords scan of ``path`` through format module ``fmt``,
     one partition per chunk of ``chunks`` frames. Registers the
-    source on every call: a per-session guard cannot tell a stopped
-    session from its successor, and re-registering is cheap."""
-    spark.dataSource.register(FrameChunkSource)
+    source when the live JVM session does not know it yet: asking
+    the JVM, not a Python-side flag, tells a stopped session from its
+    successor."""
+    manager = spark._jsparkSession.sessionState().dataSourceManager()
+    if not manager.dataSourceExists(FrameChunkSource.name()):
+        spark.dataSource.register(FrameChunkSource)
     return (
         spark.read.format("trajframes")
         .option("format", fmt)
@@ -141,3 +155,61 @@ def scan_frames(spark: SparkSession, fmt: str, path: str, chunks: int) -> DataFr
         .option("chunks", str(chunks))
         .load()
     )
+
+
+def load_indexed(
+    spark: SparkSession,
+    fmt: str,
+    path: str,
+    chunks: int,
+    n_frames: int,
+    n_atoms,
+    *,
+    time=None,
+    step=None,
+    box=None,
+    cell=None,
+    topology: DataFrame | None = None,
+) -> Trajectory:
+    """A :func:`scan_frames` Trajectory whose per-frame tables and
+    :class:`FrameIndex` come from the same driver-side index arrays,
+    so they cannot disagree. Frames are numbered ``0..n_frames-1``.
+
+    - ``time`` (F,) → the ``frames`` table, with ``step`` (F,) or
+      the frame ids as steps; None → no ``frames`` table.
+    - ``n_atoms``: the per-frame atom counts the index read, or the
+      one header count ``decode_chunk`` trusts. Recorded only when
+      every frame agrees; otherwise ``Trajectory.n_atoms`` counts.
+    - ``box`` (F, 3, 3) vectors in nm → a vector ``unitcell`` table.
+      The float32 vectors also become the host-side box, unless a
+      frame's lengths or angles are not finite (a zero box), which
+      keeps the Spark-derived lookup and its error.
+    - ``cell``: rows ``(frame_id, a, b, c, alpha, beta, gamma)`` in
+      nm and degrees → a lengths/angles ``unitcell`` table, with no
+      host-side box.
+    """
+    ids = np.arange(n_frames, dtype=np.int64)
+    frames = None
+    if time is not None:
+        # reshape, not zip: a per-frame array of the wrong length
+        # raises instead of silently dropping frames
+        times = np.asarray(time, dtype=np.float64).reshape(n_frames)
+        steps = ids if step is None else np.asarray(step, dtype=np.int64).reshape(n_frames)
+        frames = spark.createDataFrame(
+            list(zip(ids.tolist(), times.tolist(), steps.tolist())), _FRAMES_SCHEMA
+        )
+    unitcell = host_box = None
+    if box is not None:
+        vecs = np.asarray(box, dtype=np.float32).reshape(n_frames, 3, 3)
+        unitcell = spark.createDataFrame(
+            [(i, *v) for i, v in zip(ids.tolist(), vecs.reshape(-1, 9).tolist())],
+            _BOX_SCHEMA,
+        )
+        if np.isfinite(lengths_angles_np(vecs)).all():
+            host_box = vecs
+    elif cell is not None:
+        unitcell = spark.createDataFrame([tuple(r) for r in cell], _CELL_SCHEMA)
+    counts = np.unique(np.asarray(n_atoms, dtype=np.int64))
+    index = FrameIndex(ids, int(counts[0]) if len(counts) == 1 else None, host_box)
+    coords = scan_frames(spark, fmt, path, chunks)
+    return Trajectory(coords, frames, unitcell, topology, index=index)

@@ -15,7 +15,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import chunk_list, scan_frames
+from dask_traj_spark.sources._arrow import chunk_list, load_indexed
 from dask_traj_spark.trajectory import Trajectory
 
 ANGSTROM_TO_NM = 0.1
@@ -92,28 +92,14 @@ def load_arc(spark: SparkSession, path: str, chunks: int = 10) -> Trajectory:
     idx = index_arc(path)
     if not idx:
         raise ValueError(f"empty ARC file: {path}")
-    coords = scan_frames(spark, "arc", path, chunks)
-    frames = spark.createDataFrame(
-        [(fid, float(fid), fid) for fid, _o, _n, _b in idx],
-        "frame_id long, time double, step long",
+    cells = [
+        (fid, *(v * ANGSTROM_TO_NM for v in b[:3]), *b[3:])
+        for fid, _o, _n, b in idx
+        if b is not None
+    ]
+    return load_indexed(
+        spark, "arc", path, chunks, len(idx),
+        time=np.arange(len(idx), dtype=np.float64),
+        n_atoms=[n for _f, _o, n, _b in idx],
+        cell=cells or None,
     )
-    unitcell = None
-    if any(b is not None for _f, _o, _n, b in idx):
-        unitcell = spark.createDataFrame(
-            [
-                (
-                    fid,
-                    b[0] * ANGSTROM_TO_NM,
-                    b[1] * ANGSTROM_TO_NM,
-                    b[2] * ANGSTROM_TO_NM,
-                    b[3],
-                    b[4],
-                    b[5],
-                )
-                for fid, _o, _n, b in idx
-                if b is not None
-            ],
-            "frame_id long, a float, b float, c float, "
-            "alpha float, beta float, gamma float",
-        )
-    return Trajectory(coords, frames=frames, unitcell=unitcell)

@@ -15,7 +15,7 @@ import struct
 import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import chunk_range, scan_frames
+from dask_traj_spark.sources._arrow import chunk_range, load_indexed
 from dask_traj_spark.trajectory import Trajectory
 
 MAGIC = b"fxyz"
@@ -75,9 +75,8 @@ def load_binpos(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory
     """Load a .binpos trajectory (xyz only — no time/box in the
     format; time falls back to arange, reference S8)."""
     info = read_info(path)
-    coords = scan_frames(spark, "binpos", path, chunks)
-    frames = spark.createDataFrame(
-        [(fid, float(fid), fid) for fid in range(info.n_frames)],
-        "frame_id long, time double, step long",
+    return load_indexed(
+        spark, "binpos", path, chunks, info.n_frames,
+        time=np.arange(info.n_frames, dtype=np.float64),
+        n_atoms=info.n_atoms,
     )
-    return Trajectory(coords, frames=frames, unitcell=None)

@@ -34,7 +34,7 @@ import struct
 import numpy as np
 from pyspark.sql import SparkSession, functions as F
 
-from dask_traj_spark.sources._arrow import chunk_range, scan_frames
+from dask_traj_spark.sources._arrow import chunk_range, load_indexed
 from dask_traj_spark.trajectory import Trajectory
 
 ANGSTROM_TO_NM = 0.1
@@ -330,13 +330,11 @@ def load_dcd(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory:
     """Load a .dcd binary trajectory (lazy chunked scan). Unit-cell
     records (tiny: 48 bytes/frame) are indexed driver-side into the
     per-frame unitcell dimension."""
-    coords = scan_frames(spark, "dcd", path, chunks)
-    unitcell = None
-    cells = read_cells(path)
-    if cells:
-        unitcell = spark.createDataFrame(
-            cells,
-            "frame_id long, a float, b float, c float, "
-            "alpha float, beta float, gamma float",
-        )
-    return Trajectory(coords, unitcell=unitcell)
+    info = read_info(path)
+    # the header counts plan_chunks and decode_chunk trust; no
+    # frames table, as before (the format has no time)
+    return load_indexed(
+        spark, "dcd", path, chunks, info.n_frames,
+        n_atoms=info.n_atoms,
+        cell=read_cells(path) or None,
+    )

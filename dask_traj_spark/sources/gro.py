@@ -24,7 +24,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import chunk_list, scan_frames
+from dask_traj_spark.sources._arrow import chunk_list, load_indexed
 from dask_traj_spark.trajectory import Trajectory
 
 
@@ -105,31 +105,18 @@ def load_gro(spark: SparkSession, path: str, chunks: int = 10) -> Trajectory:
     idx = index_gro(path)
     if not idx:
         raise ValueError(f"empty GRO file: {path}")
-    coords = scan_frames(spark, "gro", path, chunks)
-    # time: from 't=' titles when present, else the arange fallback
-    # (reference S8, core/dask_traj.py:267-273)
-    frames = spark.createDataFrame(
-        [
-            (fid, float(t) if t is not None else float(fid), fid)
-            for fid, _o, _n, t, _b in idx
-        ],
-        "frame_id long, time double, step long",
-    )
-    unitcell = None
-    if any(np.abs(b).sum() > 0 for _f, _o, _n, _t, b in idx):
-        unitcell = spark.createDataFrame(
-            [
-                (fid, *[float(v) for v in box.ravel()])
-                for fid, _o, _n, _t, box in idx
-            ],
-            "frame_id long, ax float, ay float, az float, bx float, by float, "
-            "bz float, cx float, cy float, cz float",
-        )
     from dask_traj_spark.sources.topology import load_topology
 
-    traj = Trajectory(coords, frames=frames, unitcell=unitcell)
-    traj.topology = load_topology(spark, path)
-    return traj
+    fids, _offsets, natoms, times, boxes = zip(*idx)
+    return load_indexed(
+        spark, "gro", path, chunks, len(idx),
+        # time: from 't=' titles when present, else the arange
+        # fallback (reference S8, core/dask_traj.py:267-273)
+        time=[float(fid) if t is None else t for fid, t in zip(fids, times)],
+        n_atoms=natoms,
+        box=boxes if any(np.abs(b).sum() > 0 for b in boxes) else None,
+        topology=load_topology(spark, path),
+    )
 
 
 def write_gro(traj: Trajectory, path: str) -> None:

@@ -36,9 +36,10 @@ from __future__ import annotations
 
 import json
 
+import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import scan_frames
+from dask_traj_spark.sources._arrow import load_indexed, scan_frames
 from dask_traj_spark.trajectory import Trajectory
 
 try:  # pragma: no cover - h5py absent in the test container
@@ -130,8 +131,6 @@ def plan_chunks(path: str, chunks: int) -> list[tuple[str, int, int]]:
 
 def decode_chunk(path: str, payload: tuple[str, int, int]):
     """Slice one frame range; LH5's int16 fixed point is nm × 1000."""
-    import numpy as np
-
     name, start, count = payload
     with _H5File(path) as f:
         xyz = f.read(name, start, count)
@@ -151,11 +150,13 @@ def load_hdf5(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory:
         have_time = "time" in f
         have_cell = "cell_lengths" in f and "cell_angles" in f
         time = f.read("time").tolist() if have_time else None
-        cells = (
-            (f.read("cell_lengths").tolist(), f.read("cell_angles").tolist())
-            if have_cell
-            else None
-        )
+        cells = None
+        if have_cell:
+            lengths, angles = f.read("cell_lengths").tolist(), f.read("cell_angles").tolist()
+            cells = [
+                (i, *map(float, lengths[i]), *map(float, angles[i]))
+                for i in range(n_frames)
+            ]
         topo_json = None
         # string datasets are h5py-only (the vendored subset reader
         # covers numeric types; topology is optional in the layout)
@@ -163,27 +164,14 @@ def load_hdf5(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory:
             raw = f._h["topology"][0]
             topo_json = raw.decode() if isinstance(raw, bytes) else str(raw)
 
-    coords = scan_frames(spark, "hdf5", path, chunks)
-    frames = spark.createDataFrame(
-        [
-            (i, float(time[i]) if time else float(i), i)
-            for i in range(n_frames)
-        ],
-        "frame_id long, time double, step long",
+    # the dataset shape plan_chunks and decode_chunk trust
+    return load_indexed(
+        spark, "hdf5", path, chunks, n_frames,
+        time=time if time else np.arange(n_frames, dtype=np.float64),
+        n_atoms=n_atoms,
+        cell=cells,
+        topology=_topology_from_json(spark, topo_json) if topo_json else None,
     )
-    unitcell = None
-    if cells:
-        lengths, angles = cells
-        unitcell = spark.createDataFrame(
-            [
-                (i, *map(float, lengths[i]), *map(float, angles[i]))
-                for i in range(n_frames)
-            ],
-            "frame_id long, a float, b float, c float, "
-            "alpha float, beta float, gamma float",
-        )
-    topology = _topology_from_json(spark, topo_json) if topo_json else None
-    return Trajectory(coords, frames=frames, unitcell=unitcell, topology=topology)
 
 
 def load_lh5(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory:
@@ -219,7 +207,6 @@ def write_h5_traj(
     ``fmt_version=2`` and chunking) indexes the coordinates with the
     Extensible Array — the on-disk shape libhdf5 emits for
     unlimited-maxshape (append-mode) trajectory files."""
-    import numpy as np
 
     from dask_traj_spark.sources.hdf5_pure import write_h5
 
@@ -254,8 +241,6 @@ def write_h5_traj(
 def write_lh5(traj: Trajectory, path: str) -> None:
     """Sink: legacy MSMBuilder2 lossy-HDF5 export — ``XYZList`` int16
     fixed-point (nm × 1000, rounded), contiguous."""
-    import numpy as np
-
     from dask_traj_spark.sources.hdf5_pure import write_h5
 
     xyz, _time = traj.to_numpy()

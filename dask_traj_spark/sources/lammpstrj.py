@@ -26,7 +26,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import chunk_list, scan_frames
+from dask_traj_spark.sources._arrow import chunk_list, load_indexed
 from dask_traj_spark.trajectory import Trajectory
 
 ANGSTROM_TO_NM = 0.1
@@ -152,17 +152,11 @@ def load_lammpstrj(spark: SparkSession, path: str, chunks: int = 10) -> Trajecto
     idx = index_lammpstrj(path)
     if not idx:
         raise ValueError(f"empty lammpstrj file: {path}")
-    coords = scan_frames(spark, "lammpstrj", path, chunks)
-    frames = spark.createDataFrame(
-        [(fid, float(step), step) for fid, _o, _n, step, _b, _c in idx],
-        "frame_id long, time double, step long",
+    _fids, _offsets, natoms, steps, boxes, _cols = zip(*idx)
+    return load_indexed(
+        spark, "lammpstrj", path, chunks, len(idx),
+        time=steps,
+        step=steps,
+        n_atoms=natoms,
+        box=np.asarray(boxes) * ANGSTROM_TO_NM,
     )
-    unitcell = spark.createDataFrame(
-        [
-            (fid, *[float(v) * ANGSTROM_TO_NM for v in box.ravel()])
-            for fid, _o, _n, _s, box, _c in idx
-        ],
-        "frame_id long, ax float, ay float, az float, bx float, by float, "
-        "bz float, cx float, cy float, cz float",
-    )
-    return Trajectory(coords, frames=frames, unitcell=unitcell)

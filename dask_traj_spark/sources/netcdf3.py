@@ -29,7 +29,7 @@ import struct
 import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import chunk_range, scan_frames
+from dask_traj_spark.sources._arrow import chunk_range, load_indexed
 from dask_traj_spark.trajectory import Trajectory
 
 ANGSTROM_TO_NM = 0.1
@@ -170,7 +170,6 @@ def load_netcdf(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory
     nc = NC3File(path)
     if "coordinates" not in nc.vars:
         raise ValueError(f"{path}: no 'coordinates' variable (not AMBER layout)")
-    coords = scan_frames(spark, "netcdf3", path, chunks)
     with open(path, "rb") as f:
         times = (
             [float(nc.read_record(f, "time", r)) for r in range(nc.numrecs)]
@@ -181,34 +180,20 @@ def load_netcdf(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory
         if "cell_lengths" in nc.vars and "cell_angles" in nc.vars:
             cells = [
                 (
-                    nc.read_record(f, "cell_lengths", r).astype(np.float64),
-                    nc.read_record(f, "cell_angles", r).astype(np.float64),
+                    r,
+                    *(float(v) * ANGSTROM_TO_NM for v in nc.read_record(f, "cell_lengths", r)[:3]),
+                    *map(float, nc.read_record(f, "cell_angles", r)[:3]),
                 )
                 for r in range(nc.numrecs)
             ]
-    frames = spark.createDataFrame(
-        [(r, times[r], r) for r in range(nc.numrecs)],
-        "frame_id long, time double, step long",
+    # numrecs and the coordinates shape are what plan_chunks and
+    # decode_chunk trust
+    return load_indexed(
+        spark, "netcdf3", path, chunks, nc.numrecs,
+        time=times,
+        n_atoms=nc.vars["coordinates"].shape[0],
+        cell=cells,
     )
-    unitcell = None
-    if cells is not None:
-        unitcell = spark.createDataFrame(
-            [
-                (
-                    r,
-                    float(ln[0]) * ANGSTROM_TO_NM,
-                    float(ln[1]) * ANGSTROM_TO_NM,
-                    float(ln[2]) * ANGSTROM_TO_NM,
-                    float(an[0]),
-                    float(an[1]),
-                    float(an[2]),
-                )
-                for r, (ln, an) in enumerate(cells)
-            ],
-            "frame_id long, a float, b float, c float, "
-            "alpha float, beta float, gamma float",
-        )
-    return Trajectory(coords, frames=frames, unitcell=unitcell)
 
 
 def load_ncrestart(spark: SparkSession, path: str, **_options) -> Trajectory:

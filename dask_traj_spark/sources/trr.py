@@ -25,7 +25,7 @@ import struct
 import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import chunk_range, scan_frames
+from dask_traj_spark.sources._arrow import chunk_range, load_indexed
 from dask_traj_spark.trajectory import Trajectory
 
 MAGIC = 1993
@@ -135,8 +135,8 @@ def _read_frames(path: str, info: TRRInfo, start: int, count: int):
 
 
 def _read_meta(path: str, info: TRRInfo):
-    """Header-only pass: yield (frame_id, step, t, box) without
-    decoding coordinates (seeks past x/v/f)."""
+    """Header-only pass: yield (frame_id, step, t, box, natoms)
+    without decoding coordinates (seeks past x/v/f)."""
     with open(path, "rb") as f:
         for fid in range(info.n_frames):
             f.seek(fid * info.frame_size)
@@ -150,7 +150,7 @@ def _read_meta(path: str, info: TRRInfo):
                 box = np.array(
                     struct.unpack(dt, _must_read(f, 9 * fw, "box record"))
                 ).reshape(3, 3)
-            yield fid, h["step"], h["t"], box
+            yield fid, h["step"], h["t"], box, h["natoms"]
 
 
 def write_trr(traj: Trajectory, path: str) -> None:
@@ -211,20 +211,11 @@ def load_trr(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory:
     """Load a .trr trajectory (chunked lazy scan + driver-side
     frame/box index)."""
     info = read_info(path)
-    coords = scan_frames(spark, "trr", path, chunks)
     meta = list(_read_meta(path, info))
-    frames = spark.createDataFrame(
-        [(fid, float(t), int(step)) for fid, step, t, _b in meta],
-        "frame_id long, time double, step long",
+    return load_indexed(
+        spark, "trr", path, chunks, info.n_frames,
+        time=[t for _f, _s, t, _b, _n in meta],
+        step=[s for _f, s, _t, _b, _n in meta],
+        n_atoms=[n for _f, _s, _t, _b, n in meta],
+        box=[b for _f, _s, _t, b, _n in meta] if info.box_size else None,
     )
-    unitcell = None
-    if info.box_size:
-        unitcell = spark.createDataFrame(
-            [
-                (fid, *[float(v) for v in box.ravel()])
-                for fid, _s, _t, box in meta
-            ],
-            "frame_id long, ax float, ay float, az float, bx float, by float, "
-            "bz float, cx float, cy float, cz float",
-        )
-    return Trajectory(coords, frames=frames, unitcell=unitcell)

@@ -43,7 +43,7 @@ import struct
 import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import chunk_list, scan_frames
+from dask_traj_spark.sources._arrow import chunk_list, load_indexed
 from dask_traj_spark.trajectory import Trajectory
 
 MAGIC = 1995
@@ -623,20 +623,14 @@ def decode_chunk(path: str, offsets: list[tuple[int, int]]):
 
 def load_xtc(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory:
     """Load a .xtc trajectory: chunked lazy coords scan via the
-    shared frame-chunk source; frames (step/time) and per-frame box
-    come from the driver-side header index (no coordinate decode)."""
+    shared frame-chunk source; frames (step/time), per-frame box and
+    the atom and frame counts come from the driver-side header index
+    (no coordinate decode)."""
     idx = index_xtc(path)
-    coords = scan_frames(spark, "xtc", path, chunks)
-    frames = spark.createDataFrame(
-        [(fi.frame_id, float(fi.time), int(fi.step)) for fi in idx],
-        "frame_id long, time double, step long",
+    return load_indexed(
+        spark, "xtc", path, chunks, len(idx),
+        time=[fi.time for fi in idx],
+        step=[fi.step for fi in idx],
+        n_atoms=[fi.natoms for fi in idx],
+        box=[fi.box for fi in idx],
     )
-    unitcell = spark.createDataFrame(
-        [
-            (fi.frame_id, *[float(v) for v in fi.box.ravel()])
-            for fi in idx
-        ],
-        "frame_id long, ax float, ay float, az float, bx float, by float, "
-        "bz float, cx float, cy float, cz float",
-    )
-    return Trajectory(coords, frames=frames, unitcell=unitcell)

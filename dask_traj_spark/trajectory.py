@@ -22,14 +22,34 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
+from dataclasses import dataclass
 from functools import cached_property
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from dask_traj_spark.operators.unitcell import (
     with_box_vectors,
     with_lengths_and_angles,
 )
+
+
+@dataclass(frozen=True)
+class FrameIndex:
+    """Dimensions a loader's driver-side header index already read,
+    so that asking for them starts no Spark job (the reference counts
+    frames and atoms eagerly at load the same way,
+    core/dask_traj.py:61-100).
+
+    ``frame_ids`` (F,) int64 ascending: one per frame of ``coords``.
+    ``n_atoms``: the atom count every frame agrees on, else None.
+    ``box``: (F, 3, 3) float32 box vectors in nm, bit-equal to the
+    trajectory's ``unitcell`` vector columns, or None.
+    """
+
+    frame_ids: np.ndarray
+    n_atoms: int | None = None
+    box: np.ndarray | None = None
 
 
 class Trajectory:
@@ -41,6 +61,9 @@ class Trajectory:
     frames : DataFrame(frame_id, time, step) or None
     unitcell : DataFrame(frame_id, a..gamma and/or ax..cz) or None
     topology : DataFrame(atom_id, name, element, mass, ...) or None
+    index : FrameIndex or None — only a loader that built the tables
+        above from its own header index passes one; derived
+        trajectories (slices, joins) carry none and count instead.
     """
 
     def __init__(
@@ -50,6 +73,7 @@ class Trajectory:
         unitcell: DataFrame | None = None,
         topology: DataFrame | None = None,
         packed: bool = False,
+        index: FrameIndex | None = None,
     ):
         self.coords = coords
         self._frames = frames
@@ -63,16 +87,25 @@ class Trajectory:
         #: geometry path skip its one shuffle. Violations surface as
         #: a clear error in the kernel's frame-block check.
         self.packed = packed
+        self.index = index
 
     # ---- dimensions -------------------------------------------------
 
     @cached_property
     def n_frames(self) -> int:
+        if self.index is not None:
+            return len(self.index.frame_ids)
+        if self._frames is not None:
+            # one row per frame: a scan of the small table, no shuffle
+            return self._frames.count()
         return self.coords.select("frame_id").distinct().count()
 
     @cached_property
     def n_atoms(self) -> int:
-        # cheap: one frame's worth of rows
+        if self.index is not None and self.index.n_atoms is not None:
+            return self.index.n_atoms
+        # a full countDistinct over coords: for a file source this
+        # decodes every frame
         row = self.coords.agg(F.countDistinct("atom_id").alias("n")).first()
         return int(row["n"])
 
@@ -405,8 +438,6 @@ class Trajectory:
         xyz shaped (n_frames, n_atoms, 3) float32 — the analog of the
         reference's ``to_mdtraj`` (core/dask_traj.py:390-404). Only
         for small trajectories, by definition."""
-        import numpy as np
-
         n_frames, n_atoms = self.n_frames, self.n_atoms
         pdf = self.coords.toPandas()
         xyz = np.zeros((n_frames, n_atoms, 3), dtype=np.float32)
@@ -432,7 +463,6 @@ class Trajectory:
                 "use to_numpy() for raw arrays"
             ) from e
         import mdtraj as md
-        import numpy as np
 
         xyz, time = self.to_numpy()
         topo = md.Topology()

@@ -1,0 +1,263 @@
+"""Driver-known trajectory dimensions (``FrameIndex``).
+
+Loaders that index every frame on the driver hand ``n_atoms``,
+``n_frames`` and, for formats that store box vectors, the per-frame
+box to the ``Trajectory``. These tests pin that the index equals what
+Spark would count or derive, that geometry calls on a loaded file
+start no Spark job before the action, and that derived trajectories
+fall back to counting.
+"""
+
+from __future__ import annotations
+
+import itertools
+import os
+import subprocess
+import sys
+import textwrap
+
+import numpy as np
+import pytest
+
+from dask_traj_spark.operators.distance import _BoxLookup, compute_distances
+from dask_traj_spark.operators.angle import compute_angles
+from dask_traj_spark.operators.unitcell import lengths_angles_np, with_lengths_and_angles
+from dask_traj_spark.sources.loaders import from_wide_pandas, load
+from dask_traj_spark.trajectory import Trajectory
+from tests.golden import box_vectors_from_lengths_angles
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+N_FRAMES, N_ATOMS = 4, 12
+#: two orthogonal frames, then two triclinic ones
+ANGLES = [(90.0, 90.0, 90.0), (90.0, 90.0, 90.0), (60.0, 60.0, 90.0), (70.0, 80.0, 100.0)]
+LENGTHS = [(3.0, 3.0, 3.0), (3.1, 2.9, 3.0), (3.0, 3.0, 3.0), (3.2, 3.1, 2.8)]
+
+VECTOR_FORMATS = [".xtc", ".trr", ".gro", ".lammpstrj"]
+INDEXED_FORMATS = VECTOR_FORMATS + [".arc", ".dcd", ".binpos", ".nc", ".h5"]
+
+
+def _lammpstrj(xyz_nm, boxes_nm) -> str:
+    """A LAMMPS dump with a tilted box on the triclinic frames."""
+    out = []
+    for f, (xyz, box) in enumerate(zip(xyz_nm * 10, boxes_nm * 10)):
+        (lx, _, _), (xy, ly, _), (xz, yz, lz) = box
+        out += [f"ITEM: TIMESTEP\n{f}\nITEM: NUMBER OF ATOMS\n{len(xyz)}\n"]
+        if xy or xz or yz:
+            # bounding extents of the tilted cell (LAMMPS convention)
+            lo = min(0.0, xy, xz, xy + xz)
+            hi = max(0.0, xy, xz, xy + xz)
+            out += [
+                "ITEM: BOX BOUNDS xy xz yz pp pp pp\n",
+                f"{lo!r} {lx + hi!r} {xy!r}\n",
+                f"{min(0.0, yz)!r} {ly + max(0.0, yz)!r} {xz!r}\n",
+                f"0.0 {lz!r} {yz!r}\n",
+            ]
+        else:
+            out += [f"ITEM: BOX BOUNDS pp pp pp\n0.0 {lx!r}\n0.0 {ly!r}\n0.0 {lz!r}\n"]
+        out += ["ITEM: ATOMS id type x y z\n"]
+        out += [f"{a + 1} 1 {x!r} {y!r} {z!r}\n" for a, (x, y, z) in enumerate(xyz)]
+    return "".join(out)
+
+
+def _arc(xyz_nm, lengths_nm, angles) -> str:
+    out = []
+    for xyz, ln, an in zip(xyz_nm * 10, np.asarray(lengths_nm) * 10, angles):
+        out += [f"{len(xyz):6d}  frame\n", " ".join(f"{v:.6f}" for v in (*ln, *an)) + "\n"]
+        out += [
+            f"{a + 1:6d}  C   {x:.6f}  {y:.6f}  {z:.6f}   1\n"
+            for a, (x, y, z) in enumerate(xyz)
+        ]
+    return "".join(out)
+
+
+@pytest.fixture(scope="module")
+def written(spark, tmp_path_factory):
+    """One small varied-box trajectory, written by each format's own
+    writer (text fixtures for LAMMPS and Tinker, which have none)."""
+    from dask_traj_spark.sources.binpos import write_binpos
+    from dask_traj_spark.sources.dcd import write_dcd
+    from dask_traj_spark.sources.gro import write_gro
+    from dask_traj_spark.sources.hdf5 import write_h5_traj
+    from dask_traj_spark.sources.netcdf3 import write_netcdf
+    from dask_traj_spark.sources.trr import write_trr
+    from dask_traj_spark.sources.xtc import write_xtc
+
+    d = tmp_path_factory.mktemp("frame_index")
+    rng = np.random.default_rng(7)
+    xyz = rng.uniform(0.0, 2.5, (N_FRAMES, N_ATOMS, 3)).astype(np.float32)
+    traj = from_wide_pandas(
+        spark, xyz, time=np.arange(N_FRAMES) * 2.0,
+        unitcell_lengths=LENGTHS, unitcell_angles=ANGLES,
+    )
+    paths = {ext: str(d / f"t{ext}") for ext in INDEXED_FORMATS}
+    for ext, write in (
+        (".xtc", write_xtc), (".trr", write_trr), (".gro", write_gro),
+        (".dcd", write_dcd), (".binpos", write_binpos), (".nc", write_netcdf),
+        (".h5", write_h5_traj),
+    ):
+        write(traj, paths[ext])
+    boxes = np.stack([box_vectors_from_lengths_angles(*ln, *an) for ln, an in zip(LENGTHS, ANGLES)])
+    with open(paths[".lammpstrj"], "w") as fh:
+        fh.write(_lammpstrj(xyz.astype(np.float64), boxes))
+    with open(paths[".arc"], "w") as fh:
+        fh.write(_arc(xyz.astype(np.float64), LENGTHS, ANGLES))
+    return paths
+
+
+@pytest.mark.parametrize("ext", INDEXED_FORMATS)
+def test_index_dimensions_equal_counted(spark, written, ext):
+    traj = load(spark, written[ext])
+    assert traj.index is not None and traj.index.n_atoms is not None
+    counted = Trajectory(traj.coords)
+    assert (traj.n_atoms, traj.n_frames) == (counted.n_atoms, counted.n_frames)
+    assert (traj.n_atoms, traj.n_frames) == (N_ATOMS, N_FRAMES)
+    # only formats that index box vectors carry a host-side box
+    assert (traj.index.box is not None) == (ext in VECTOR_FORMATS)
+
+
+@pytest.mark.parametrize("ext", VECTOR_FORMATS)
+def test_host_box_lookup_equals_spark_derived(spark, written, ext):
+    traj = load(spark, written[ext])
+    host = _BoxLookup.from_traj(traj)
+    derived = _BoxLookup.from_traj(Trajectory(traj.coords, unitcell=traj.unitcell))
+    np.testing.assert_array_equal(host.ids, derived.ids)
+    assert host.vecs.dtype == derived.vecs.dtype == np.float32
+    np.testing.assert_array_equal(host.vecs.view(np.uint32), derived.vecs.view(np.uint32))
+    np.testing.assert_array_equal(host.ortho, derived.ortho)
+    assert host.ortho.tolist() == [True, True, False, False]
+
+
+def test_lengths_angles_twin_is_bit_equal_to_sql(spark):
+    rng = np.random.default_rng(11)
+    n = 200
+    tri = np.stack(
+        [
+            # angles in [65, 115] always make a valid cell
+            box_vectors_from_lengths_angles(*rng.uniform(0.5, 10.0, 3), *rng.uniform(65.0, 115.0, 3))
+            for _ in range(n)
+        ]
+    )
+    # plus unreduced boxes: any three non-degenerate vectors
+    full = rng.normal(0.0, 3.0, (n, 3, 3))
+    boxes = np.concatenate([tri, full]).astype(np.float32)
+    df = spark.createDataFrame(
+        [(i, *b) for i, b in enumerate(boxes.reshape(-1, 9).tolist())],
+        "frame_id long, ax float, ay float, az float, bx float, by float, "
+        "bz float, cx float, cy float, cz float",
+    )
+    pdf = with_lengths_and_angles(df).orderBy("frame_id").toPandas()
+    want = pdf[["a", "b", "c", "alpha", "beta", "gamma"]].to_numpy(dtype=np.float32)
+    got = lengths_angles_np(boxes)
+    assert got.dtype == np.float32
+    np.testing.assert_array_equal(got.view(np.uint32), want.view(np.uint32))
+
+
+def test_unequal_atom_counts_keep_n_atoms_lazy(spark, tmp_path):
+    """XTC frames are self-framed, so two files with different atom
+    counts concatenate into one valid file."""
+    from dask_traj_spark.sources.xtc import _write_xtc_file
+
+    rng = np.random.default_rng(3)
+    parts = []
+    for i, n in enumerate((12, 15)):
+        p = str(tmp_path / f"p{i}.xtc")
+        _write_xtc_file(p, rng.uniform(0, 2, (2, n, 3)).astype(np.float32), None, None)
+        with open(p, "rb") as fh:
+            parts.append(fh.read())
+    path = str(tmp_path / "mixed.xtc")
+    with open(path, "wb") as fh:
+        fh.write(b"".join(parts))
+    traj = load(spark, path)
+    assert traj.index.n_atoms is None
+    assert traj.n_atoms == Trajectory(traj.coords).n_atoms == 15
+    assert traj.n_frames == 4
+
+
+@pytest.fixture(scope="module")
+def xtc_traj_path(tmp_path_factory):
+    from dask_traj_spark.sources.xtc import _write_xtc_file
+
+    rng = np.random.default_rng(5)
+    n_frames, n_atoms = 6, 20
+    xyz = rng.uniform(0, 3, (n_frames, n_atoms, 3)).astype(np.float32)
+    box = np.tile(box_vectors_from_lengths_angles(3.0, 3.0, 3.0, 60.0, 60.0, 90.0), (n_frames, 1, 1))
+    path = str(tmp_path_factory.mktemp("xtc_jobs") / "t.xtc")
+    _write_xtc_file(path, xyz, np.arange(n_frames, dtype=np.float64), box)
+    return path
+
+
+def _jobs(sc, group: str) -> list[int]:
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_geometry_on_loaded_xtc_starts_no_job_before_the_action(spark, xtc_traj_path):
+    sc = spark.sparkContext
+    traj = load(spark, xtc_traj_path, chunks=2)
+    pairs = list(itertools.combinations(range(8), 2))
+    sc.setJobGroup("frame_index_call", "call")
+    try:
+        d = compute_distances(traj, pairs, periodic=True, form="vectorized")
+        compute_angles(traj, [(0, 1, 2), (3, 4, 5)], periodic=True)
+        assert _jobs(sc, "frame_index_call") == []
+        sc.setJobGroup("frame_index_sink", "sink")
+        d.write.format("noop").mode("overwrite").save()
+        assert _jobs(sc, "frame_index_sink")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    plan = d._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("BatchScan") == 1 and "trajframes" in plan.lower(), plan
+
+
+def test_derived_trajectories_carry_no_index(spark, xtc_traj_path):
+    traj = load(spark, xtc_traj_path, chunks=2)
+    assert traj.index is not None and traj.n_atoms == 20
+    sliced = traj.atom_slice(range(5))
+    picked = traj.select_frames([0, 2])
+    for derived, n_atoms in ((sliced, 5), (picked, 20)):
+        assert derived.index is None
+        with pytest.raises(ValueError, match="outside"):
+            compute_distances(derived, [(0, n_atoms)], form="vectorized")
+    assert picked.n_frames == 2 and sliced.n_frames == 6
+
+
+def test_trajframes_registers_once_per_live_session(xtc_traj_path):
+    """Loading twice registers the source once; a fresh session after
+    ``spark.stop()`` registers it again. Runs in a subprocess: the
+    test session must not be stopped."""
+    code = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {ROOT!r})
+        from pyspark.sql.datasource import DataSourceRegistration
+        from dask_traj_spark.session import get_spark
+        from dask_traj_spark.sources.loaders import load
+
+        calls = []
+        register = DataSourceRegistration.register
+        def counted(self, cls):
+            calls.append(cls.name())
+            return register(self, cls)
+        DataSourceRegistration.register = counted
+
+        counts = []
+        def load_and_count(spark):
+            rows = load(spark, {xtc_traj_path!r}).coords.count()
+            counts.append((len(calls), rows))
+
+        spark = get_spark(master="local[1]", shuffle_partitions=1)
+        load_and_count(spark)
+        load_and_count(spark)
+        spark.stop()
+        spark = get_spark(master="local[1]", shuffle_partitions=1)
+        load_and_count(spark)
+        spark.stop()
+        print("COUNTS", counts)
+        """
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, timeout=300
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    line = [ln for ln in r.stdout.splitlines() if ln.startswith("COUNTS")][-1]
+    assert line == "COUNTS [(1, 120), (1, 120), (2, 120)]", line
+    assert "replaced a previously registered data source" not in r.stderr
