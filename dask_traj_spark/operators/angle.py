@@ -6,10 +6,11 @@ triplet (i, j, k), u = MIC(r_i − r_j), v = MIC(r_k − r_j), angle =
 arccos(û · v̂). Returned in radians, float32, as
 (frame_id, triplet_id, angle_rad).
 
-SQL form: three broadcast-pair joins stitched per frame + a codegen'd
-acos expression. Vectorized form: the numpy kernel over packed
-frame blocks (see distance.py's vectorized-forms section) — zero
-shuffles when the trajectory is already frame-packed.
+SQL form: the three-role stitch plus the MIC step
+(``distance._role_stitch``, ``distance._displacements``) and a
+codegen'd acos expression. Vectorized form: the numpy kernel over
+packed frame blocks (``distance.map_frame_blocks``) — zero shuffles
+when the trajectory is already frame-packed.
 """
 
 from __future__ import annotations
@@ -17,19 +18,38 @@ from __future__ import annotations
 from typing import Iterable
 
 import numpy as np
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from dask_traj_spark import schemas
 from dask_traj_spark.operators import kernels
 from dask_traj_spark.operators.distance import (
     _VECTORIZED_THRESHOLD,
-    _add_displacement,
-    _block_arrays,
-    _iter_frame_blocks,
+    _displacements,
+    _long_rows,
+    _map_index_blocks,
     _normalize_indices,
-    _packed_input,
-    _pairs_df,
+    _role_stitch,
 )
+
+def _angle_legs(traj, arr: np.ndarray, periodic: bool) -> DataFrame:
+    """(frame_id, triplet_id, ux..uz, vx..vz) — the SQL angle plan up
+    to its legs: the three-role stitch anchored on the mid atom, so
+    the coords lineage is scanned once per role, and both legs share
+    one box join."""
+    df = _role_stitch(traj, arr, "triplet_id", ("i", "j", "k"), anchor=1)
+    # u = r_i − r_j, v = r_k − r_j
+    return _displacements(traj, df, {"u": ("j", "i"), "v": ("j", "k")}, periodic)
+
+
+def _cos_angle() -> Column:
+    """cos of the angle between the legs (u, v), clamped to [-1, 1]."""
+    # x*x, not pow(x,2): multiplication is IEEE exact-rounded, pow is
+    # not guaranteed — matters for bit-reproducibility vs the oracle
+    sq = lambda c: F.col(c) * F.col(c)  # noqa: E731
+    un = F.sqrt(sq("ux") + sq("uy") + sq("uz"))
+    vn = F.sqrt(sq("vx") + sq("vy") + sq("vz"))
+    dot = F.col("ux") * F.col("vx") + F.col("uy") * F.col("vy") + F.col("uz") * F.col("vz")
+    return F.greatest(F.lit(-1.0), F.least(F.lit(1.0), dot / (un * vn)))
 
 
 def compute_angles(
@@ -60,108 +80,24 @@ def compute_angles(
     if form == "vectorized":
         return _vectorized_angles(traj, arr, periodic)
 
-    from dask_traj_spark.operators.distance import (
-        _atom_role_restrict,
-        _with_box,
-    )
-    from dask_traj_spark.operators.mic import BOX_COLS, add_mic_displacement
-
-    use_box = periodic and traj.have_unitcell
-    spark = traj.spark
-    trip = F.broadcast(
-        _pairs_df(spark, arr, ["triplet_id", "i", "j", "k"])
-    )
-
-    def role(ids, suffix, frame_col):
-        # unique column names per role: the three sides share one
-        # coords lineage (triple self-join) and Spark re-aliases
-        # duplicate attribute ids, so name-based joins are the only
-        # unambiguous form
-        return _atom_role_restrict(traj.coords, ids).select(
-            F.col("frame_id").alias(frame_col),
-            F.col("atom_id").alias(f"_a{suffix}"),
-            F.col("x").cast("double").alias(f"x{suffix}"),
-            F.col("y").cast("double").alias(f"y{suffix}"),
-            F.col("z").cast("double").alias(f"z{suffix}"),
-        )
-
-    cj = role(arr[:, 1], "j", "frame_id")
-    ci = role(arr[:, 0], "i", "_fi")
-    ck = role(arr[:, 2], "k", "_fk")
-    df = (
-        cj.join(trip, F.col("_aj") == F.col("j"))
-        .join(ci, (F.col("_ai") == F.col("i")) & (F.col("_fi") == F.col("frame_id")))
-        .join(ck, (F.col("_ak") == F.col("k")) & (F.col("_fk") == F.col("frame_id")))
-        .select(
-            "frame_id", "triplet_id",
-            "xi", "yi", "zi", "xj", "yj", "zj", "xk", "yk", "zk",
-        )
-    )
-    df = df.withColumns(
-        {
-            "ux": F.col("xi") - F.col("xj"),
-            "uy": F.col("yi") - F.col("yj"),
-            "uz": F.col("zi") - F.col("zj"),
-            "vx": F.col("xk") - F.col("xj"),
-            "vy": F.col("yk") - F.col("yj"),
-            "vz": F.col("zk") - F.col("zj"),
-        }
-    )
-    if use_box:
-        df = _with_box(traj, df)
-        df = add_mic_displacement(df, "ux", "uy", "uz", out=("mux", "muy", "muz"))
-        df = add_mic_displacement(df, "vx", "vy", "vz", out=("mvx", "mvy", "mvz"))
-        df = (
-            df.drop("_ortho", *BOX_COLS)
-            .drop("ux", "uy", "uz", "vx", "vy", "vz")
-            .withColumnsRenamed(
-                {"mux": "ux", "muy": "uy", "muz": "uz",
-                 "mvx": "vx", "mvy": "vy", "mvz": "vz"}
-            )
-        )
-    # x*x, not pow(x,2): multiplication is IEEE exact-rounded, pow is
-    # not guaranteed — matters for bit-reproducibility vs the oracle
-    sq = lambda c: F.col(c) * F.col(c)  # noqa: E731
-    un = F.sqrt(sq("ux") + sq("uy") + sq("uz"))
-    vn = F.sqrt(sq("vx") + sq("vy") + sq("vz"))
-    dot = F.col("ux") * F.col("vx") + F.col("uy") * F.col("vy") + F.col("uz") * F.col("vz")
-    cosang = F.greatest(F.lit(-1.0), F.least(F.lit(1.0), dot / (un * vn)))
+    acos = F.acos(_cos_angle())
     # transcendental-protection option (policy item 3, same knob as
     # compute_dihedrals): acos kept in DOUBLE and rounded to 1e-6 rad
     # for oracle-gated callers; public default stays float32
-    ang = (
-        F.round(F.acos(cosang), 6)
-        if _round6_double
-        else F.acos(cosang).cast("float")
+    ang = F.round(acos, 6) if _round6_double else acos.cast("float")
+    return _angle_legs(traj, arr, periodic).select(
+        "frame_id", "triplet_id", ang.alias("angle_rad")
     )
-    return df.select("frame_id", "triplet_id", ang.alias("angle_rad"))
 
 
 def _vectorized_angles(traj, arr: np.ndarray, periodic: bool) -> DataFrame:
-    import pandas as pd
-
-    sel = np.unique(arr)
-    packed, lookup = _packed_input(traj, periodic, atoms=sel)
-    sc = traj.spark.sparkContext
-    b = sc.broadcast(np.searchsorted(sel, arr).astype(np.int32))
-    b_lookup = sc.broadcast(lookup)
     n_trip = len(arr)
 
-    def gen(batches):
-        t = b.value
-        ti, tj, tk = t[:, 0], t[:, 1], t[:, 2]
-        for block in _iter_frame_blocks(batches):
-            fids, xyz, box, ortho = _block_arrays(block, b_lookup.value)
-            ang = kernels.angles_np(xyz, ti, tj, tk, box, ortho)
-            yield pd.DataFrame(
-                {
-                    "frame_id": np.repeat(fids, n_trip),
-                    "triplet_id": np.tile(np.arange(n_trip, dtype=np.int32), len(fids)),
-                    "angle_rad": ang.ravel(),
-                }
-            )
+    def kernel(fids, xyz, box, ortho, t):
+        ang = kernels.angles_np(xyz, t[:, 0], t[:, 1], t[:, 2], box, ortho)
+        return _long_rows(fids, "triplet_id", n_trip, angle_rad=ang.ravel())
 
-    return packed.mapInPandas(gen, schema=schemas.ANGLES_SCHEMA)
+    return _map_index_blocks(traj, arr, kernel, schemas.ANGLES_SCHEMA, periodic)
 
 
 def compute_dihedrals(
@@ -197,62 +133,10 @@ def compute_dihedrals(
     if form == "vectorized":
         return _vectorized_dihedrals(traj, arr, periodic)
 
-    from dask_traj_spark.operators.distance import _atom_role_restrict, _with_box
-    from dask_traj_spark.operators.mic import BOX_COLS, add_mic_displacement
-
-    use_box = periodic and traj.have_unitcell
-    spark = traj.spark
-    quart = F.broadcast(_pairs_df(spark, arr, ["quartet_id", "i", "j", "k", "l"]))
-
-    def role(ids, suffix, frame_col):
-        return _atom_role_restrict(traj.coords, ids).select(
-            F.col("frame_id").alias(frame_col),
-            F.col("atom_id").alias(f"_a{suffix}"),
-            F.col("x").cast("double").alias(f"x{suffix}"),
-            F.col("y").cast("double").alias(f"y{suffix}"),
-            F.col("z").cast("double").alias(f"z{suffix}"),
-        )
-
-    cj = role(arr[:, 1], "j", "frame_id")
-    ci = role(arr[:, 0], "i", "_fi")
-    ck = role(arr[:, 2], "k", "_fk")
-    cl = role(arr[:, 3], "l", "_fl")
-    df = (
-        cj.join(quart, F.col("_aj") == F.col("j"))
-        .join(ci, (F.col("_ai") == F.col("i")) & (F.col("_fi") == F.col("frame_id")))
-        .join(ck, (F.col("_ak") == F.col("k")) & (F.col("_fk") == F.col("frame_id")))
-        .join(cl, (F.col("_al") == F.col("l")) & (F.col("_fl") == F.col("frame_id")))
-        .select(
-            "frame_id", "quartet_id",
-            "xi", "yi", "zi", "xj", "yj", "zj",
-            "xk", "yk", "zk", "xl", "yl", "zl",
-        )
+    df = _role_stitch(traj, arr, "quartet_id", ("i", "j", "k", "l"), anchor=1)
+    df = _displacements(
+        traj, df, {"b1": ("i", "j"), "b2": ("j", "k"), "b3": ("k", "l")}, periodic
     )
-    df = df.withColumns(
-        {
-            "b1x": F.col("xj") - F.col("xi"),
-            "b1y": F.col("yj") - F.col("yi"),
-            "b1z": F.col("zj") - F.col("zi"),
-            "b2x": F.col("xk") - F.col("xj"),
-            "b2y": F.col("yk") - F.col("yj"),
-            "b2z": F.col("zk") - F.col("zj"),
-            "b3x": F.col("xl") - F.col("xk"),
-            "b3y": F.col("yl") - F.col("yk"),
-            "b3z": F.col("zl") - F.col("zk"),
-        }
-    )
-    if use_box:
-        df = _with_box(traj, df)
-        for pre in ("b1", "b2", "b3"):
-            df = add_mic_displacement(
-                df, f"{pre}x", f"{pre}y", f"{pre}z",
-                out=(f"m{pre}x", f"m{pre}y", f"m{pre}z"),
-            )
-        df = df.drop("_ortho", *BOX_COLS)
-        df = df.drop(*[f"{p}{c}" for p in ("b1", "b2", "b3") for c in "xyz"])
-        df = df.withColumnsRenamed(
-            {f"m{p}{c}": f"{p}{c}" for p in ("b1", "b2", "b3") for c in "xyz"}
-        )
     # cross products as explicit exact-rounded column expressions
     df = df.withColumns(
         {
@@ -297,31 +181,14 @@ def compute_dihedrals(
 
 
 def _vectorized_dihedrals(traj, arr: np.ndarray, periodic: bool) -> DataFrame:
-    import pandas as pd
+    n_q = len(arr)
 
-    sel = np.unique(arr)
-    packed, lookup = _packed_input(traj, periodic, atoms=sel)
-    sc = traj.spark.sparkContext
-    b = sc.broadcast(np.searchsorted(sel, arr).astype(np.int32))
-    b_lookup = sc.broadcast(lookup)
+    def kernel(fids, xyz, box, ortho, q):
+        d = kernels.dihedrals_np(xyz, q[:, 0], q[:, 1], q[:, 2], q[:, 3], box, ortho)
+        return _long_rows(fids, "quartet_id", n_q, dihedral_rad=d.reshape(-1))
 
-    def gen(batches):
-        q = b.value
-        qi, qj, qk, ql = q[:, 0], q[:, 1], q[:, 2], q[:, 3]
-        for block in _iter_frame_blocks(batches):
-            fids, xyz, box, ortho = _block_arrays(block, b_lookup.value)
-            d = kernels.dihedrals_np(xyz, qi, qj, qk, ql, box, ortho)
-            n_q = d.shape[1]
-            yield pd.DataFrame(
-                {
-                    "frame_id": np.repeat(fids, n_q),
-                    "quartet_id": np.tile(np.arange(n_q, dtype=np.int32), len(fids)),
-                    "dihedral_rad": d.reshape(-1),
-                }
-            )
-
-    return packed.mapInPandas(
-        gen, "frame_id long, quartet_id int, dihedral_rad float"
+    return _map_index_blocks(
+        traj, arr, kernel, "frame_id long, quartet_id int, dihedral_rad float", periodic
     )
 
 

@@ -2,16 +2,22 @@
 
 Each operator has two equivalent physical strategies (SURVEY.md §7.1):
 
-- ``form="sql"`` — a declarative plan: broadcast the (tiny) pair
-  table, semi-filter the coords fact table to the atoms referenced,
-  self-join per frame, compute the displacement with codegen'd
-  column expressions (MIC included — see ``mic.py``). Catalyst gets
-  full pushdown/pruning visibility; used as the auditable
-  cross-check and for small pair sets.
-- ``form="vectorized"`` — the throughput path: pivot to wide
-  per-frame rows (ONE shuffle), then ``mapInPandas`` runs the numpy
-  kernels in ``kernels.py`` over Arrow batches; zero further
-  shuffles; output is already long-format.
+- ``form="sql"`` — a declarative plan: broadcast the (tiny) index
+  table onto the anchor role's coords, restricted to the atoms
+  referenced, self-join the other roles per frame
+  (:func:`_role_stitch`), compute the displacements with codegen'd
+  column expressions, MIC included (:func:`_displacements`, see
+  ``mic.py``). Catalyst gets full pushdown/pruning visibility; used
+  as the auditable cross-check and for small pair sets.
+- ``form="vectorized"`` — the throughput path: the frame-contiguous
+  long rows of ``traj.frame_packed()`` (one range shuffle, free on a
+  packed trajectory) feed ``mapInPandas``, which runs the numpy
+  kernels in ``kernels.py`` over complete-frame blocks
+  (:func:`map_frame_blocks`); zero further shuffles; output is
+  already long-format.
+
+A new operator is a kernel plus one :func:`map_frame_blocks` call,
+or the role stitch plus the MIC step.
 
 ``form="auto"`` picks vectorized for ≥512 pairs.
 
@@ -27,7 +33,7 @@ from __future__ import annotations
 from typing import Iterable, Sequence
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from dask_traj_spark import schemas
 from dask_traj_spark.operators import kernels
@@ -88,26 +94,6 @@ def _with_box(traj, df: DataFrame) -> DataFrame:
     return df.join(sel, "frame_id")
 
 
-def _add_displacement(traj, df: DataFrame, use_box: bool) -> DataFrame:
-    """Append MIC-aware displacement columns (_dx,_dy,_dz) to a df
-    with x1..z2 (and join the box when periodic)."""
-    df = df.withColumns(
-        {
-            "_dx": F.col("x2") - F.col("x1"),
-            "_dy": F.col("y2") - F.col("y1"),
-            "_dz": F.col("z2") - F.col("z1"),
-        }
-    )
-    if not use_box:
-        return df
-    df = _with_box(traj, df)
-    df = add_mic_displacement(df, "_dx", "_dy", "_dz", out=("_mx", "_my", "_mz"))
-    return (
-        df.drop("_dx", "_dy", "_dz", "_ortho", *_BOX_COLS)
-        .withColumnsRenamed({"_mx": "_dx", "_my": "_dy", "_mz": "_dz"})
-    )
-
-
 # ------------------------------------------------------------ SQL forms
 
 
@@ -144,67 +130,76 @@ def _atom_role_restrict(c: DataFrame, ids) -> DataFrame:
     return c.join(sel, "atom_id", "left_semi")
 
 
-def _pair_coords_sql(
-    traj,
-    pairs_df: DataFrame,
-    a_col: str,
-    b_col: str,
-    id_col: str,
-    ids_a=None,
-    ids_b=None,
-) -> DataFrame:
-    """(frame_id, <id_col>, x1..z1, x2..z2) for every (frame, pair).
+def _role_stitch(traj, arr: np.ndarray, id_col: str, roles, anchor: int):
+    """(frame_id, <id_col>, x<r>, y<r>, z<r> for each role r) for every
+    (frame, index row) — the one per-frame self-join every SQL
+    geometry form runs, for any number of roles.
 
-    Plan shape: coords ⋈ broadcast(pairs twice). The two joins key on
-    atom_id (broadcast hash, no shuffle of the fact table), then the
-    1↔2 sides meet on (frame_id, pair) — both sides restricted to
-    referenced atoms first (literal scan filter when the selection is
-    small — see ``_LITERAL_ATOM_FILTER_MAX`` — else broadcast
-    semi-join) so the shuffle moves only the atoms the query touches,
-    not the full fact table.
-    """
-    p = F.broadcast(pairs_df)
-    c = traj.coords
+    ``arr`` is the (n, len(roles)) index array; ``roles`` names its
+    columns.  Plan shape: broadcast the index table onto the ANCHOR
+    role's coords (a broadcast hash join keyed on atom_id — no
+    shuffle of the fact table), then join each other role's coords
+    on (frame_id, atom).  Every role's coords are first restricted
+    to the atoms that role references (:func:`_atom_role_restrict`),
+    so the shuffles move only the atoms the query touches."""
+    idx = F.broadcast(_pairs_df(traj.spark, arr, [id_col, *roles]))
 
-    def restrict(col_name, ids):
-        if ids is not None and len(set(map(int, ids))) <= _LITERAL_ATOM_FILTER_MAX:
-            return _atom_selection(c, ids)
-        sel = F.broadcast(pairs_df.select(F.col(col_name).alias("atom_id")).distinct())
-        return c.join(sel, "atom_id", "left_semi")
-
-    c1 = (
-        restrict(a_col, ids_a)
-        .join(p, F.col("atom_id") == F.col(a_col))
-        .select(
+    def role_coords(k: int, atom_col: str) -> DataFrame:
+        r = roles[k]
+        return _atom_role_restrict(traj.coords, arr[:, k]).select(
             "frame_id",
-            F.col(id_col),
-            F.col(b_col).alias("_other"),
-            F.col("x").cast("double").alias("x1"),
-            F.col("y").cast("double").alias("y1"),
-            F.col("z").cast("double").alias("z1"),
+            F.col("atom_id").alias(atom_col),
+            *[F.col(c).cast("double").alias(f"{c}{r}") for c in "xyz"],
         )
+
+    a = roles[anchor]
+    df = (
+        role_coords(anchor, "_atom")
+        .join(idx, F.col("_atom") == F.col(a))
+        .drop("_atom", a)
     )
-    c2 = restrict(b_col, ids_b).select(
-        "frame_id",
-        F.col("atom_id").alias("_other"),
-        F.col("x").cast("double").alias("x2"),
-        F.col("y").cast("double").alias("y2"),
-        F.col("z").cast("double").alias("z2"),
-    )
-    return c1.join(c2, ["frame_id", "_other"]).drop("_other")
+    for k, r in enumerate(roles):
+        if k != anchor:
+            # name-based (USING) join: every role shares one coords
+            # lineage, so column-object references would be ambiguous
+            df = df.join(role_coords(k, r), ["frame_id", r]).drop(r)
+    return df
 
 
-def _displacements_sql(
-    traj, pairs_df: DataFrame, periodic: bool, arr=None
-) -> DataFrame:
-    use_box = periodic and traj.have_unitcell
-    ids_a = arr[:, 0] if arr is not None else None
-    ids_b = arr[:, 1] if arr is not None else None
-    df = _pair_coords_sql(
-        traj, pairs_df, "i", "j", "pair_id", ids_a=ids_a, ids_b=ids_b
+def _displacements(traj, df: DataFrame, legs: dict, periodic: bool) -> DataFrame:
+    """Append one displacement vector per leg — ``legs[p] = (a, b)``
+    gives columns (px, py, pz) = r_b − r_a from the stitched role
+    coords — then, when periodic and the trajectory has a box, the
+    MIC step: join the box ONCE and replace each vector by its
+    minimum image in turn (``add_mic_displacement`` stages every
+    vector with ``withColumns``, as ``mic.py`` requires)."""
+    df = df.withColumns(
+        {
+            f"{p}{c}": F.col(f"{c}{b}") - F.col(f"{c}{a}")
+            for p, (a, b) in legs.items()
+            for c in "xyz"
+        }
     )
-    df = _add_displacement(traj, df, use_box)
-    return df.select(
+    if not (periodic and traj.have_unitcell):
+        return df
+    df = _with_box(traj, df)
+    for p in legs:
+        df = add_mic_displacement(
+            df, f"{p}x", f"{p}y", f"{p}z", out=tuple(f"_m{p}{c}" for c in "xyz")
+        )
+    return df.drop(
+        "_ortho", *_BOX_COLS, *[f"{p}{c}" for p in legs for c in "xyz"]
+    ).withColumnsRenamed({f"_m{p}{c}": f"{p}{c}" for p in legs for c in "xyz"})
+
+
+def _pair_legs(traj, arr: np.ndarray, periodic: bool) -> DataFrame:
+    """(frame_id, pair_id, _dx, _dy, _dz): r_j − r_i per (frame, pair)."""
+    df = _role_stitch(traj, arr, "pair_id", ("i", "j"), anchor=0)
+    return _displacements(traj, df, {"_d": ("i", "j")}, periodic)
+
+
+def _displacements_sql(traj, arr: np.ndarray, periodic: bool) -> DataFrame:
+    return _pair_legs(traj, arr, periodic).select(
         "frame_id",
         "pair_id",
         F.col("_dx").cast("float").alias("dx"),
@@ -299,8 +294,14 @@ class _BoxLookup:
         return cls(ids, vecs, kernels.is_orthogonal_np(ang))
 
     def get(self, frame_ids):
+        """→ (keep, box, ortho): ``keep`` masks the frames that have a
+        unitcell row; box/ortho cover only those.  A frame without one
+        is dropped, as the SQL form's and the box-join path's inner
+        joins drop it — never given a neighbour's box."""
         idx = np.searchsorted(self.ids, frame_ids)
-        return self.vecs[idx], self.ortho[idx]
+        keep = idx < len(self.ids)
+        keep[keep] = self.ids[idx[keep]] == frame_ids[keep]
+        return keep, self.vecs[idx[keep]], self.ortho[idx[keep]]
 
 
 def _iter_frame_blocks(batches):
@@ -351,7 +352,9 @@ def _block_arrays(block, box_lookup):
         axis=-1,
     )
     if box_lookup is not None:
-        box, ortho = box_lookup.get(fids)
+        keep, box, ortho = box_lookup.get(fids)
+        if not keep.all():
+            fids, xyz = fids[keep], xyz[keep]
         return fids, xyz, box, ortho
     if "ax" in block.columns:
         # box-column path: first row index of each (sorted) frame
@@ -435,52 +438,99 @@ def _packed_input(
     return feed.select("frame_id", "x", "y", "z"), lookup
 
 
+def map_frame_blocks(
+    traj,
+    fn,
+    schema,
+    *,
+    atoms: np.ndarray | None = None,
+    periodic: bool = False,
+    const=None,
+) -> DataFrame:
+    """Run a NumPy kernel over every complete-frame block of the
+    vectorized feed — the one fan-out / kernel / concatenate loop
+    every NumPy operator shares (the reference's per-frame-chunk
+    ``delayed`` map, geometry/distance.py:69-145).
+
+    ``fn(fids, xyz, box, ortho, const)`` gets a block's frame ids
+    (B,), coordinates (B, n_atoms, 3) float32, box (B, 3, 3) and
+    orthogonality flags (B,) (both None unless ``periodic`` and the
+    trajectory has a unitcell), and ``const``; it returns a pandas
+    frame matching ``schema``.  ``const`` and the box lookup travel
+    in ONE broadcast.  ``atoms`` (sorted, unique) restricts the feed
+    to those atoms, so a block's atom axis holds exactly them in that
+    order (see :func:`_packed_input`, which also picks box lookup vs
+    box join).  Frames with no unitcell row are dropped on the
+    periodic path.  Plan: feed → ``mapInPandas``, no shuffle on a
+    packed trajectory."""
+    packed, lookup = _packed_input(traj, periodic, atoms=atoms)
+    b = traj.spark.sparkContext.broadcast((const, lookup))
+
+    def gen(batches):
+        c, box_lookup = b.value
+        for block in _iter_frame_blocks(batches):
+            fids, xyz, box, ortho = _block_arrays(block, box_lookup)
+            if len(fids):
+                yield fn(fids, xyz, box, ortho, c)
+
+    return packed.mapInPandas(gen, schema)
+
+
+def _map_index_blocks(traj, arr: np.ndarray, fn, schema, periodic: bool) -> DataFrame:
+    """:func:`map_frame_blocks` for an atom-index kernel (pairs,
+    triplets, quartets): the feed carries only the atoms ``arr``
+    references, and ``const`` is ``arr`` remapped to positions on
+    that restricted atom axis."""
+    sel = np.unique(arr)
+    const = np.searchsorted(sel, arr).astype(np.int32)
+    return map_frame_blocks(
+        traj, fn, schema, atoms=sel, periodic=periodic, const=const
+    )
+
+
+def _long_rows(fids: np.ndarray, id_col: str, n: int, **values):
+    """Long output of a per-(frame, index) kernel: frame_id repeated,
+    ``id_col`` 0..n-1 tiled, then the raveled value columns."""
+    import pandas as pd
+
+    return pd.DataFrame(
+        {
+            "frame_id": np.repeat(fids, n),
+            id_col: np.tile(np.arange(n, dtype=np.int32), len(fids)),
+            **values,
+        }
+    )
+
+
 def _vectorized_pair_op(
     traj, arr: np.ndarray, periodic: bool, want_vectors: bool, wide_output: bool = False
 ) -> DataFrame:
-    import pandas as pd
-
-    sel = np.unique(arr)
-    packed, lookup = _packed_input(traj, periodic, atoms=sel)
-    remapped = np.searchsorted(sel, arr).astype(np.int32)
-    sc = traj.spark.sparkContext
-    b_pairs = sc.broadcast(remapped)
-    b_lookup = sc.broadcast(lookup)
     n_pairs = len(arr)
 
-    def gen(batches):
-        pi = b_pairs.value[:, 0]
-        pj = b_pairs.value[:, 1]
-        for block in _iter_frame_blocks(batches):
-            fids, xyz, box, ortho = _block_arrays(block, b_lookup.value)
-            if wide_output and not want_vectors:
-                d = kernels.distances_np(xyz, pi, pj, box, ortho)
-                yield pd.DataFrame({"frame_id": fids, "dists": list(d)})
-                continue
-            frames = np.repeat(fids, n_pairs)
-            pids = np.tile(np.arange(n_pairs, dtype=np.int32), len(fids))
-            if want_vectors:
-                d = kernels.displacements_np(xyz, pi, pj, box, ortho)
-                yield pd.DataFrame(
-                    {
-                        "frame_id": frames,
-                        "pair_id": pids,
-                        "dx": d[..., 0].ravel(),
-                        "dy": d[..., 1].ravel(),
-                        "dz": d[..., 2].ravel(),
-                    }
-                )
-            else:
-                d = kernels.distances_np(xyz, pi, pj, box, ortho)
-                yield pd.DataFrame(
-                    {"frame_id": frames, "pair_id": pids, "dist": d.ravel()}
-                )
+    def wide(fids, xyz, box, ortho, p):
+        import pandas as pd
 
-    if wide_output and not want_vectors:
-        schema = schemas.DISTANCES_WIDE_SCHEMA
+        d = kernels.distances_np(xyz, p[:, 0], p[:, 1], box, ortho)
+        return pd.DataFrame({"frame_id": fids, "dists": list(d)})
+
+    def dists(fids, xyz, box, ortho, p):
+        d = kernels.distances_np(xyz, p[:, 0], p[:, 1], box, ortho)
+        return _long_rows(fids, "pair_id", n_pairs, dist=d.ravel())
+
+    def vectors(fids, xyz, box, ortho, p):
+        d = kernels.displacements_np(xyz, p[:, 0], p[:, 1], box, ortho)
+        return _long_rows(
+            fids, "pair_id", n_pairs,
+            dx=d[..., 0].ravel(), dy=d[..., 1].ravel(), dz=d[..., 2].ravel(),
+        )
+
+    if want_vectors:
+        fn, schema = vectors, schemas.DISPLACEMENTS_SCHEMA
+    elif wide_output:
+        fn, schema = wide, schemas.DISTANCES_WIDE_SCHEMA
     else:
-        schema = schemas.DISPLACEMENTS_SCHEMA if want_vectors else schemas.DISTANCES_SCHEMA
-    return packed.mapInPandas(gen, schema=schema)
+        fn, schema = dists, schemas.DISTANCES_SCHEMA
+    return _map_index_blocks(traj, arr, fn, schema, periodic)
 
 
 # ------------------------------------------------------------ public API
@@ -497,39 +547,35 @@ def compute_distances(
     """Euclidean distance per (frame, atom-pair), optional MIC.
 
     Returns DataFrame(frame_id, pair_id, dist FLOAT); pair_id is the
-    position in ``atom_pairs``. With ``wide_output=True`` (vectorized
-    form only) returns (frame_id, dists ARRAY<FLOAT>) — one row per
-    frame, the reference's native result shape. Reference:
+    position in ``atom_pairs``. With ``wide_output=True`` returns
+    (frame_id, dists ARRAY<FLOAT>) — one row per frame, the
+    reference's native result shape; it selects the vectorized form
+    (``form="sql"`` raises ValueError). Reference:
     compute_distances, geometry/distance.py:69-145.
     """
     arr = _normalize_indices(atom_pairs, 2, n_atoms or traj.n_atoms, "atom_pairs")
+    if wide_output:
+        if form == "sql":
+            raise ValueError("wide_output=True needs the vectorized form")
+        form = "vectorized"
     if len(arr) == 0:  # P4 empty short-circuit (distance.py:107-108)
-        return traj.spark.createDataFrame([], schemas.DISTANCES_SCHEMA)
+        schema = schemas.DISTANCES_WIDE_SCHEMA if wide_output else schemas.DISTANCES_SCHEMA
+        return traj.spark.createDataFrame([], schema)
     if form == "auto":
         form = "vectorized" if len(arr) >= _VECTORIZED_THRESHOLD else "sql"
     if form == "vectorized":
         return _vectorized_pair_op(
             traj, arr, periodic, want_vectors=False, wide_output=wide_output
         )
-    pairs_df = _pairs_df(traj.spark, arr, ["pair_id", "i", "j"])
     if periodic and traj.have_unitcell:
         # distance-only MIC fast path: min(d2) via codegen'd least()
         # instead of the interpreted 27-image argmin HOF
-        df = _pair_coords_sql(
-            traj, pairs_df, "i", "j", "pair_id",
-            ids_a=arr[:, 0], ids_b=arr[:, 1],
-        ).withColumns(
-            {
-                "_dx": F.col("x2") - F.col("x1"),
-                "_dy": F.col("y2") - F.col("y1"),
-                "_dz": F.col("z2") - F.col("z1"),
-            }
-        )
         df = add_mic_distance(
-            _with_box(traj, df), "_dx", "_dy", "_dz", out="_dist"
+            _with_box(traj, _pair_legs(traj, arr, periodic=False)),
+            "_dx", "_dy", "_dz", out="_dist",
         )
         return df.select("frame_id", "pair_id", F.col("_dist").alias("dist"))
-    d = _displacements_sql(traj, pairs_df, periodic, arr=arr)
+    d = _displacements_sql(traj, arr, periodic)
     # x*x, not pow(x,2) — exact-rounded, bit-reproducible vs the oracle
     sq = lambda c: F.col(c).cast("double") * F.col(c).cast("double")  # noqa: E731
     dist = F.sqrt(sq("dx") + sq("dy") + sq("dz"))
@@ -555,8 +601,7 @@ def compute_displacements(
         form = "vectorized" if len(arr) >= _VECTORIZED_THRESHOLD else "sql"
     if form == "vectorized":
         return _vectorized_pair_op(traj, arr, periodic, want_vectors=True)
-    pairs_df = _pairs_df(traj.spark, arr, ["pair_id", "i", "j"])
-    return _displacements_sql(traj, pairs_df, periodic, arr=arr)
+    return _displacements_sql(traj, arr, periodic)
 
 
 def compute_center_of_mass(traj, topology: DataFrame | None = None) -> DataFrame:
@@ -628,9 +673,7 @@ def find_closest_contact(
         F.col("y").cast("double").alias("y2"),
         F.col("z").cast("double").alias("z2"),
     )
-    df = c1.join(c2, "frame_id")
-    use_box = periodic and traj.have_unitcell
-    df = _add_displacement(traj, df, use_box)
+    df = _displacements(traj, c1.join(c2, "frame_id"), {"_d": ("1", "2")}, periodic)
     dist = F.sqrt(
         F.col("_dx") * F.col("_dx")
         + F.col("_dy") * F.col("_dy")

@@ -30,11 +30,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
-from dask_traj_spark.operators.distance import (
-    _block_arrays,
-    _iter_frame_blocks,
-    _packed_input,
-)
+from dask_traj_spark.operators.distance import map_frame_blocks
 
 
 def pca_fit(traj, atoms, k: int = 3):
@@ -44,26 +40,22 @@ def pca_fit(traj, atoms, k: int = 3):
     sel = np.unique(np.asarray(list(atoms), dtype=np.int64))
     m = len(sel)
     dim = 3 * m
-    packed, _ = _packed_input(traj, periodic=False, atoms=sel)
 
-    schema = "n long, s array<double>, g array<double>"
-
-    def partials(batches):
+    def partials(fids, xyz, _box, _ortho, _const):
         import pandas as pd
 
-        for block in _iter_frame_blocks(batches):
-            fids, xyz, _, _ = _block_arrays(block, None)
-            x = xyz.reshape(len(fids), dim).astype(np.float64)
-            g = x.T @ x
-            yield pd.DataFrame(
-                {
-                    "n": [len(fids)],
-                    "s": [x.sum(axis=0).tolist()],
-                    "g": [g.reshape(-1).tolist()],
-                }
-            )
+        x = xyz.reshape(len(fids), dim).astype(np.float64)
+        g = x.T @ x
+        return pd.DataFrame(
+            {
+                "n": [len(fids)],
+                "s": [x.sum(axis=0).tolist()],
+                "g": [g.reshape(-1).tolist()],
+            }
+        )
 
-    rows = packed.mapInPandas(partials, schema).collect()
+    schema = "n long, s array<double>, g array<double>"
+    rows = map_frame_blocks(traj, partials, schema, atoms=sel).collect()
     if not rows:
         raise ValueError("empty trajectory")
     n = sum(r["n"] for r in rows)
@@ -93,24 +85,22 @@ def pca_project(traj, atoms, mean, components) -> DataFrame:
     broadcast, zero shuffle."""
     sel = np.unique(np.asarray(list(atoms), dtype=np.int64))
     dim = 3 * len(sel)
-    packed, _ = _packed_input(traj, periodic=False, atoms=sel)
-    sc = traj.coords.sparkSession.sparkContext
-    b = sc.broadcast((np.asarray(mean, dtype=np.float64),
-                      np.asarray(components, dtype=np.float64)))
+    const = (np.asarray(mean, dtype=np.float64),
+             np.asarray(components, dtype=np.float64))
 
-    def gen(batches):
+    def gen(fids, xyz, _box, _ortho, c):
         import pandas as pd
 
-        mu, comps = b.value
-        for block in _iter_frame_blocks(batches):
-            fids, xyz, _, _ = _block_arrays(block, None)
-            x = xyz.reshape(len(fids), dim).astype(np.float64) - mu
-            proj = x @ comps.T  # (B, k)
-            yield pd.DataFrame(
-                {"frame_id": fids, "pc": [row.tolist() for row in proj]}
-            )
+        mu, comps = c
+        x = xyz.reshape(len(fids), dim).astype(np.float64) - mu
+        proj = x @ comps.T  # (B, k)
+        return pd.DataFrame(
+            {"frame_id": fids, "pc": [row.tolist() for row in proj]}
+        )
 
-    return packed.mapInPandas(gen, "frame_id long, pc array<double>")
+    return map_frame_blocks(
+        traj, gen, "frame_id long, pc array<double>", atoms=sel, const=const
+    )
 
 
 def principal_components(traj, atoms, k: int = 3) -> DataFrame:
@@ -123,19 +113,14 @@ def _features_df(traj, sel) -> DataFrame:
     """(frame_id, f ARRAY<double>) — flattened selected-atom
     coordinates per frame, one map-only pass."""
     dim = 3 * len(sel)
-    packed, _ = _packed_input(traj, periodic=False, atoms=sel)
 
-    def gen(batches):
+    def gen(fids, xyz, _box, _ortho, _const):
         import pandas as pd
 
-        for block in _iter_frame_blocks(batches):
-            fids, xyz, _, _ = _block_arrays(block, None)
-            x = xyz.reshape(len(fids), dim).astype(np.float64)
-            yield pd.DataFrame(
-                {"frame_id": fids, "f": [row.tolist() for row in x]}
-            )
+        x = xyz.reshape(len(fids), dim).astype(np.float64)
+        return pd.DataFrame({"frame_id": fids, "f": [row.tolist() for row in x]})
 
-    return packed.mapInPandas(gen, "frame_id long, f array<double>")
+    return map_frame_blocks(traj, gen, "frame_id long, f array<double>", atoms=sel)
 
 
 def tica_fit(traj, atoms, lag: int, k: int = 3, eps: float = 1e-10):

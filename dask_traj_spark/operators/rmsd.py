@@ -86,19 +86,10 @@ def rmsd_topk(traj, query_frame: int, k: int = 5) -> DataFrame:
     )
 
 
-def frame_rmsd_aligned(traj, query_frame: int) -> DataFrame:
-    """Rotation-aligned (Kabsch) RMSD per frame — the vectorized
-    path: packed frames → numpy SVD per frame. Float32 kernel, no
-    SQL oracle (transcendental-heavy); differential-tested against a
-    driver-side numpy reference."""
+def _query_frame(traj, query_frame: int):
+    """Centered float64 (n_atoms, 3) coordinates of ``query_frame``,
+    atom-sorted — the order the packed feed delivers every frame in."""
     import numpy as np
-    import pandas as pd
-
-    from dask_traj_spark.operators.distance import (
-        _block_arrays,
-        _iter_frame_blocks,
-        _packed_input,
-    )
 
     qpdf = (
         traj.coords.where(F.col("frame_id") == query_frame)
@@ -106,30 +97,45 @@ def frame_rmsd_aligned(traj, query_frame: int) -> DataFrame:
         .toPandas()
     )
     q = qpdf[["x", "y", "z"]].to_numpy(dtype=np.float64)
-    q = q - q.mean(axis=0, keepdims=True)
-    sc = traj.spark.sparkContext
-    b_q = sc.broadcast(q)
+    return q - q.mean(axis=0, keepdims=True)
 
-    packed, _ = _packed_input(traj, periodic=False)
 
-    def gen(batches):
-        qc = b_q.value
-        for block in _iter_frame_blocks(batches):
-            fids, xyz, _, _ = _block_arrays(block, None)
-            out = np.empty(len(fids), dtype=np.float64)
-            for i in range(len(fids)):
-                p = xyz[i].astype(np.float64)
-                p -= p.mean(axis=0, keepdims=True)
-                h = p.T @ qc
-                u, s, vt = np.linalg.svd(h)
-                d = np.sign(np.linalg.det(u @ vt))
-                # optimal-rotation residual via singular values
-                s[-1] *= d
-                msd = ((p ** 2).sum() + (qc ** 2).sum() - 2 * s.sum()) / len(qc)
-                out[i] = np.sqrt(max(msd, 0.0))
-            yield pd.DataFrame({"frame_id": fids, "rmsd": out})
+def _kabsch(p, qc):
+    """Center ``p`` (float64 copy) and return it with the Kabsch SVD
+    of its covariance with the centered query: (p, u, s, vt, d) with
+    d = sign(det(U·Vᵀ)), the reflection guard."""
+    import numpy as np
 
-    return packed.mapInPandas(gen, "frame_id long, rmsd double")
+    p = p.astype(np.float64)
+    p -= p.mean(axis=0, keepdims=True)
+    u, s, vt = np.linalg.svd(p.T @ qc)
+    return p, u, s, vt, np.sign(np.linalg.det(u @ vt))
+
+
+def frame_rmsd_aligned(traj, query_frame: int) -> DataFrame:
+    """Rotation-aligned (Kabsch) RMSD per frame — the vectorized
+    path: packed frames → numpy SVD per frame. Float32 kernel, no
+    SQL oracle (transcendental-heavy); differential-tested against a
+    driver-side numpy reference."""
+    import numpy as np
+
+    from dask_traj_spark.operators.distance import map_frame_blocks
+
+    q = _query_frame(traj, query_frame)
+
+    def kernel(fids, xyz, _box, _ortho, qc):
+        import pandas as pd
+
+        out = np.empty(len(fids), dtype=np.float64)
+        for i in range(len(fids)):
+            p, _, s, _, d = _kabsch(xyz[i], qc)
+            # optimal-rotation residual via singular values
+            s[-1] *= d
+            msd = ((p ** 2).sum() + (qc ** 2).sum() - 2 * s.sum()) / len(qc)
+            out[i] = np.sqrt(max(msd, 0.0))
+        return pd.DataFrame({"frame_id": fids, "rmsd": out})
+
+    return map_frame_blocks(traj, kernel, "frame_id long, rmsd double", const=q)
 
 
 def superpose(traj, query_frame: int) -> DataFrame:
@@ -153,47 +159,30 @@ def superpose(traj, query_frame: int) -> DataFrame:
         _iter_frame_blocks,
     )
 
-    qpdf = (
-        traj.coords.where(F.col("frame_id") == query_frame)
-        .orderBy("atom_id")
-        .toPandas()
-    )
-    q = qpdf[["x", "y", "z"]].to_numpy(dtype=np.float64)
-    q = q - q.mean(axis=0, keepdims=True)
-    sc = traj.spark.sparkContext
-    b_q = sc.broadcast(q)
+    q = _query_frame(traj, query_frame)
+    b_q = traj.spark.sparkContext.broadcast(q)
 
-    # frame_packed (not _packed_input): the transform must carry
-    # atom_id through to the emitted coordinates
+    # its own loop, not map_frame_blocks: the transform re-emits each
+    # row's atom_id, so its feed carries atom_id past the kernel
     packed = traj.frame_packed().select("frame_id", "atom_id", "x", "y", "z")
 
     def gen(batches):
         qc = b_q.value
         for block in _iter_frame_blocks(batches):
             fids, xyz, _, _ = _block_arrays(block, None)
-            atom_ids = block["atom_id"].to_numpy().reshape(len(fids), -1)
-            frames_out = []
+            aligned = np.empty(xyz.shape, dtype=np.float32)
             for i in range(len(fids)):
-                p = xyz[i].astype(np.float64)
-                p -= p.mean(axis=0, keepdims=True)
-                h = p.T @ qc
-                u, s, vt = np.linalg.svd(h)
-                d = np.sign(np.linalg.det(u @ vt))
-                corr = np.diag([1.0, 1.0, d])
-                rot = u @ corr @ vt  # maps p onto qc (p @ rot)
-                aligned = (p @ rot).astype(np.float32)
-                frames_out.append(
-                    pd.DataFrame(
-                        {
-                            "frame_id": fids[i],
-                            "atom_id": atom_ids[i],
-                            "x": aligned[:, 0],
-                            "y": aligned[:, 1],
-                            "z": aligned[:, 2],
-                        }
-                    )
-                )
-            yield pd.concat(frames_out, ignore_index=True)
+                p, u, _, vt, d = _kabsch(xyz[i], qc)
+                aligned[i] = p @ (u @ np.diag([1.0, 1.0, d]) @ vt)
+            yield pd.DataFrame(
+                {
+                    "frame_id": block["frame_id"].to_numpy(),
+                    "atom_id": block["atom_id"].to_numpy(),
+                    "x": aligned[..., 0].ravel(),
+                    "y": aligned[..., 1].ravel(),
+                    "z": aligned[..., 2].ravel(),
+                }
+            )
 
     return packed.mapInPandas(
         gen, "frame_id long, atom_id int, x float, y float, z float"

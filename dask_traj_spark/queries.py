@@ -712,57 +712,22 @@ def q_angles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _angles_double(traj) -> DataFrame:
-    """Engine angle plan (the same 3-way stitch compute_angles builds),
-    but keeping the final acos in DOUBLE and rounding to 1e-6 rad
+    """Engine angle plan (the legs compute_angles builds), but keeping
+    the final acos in DOUBLE and rounding to 1e-6 rad
     (transcendental-protection policy). Leg components round-trip
     through float32 exactly as the oracle's _F32 wrappers do."""
     import numpy as np
 
-    from dask_traj_spark.operators.distance import (
-        _atom_role_restrict,
-        _pairs_df,
-    )
+    from dask_traj_spark.operators.angle import _angle_legs, _cos_angle
 
     arr = np.asarray(_triplets(N_ANGLE_ATOMS), dtype=np.int32)
-    spark = traj.spark
-    trip = F.broadcast(_pairs_df(spark, arr, ["triplet_id", "i", "j", "k"]))
-
-    def role(ids, suffix, frame_col):
-        return _atom_role_restrict(traj.coords, ids).select(
-            F.col("frame_id").alias(frame_col),
-            F.col("atom_id").alias(f"_a{suffix}"),
-            F.col("x").cast("double").alias(f"x{suffix}"),
-            F.col("y").cast("double").alias(f"y{suffix}"),
-            F.col("z").cast("double").alias(f"z{suffix}"),
-        )
-
-    cj = role(arr[:, 1], "j", "frame_id")
-    ci = role(arr[:, 0], "i", "_fi")
-    ck = role(arr[:, 2], "k", "_fk")
-    j = (
-        cj.join(trip, F.col("_aj") == F.col("j"))
-        .join(ci, (F.col("_ai") == F.col("i")) & (F.col("_fi") == F.col("frame_id")))
-        .join(ck, (F.col("_ak") == F.col("k")) & (F.col("_fk") == F.col("frame_id")))
-    )
+    legs = _angle_legs(traj, arr, periodic=False)
     # float32 round-trip on each leg component (mirror of oracle _F32)
-    f32 = lambda e: e.cast("float").cast("double")  # noqa: E731
-    j = j.withColumns(
-        {
-            "ux": f32(F.col("xi") - F.col("xj")),
-            "uy": f32(F.col("yi") - F.col("yj")),
-            "uz": f32(F.col("zi") - F.col("zj")),
-            "vx": f32(F.col("xk") - F.col("xj")),
-            "vy": f32(F.col("yk") - F.col("yj")),
-            "vz": f32(F.col("zk") - F.col("zj")),
-        }
+    legs = legs.withColumns(
+        {f"{p}{c}": F.col(f"{p}{c}").cast("float").cast("double") for p in "uv" for c in "xyz"}
     )
-    d = lambda c: F.col(c)  # noqa: E731
-    un = F.sqrt(d("ux") * d("ux") + d("uy") * d("uy") + d("uz") * d("uz"))
-    vn = F.sqrt(d("vx") * d("vx") + d("vy") * d("vy") + d("vz") * d("vz"))
-    dot = d("ux") * d("vx") + d("uy") * d("vy") + d("uz") * d("vz")
-    cosang = F.greatest(F.lit(-1.0), F.least(F.lit(1.0), dot / (un * vn)))
-    return j.select(
-        "frame_id", "triplet_id", F.round(F.acos(cosang), 6).alias("angle_rad")
+    return legs.select(
+        "frame_id", "triplet_id", F.round(F.acos(_cos_angle()), 6).alias("angle_rad")
     )
 
 

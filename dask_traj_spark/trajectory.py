@@ -12,10 +12,11 @@ computed on access.
 Scale notes (100 TB posture):
 - ``coords`` is the only big table; everything else is per-frame or
   per-atom dimensions.
-- ``wide()`` converts to one-row-per-frame arrays. This is the ONE
-  shuffle most geometry pipelines pay (a single ``GROUP BY
-  frame_id`` over the fact table); every downstream geometry op is
-  then narrow/partition-local. Cache it when running >1 op.
+- ``frame_packed()`` lays coords out frame-contiguous and
+  (frame_id, atom_id)-sorted per partition: one range shuffle, free
+  when the trajectory is ``packed=True``. It is the feed of every
+  vectorized geometry op, which then runs partition-local. Cache it
+  when running >1 op.
 - slicing/striding are pure frame_id predicates → partition pruning
   against a frame-range-partitioned Parquet layout.
 """
@@ -198,31 +199,6 @@ class Trajectory:
                 "frame_id"
             ).sortWithinPartitions("frame_id", "atom_id")
         return self._packed_df
-
-    # ---- wide (per-frame arrays) view -------------------------------
-
-    def wide(self) -> DataFrame:
-        """One row per frame: (frame_id, xs, ys, zs) with arrays
-        indexed by atom_id. The single shuffle that buys
-        partition-local geometry for every downstream op.
-
-        ``array_sort`` on (atom_id, value) structs guarantees
-        positional order without a sort-based aggregate.
-
-        The result DataFrame is memoized on the instance so callers
-        can ``traj.wide().cache()`` once and every downstream
-        geometry op reuses the same (possibly cached) plan.
-        """
-        if getattr(self, "_wide", None) is not None:
-            return self._wide
-        pack = lambda c: F.transform(  # noqa: E731
-            F.array_sort(F.collect_list(F.struct(F.col("atom_id"), F.col(c).alias("v")))),
-            lambda s: s["v"],
-        )
-        self._wide = self.coords.groupBy("frame_id").agg(
-            pack("x").alias("xs"), pack("y").alias("ys"), pack("z").alias("zs")
-        )
-        return self._wide
 
     # ---- slicing (P1/P2) --------------------------------------------
 

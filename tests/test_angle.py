@@ -79,25 +79,28 @@ class TestDihedrals:
         assert abs(pdf[1]) < 1e-6  # cis
         assert abs(pdf[2] + pdf[3]) < 1e-6 and abs(pdf[2]) > 0.3  # gauche signs
 
-    def test_sql_and_vectorized_agree(self, spark, traj_nocell):
+    @staticmethod
+    def _forms_agree(traj, periodic):
         import itertools
 
         from dask_traj_spark.operators.angle import compute_dihedrals
 
         quartets = list(itertools.combinations(range(8), 4))
-        a = (
-            compute_dihedrals(traj_nocell, quartets, periodic=False, form="sql")
-            .toPandas().sort_values(["frame_id", "quartet_id"])
+        a, b = (
+            compute_dihedrals(traj, quartets, periodic=periodic, form=form)
+            .toPandas().sort_values(["frame_id", "quartet_id"])["dihedral_rad"]
+            .to_numpy()
+            for form in ("sql", "vectorized")
         )
-        b = (
-            compute_dihedrals(
-                traj_nocell, quartets, periodic=False, form="vectorized"
-            )
-            .toPandas().sort_values(["frame_id", "quartet_id"])
-        )
-        np.testing.assert_allclose(
-            a["dihedral_rad"].to_numpy(), b["dihedral_rad"].to_numpy(), atol=2e-5
-        )
+        np.testing.assert_allclose(a, b, atol=2e-5)
+
+    def test_sql_and_vectorized_agree(self, spark, traj_nocell):
+        self._forms_agree(traj_nocell, periodic=False)
+
+    @pytest.mark.parametrize("traj_name", ["traj_ortho", "traj_triclinic"])
+    def test_sql_and_vectorized_agree_periodic(self, request, traj_name):
+        """The shared MIC step serves the three-vector dihedral path."""
+        self._forms_agree(request.getfixturevalue(traj_name), periodic=True)
 
 
 def test_hydrogen_bonds_flags_constructed_geometries(spark):
