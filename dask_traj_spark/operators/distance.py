@@ -38,13 +38,13 @@ from pyspark.sql import DataFrame, functions as F
 from dask_traj_spark import schemas
 from dask_traj_spark.operators import kernels
 from dask_traj_spark.operators.mic import (
+    BOX_COLS as _BOX_COLS,
     add_mic_displacement,
     add_mic_distance,
     orthogonality_expr,
 )
 from dask_traj_spark.operators.unitcell import lengths_angles_np
 
-_BOX_COLS = ["ax", "ay", "az", "bx", "by", "bz", "cx", "cy", "cz"]
 _VECTORIZED_THRESHOLD = 512
 
 
@@ -221,55 +221,13 @@ def _displacements_sql(traj, arr: np.ndarray, periodic: bool) -> DataFrame:
 # 10^8 rows.
 
 
-#: frame count above which the vectorized feed JOINS box columns
-#: onto the packed coords (broadcast hash join — preserves the
-#: frame-contiguous partition layout the kernels require) instead of
-#: collecting a per-frame lookup to the driver.  10^7 frames ≈
-#: 600 MB of unitcell rows: fine to broadcast, NOT fine to
-#: `toPandas()` through the driver on every operator call.
-BOX_JOIN_FRAMES = 10_000_000
-
-
-def _frame_count_hint(traj) -> int:
-    """Frame count for dispatch decisions, as cheaply as possible.
-
-    Order: the Trajectory's exact ``n_frames`` when it is free or
-    cheap — cached, read by the loader's frame index, or the count
-    of the per-frame dimension table (tiny; seeds the cache) → the
-    (max-min+1) frame-id span over coords.  The span is
-    a partial min/max aggregate — no shuffle, one scan, vs the exact
-    distinct-count's hash-aggregate exchange — and is an UPPER bound
-    when frame ids are sparse, which only biases dispatch toward the
-    branch that scales (blocked gram / box-column join): the safe
-    side to err on at scale."""
-    if (
-        "n_frames" in traj.__dict__
-        or traj.index is not None
-        or traj._frames is not None
-    ):
-        return traj.n_frames
-    # the span is cached under its OWN key (never as n_frames — it is
-    # an upper bound, not the exact count): without the cache every
-    # periodic geometry call on a frames-less Trajectory would re-scan
-    # the whole coords table for this one dispatch decision
-    hint = traj.__dict__.get("_nf_span_hint")
-    if hint is not None:
-        return hint
-    row = traj.coords.agg(
-        F.min("frame_id").alias("lo"), F.max("frame_id").alias("hi")
-    ).first()
-    hint = 0 if row["hi"] is None else int(row["hi"]) - int(row["lo"]) + 1
-    traj.__dict__["_nf_span_hint"] = hint
-    return hint
-
-
 class _BoxLookup:
     """Driver-collected per-frame box: frame_id → (3,3) vectors +
     orthogonality flag, queried with searchsorted inside kernels.
 
-    Scale note: one row per frame (n_frames ≪ n_rows), used below
-    ``BOX_JOIN_FRAMES``; past that, :func:`_packed_input`
-    automatically joins the box columns onto the feed instead."""
+    Scale note: one row per frame (n_frames ≪ n_rows), collected
+    once per operator call and broadcast with the kernel's
+    constants."""
 
     def __init__(self, ids, vecs, ortho):
         self.ids = ids
@@ -296,8 +254,8 @@ class _BoxLookup:
     def get(self, frame_ids):
         """→ (keep, box, ortho): ``keep`` masks the frames that have a
         unitcell row; box/ortho cover only those.  A frame without one
-        is dropped, as the SQL form's and the box-join path's inner
-        joins drop it — never given a neighbour's box."""
+        is dropped, as the SQL form's inner join drops it — never
+        given a neighbour's box."""
         idx = np.searchsorted(self.ids, frame_ids)
         keep = idx < len(self.ids)
         keep[keep] = self.ids[idx[keep]] == frame_ids[keep]
@@ -330,12 +288,9 @@ def _iter_frame_blocks(batches):
 def _block_arrays(block, box_lookup):
     """Complete-frame block → (frame_ids (B,), xyz (B, n_atoms, 3),
     box (B,3,3)|None, ortho (B,)|None).  The box comes from the
-    driver-collected ``box_lookup`` when given, else from joined box
-    COLUMNS riding on the block (the >``BOX_JOIN_FRAMES`` path —
-    rows within a frame share their box, so the first row per frame
-    is read), else no box (non-periodic)."""
-    fids_all = block["frame_id"].to_numpy()
-    fids, counts = np.unique(fids_all, return_counts=True)
+    driver-collected ``box_lookup`` when given, else there is none
+    (non-periodic)."""
+    fids, counts = np.unique(block["frame_id"].to_numpy(), return_counts=True)
     n_at = int(counts[0])
     if not (counts == n_at).all():
         raise ValueError(
@@ -356,21 +311,6 @@ def _block_arrays(block, box_lookup):
         if not keep.all():
             fids, xyz = fids[keep], xyz[keep]
         return fids, xyz, box, ortho
-    if "ax" in block.columns:
-        # box-column path: first row index of each (sorted) frame
-        first = np.searchsorted(fids_all, fids)
-        box = np.stack(
-            [block[c].to_numpy(dtype=np.float32)[first] for c in _BOX_COLS],
-            axis=-1,
-        ).reshape(-1, 3, 3)
-        ang = np.stack(
-            [
-                block[c].to_numpy(dtype=np.float32)[first]
-                for c in ("alpha", "beta", "gamma")
-            ],
-            axis=-1,
-        )
-        return fids, xyz, box, kernels.is_orthogonal_np(ang)
     return fids, xyz, None, None
 
 
@@ -379,62 +319,25 @@ def _packed_input(
     periodic: bool,
     atoms: np.ndarray | None = None,
 ):
-    """The vectorized feed: frame-packed coords, optionally
-    semi-filtered to the atoms the index set actually references
-    (pushdown-friendly JVM-side predicate — with 500 of 22k atoms
-    selected this cuts the Arrow feed ~45×), projected to the 4
+    """The vectorized feed: frame-packed coords, optionally filtered
+    to the atoms the index set actually references (a literal
+    JVM-side predicate, :func:`_atom_selection` — with 500 of 22k
+    atoms selected this cuts the Arrow feed ~45×), projected to the 4
     columns the kernel reads.
 
-    Returns (feed_df, box_lookup).  The box rides as a driver-
-    collected per-frame lookup below ``BOX_JOIN_FRAMES`` frames;
-    past that the lookup's `toPandas()` would materialize n_frames
-    rows through the driver on every call, so the unitcell columns
-    are instead BROADCAST-joined onto the feed (a map-side hash
-    join — the frame-contiguous partition layout the kernels
-    require survives; a shuffle join would not preserve it, which
-    is why the join is pinned broadcast) and ``box_lookup`` comes
-    back None with :func:`_block_arrays` reading the columns.
+    Returns (feed_df, box_lookup); the box rides as a driver-collected
+    per-frame lookup (:class:`_BoxLookup`), None unless ``periodic``
+    and the trajectory has a unitcell.
 
     When ``atoms`` is given the caller must remap its indices to
     positions in the sorted unique atom list (np.searchsorted) —
     frames in the feed then contain exactly those atoms in sorted
     order.
     """
-    use_box = periodic and traj.have_unitcell
-    box_join = use_box and _frame_count_hint(traj) > BOX_JOIN_FRAMES
-    lookup = _BoxLookup.from_traj(traj) if use_box and not box_join else None
+    lookup = _BoxLookup.from_traj(traj) if periodic and traj.have_unitcell else None
     feed = traj.frame_packed()
     if atoms is not None:
-        lo, hi = int(atoms[0]), int(atoms[-1])
-        # np.array_equal against the full arange, not just a span-size
-        # check: an unsorted or duplicated input whose span happens to
-        # equal its length (e.g. [1, 2, 2, 4]) must NOT take the
-        # BETWEEN path — it would feed extra atoms into the packed
-        # frames and positional reshaping downstream would
-        # misattribute them (ADVICE r4).
-        if np.array_equal(atoms, np.arange(lo, hi + 1)):
-            # contiguous selection → a BETWEEN range predicate instead
-            # of an N-element IN list: ranges prune parquet row groups
-            # AND in-memory-cache batches via min/max stats (an IN list
-            # is evaluated row-at-a-time on every cached batch), and
-            # the common selections (leading protein atoms, residue
-            # blocks) are contiguous
-            feed = feed.filter(F.col("atom_id").between(lo, hi))
-        else:
-            feed = feed.filter(F.col("atom_id").isin([int(a) for a in atoms]))
-    if box_join:
-        uc = traj.unitcell_full().select(
-            "frame_id",
-            *[F.col(c).cast("float").alias(c) for c in _BOX_COLS],
-            *[
-                F.col(c).cast("float").alias(c)
-                for c in ("alpha", "beta", "gamma")
-            ],
-        )
-        feed = feed.join(F.broadcast(uc), "frame_id").select(
-            "frame_id", "x", "y", "z", *_BOX_COLS, "alpha", "beta", "gamma"
-        )
-        return feed, None
+        feed = _atom_selection(feed, atoms)
     return feed.select("frame_id", "x", "y", "z"), lookup
 
 
@@ -459,8 +362,7 @@ def map_frame_blocks(
     frame matching ``schema``.  ``const`` and the box lookup travel
     in ONE broadcast.  ``atoms`` (sorted, unique) restricts the feed
     to those atoms, so a block's atom axis holds exactly them in that
-    order (see :func:`_packed_input`, which also picks box lookup vs
-    box join).  Frames with no unitcell row are dropped on the
+    order (see :func:`_packed_input`).  Frames with no unitcell row are dropped on the
     periodic path.  Plan: feed → ``mapInPandas``, no shuffle on a
     packed trajectory."""
     packed, lookup = _packed_input(traj, periodic, atoms=atoms)

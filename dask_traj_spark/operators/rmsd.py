@@ -440,10 +440,37 @@ def pairwise_rmsd_blocked(traj, block: int = 1024) -> DataFrame:
 PAIRWISE_RMSD_CROSSOVER = 2048
 
 
-# shared with the vectorized-feed box dispatch — one hint, one
-# caching contract (moved to distance.py in round 10; re-exported
-# here for the existing import surface)
-from dask_traj_spark.operators.distance import _frame_count_hint  # noqa: E402,F401
+def _frame_count_hint(traj) -> int:
+    """Frame count for dispatch decisions, as cheaply as possible.
+
+    Order: the Trajectory's exact ``n_frames`` when it is free or
+    cheap — cached, read by the loader's frame index, or the count
+    of the per-frame dimension table (tiny; seeds the cache) → the
+    (max-min+1) frame-id span over coords.  The span is
+    a partial min/max aggregate — no shuffle, one scan, vs the exact
+    distinct-count's hash-aggregate exchange — and is an UPPER bound
+    when frame ids are sparse, which only biases dispatch toward the
+    branch that scales (the blocked gram): the safe side to err on at
+    scale."""
+    if (
+        "n_frames" in traj.__dict__
+        or traj.index is not None
+        or traj._frames is not None
+    ):
+        return traj.n_frames
+    # the span is cached under its OWN key (never as n_frames — it is
+    # an upper bound, not the exact count): without the cache every
+    # dispatch on a frames-less Trajectory would re-scan the whole
+    # coords table for this one decision
+    hint = traj.__dict__.get("_nf_span_hint")
+    if hint is not None:
+        return hint
+    row = traj.coords.agg(
+        F.min("frame_id").alias("lo"), F.max("frame_id").alias("hi")
+    ).first()
+    hint = 0 if row["hi"] is None else int(row["hi"]) - int(row["lo"]) + 1
+    traj.__dict__["_nf_span_hint"] = hint
+    return hint
 
 
 def pairwise_rmsd_auto(

@@ -83,11 +83,12 @@ def lengths_angles_exprs(
 def lengths_angles_np(box: np.ndarray) -> np.ndarray:
     """NumPy twin of :func:`with_lengths_and_angles` for box vectors
     the driver already holds: (F, 3, 3) → (F, 6) float32 (a, b, c,
-    alpha, beta, gamma). The same float64 operations in the same
+    alpha, beta, gamma). The same float64 operations (on the vectors
+    widened to float64, as the SQL form casts its columns) in the same
     order as :func:`lengths_angles_exprs`, the same clamp, degrees
     and float32 cast, so the result matches the SQL columns bit for
     bit."""
-    v = np.asarray(box, dtype=np.float32).astype(np.float64)
+    v = np.asarray(box, dtype=np.float64)
     (ax, ay, az), (bx, by, bz), (cx, cy, cz) = (
         (v[:, r, 0], v[:, r, 1], v[:, r, 2]) for r in range(3)
     )

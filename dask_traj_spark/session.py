@@ -15,8 +15,6 @@ import re
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = 32
-
 
 def _xms_opt(driver_mem: str) -> str:
     """-Xms at half of the driver heap (see the builder comment).
@@ -66,14 +64,16 @@ def get_spark(
     parallelism and ``SPARK_DRIVER_MEM`` the driver heap, which
     otherwise comes from the host (``_host_driver_mem``); on a real
     cluster ``master`` comes from spark-submit and these configs
-    still apply.
+    still apply. Shuffle partitions default to ``SPARK_GRAFT_CPUS``,
+    else to the built session's ``defaultParallelism`` (the cores of
+    ``local[*]``, or ``N`` of ``local[N]``).
     """
     driver_mem = os.environ.get("SPARK_DRIVER_MEM") or _host_driver_mem()
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
         master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus else DEFAULT_SHUFFLE_PARTITIONS
+    if shuffle_partitions is None and cpus:
+        shuffle_partitions = int(cpus)
 
     # Python workers (UDFs, Python DataSources) unpickle classes from
     # this package in separate processes; make sure they can import it
@@ -89,7 +89,6 @@ def get_spark(
 
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -126,6 +125,9 @@ def get_spark(
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    if shuffle_partitions is None:
+        shuffle_partitions = spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

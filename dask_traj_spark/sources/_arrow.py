@@ -15,7 +15,8 @@ module in this package. A format module supplies two functions:
   ``(n_atoms, 3)`` array in nm.
 
 Loaders call :func:`scan_frames`, or :func:`load_indexed` when the
-driver already indexed the file's frames. Every format shares one output
+driver already indexed the file's frames; every writer goes the
+other way through :func:`gather_host`. Every format shares one output
 schema ``(frame_id long, atom_id int, x float, y float, z float)``,
 and ``read()`` yields ``pyarrow.RecordBatch`` objects instead of
 per-row tuples: for a frame of N atoms that replaces N tuple
@@ -29,6 +30,7 @@ from __future__ import annotations
 
 import importlib
 from collections.abc import Iterable, Iterator
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -40,9 +42,8 @@ from dask_traj_spark.trajectory import FrameIndex, Trajectory
 
 _FRAMES_SCHEMA = "frame_id long, time double, step long"
 _BOX_SCHEMA = "frame_id long, " + ", ".join(f"{c} float" for c in BOX_COLS)
-_CELL_SCHEMA = (
-    "frame_id long, a float, b float, c float, alpha float, beta float, gamma float"
-)
+_CELL_COLS = ["a", "b", "c", "alpha", "beta", "gamma"]
+_CELL_SCHEMA = "frame_id long, " + ", ".join(f"{c} float" for c in _CELL_COLS)
 
 
 def frames_to_record_batches(
@@ -213,3 +214,78 @@ def load_indexed(
     index = FrameIndex(ids, int(counts[0]) if len(counts) == 1 else None, host_box)
     coords = scan_frames(spark, fmt, path, chunks)
     return Trajectory(coords, frames, unitcell, topology, index=index)
+
+
+class HostFrames(NamedTuple):
+    """A trajectory gathered to the driver, one entry per frame in
+    ascending ``frame_ids`` order: ``xyz`` (F, n_atoms, 3) float32 in
+    nm (None when only the per-frame tables were gathered), ``time``
+    (F,), and, with a unit cell, ``box`` (F, 3, 3) float64 vectors in
+    nm and ``cell`` (F, 6) lengths in nm / angles in degrees."""
+
+    frame_ids: np.ndarray
+    xyz: np.ndarray | None
+    time: np.ndarray
+    box: np.ndarray | None
+    cell: np.ndarray | None
+
+
+def _rows_for(have: np.ndarray, fids: np.ndarray, table: str) -> np.ndarray:
+    """Row of each id of ``fids`` in a table's frame-id column
+    ``have``; a frame with no row raises."""
+    # imported here: the scan tasks import this module, and pandas
+    # would add ~60 MB to every one of them
+    import pandas as pd
+
+    rows = pd.Index(have).get_indexer(fids)
+    if (rows < 0).any():
+        raise ValueError(
+            f"no {table} row for frame ids {fids[rows < 0][:5].tolist()}"
+        )
+    return rows
+
+
+def gather_host(traj: Trajectory, *, xyz: bool = True) -> HostFrames:
+    """The inverse of :func:`load_indexed`: a trajectory's tables back
+    as host arrays, the one gather every writer serializes from.
+    Every per-frame value is matched to its frame by frame id, never
+    by position, so any ascending ids work (a frame range, a slice).
+
+    - ``xyz=True`` collects coords, whose frame ids are the frames.
+      ``xyz=False`` (a distributed sink's per-frame metadata) takes
+      them from the ``FrameIndex``, else the ``frames`` table.
+    - ``time``: the ``frames`` table's; without one, the frame ids
+      (the ``frames`` property's own fallback).
+    - ``box``/``cell``: one collect of the unit cell. A vector table
+      gets lengths/angles from ``lengths_angles_np``, bit-equal to
+      the SQL form, where a zero box gives NaN instead of the SQL
+      form's DIVIDE_BY_ZERO; a lengths/angles table gets its vectors
+      from ``unitcell_full()``. A frame with no unit-cell row raises.
+    """
+    coords = None
+    if xyz:
+        pdf = traj.coords.toPandas()
+        fids, rank = np.unique(pdf["frame_id"].to_numpy(np.int64), return_inverse=True)
+        aids = pdf["atom_id"].to_numpy()
+        coords = np.zeros((len(fids), len(np.unique(aids)), 3), dtype=np.float32)
+        coords[rank, aids] = pdf[["x", "y", "z"]].to_numpy()
+    elif traj.index is not None:
+        fids = traj.index.frame_ids
+    else:
+        fids = None
+    if traj._frames is None and fids is not None:
+        time = fids.astype(np.float64)
+    else:
+        tpdf = traj.frames.select("frame_id", "time").toPandas()
+        have = tpdf["frame_id"].to_numpy(np.int64)
+        if fids is None:
+            fids = np.sort(have)
+        time = tpdf["time"].to_numpy()[_rows_for(have, fids, "frames")]
+    box = cell = None
+    if traj.have_unitcell:
+        uc = traj.unitcell if "ax" in traj.unitcell.columns else traj.unitcell_full()
+        upd = uc.toPandas()
+        rows = _rows_for(upd["frame_id"].to_numpy(np.int64), fids, "unitcell")
+        box = upd[BOX_COLS].to_numpy(np.float64)[rows].reshape(-1, 3, 3)
+        cell = upd[_CELL_COLS].to_numpy()[rows] if "a" in upd else lengths_angles_np(box)
+    return HostFrames(fids, coords, time, box, cell)

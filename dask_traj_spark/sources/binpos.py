@@ -15,7 +15,7 @@ import struct
 import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import chunk_range, load_indexed
+from dask_traj_spark.sources._arrow import chunk_range, gather_host, load_indexed
 from dask_traj_spark.trajectory import Trajectory
 
 MAGIC = b"fxyz"
@@ -52,7 +52,7 @@ def _read_frames(path: str, info: BinposInfo, start: int, count: int):
 
 def write_binpos(traj: Trajectory, path: str) -> None:
     """Sink: driver-side BINPOS export (nm → Å)."""
-    xyz, _time = traj.to_numpy()
+    xyz = gather_host(traj).xyz
     n_frames, n_atoms, _ = xyz.shape
     ang = (xyz.astype(np.float64) / ANGSTROM_TO_NM).astype("<f4")
     with open(path, "wb") as f:

@@ -21,9 +21,10 @@ through the shared frame-chunk DataSource (``_arrow.py``).
 Coordinates are converted Å → nm on read (G11).
 
 Two writers: ``write_dcd`` (driver-side collect → one file, for
-small exports) and ``write_dcd_parts`` (distributed — every
-partition writes a standalone part file for its frame range;
-``merge_dcd_parts`` stitches them into a single file when needed).
+small exports) and ``parts.write_traj_parts(traj, dir, "dcd")``
+(distributed — every partition writes a standalone part file for
+its frame range; ``parts.merge_parts`` stitches them into a single
+file when needed).
 """
 
 from __future__ import annotations
@@ -32,9 +33,9 @@ import math
 import struct
 
 import numpy as np
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import chunk_range, load_indexed
+from dask_traj_spark.sources._arrow import chunk_range, gather_host, load_indexed
 from dask_traj_spark.trajectory import Trajectory
 
 ANGSTROM_TO_NM = 0.1
@@ -212,108 +213,8 @@ def write_dcd(
 ) -> None:
     """Sink: driver-side DCD export (nm → Å). Writes the unit-cell
     records when the trajectory has one."""
-    xyz, _time = traj.to_numpy()
-    cells = None
-    if traj.have_unitcell:
-        uc = traj.unitcell_lengths_angles.orderBy("frame_id").toPandas()
-        cells = uc[["a", "b", "c", "alpha", "beta", "gamma"]].to_numpy()
-    _write_dcd_file(path, xyz, cells, step_interval)
-
-
-def write_dcd_parts(
-    traj: Trajectory, directory: str, frames_per_part: int = 100
-) -> list[tuple[int, str, int]]:
-    """Distributed sink: executors write standalone ``.dcd`` part
-    files (``part-00000.dcd``, ...) covering contiguous frame
-    ranges — the sink analog of the chunked sources, and the only
-    shape that scales (one writer per partition, no driver
-    materialization; the directory-of-parts is to DCD what a parquet
-    directory is to parquet). Paths assume a filesystem all
-    executors can reach (true in local mode and on any cluster with
-    shared storage). Returns the manifest [(part_no, path,
-    n_frames)] in frame order; ``merge_dcd_parts`` stitches a
-    single-file DCD from it when one is required."""
-    import os
-
-    import pandas as pd
-
-    os.makedirs(directory, exist_ok=True)
-    cells = None
-    cell_fids = None
-    if traj.have_unitcell:
-        uc = traj.unitcell_lengths_angles.orderBy("frame_id").toPandas()
-        cell_fids = uc["frame_id"].to_numpy(np.int64)
-        cells = uc[["a", "b", "c", "alpha", "beta", "gamma"]].to_numpy()
-    spark = traj.coords.sparkSession
-    b_cells = spark.sparkContext.broadcast((cell_fids, cells))
-
-    fpp = int(frames_per_part)
-    coords = traj.coords.withColumn(
-        "part_no", F.expr(f"frame_id div {fpp}").cast("int")
-    )
-
-    def write_part(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
-        (part,) = key
-        pdf = pdf.sort_values(["frame_id", "atom_id"])
-        frame_ids = pdf["frame_id"].unique()
-        nf = len(frame_ids)
-        na = len(pdf) // nf
-        xyz = pdf[["x", "y", "z"]].to_numpy(np.float64).reshape(nf, na, 3)
-        # gather cells BY frame_id, not positionally — a sliced or
-        # renumbered trajectory's frame ids are neither dense nor
-        # zero-based, so cells_all[min:max+1] would misalign.
-        fids_all, cells_all = b_cells.value
-        cells_part = None
-        if cells_all is not None:
-            idx = np.searchsorted(fids_all, frame_ids)
-            bad = (idx >= len(fids_all)) | (
-                np.take(fids_all, np.minimum(idx, len(fids_all) - 1)) != frame_ids
-            )
-            if bad.any():
-                raise ValueError(
-                    f"part {part}: no unitcell row for frame ids "
-                    f"{frame_ids[bad][:5].tolist()}"
-                )
-            cells_part = cells_all[idx]
-        p = os.path.join(directory, f"part-{part:05d}.dcd")
-        _write_dcd_file(p, xyz, cells_part)
-        return pd.DataFrame([(int(part), p, nf)], columns=["part_no", "path", "n_frames"])
-
-    manifest = (
-        coords.groupBy("part_no")
-        .applyInPandas(write_part, "part_no int, path string, n_frames long")
-        .collect()
-    )
-    return sorted((r["part_no"], r["path"], r["n_frames"]) for r in manifest)
-
-
-def merge_dcd_parts(directory: str, out_path: str) -> None:
-    """Driver-side stitch: concatenate the frame payloads of a
-    part directory under one header (parts are standalone DCDs with
-    identical n_atoms/cell flags; payload records are fixed-stride,
-    so this is a byte copy)."""
-    import glob
-
-    parts = sorted(glob.glob(f"{directory}/part-*.dcd"))
-    if not parts:
-        raise ValueError(f"no part-*.dcd files in {directory}")
-    infos = [read_info(p) for p in parts]
-    n_atoms = infos[0].n_atoms
-    has_cell = infos[0].has_cell
-    for p, i in zip(parts, infos):
-        if i.n_atoms != n_atoms or i.has_cell != has_cell:
-            raise ValueError(f"part {p} layout mismatch")
-    total = sum(i.n_frames for i in infos)
-    with open(out_path, "wb") as out:
-        with open(parts[0], "rb") as f:
-            header = f.read(infos[0].data_offset)
-        # patch the frame count in icntrl[0] (offset 8 in the file)
-        header = header[:8] + struct.pack("<i", total) + header[12:]
-        out.write(header)
-        for p, i in zip(parts, infos):
-            with open(p, "rb") as f:
-                f.seek(i.data_offset)
-                out.write(f.read())
+    host = gather_host(traj)
+    _write_dcd_file(path, host.xyz, host.cell, step_interval)
 
 
 def plan_chunks(path: str, chunks: int) -> list[tuple[int, int]]:

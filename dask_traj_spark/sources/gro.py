@@ -24,7 +24,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import chunk_list, load_indexed
+from dask_traj_spark.sources._arrow import chunk_list, gather_host, load_indexed
 from dask_traj_spark.trajectory import Trajectory
 
 
@@ -128,9 +128,8 @@ def write_gro(traj: Trajectory, path: str) -> None:
     trimmed to the diagonal form when orthorhombic). Residue/atom
     names come from the topology when present, ``MOL``/``X``
     placeholders otherwise."""
-    import numpy as np
-
-    xyz, time = traj.to_numpy()
+    host = gather_host(traj)
+    xyz, time, boxes = host.xyz, host.time, host.box
     n_frames, n_atoms, _ = xyz.shape
     names = [("MOL", "X")] * n_atoms
     resids = [1] * n_atoms
@@ -143,18 +142,9 @@ def write_gro(traj: Trajectory, path: str) -> None:
         if len(trows) == n_atoms:
             names = [(r.residue_name or "MOL", r.name or "X") for r in trows]
             resids = [int(r.residue_id) + 1 for r in trows]
-    boxes = None
-    if traj.have_unitcell:
-        uc = traj.unitcell_vectors.orderBy("frame_id").toPandas()
-        boxes = (
-            uc[["ax", "ay", "az", "bx", "by", "bz", "cx", "cy", "cz"]]
-            .to_numpy(dtype=np.float64)
-            .reshape(-1, 3, 3)
-        )
     with open(path, "w") as f:
         for fid in range(n_frames):
-            t = float(time[fid]) if time is not None else float(fid)
-            f.write(f"frame {fid} t= {t:.5f}\n")
+            f.write(f"frame {fid} t= {float(time[fid]):.5f}\n")
             f.write(f"{n_atoms:5d}\n")
             for a in range(n_atoms):
                 resname, atom = names[a]

@@ -39,7 +39,7 @@ import json
 import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import load_indexed, scan_frames
+from dask_traj_spark.sources._arrow import gather_host, load_indexed, scan_frames
 from dask_traj_spark.trajectory import Trajectory
 
 try:  # pragma: no cover - h5py absent in the test container
@@ -210,7 +210,8 @@ def write_h5_traj(
 
     from dask_traj_spark.sources.hdf5_pure import write_h5
 
-    xyz, time = traj.to_numpy()
+    host = gather_host(traj)
+    xyz, time = host.xyz, host.time
     nf, na, _ = xyz.shape
     datasets = {
         "coordinates": ((nf, na, 3), "f32",
@@ -218,12 +219,10 @@ def write_h5_traj(
         "time": ((nf,), "f32",
                  np.ascontiguousarray(time, dtype="<f4").tobytes()),
     }
-    if traj.have_unitcell:
-        uc = traj.unitcell_lengths_angles.orderBy("frame_id").toPandas()
-        lengths = uc[["a", "b", "c"]].to_numpy("<f4")
-        angles = uc[["alpha", "beta", "gamma"]].to_numpy("<f4")
-        datasets["cell_lengths"] = ((nf, 3), "f32", lengths.tobytes())
-        datasets["cell_angles"] = ((nf, 3), "f32", angles.tobytes())
+    if host.cell is not None:
+        cell = np.ascontiguousarray(host.cell, dtype="<f4")
+        datasets["cell_lengths"] = ((nf, 3), "f32", cell[:, :3].tobytes())
+        datasets["cell_angles"] = ((nf, 3), "f32", cell[:, 3:].tobytes())
     chunks = filters = None
     if extensible and chunk_frames is None:
         chunk_frames = max(1, min(nf, 64))
@@ -243,7 +242,7 @@ def write_lh5(traj: Trajectory, path: str) -> None:
     fixed-point (nm × 1000, rounded), contiguous."""
     from dask_traj_spark.sources.hdf5_pure import write_h5
 
-    xyz, _time = traj.to_numpy()
+    xyz = gather_host(traj).xyz
     nf, na, _ = xyz.shape
     fixed = np.clip(np.round(xyz * 1000.0), -32768, 32767).astype("<i2")
     write_h5(path, {"XYZList": ((nf, na, 3), "i16", fixed.tobytes())})

@@ -29,7 +29,7 @@ import struct
 import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import chunk_range, load_indexed
+from dask_traj_spark.sources._arrow import chunk_range, gather_host, load_indexed
 from dask_traj_spark.trajectory import Trajectory
 
 ANGSTROM_TO_NM = 0.1
@@ -250,12 +250,9 @@ def write_netcdf(traj: Trajectory, path: str) -> None:
     """Driver-side AMBER NetCDF export (classic format, version 1):
     coordinates/time record vars (+ cell vars when the trajectory
     has a unitcell), nm → Å."""
-    xyz, time = traj.to_numpy()
+    host = gather_host(traj)
+    xyz, time, cells = host.xyz, host.time, host.cell
     n_frames, n_atoms, _ = xyz.shape
-    cells = None
-    if traj.have_unitcell:
-        uc = traj.unitcell_lengths_angles.orderBy("frame_id").toPandas()
-        cells = uc[["a", "b", "c", "alpha", "beta", "gamma"]].to_numpy()
 
     def name(s: bytes) -> bytes:
         return struct.pack(">I", len(s)) + s + b"\x00" * ((-len(s)) % 4)

@@ -1,43 +1,40 @@
-"""Distributed sinks for the self-framed formats (XTC, TRR).
+"""Distributed sinks for the binary trajectory formats (XTC, TRR, DCD).
 
-Every partition serializes its contiguous frame range to a
-standalone part file (``part-00000.xtc``, ...). Because XTC and TRR
-carry a full header per frame, a part directory concatenates into a
-single valid file by plain byte append (``merge_parts``) — no
-header patching, unlike DCD (see ``dcd.write_dcd_parts`` /
-``merge_dcd_parts`` for the single-global-header case).
+Every partition serializes its frame range to a standalone part file
+(``part-00000.xtc``, ...) with the format's one serializer.
+``merge_parts`` concatenates a part directory into a single valid
+file: XTC and TRR carry a full header per frame, so their parts join
+by plain byte append; DCD has one global header, so the merge keeps
+the first part's header with its frame count patched and appends
+every part's frame payload.
 
 Scale shape: one writer task per frame-range group (applyInPandas),
-per-frame time/box metadata broadcast (it is ~n_frames × 12 floats —
-tiny even at 10^8 frames), nothing materializes on the driver.
+per-frame time/box metadata gathered once by frame id and broadcast
+(it is ~n_frames × 16 floats — tiny even at 10^8 frames), no
+coordinate materializes on the driver.
 """
 
 from __future__ import annotations
 
+import glob
 import os
+import struct
 
 import numpy as np
 from pyspark.sql import functions as F
 
+from dask_traj_spark.sources._arrow import _rows_for, gather_host
+from dask_traj_spark.sources.dcd import _write_dcd_file, read_info
+from dask_traj_spark.sources.trr import _write_trr_file
+from dask_traj_spark.sources.xtc import _write_xtc_file
 from dask_traj_spark.trajectory import Trajectory
 
-_SERIALIZERS = {}
-
-
-def _get_serializer(fmt: str):
-    if not _SERIALIZERS:
-        from dask_traj_spark.sources.trr import _write_trr_file
-        from dask_traj_spark.sources.xtc import _write_xtc_file
-
-        _SERIALIZERS["xtc"] = _write_xtc_file
-        _SERIALIZERS["trr"] = _write_trr_file
-    try:
-        return _SERIALIZERS[fmt]
-    except KeyError:
-        raise ValueError(
-            f"format {fmt!r}: expected one of {sorted(_SERIALIZERS)} "
-            "(DCD parts: sources.dcd.write_dcd_parts)"
-        ) from None
+# format → serializer(path, xyz, time, box, cell, first_step)
+_PART_WRITERS = {
+    "xtc": lambda p, xyz, t, box, cell, step: _write_xtc_file(p, xyz, t, box, step_offset=step),
+    "trr": lambda p, xyz, t, box, cell, step: _write_trr_file(p, xyz, t, box, step_offset=step),
+    "dcd": lambda p, xyz, t, box, cell, step: _write_dcd_file(p, xyz, cell),
+}
 
 
 def write_traj_parts(
@@ -46,25 +43,24 @@ def write_traj_parts(
     fmt: str,
     frames_per_part: int = 100,
 ) -> list[tuple[int, str, int]]:
-    """Distributed export: part files of ``frames_per_part`` frames
-    each, written by executors. Returns the frame-ordered manifest
+    """Distributed export: part files of ``frames_per_part`` frame ids
+    each, written by executors. Paths assume a filesystem all
+    executors can reach. Returns the frame-ordered manifest
     [(part_no, path, n_frames)]."""
     import pandas as pd
 
-    serialize = _get_serializer(fmt)
+    try:
+        serialize = _PART_WRITERS[fmt]
+    except KeyError:
+        raise ValueError(
+            f"format {fmt!r}: expected one of {sorted(_PART_WRITERS)}"
+        ) from None
     os.makedirs(directory, exist_ok=True)
 
-    time_pdf = traj.frames.orderBy("frame_id").select("frame_id", "time").toPandas()
-    time_arr = time_pdf["time"].to_numpy(dtype=np.float64)
-    boxes = None
-    if traj.have_unitcell:
-        uc = traj.unitcell_vectors.orderBy("frame_id").toPandas()
-        boxes = uc[["ax", "ay", "az", "bx", "by", "bz", "cx", "cy", "cz"]].to_numpy(
-            dtype=np.float64
-        ).reshape(-1, 3, 3)
-    spark = traj.coords.sparkSession
-    b_meta = spark.sparkContext.broadcast((time_arr, boxes))
-
+    host = gather_host(traj, xyz=False)
+    b_meta = traj.spark.sparkContext.broadcast(
+        (host.frame_ids, host.time, host.box, host.cell)
+    )
     fpp = int(frames_per_part)
     coords = traj.coords.withColumn(
         "part_no", F.expr(f"frame_id div {fpp}").cast("int")
@@ -75,19 +71,17 @@ def write_traj_parts(
         pdf = pdf.sort_values(["frame_id", "atom_id"])
         frame_ids = pdf["frame_id"].unique()
         nf = len(frame_ids)
-        na = len(pdf) // nf
-        xyz = (
-            pdf[["x", "y", "z"]].to_numpy(np.float32).reshape(nf, na, 3)
-        )
-        t_all, b_all = b_meta.value
-        lo, hi = int(frame_ids.min()), int(frame_ids.max()) + 1
+        xyz = pdf[["x", "y", "z"]].to_numpy(np.float32).reshape(nf, -1, 3)
+        fids, time, box, cell = b_meta.value
+        rows = _rows_for(fids, frame_ids, "frame")
         p = os.path.join(directory, f"part-{part:05d}.{fmt}")
         serialize(
             p,
             xyz,
-            t_all[lo:hi] if t_all is not None and len(t_all) >= hi else None,
-            b_all[lo:hi] if b_all is not None else None,
-            step_offset=lo,
+            time[rows],
+            None if box is None else box[rows],
+            None if cell is None else cell[rows],
+            int(frame_ids[0]),
         )
         return pd.DataFrame(
             [(int(part), p, nf)], columns=["part_no", "path", "n_frames"]
@@ -102,14 +96,27 @@ def write_traj_parts(
 
 
 def merge_parts(directory: str, out_path: str, fmt: str) -> None:
-    """Byte-concatenate a part directory into one file (valid for
-    the per-frame-header formats this module writes)."""
-    import glob
-
+    """Concatenate a part directory into one file: byte append for
+    XTC/TRR; for DCD, the first part's header with the total frame
+    count, then every part's frame payload."""
     parts = sorted(glob.glob(os.path.join(directory, f"part-*.{fmt}")))
     if not parts:
         raise ValueError(f"no part-*.{fmt} files in {directory}")
+    header, starts = b"", [0] * len(parts)
+    if fmt == "dcd":
+        infos = [read_info(p) for p in parts]
+        for p, i in zip(parts, infos):
+            if (i.n_atoms, i.has_cell) != (infos[0].n_atoms, infos[0].has_cell):
+                raise ValueError(f"part {p} layout mismatch")
+        with open(parts[0], "rb") as f:
+            header = f.read(infos[0].data_offset)
+        # the frame count is icntrl[0], at byte 8
+        total = sum(i.n_frames for i in infos)
+        header = header[:8] + struct.pack("<i", total) + header[12:]
+        starts = [i.data_offset for i in infos]
     with open(out_path, "wb") as out:
-        for p in parts:
+        out.write(header)
+        for p, start in zip(parts, starts):
             with open(p, "rb") as f:
+                f.seek(start)
                 out.write(f.read())

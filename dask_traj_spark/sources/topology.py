@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from dask_traj_spark import schemas
+from dask_traj_spark.sources._arrow import gather_host
 
 # standard atomic weights (u), most-common elements in MD systems
 ATOMIC_MASS = {
@@ -142,7 +143,8 @@ def write_pdb(traj, path: str) -> None:
     block per frame. Topology supplies names when present."""
     import numpy as np
 
-    xyz, _time = traj.to_numpy()
+    host = gather_host(traj)
+    xyz = host.xyz
     n_frames, n_atoms, _ = xyz.shape
     ang = xyz.astype(np.float64) * 10.0  # nm → Å
     names = [("X", "MOL", 1, "A", "C")] * n_atoms
@@ -167,11 +169,11 @@ def write_pdb(traj, path: str) -> None:
                 for r in trows
             ]
     cryst = None
-    if traj.have_unitcell:
-        uc = traj.unitcell.orderBy("frame_id").limit(1).collect()[0]
+    if host.cell is not None:
+        a, b, c, alpha, beta, gamma = (float(v) for v in host.cell[0])
         cryst = (
-            f"CRYST1{uc.a * 10:9.3f}{uc.b * 10:9.3f}{uc.c * 10:9.3f}"
-            f"{uc.alpha:7.2f}{uc.beta:7.2f}{uc.gamma:7.2f} P 1           1\n"
+            f"CRYST1{a * 10:9.3f}{b * 10:9.3f}{c * 10:9.3f}"
+            f"{alpha:7.2f}{beta:7.2f}{gamma:7.2f} P 1           1\n"
         )
     with open(path, "w") as f:
         if cryst:

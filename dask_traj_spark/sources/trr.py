@@ -25,7 +25,7 @@ import struct
 import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import chunk_range, load_indexed
+from dask_traj_spark.sources._arrow import chunk_range, gather_host, load_indexed
 from dask_traj_spark.trajectory import Trajectory
 
 MAGIC = 1993
@@ -155,14 +155,8 @@ def _read_meta(path: str, info: TRRInfo):
 
 def write_trr(traj: Trajectory, path: str) -> None:
     """Sink: driver-side float32 x-only TRR export."""
-    xyz, time = traj.to_numpy()
-    boxes = None
-    if traj.have_unitcell:
-        uc = traj.unitcell_vectors.orderBy("frame_id").toPandas()
-        boxes = uc[["ax", "ay", "az", "bx", "by", "bz", "cx", "cy", "cz"]].to_numpy(
-            dtype=np.float64
-        ).reshape(-1, 3, 3)
-    _write_trr_file(path, xyz, time, boxes)
+    host = gather_host(traj)
+    _write_trr_file(path, host.xyz, host.time, host.box)
 
 
 def _write_trr_file(

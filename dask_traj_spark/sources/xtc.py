@@ -43,7 +43,7 @@ import struct
 import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import chunk_list, load_indexed
+from dask_traj_spark.sources._arrow import chunk_list, gather_host, load_indexed
 from dask_traj_spark.trajectory import Trajectory
 
 MAGIC = 1995
@@ -538,18 +538,9 @@ def write_xtc(traj: Trajectory, path: str, precision: float = 1000.0) -> None:
     """Sink: driver-side XTC export with real delta-run compression
     (``_encode_frame_coords``). Quantizes to ``precision`` (default
     1/1000 nm — the GROMACS convention). Box comes from the
-    trajectory's unitcell (vectors), identity-ish fallback when
-    absent."""
-    import numpy as np
-
-    xyz, time = traj.to_numpy()
-    boxes = None
-    if traj.have_unitcell:
-        uc = traj.unitcell_vectors.orderBy("frame_id").toPandas()
-        boxes = uc[["ax", "ay", "az", "bx", "by", "bz", "cx", "cy", "cz"]].to_numpy(
-            dtype=np.float64
-        ).reshape(-1, 3, 3)
-    _write_xtc_file(path, xyz, time, boxes, precision)
+    trajectory's unitcell (vectors), zeros when absent."""
+    host = gather_host(traj)
+    _write_xtc_file(path, host.xyz, host.time, host.box, precision)
 
 
 def _write_xtc_file(

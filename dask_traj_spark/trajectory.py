@@ -411,19 +411,14 @@ class Trajectory:
 
     def to_numpy(self):
         """Collect to driver-side numpy arrays ``(xyz, time)`` with
-        xyz shaped (n_frames, n_atoms, 3) float32 — the analog of the
-        reference's ``to_mdtraj`` (core/dask_traj.py:390-404). Only
-        for small trajectories, by definition."""
-        n_frames, n_atoms = self.n_frames, self.n_atoms
-        pdf = self.coords.toPandas()
-        xyz = np.zeros((n_frames, n_atoms, 3), dtype=np.float32)
-        fi = pdf["frame_id"].to_numpy()
-        ai = pdf["atom_id"].to_numpy()
-        xyz[fi, ai, 0] = pdf["x"].to_numpy()
-        xyz[fi, ai, 1] = pdf["y"].to_numpy()
-        xyz[fi, ai, 2] = pdf["z"].to_numpy()
-        tpdf = self.frames.orderBy("frame_id").toPandas()
-        return xyz, tpdf["time"].to_numpy()
+        xyz shaped (n_frames, n_atoms, 3) float32 in ascending
+        frame-id order — the analog of the reference's ``to_mdtraj``
+        (core/dask_traj.py:390-404). Only for small trajectories, by
+        definition."""
+        from dask_traj_spark.sources._arrow import gather_host
+
+        host = gather_host(self)
+        return host.xyz, host.time
 
     def to_mdtraj(self):
         """Materialize to an ``mdtraj.Trajectory`` when mdtraj is

@@ -9,6 +9,7 @@ Usage: python scripts/check_oracle.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -111,8 +112,9 @@ def main():
     if plain:
         from pyspark.sql import SparkSession
 
+        cpus = os.environ.get("SPARK_GRAFT_CPUS")
         spark = (
-            SparkSession.builder.master("local[8]")
+            SparkSession.builder.master(f"local[{cpus}]" if cpus else "local[*]")
             .config("spark.sql.session.timeZone", "UTC")
             .config("spark.ui.enabled", "false")
             .config("spark.ui.showConsoleProgress", "false")
@@ -122,7 +124,7 @@ def main():
     else:
         from dask_traj_spark.session import get_spark
 
-        spark = get_spark(master="local[8]", shuffle_partitions=8)
+        spark = get_spark()
     con = duck_con(sf_dir)
     qs, os_ = queries(), oracle_sql()
 

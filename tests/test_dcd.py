@@ -91,8 +91,8 @@ def test_dcd_parts_sink_and_merge(spark, tmp_path):
     import numpy as np
 
     import dask_traj_spark as dts
-    from dask_traj_spark.sources.dcd import merge_dcd_parts, write_dcd_parts
     from dask_traj_spark.sources.loaders import from_wide_pandas
+    from dask_traj_spark.sources.parts import merge_parts, write_traj_parts
 
     rng = np.random.default_rng(23)
     xyz = rng.uniform(-1, 4, (11, 40, 3)).astype(np.float32)
@@ -103,12 +103,12 @@ def test_dcd_parts_sink_and_merge(spark, tmp_path):
         unitcell_angles=np.tile([90.0, 90.0, 90.0], (11, 1)),
     )
     d = str(tmp_path / "parts")
-    manifest = write_dcd_parts(traj, d, frames_per_part=4)
+    manifest = write_traj_parts(traj, d, "dcd", frames_per_part=4)
     assert [m[0] for m in manifest] == [0, 1, 2]
     assert [m[2] for m in manifest] == [4, 4, 3]
 
     out = str(tmp_path / "merged.dcd")
-    merge_dcd_parts(d, out)
+    merge_parts(d, out, "dcd")
     back = dts.load(spark, out, chunks=5)
     assert back.n_frames == 11 and back.n_atoms == 40
     got, _ = back.to_numpy()
@@ -178,7 +178,8 @@ def test_dcd_parts_sink_sliced_trajectory_cells(spark, small_traj, tmp_path):
     """Part writer must gather unit cells by frame_id: a strided slice
     has non-dense frame ids, so a positional [min:max+1] slice of the
     cells array would misalign (or crash)."""
-    from dask_traj_spark.sources.dcd import read_cells, write_dcd_parts
+    from dask_traj_spark.sources.dcd import read_cells
+    from dask_traj_spark.sources.parts import write_traj_parts
 
     traj, xyz = small_traj
     # per-frame distinct cells so misalignment is detectable
@@ -193,7 +194,7 @@ def test_dcd_parts_sink_sliced_trajectory_cells(spark, small_traj, tmp_path):
     t2 = Trajectory(traj.coords, unitcell=varied, topology=traj.topology)
     sliced = t2.slice_frames(1, 12, 3)  # frames 1,4,7,10 — non-dense ids
     d = str(tmp_path / "parts_sliced")
-    manifest = write_dcd_parts(sliced, d, frames_per_part=2)
+    manifest = write_traj_parts(sliced, d, "dcd", frames_per_part=2)
     assert sum(n for _, _, n in manifest) == 4
 
     # read each part's cells and check the 'a' progression matches the

@@ -76,32 +76,6 @@ def test_forms_agree(traj_triclinic, pairs45):
     np.testing.assert_allclose(a, b, atol=ATOL)
 
 
-def test_box_join_path_matches_lookup_path(
-    traj_triclinic, traj_ortho, pairs45, monkeypatch
-):
-    """Above BOX_JOIN_FRAMES the vectorized feed broadcast-joins box
-    COLUMNS instead of collecting the per-frame lookup through the
-    driver.  Force the switch (threshold -> 0) and require the two
-    paths bit-identical on both box classes, and require the joined
-    plan to really be a broadcast join (a shuffle join would destroy
-    the frame-packed layout the kernels depend on)."""
-    from dask_traj_spark.operators import distance as dmod
-
-    for traj in (traj_triclinic, traj_ortho):
-        want = _collect_dist(
-            compute_distances(traj, pairs45, periodic=True, form="vectorized")
-        )
-        traj.__dict__.pop("n_frames", None)
-        monkeypatch.setattr(dmod, "BOX_JOIN_FRAMES", 0)
-        df = compute_distances(traj, pairs45, periodic=True, form="vectorized")
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan, plan
-        assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
-        got = _collect_dist(df)
-        monkeypatch.undo()
-        np.testing.assert_array_equal(got, want)
-
-
 def test_triclinic_mic_literal_box_tight(spark):
     """Regression: Spark 4.1.2 whole-stage codegen miscompiled the
     27-image search when box columns were constant-foldable literals

@@ -58,19 +58,14 @@ def _dists(df):
     return pdf["frame_id"].tolist(), pdf["dist"].to_numpy()
 
 
-def test_frame_without_unitcell_dropped_on_every_path(spark, monkeypatch):
+def test_frame_without_unitcell_dropped_on_every_path(spark):
     """The box lookup must not hand frame 1 its neighbour's box: the
-    lookup path, the box-join path and the SQL form all drop it."""
-    from dask_traj_spark.operators import distance as dmod
-
+    lookup path and the SQL form both drop it."""
     traj = _gapped_box_traj(spark)
     lookup = _dists(compute_distances(traj, [(0, 1)], form="vectorized"))
     sql = _dists(compute_distances(traj, [(0, 1)], form="sql"))
-    monkeypatch.setattr(dmod, "BOX_JOIN_FRAMES", 0)
-    joined = _dists(compute_distances(traj, [(0, 1)], form="vectorized"))
 
-    assert lookup[0] == joined[0] == sql[0] == [0, 2]
-    np.testing.assert_array_equal(lookup[1], joined[1])
+    assert lookup[0] == sql[0] == [0, 2]
     # frame 2's 1.2 nm separation wraps to 0.3 nm in the 1.5 nm box
     np.testing.assert_allclose(sql[1], [0.4, 0.3], atol=1e-6)
     np.testing.assert_allclose(lookup[1], sql[1], atol=1e-6)
