@@ -11,8 +11,9 @@ Each operator has two equivalent physical strategies (SURVEY.md §7.1):
   as the auditable cross-check and for small pair sets.
 - ``form="vectorized"`` — the throughput path: the frame-contiguous
   long rows of ``traj.frame_packed()`` (one range shuffle, free on a
-  packed trajectory) feed ``mapInPandas``, which runs the numpy
-  kernels in ``kernels.py`` over complete-frame blocks
+  packed trajectory such as a loaded file, whose scan is then cut to
+  the atoms the index set reads) feed ``mapInPandas``, which runs the
+  numpy kernels in ``kernels.py`` over complete-frame blocks
   (:func:`map_frame_blocks`); zero further shuffles; output is
   already long-format.
 
@@ -44,6 +45,7 @@ from dask_traj_spark.operators.mic import (
     orthogonality_expr,
 )
 from dask_traj_spark.operators.unitcell import lengths_angles_np
+from dask_traj_spark.sources._arrow import LITERAL_IDS_MAX, select_ids
 
 _VECTORIZED_THRESHOLD = 512
 
@@ -97,31 +99,13 @@ def _with_box(traj, df: DataFrame) -> DataFrame:
 # ------------------------------------------------------------ SQL forms
 
 
-#: atom selections up to this many distinct ids become LITERAL scan
-#: filters (between + isin) instead of a broadcast semi-join. A
-#: literal predicate pushes below projections/generators all the way
-#: to the source (parquet row-group stats via the between; derived
-#: sources like the oracle's embeddings→explode prune BEFORE the
-#: explode multiplies rows) — a semi-join can never be pushed into
-#: the scan. Larger selections keep the broadcast semi-join.
-_LITERAL_ATOM_FILTER_MAX = 4096
-
-
-def _atom_selection(c: DataFrame, ids) -> DataFrame:
-    ids = sorted({int(i) for i in ids})
-    pred = F.col("atom_id").between(ids[0], ids[-1])
-    if len(ids) < ids[-1] - ids[0] + 1:  # non-contiguous
-        pred = pred & F.col("atom_id").isin(ids)
-    return c.where(pred)
-
-
 def _atom_role_restrict(c: DataFrame, ids) -> DataFrame:
     """Restrict coords to a driver-known atom id set: literal pushdown
-    filter for small sets (see ``_LITERAL_ATOM_FILTER_MAX``), broadcast
+    filter for small sets (see ``LITERAL_IDS_MAX``), broadcast
     semi-join beyond."""
     uniq = np.unique(np.asarray(list(ids), dtype=np.int64))
-    if len(uniq) <= _LITERAL_ATOM_FILTER_MAX:
-        return _atom_selection(c, uniq)
+    if len(uniq) <= LITERAL_IDS_MAX:
+        return select_ids(c, "atom_id", uniq)
     sel = F.broadcast(
         c.sparkSession.createDataFrame(
             [(int(i),) for i in uniq], "atom_id int"
@@ -262,10 +246,18 @@ class _BoxLookup:
         return keep, self.vecs[idx[keep]], self.ortho[idx[keep]]
 
 
+_NOT_PACKED = (
+    "the trajectory is not frame-packed (a packed=True Trajectory must "
+    "have whole frames per partition, in ascending frame_id order)"
+)
+
+
 def _iter_frame_blocks(batches):
     """Regroup an Arrow-batch iterator into complete-frame pandas
     blocks: a frame straddling two batches is carried forward until
-    its last row has arrived (input is frame-contiguous + sorted)."""
+    its last row has arrived (input is frame-contiguous + sorted).
+    Frame ids that descend anywhere in the partition raise: the
+    carried frame joins each batch, so every step is checked."""
     import pandas as pd
 
     carry = None
@@ -275,6 +267,12 @@ def _iter_frame_blocks(batches):
         if carry is not None:
             pdf = pd.concat([carry, pdf], ignore_index=True)
         fids = pdf["frame_id"].to_numpy()
+        if (fids[1:] < fids[:-1]).any():
+            bad = int(np.argmax(fids[1:] < fids[:-1]))
+            raise ValueError(
+                f"frame ids are not ascending ({fids[bad]} then "
+                f"{fids[bad + 1]}) — {_NOT_PACKED}"
+            )
         cut = int(np.searchsorted(fids, fids[-1]))
         if cut > 0:
             yield pdf.iloc[:cut]
@@ -294,9 +292,8 @@ def _block_arrays(block, box_lookup):
     n_at = int(counts[0])
     if not (counts == n_at).all():
         raise ValueError(
-            "frame blocks have unequal atom counts — the trajectory is "
-            "not frame-packed (a packed=True Trajectory must have whole "
-            f"frames per partition); counts={dict(zip(fids, counts))}"
+            f"frame blocks have unequal atom counts — {_NOT_PACKED}; "
+            f"counts={dict(zip(fids, counts))}"
         )
     xyz = np.stack(
         [
@@ -321,9 +318,10 @@ def _packed_input(
 ):
     """The vectorized feed: frame-packed coords, optionally filtered
     to the atoms the index set actually references (a literal
-    JVM-side predicate, :func:`_atom_selection` — with 500 of 22k
-    atoms selected this cuts the Arrow feed ~45×), projected to the 4
-    columns the kernel reads.
+    JVM-side predicate, :func:`select_ids` — with 500 of 22k
+    atoms selected this cuts the Arrow feed ~45×; on a loaded file the
+    predicate reaches the scan, which decodes only that atom span),
+    projected to the 4 columns the kernel reads.
 
     Returns (feed_df, box_lookup); the box rides as a driver-collected
     per-frame lookup (:class:`_BoxLookup`), None unless ``periodic``
@@ -337,7 +335,7 @@ def _packed_input(
     lookup = _BoxLookup.from_traj(traj) if periodic and traj.have_unitcell else None
     feed = traj.frame_packed()
     if atoms is not None:
-        feed = _atom_selection(feed, atoms)
+        feed = select_ids(feed, "atom_id", atoms)
     return feed.select("frame_id", "x", "y", "z"), lookup
 
 

@@ -7,12 +7,33 @@ DataSource, ``trajframes``, whose ``format`` option names a format
 module in this package. A format module supplies two functions:
 
 - ``plan_chunks(path, chunks) -> list[payload]`` runs at planning
-  time and returns one picklable payload per frame-chunk (byte
-  offsets for scanned text/XTC formats, ``(start, count)`` for
-  fixed-stride binary formats);
-- ``decode_chunk(path, payload) -> Iterator[(frame_id, xyz)]`` runs
-  in the scan task and yields each frame of its chunk as an
-  ``(n_atoms, 3)`` array in nm.
+  time and returns one picklable payload per frame-chunk: either a
+  list of per-frame specs, each a tuple whose first item is the
+  frame id (byte offsets for scanned text/XTC formats,
+  :func:`chunk_list`), or a ``(start, count)`` frame range for
+  fixed-stride formats (:func:`chunk_range`);
+- ``decode_chunk(path, payload, atoms) -> Iterator[(frame_id, xyz)]``
+  runs in the scan task and yields each frame of its chunk as an
+  ``(m, 3)`` array in nm holding only the atoms of the inclusive
+  atom-id span ``atoms = (lo, hi)``: atoms ``lo..min(hi, n - 1)``
+  of the frame's ``n`` (:func:`atom_range` clips the span). An
+  unfiltered scan passes :data:`ALL_ATOMS`.
+
+A scan can be cut to an atom span and to a set of frames
+(:func:`scan_frames`' ``atoms``/``frames``/``frame_ids``, carried
+as source options): the atom span is the ``atoms`` every
+``decode_chunk`` call gets, so XTC stops its bit-stream loop after
+atom ``hi`` and the fixed-stride formats read only that byte span;
+the frames drop whole chunks, and the frames of a spec-list payload
+(the frame range of a ``(start, count)`` one) that are not asked
+for. :func:`select_ids` — the one atom or frame selection every
+operator and ``select_frames`` use — makes that cut when its input
+is a bare file scan, and keeps its literal predicate over the cut
+scan, so a format that returns a superset stays exact.
+
+A scan partition is one chunk: whole frames in (frame_id, atom_id)
+order, the ``packed=True`` contract of :class:`Trajectory`, so the
+trajectories :func:`scan_frames` feeds are built packed.
 
 Loaders call :func:`scan_frames`, or :func:`load_indexed` when the
 driver already indexed the file's frames; every writer goes the
@@ -33,7 +54,7 @@ from collections.abc import Iterable, Iterator
 from typing import NamedTuple
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from dask_traj_spark.operators.mic import BOX_COLS
@@ -44,14 +65,30 @@ _FRAMES_SCHEMA = "frame_id long, time double, step long"
 _BOX_SCHEMA = "frame_id long, " + ", ".join(f"{c} float" for c in BOX_COLS)
 _CELL_COLS = ["a", "b", "c", "alpha", "beta", "gamma"]
 _CELL_SCHEMA = "frame_id long, " + ", ".join(f"{c} float" for c in _CELL_COLS)
+_COORDS_SCHEMA = "frame_id long, atom_id int, x float, y float, z float"
+
+#: an inclusive (lo, hi) id span no predicate has narrowed
+_OPEN = (-(2**63), 2**63 - 1)
+#: the atom span of an unfiltered scan
+ALL_ATOMS = (0, _OPEN[1])
+
+
+def atom_range(atoms: tuple[int, int], n: int) -> tuple[int, int]:
+    """The inclusive atom-id span ``atoms`` clipped to a frame of
+    ``n`` atoms → ``(lo, stop)``, its half-open row range (empty when
+    the span misses the frame)."""
+    lo = min(max(atoms[0], 0), n)
+    return lo, max(lo, min(atoms[1] + 1, n))
 
 
 def frames_to_record_batches(
     frame_iter: Iterable[tuple[int, "np.ndarray"]],
+    lo: int = 0,
     rows_per_batch: int = 131072,
 ) -> Iterator["object"]:
-    """(frame_id, xyz (n_atoms, 3) float-ish) → pyarrow.RecordBatch
-    stream in the shared coords schema."""
+    """(frame_id, xyz (m, 3) float-ish) → pyarrow.RecordBatch stream
+    in the shared coords schema; a frame's rows are atoms
+    ``lo..lo+m-1``."""
     import pyarrow as pa
 
     fids: list[np.ndarray] = []
@@ -79,7 +116,7 @@ def frames_to_record_batches(
     for fid, xyz in frame_iter:
         n = xyz.shape[0]
         fids.append(np.full(n, fid, dtype=np.int64))
-        aids.append(np.arange(n, dtype=np.int32))
+        aids.append(np.arange(lo, lo + n, dtype=np.int32))
         cols.append(xyz.astype(np.float32, copy=False))
         nrows += n
         if nrows >= rows_per_batch:
@@ -108,6 +145,40 @@ class _Chunk(InputPartition):
         self.payload = payload
 
 
+def _narrow(payload, frames: tuple[int, int], listed: frozenset | None):
+    """A payload cut to the frames in the span ``frames`` (and in
+    ``listed``, unless None), or None when none is left. A
+    ``(start, count)`` range keeps the span of its admitted frames; a
+    spec list keeps exactly them."""
+    lo, hi = frames
+    if isinstance(payload, tuple):
+        start, count = payload
+        lo, hi = max(lo, start), min(hi, start + count - 1)
+        if listed is not None:
+            ids = [i for i in listed if lo <= i <= hi]
+            lo, hi = (min(ids), max(ids)) if ids else (1, 0)
+        return (lo, hi - lo + 1) if lo <= hi else None
+    kept = [
+        s for s in payload
+        if lo <= s[0] <= hi and (listed is None or s[0] in listed)
+    ]
+    return kept or None
+
+
+def _spans(options) -> tuple[tuple[int, int], tuple[int, int], frozenset | None]:
+    """The atom span, frame span and listed frame ids (None: every
+    frame of the span) a scan's options cut it to."""
+
+    def span(key, default):
+        v = options.get(key)
+        return tuple(int(x) for x in v.split(",")) if v else default
+
+    lo, hi = span("atoms", ALL_ATOMS)
+    ids = options.get("frame_ids")
+    listed = frozenset(int(x) for x in ids.split(",")) if ids else None
+    return (max(lo, 0), hi), span("frames", _OPEN), listed
+
+
 class _FrameChunkReader(DataSourceReader):
     # holds the format's name, not its module: the reader is pickled
     # to the scan tasks and a module object is not picklable
@@ -115,14 +186,20 @@ class _FrameChunkReader(DataSourceReader):
         self.fmt = options["format"]
         self.path = options["path"]
         self.chunks = int(options["chunks"])
+        self.atoms, self.frames, self.listed = _spans(options)
 
     def partitions(self):
         plan = _format_module(self.fmt).plan_chunks(self.path, self.chunks)
-        return [_Chunk(p) for p in plan]
+        cut = (_narrow(p, self.frames, self.listed) for p in plan)
+        return [_Chunk(p) for p in cut if p]
 
     def read(self, partition):
-        frames = _format_module(self.fmt).decode_chunk(self.path, partition.payload)
-        yield from frames_to_record_batches(frames)
+        # no chunk left (an empty file, or every frame cut): Spark
+        # reads one None partition
+        if partition is None:
+            return
+        frames = _format_module(self.fmt).decode_chunk(self.path, partition.payload, self.atoms)
+        yield from frames_to_record_batches(frames, self.atoms[0])
 
 
 class FrameChunkSource(DataSource):
@@ -134,28 +211,115 @@ class FrameChunkSource(DataSource):
         return "trajframes"
 
     def schema(self):
-        return "frame_id long, atom_id int, x float, y float, z float"
+        return _COORDS_SCHEMA
 
     def reader(self, schema):
         return _FrameChunkReader(self.options)
 
 
-def scan_frames(spark: SparkSession, fmt: str, path: str, chunks: int) -> DataFrame:
+def scan_frames(
+    spark: SparkSession,
+    fmt: str,
+    path: str,
+    chunks: int,
+    *,
+    atoms: tuple[int, int] = ALL_ATOMS,
+    frames: tuple[int, int] = _OPEN,
+    frame_ids: Iterable[int] | None = None,
+) -> DataFrame:
     """Lazy coords scan of ``path`` through format module ``fmt``,
-    one partition per chunk of ``chunks`` frames. Registers the
+    one partition per chunk of ``chunks`` frames, holding only the
+    atoms of the inclusive span ``atoms`` and the frames of the span
+    ``frames`` (of ``frame_ids`` too, when given). Registers the
     source when the live JVM session does not know it yet: asking
     the JVM, not a Python-side flag, tells a stopped session from its
     successor."""
     manager = spark._jsparkSession.sessionState().dataSourceManager()
     if not manager.dataSourceExists(FrameChunkSource.name()):
         spark.dataSource.register(FrameChunkSource)
-    return (
+    read = (
         spark.read.format("trajframes")
+        # a given schema spares load() the Python worker that would
+        # infer it (~0.25 s a call); the source is then instantiated
+        # only when a query plans its scan
+        .schema(_COORDS_SCHEMA)
         .option("format", fmt)
         .option("path", path)
         .option("chunks", str(chunks))
-        .load()
     )
+    if atoms != ALL_ATOMS:
+        read = read.option("atoms", "%d,%d" % atoms)
+    if frames != _OPEN:
+        read = read.option("frames", "%d,%d" % frames)
+    if frame_ids is not None:
+        read = read.option("frame_ids", ",".join(str(int(i)) for i in frame_ids))
+    return read.load()
+
+
+#: id selections up to this many distinct ids become LITERAL scan
+#: filters (between + isin) instead of a broadcast semi-join. A
+#: literal predicate pushes below projections/generators all the way
+#: to the source (parquet row-group stats via the between; derived
+#: sources like the oracle's embeddings→explode prune BEFORE the
+#: explode multiplies rows) — a semi-join can never be pushed into
+#: the scan. Larger atom selections keep the broadcast semi-join;
+#: larger frame selections (``select_frames``) keep the between only.
+LITERAL_IDS_MAX = 4096
+
+
+def _bare_scan_options(df: DataFrame):
+    """The source options of ``df`` when it is a bare, uncached
+    :func:`scan_frames` DataFrame, else None (a cached scan is read
+    from its cache, which a new scan would bypass)."""
+    rel = df._jdf.queryExecution().analyzed()
+    if rel.getClass().getSimpleName() != "DataSourceV2Relation" or rel.name() != "trajframes":
+        return None
+    level = df.storageLevel
+    return None if level.useMemory or level.useDisk else rel.options()
+
+
+def select_ids(df: DataFrame, col: str, ids, max_listed: int | None = None) -> DataFrame:
+    """``df`` restricted to the rows whose ``col`` (``atom_id`` or
+    ``frame_id``) is in the non-empty id set ``ids``.
+
+    - The predicate is literal, so a file source can take it: BETWEEN
+      the least and greatest id, plus an IN list when the ids are
+      sparse — unless there are more than ``max_listed``, which
+      leaves the BETWEEN a superset for a later join to make exact.
+    - When ``df`` is a bare, uncached :func:`scan_frames` DataFrame,
+      the predicate runs over a new scan of the same file cut to the
+      ids' atom span, or to their frames: XTC then decodes no atom
+      past the span and no frame outside it, a fixed-stride format
+      reads only their bytes.
+
+    The cut rides on the new scan's options, never on Spark's filter
+    pushdown: Spark 4.1 keeps the last pushed reader of a Python
+    data source on its table, so every later scan of the same
+    DataFrame — the other side of a self-join, the next query —
+    would read through it.
+    """
+    ids = sorted({int(i) for i in ids})
+    pred = F.col(col).between(ids[0], ids[-1])
+    sparse = len(ids) < ids[-1] - ids[0] + 1
+    listed = sparse and (max_listed is None or len(ids) <= max_listed)
+    if listed:
+        pred = pred & F.col(col).isin(ids)
+    opts = _bare_scan_options(df)
+    if opts is not None:
+        atoms, frames, had = _spans(opts)
+        if col == "atom_id":
+            atoms = (max(atoms[0], ids[0]), min(atoms[1], ids[-1]))
+        else:
+            frames = (max(frames[0], ids[0]), min(frames[1], ids[-1]))
+            if listed:
+                had = frozenset(ids) if had is None else had & frozenset(ids)
+                if not had:
+                    frames = (1, 0)
+        df = scan_frames(
+            df.sparkSession, opts.get("format"), opts.get("path"), int(opts.get("chunks")),
+            atoms=atoms, frames=frames, frame_ids=None if had is None else sorted(had),
+        )
+    return df.where(pred)
 
 
 def load_indexed(
@@ -213,7 +377,7 @@ def load_indexed(
     counts = np.unique(np.asarray(n_atoms, dtype=np.int64))
     index = FrameIndex(ids, int(counts[0]) if len(counts) == 1 else None, host_box)
     coords = scan_frames(spark, fmt, path, chunks)
-    return Trajectory(coords, frames, unitcell, topology, index=index)
+    return Trajectory(coords, frames, unitcell, topology, packed=True, index=index)
 
 
 class HostFrames(NamedTuple):

@@ -15,7 +15,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import chunk_list, load_indexed
+from dask_traj_spark.sources._arrow import atom_range, chunk_list, load_indexed
 from dask_traj_spark.trajectory import Trajectory
 
 ANGSTROM_TO_NM = 0.1
@@ -61,13 +61,15 @@ def index_arc(path: str):
     return frames
 
 
-def decode_chunk(path: str, specs):
-    """specs: [(frame_id, atoms_offset, n)] → (frame_id, xyz f32 nm)."""
+def decode_chunk(path: str, specs, atoms: tuple[int, int]):
+    """specs: [(frame_id, atoms_offset, n)] → (frame_id, xyz f32 nm)
+    of the ``atoms`` span; lines after it are not read."""
     with open(path, "rb") as f:
         for fid, offset, n in specs:
+            lo, stop = atom_range(atoms, n)
             f.seek(offset)
             rows = []
-            for _ in range(n):
+            for _ in range(stop):
                 parts = f.readline().split()
                 if len(parts) < 5:
                     # short/truncated atom line: documented contract is
@@ -76,9 +78,9 @@ def decode_chunk(path: str, specs):
                         f"malformed ARC atom line in frame {fid}"
                     )
                 rows.append((parts[2], parts[3], parts[4]))
-            xyz = (np.array(rows, dtype=np.float64) * ANGSTROM_TO_NM).astype(
-                np.float32
-            )
+            xyz = (
+                np.array(rows[lo:], dtype=np.float64).reshape(-1, 3) * ANGSTROM_TO_NM
+            ).astype(np.float32)
             yield fid, xyz
 
 

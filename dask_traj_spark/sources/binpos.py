@@ -15,7 +15,7 @@ import struct
 import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import chunk_range, gather_host, load_indexed
+from dask_traj_spark.sources._arrow import atom_range, chunk_range, gather_host, load_indexed
 from dask_traj_spark.trajectory import Trajectory
 
 MAGIC = b"fxyz"
@@ -39,14 +39,18 @@ def read_info(path: str) -> BinposInfo:
     return BinposInfo((size - 4) // frame_size, n_atoms)
 
 
-def _read_frames(path: str, info: BinposInfo, start: int, count: int):
+def _read_frames(path: str, info: BinposInfo, start: int, count: int, atoms: tuple[int, int]):
+    """Yield (frame_id, xyz (m, 3) float32 nm), reading only the byte
+    span of the ``atoms`` span."""
+    lo, stop = atom_range(atoms, info.n_atoms)
     with open(path, "rb") as f:
-        f.seek(4 + start * info.frame_size)
         for fid in range(start, min(start + count, info.n_frames)):
+            f.seek(4 + fid * info.frame_size)
             n = struct.unpack("<i", f.read(4))[0]
             if n != info.n_atoms:
                 raise ValueError(f"frame {fid}: natoms {n} != {info.n_atoms}")
-            xyz = np.frombuffer(f.read(12 * n), dtype="<f4").reshape(n, 3)
+            f.seek(12 * lo, 1)
+            xyz = np.frombuffer(f.read(12 * (stop - lo)), dtype="<f4").reshape(-1, 3)
             yield fid, (xyz.astype(np.float64) * ANGSTROM_TO_NM).astype(np.float32)
 
 
@@ -66,9 +70,9 @@ def plan_chunks(path: str, chunks: int) -> list[tuple[int, int]]:
     return chunk_range(read_info(path).n_frames, chunks)
 
 
-def decode_chunk(path: str, payload: tuple[int, int]):
+def decode_chunk(path: str, payload: tuple[int, int], atoms: tuple[int, int]):
     start, count = payload
-    return _read_frames(path, read_info(path), start, count)
+    return _read_frames(path, read_info(path), start, count, atoms)
 
 
 def load_binpos(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory:

@@ -35,7 +35,13 @@ import struct
 import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import chunk_range, gather_host, load_indexed
+from dask_traj_spark.sources._arrow import (
+    ALL_ATOMS,
+    atom_range,
+    chunk_range,
+    gather_host,
+    load_indexed,
+)
 from dask_traj_spark.trajectory import Trajectory
 
 ANGSTROM_TO_NM = 0.1
@@ -101,20 +107,22 @@ def read_info(path: str) -> DCDInfo:
         return DCDInfo(n_frames, n_atoms, has_cell, data_offset, frame_size)
 
 
-def _read_frames(path: str, info: DCDInfo, start: int, count: int):
-    """Yield (frame_id, xyz_nm (n_atoms, 3) float32) for frames
-    [start, start+count)."""
+def _read_frames(
+    path: str, info: DCDInfo, start: int, count: int, atoms: tuple[int, int] = ALL_ATOMS
+):
+    """Yield (frame_id, xyz_nm (m, 3) float32) for frames
+    [start, start+count), reading only the byte span of the
+    ``atoms`` span from each of a frame's x, y and z records."""
+    lo, stop = atom_range(atoms, info.n_atoms)
+    record = 4 + 4 * info.n_atoms + 4
     with open(path, "rb") as f:
-        f.seek(info.data_offset + start * info.frame_size)
         for fid in range(start, min(start + count, info.n_frames)):
-            if info.has_cell:
-                f.seek(4 + 48 + 4, 1)
+            base = info.data_offset + fid * info.frame_size + (4 + 48 + 4 if info.has_cell else 0)
             cols = []
-            for _ in range(3):
-                f.seek(4, 1)
-                raw = _must_read(f, 4 * info.n_atoms, "coordinate block")
+            for d in range(3):
+                f.seek(base + d * record + 4 + 4 * lo)
+                raw = _must_read(f, 4 * (stop - lo), "coordinate block")
                 cols.append(np.frombuffer(raw, dtype="<f4"))
-                f.seek(4, 1)
             xyz = np.stack(cols, axis=-1) * np.float32(ANGSTROM_TO_NM)
             yield fid, xyz
 
@@ -222,9 +230,9 @@ def plan_chunks(path: str, chunks: int) -> list[tuple[int, int]]:
     return chunk_range(read_info(path).n_frames, chunks)
 
 
-def decode_chunk(path: str, payload: tuple[int, int]):
+def decode_chunk(path: str, payload: tuple[int, int], atoms: tuple[int, int]):
     start, count = payload
-    return _read_frames(path, read_info(path), start, count)
+    return _read_frames(path, read_info(path), start, count, atoms)
 
 
 def load_dcd(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory:

@@ -24,7 +24,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import chunk_list, gather_host, load_indexed
+from dask_traj_spark.sources._arrow import atom_range, chunk_list, gather_host, load_indexed
 from dask_traj_spark.trajectory import Trajectory
 
 
@@ -74,23 +74,25 @@ def index_gro(path: str) -> list[tuple[int, int, int, float | None, np.ndarray]]
     return frames
 
 
-def decode_chunk(path: str, specs):
+def decode_chunk(path: str, specs, atoms: tuple[int, int]):
     """specs: [(frame_id, offset, n_atoms)] → yield (frame_id,
-    xyz (n,3) float32 nm)."""
+    xyz (m,3) float32 nm) of the ``atoms`` span; lines after it are
+    not read."""
     with open(path, "rb") as f:
         for fid, offset, n in specs:
+            lo, stop = atom_range(atoms, n)
             f.seek(offset)
             f.readline()  # title
             f.readline()  # count
             rows = []
-            for _ in range(n):
+            for _ in range(stop):
                 line = f.readline()
                 if len(line) < 44:
                     raise ValueError(
                         f"malformed GRO atom line in frame {fid}"
                     )
                 rows.append((line[20:28], line[28:36], line[36:44]))
-            xyz = np.array(rows, dtype=np.float64).astype(np.float32)
+            xyz = np.array(rows[lo:], dtype=np.float64).reshape(-1, 3).astype(np.float32)
             yield fid, xyz
 
 

@@ -39,7 +39,13 @@ import json
 import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import gather_host, load_indexed, scan_frames
+from dask_traj_spark.sources._arrow import (
+    atom_range,
+    chunk_range,
+    gather_host,
+    load_indexed,
+    scan_frames,
+)
 from dask_traj_spark.trajectory import Trajectory
 
 try:  # pragma: no cover - h5py absent in the test container
@@ -120,20 +126,27 @@ def _topology_from_json(spark: SparkSession, topo_json: str):
     )
 
 
-def plan_chunks(path: str, chunks: int) -> list[tuple[str, int, int]]:
-    """``(dataset, start, count)`` payloads: MDTraj's ``coordinates``
-    when the file holds it, else the LH5 ``XYZList``."""
-    with _H5File(path) as f:
-        name = "coordinates" if "coordinates" in f else "XYZList"
-        n_frames = f.shape(name)[0]
-    return [(name, s, min(chunks, n_frames - s)) for s in range(0, n_frames, chunks)]
+def _coords_name(f) -> str:
+    """MDTraj's ``coordinates`` when the file holds it, else the LH5
+    ``XYZList``."""
+    return "coordinates" if "coordinates" in f else "XYZList"
 
 
-def decode_chunk(path: str, payload: tuple[str, int, int]):
-    """Slice one frame range; LH5's int16 fixed point is nm × 1000."""
-    name, start, count = payload
+def plan_chunks(path: str, chunks: int) -> list[tuple[int, int]]:
     with _H5File(path) as f:
-        xyz = f.read(name, start, count)
+        n_frames = f.shape(_coords_name(f))[0]
+    return chunk_range(n_frames, chunks)
+
+
+def decode_chunk(path: str, payload: tuple[int, int], atoms: tuple[int, int]):
+    """Slice one frame range, then the ``atoms`` span; LH5's int16
+    fixed point is nm × 1000."""
+    start, count = payload
+    with _H5File(path) as f:
+        name = _coords_name(f)
+        xyz = f.read(name, start, min(count, f.shape(name)[0] - start))
+    lo, stop = atom_range(atoms, xyz.shape[1])
+    xyz = xyz[:, lo:stop]
     if name == "XYZList":
         xyz = xyz.astype("float32") / np.float32(1000.0)
     for i, frame in enumerate(xyz):
@@ -185,7 +198,7 @@ def load_lh5(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory:
     adapter as :func:`load_hdf5`."""
     with _H5File(path) as f:
         f.shape("XYZList")  # fail on the driver if the dataset is absent
-    return Trajectory(scan_frames(spark, "hdf5", path, chunks))
+    return Trajectory(scan_frames(spark, "hdf5", path, chunks), packed=True)
 
 
 def write_h5_traj(

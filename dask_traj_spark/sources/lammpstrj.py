@@ -26,7 +26,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import chunk_list, load_indexed
+from dask_traj_spark.sources._arrow import atom_range, chunk_list, load_indexed
 from dask_traj_spark.trajectory import Trajectory
 
 ANGSTROM_TO_NM = 0.1
@@ -116,9 +116,11 @@ def _coord_indices(cols: list[str]) -> tuple[int, int, int, int]:
     return idi, xi, yi, zi
 
 
-def decode_chunk(path: str, specs):
+def decode_chunk(path: str, specs, atoms: tuple[int, int]):
     """specs: [(frame_id, atoms_offset, n, cols)] → yield
-    (frame_id, xyz (n,3) float32 nm), rows sorted by atom id."""
+    (frame_id, xyz (m,3) float32 nm), rows sorted by atom id, then
+    cut to the ``atoms`` span (a dump's rows need not be in id order,
+    so every line is read)."""
     with open(path, "rb") as f:
         for fid, offset, n, cols in specs:
             idi, xi, yi, zi = _coord_indices(cols)
@@ -136,7 +138,8 @@ def decode_chunk(path: str, specs):
                 xyz[r, 0] = float(parts[xi])
                 xyz[r, 1] = float(parts[yi])
                 xyz[r, 2] = float(parts[zi])
-            order = np.argsort(ids, kind="stable")
+            lo, stop = atom_range(atoms, n)
+            order = np.argsort(ids, kind="stable")[lo:stop]
             yield fid, (xyz[order] * ANGSTROM_TO_NM).astype(np.float32)
 
 

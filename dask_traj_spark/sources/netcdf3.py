@@ -29,7 +29,7 @@ import struct
 import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import chunk_range, gather_host, load_indexed
+from dask_traj_spark.sources._arrow import atom_range, chunk_range, gather_host, load_indexed
 from dask_traj_spark.trajectory import Trajectory
 
 ANGSTROM_TO_NM = 0.1
@@ -132,13 +132,19 @@ class NC3File:
             nbytes = n * _TYPE_SIZES[t]
             f.seek(nbytes + ((-nbytes) % 4), 1)
 
-    def read_record(self, f, var: str, rec: int) -> np.ndarray:
+    def read_record(
+        self, f, var: str, rec: int, rows: tuple[int, int] | None = None
+    ) -> np.ndarray:
+        """Record ``rec`` of ``var``; ``rows = (lo, stop)`` reads only
+        those rows of its leading axis."""
         v = self.vars[var]
-        n = int(np.prod(v.shape, dtype=np.int64)) if v.shape else 1
-        f.seek(v.begin + rec * self.recsize)
+        lo, stop = rows or (0, v.shape[0] if v.shape else 1)
+        row_bytes = int(np.prod(v.shape[1:], dtype=np.int64)) * _TYPE_SIZES[v.nc_type]
+        f.seek(v.begin + rec * self.recsize + lo * row_bytes)
+        shape = (stop - lo, *v.shape[1:]) if v.shape else ()
         return np.frombuffer(
-            f.read(n * _TYPE_SIZES[v.nc_type]), dtype=_TYPE_NP[v.nc_type]
-        ).reshape(v.shape)
+            f.read((stop - lo) * row_bytes), dtype=_TYPE_NP[v.nc_type]
+        ).reshape(shape)
 
     def read_nonrecord(self, f, var: str) -> np.ndarray:
         v = self.vars[var]
@@ -153,13 +159,14 @@ def plan_chunks(path: str, chunks: int) -> list[tuple[int, int]]:
     return chunk_range(NC3File(path).numrecs, chunks)
 
 
-def decode_chunk(path: str, payload: tuple[int, int]):
+def decode_chunk(path: str, payload: tuple[int, int], atoms: tuple[int, int]):
     start, count = payload
     nc = NC3File(path)
     end = min(start + count, nc.numrecs)
+    rows = atom_range(atoms, nc.vars["coordinates"].shape[0])
     with open(path, "rb") as f:
         for fid in range(start, end):
-            xyz = nc.read_record(f, "coordinates", fid).astype(np.float64)
+            xyz = nc.read_record(f, "coordinates", fid, rows).astype(np.float64)
             yield fid, (xyz * ANGSTROM_TO_NM).astype(np.float32)
 
 

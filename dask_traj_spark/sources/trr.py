@@ -25,7 +25,13 @@ import struct
 import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import chunk_range, gather_host, load_indexed
+from dask_traj_spark.sources._arrow import (
+    ALL_ATOMS,
+    atom_range,
+    chunk_range,
+    gather_host,
+    load_indexed,
+)
 from dask_traj_spark.trajectory import Trajectory
 
 MAGIC = 1993
@@ -110,8 +116,11 @@ def read_info(path: str) -> TRRInfo:
         )
 
 
-def _read_frames(path: str, info: TRRInfo, start: int, count: int):
-    """Yield (frame_id, step, t, box (3,3), xyz (n,3) f32) frames."""
+def _read_frames(
+    path: str, info: TRRInfo, start: int, count: int, atoms: tuple[int, int] = ALL_ATOMS
+):
+    """Yield (frame_id, step, t, box (3,3), xyz (m,3) f32) frames,
+    reading only the byte span of the ``atoms`` span."""
     with open(path, "rb") as f:
         for fid in range(start, min(start + count, info.n_frames)):
             f.seek(fid * info.frame_size)
@@ -126,11 +135,12 @@ def _read_frames(path: str, info: TRRInfo, start: int, count: int):
                     struct.unpack(dt, _must_read(f, 9 * fw, "box record"))
                 ).reshape(3, 3)
             f.seek(h["vir"] + h["pres"], 1)
-            n = h["natoms"]
+            lo, stop = atom_range(atoms, h["natoms"])
             xdtype = ">f8" if h["double"] else ">f4"
+            f.seek(3 * fw * lo, 1)
             xyz = np.frombuffer(
-                _must_read(f, 3 * n * fw, "coordinate block"), dtype=xdtype
-            ).reshape(n, 3)
+                _must_read(f, 3 * (stop - lo) * fw, "coordinate block"), dtype=xdtype
+            ).reshape(-1, 3)
             yield fid, h["step"], h["t"], box, xyz.astype(np.float32)
 
 
@@ -195,9 +205,9 @@ def plan_chunks(path: str, chunks: int) -> list[tuple[int, int]]:
     return chunk_range(read_info(path).n_frames, chunks)
 
 
-def decode_chunk(path: str, payload: tuple[int, int]):
+def decode_chunk(path: str, payload: tuple[int, int], atoms: tuple[int, int]):
     start, count = payload
-    for fid, _step, _t, _box, xyz in _read_frames(path, read_info(path), start, count):
+    for fid, _step, _t, _box, xyz in _read_frames(path, read_info(path), start, count, atoms):
         yield fid, xyz
 
 

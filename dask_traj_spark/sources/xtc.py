@@ -43,7 +43,13 @@ import struct
 import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import chunk_list, gather_host, load_indexed
+from dask_traj_spark.sources._arrow import (
+    ALL_ATOMS,
+    atom_range,
+    chunk_list,
+    gather_host,
+    load_indexed,
+)
 from dask_traj_spark.trajectory import Trajectory
 
 MAGIC = 1995
@@ -174,9 +180,20 @@ def index_xtc(path: str) -> list[XTCFrameInfo]:
     return frames
 
 
-def decode_frame(f) -> tuple[int, float, np.ndarray, np.ndarray]:
+def decode_frame(
+    f, atoms: tuple[int, int] = ALL_ATOMS
+) -> tuple[int, float, np.ndarray, np.ndarray]:
     """Decode one frame at the current file position →
-    (step, time, box (3,3), xyz (natoms, 3) float32 nm)."""
+    (step, time, box (3,3), xyz (m, 3) float32 nm) holding atoms
+    ``lo..min(hi, natoms - 1)`` of the inclusive span ``atoms``.
+
+    The stream is delta-coded in atom order, so every atom below
+    ``lo`` is still decoded; the bit-stream loop stops once atom
+    ``hi`` is known. Only the prefix it decodes is validated: a
+    corrupt bit stream raises ValueError when the fault lies at or
+    before atom ``hi``, and goes unseen when it lies after. The
+    header and payload-length guards check the whole frame, whatever
+    the span."""
     magic = _read_xdr_int(f)
     if magic != MAGIC:
         raise ValueError(f"bad XTC magic {magic}")
@@ -194,7 +211,8 @@ def decode_frame(f) -> tuple[int, float, np.ndarray, np.ndarray]:
         if len(raw) < 12 * natoms:
             raise ValueError("truncated XTC coordinate block")
         flat = struct.unpack(f">{3 * natoms}f", raw)
-        return step, time, box, np.array(flat, dtype=np.float32).reshape(-1, 3)
+        lo, stop = atom_range(atoms, natoms)
+        return step, time, box, np.array(flat, dtype=np.float32).reshape(-1, 3)[lo:stop]
 
     precision = _read_xdr_float(f)
     minint = [_read_xdr_int(f) for _ in range(3)]
@@ -246,6 +264,7 @@ def decode_frame(f) -> tuple[int, float, np.ndarray, np.ndarray]:
     # state in locals — ~5× fewer Python-level calls than the class
     # form; this loop decodes ~275k atoms/s and is the hot path of
     # every partition scan).
+    lo, stop = atom_range(atoms, natoms)
     try:
         buf = data
         cnt = 0
@@ -259,7 +278,7 @@ def decode_frame(f) -> tuple[int, float, np.ndarray, np.ndarray]:
         b0, b1, b2 = bitsizeint
         i = 0
         run = 0
-        while i < natoms:
+        while i < stop:
             # ---- whole-range triple --------------------------------------
             if bitsize == 0:
                 trip = []
@@ -388,9 +407,11 @@ def decode_frame(f) -> tuple[int, float, np.ndarray, np.ndarray]:
                 small = MAGICINTS[smallidx] // 2
             ssmall = MAGICINTS[smallidx]
 
-        out = (np.array(vals, dtype=np.int64).reshape(natoms, 3) * inv).astype(
-            np.float32
-        )
+        if i > natoms:
+            raise ValueError(f"XTC run decodes {i} atoms of {natoms}")
+        out = (
+            np.array(vals[3 * lo : 3 * stop], dtype=np.int64).reshape(-1, 3) * inv
+        ).astype(np.float32)
     except (IndexError, ZeroDivisionError) as e:
         # a corrupt bit stream can claim runs that consume more
         # bytes than the payload holds (IndexError) or degenerate
@@ -603,12 +624,13 @@ def plan_chunks(path: str, chunks: int) -> list[list[tuple[int, int]]]:
     return chunk_list([(fi.frame_id, fi.offset) for fi in index_xtc(path)], chunks)
 
 
-def decode_chunk(path: str, offsets: list[tuple[int, int]]):
-    """Yield (frame_id, xyz) for [(frame_id, byte_offset)]."""
+def decode_chunk(path: str, offsets: list[tuple[int, int]], atoms: tuple[int, int]):
+    """Yield (frame_id, xyz of the ``atoms`` span) for
+    [(frame_id, byte_offset)]."""
     with open(path, "rb") as f:
         for fid, off in offsets:
             f.seek(off)
-            _step, _time, _box, xyz = decode_frame(f)
+            _step, _time, _box, xyz = decode_frame(f, atoms)
             yield fid, xyz
 
 

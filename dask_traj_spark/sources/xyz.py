@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import chunk_list, scan_frames
+from dask_traj_spark.sources._arrow import ALL_ATOMS, atom_range, chunk_list, scan_frames
 from dask_traj_spark.trajectory import Trajectory
 
 ANGSTROM_TO_NM = 0.1
@@ -62,17 +62,24 @@ def index_xyz(path: str) -> list[tuple[int, int, int]]:
     return frames
 
 
-def _decode_frame_arrays(path: str, specs: list[tuple[int, int, int]], scale: float):
-    """Yield (frame_id, xyz (n, 3) float32) for the given frame specs."""
+def _decode_frame_arrays(
+    path: str,
+    specs: list[tuple[int, int, int]],
+    scale: float,
+    atoms: tuple[int, int] = ALL_ATOMS,
+):
+    """Yield (frame_id, xyz (m, 3) float32) for the given frame specs,
+    holding the ``atoms`` span; lines after it are not read."""
     import numpy as np
 
     with _open(path) as f:
         for fid, offset, n in specs:
+            lo, stop = atom_range(atoms, n)
             f.seek(offset)
             f.readline()  # n_atoms
             f.readline()  # comment
             rows = []
-            for _ in range(n):
+            for _ in range(stop):
                 parts = f.readline().split()
                 if len(parts) < 4:
                     # short/truncated atom line: the documented
@@ -84,7 +91,7 @@ def _decode_frame_arrays(path: str, specs: list[tuple[int, int, int]], scale: fl
                     )
                 rows.append(parts[1:4])
             # parse + scale in float64, then narrow once to FLOAT
-            xyz = (np.array(rows, dtype=np.float64) * scale).astype(np.float32)
+            xyz = (np.array(rows[lo:], dtype=np.float64).reshape(-1, 3) * scale).astype(np.float32)
             yield fid, xyz
 
 
@@ -92,12 +99,12 @@ def plan_chunks(path: str, chunks: int) -> list[list[tuple[int, int, int]]]:
     return chunk_list(index_xyz(path), chunks)
 
 
-def decode_chunk(path: str, specs: list[tuple[int, int, int]]):
-    return _decode_frame_arrays(path, specs, ANGSTROM_TO_NM)
+def decode_chunk(path: str, specs: list[tuple[int, int, int]], atoms: tuple[int, int]):
+    return _decode_frame_arrays(path, specs, ANGSTROM_TO_NM, atoms)
 
 
 def load_xyz(spark: SparkSession, path: str, chunks: int = 10) -> Trajectory:
     """Load an .xyz text trajectory as a Trajectory (lazy scan via
     the shared frame-chunk source; time falls back to synthetic frame
     numbering — reference S8, core/dask_traj.py:267-273)."""
-    return Trajectory(scan_frames(spark, "xyz", path, chunks))
+    return Trajectory(scan_frames(spark, "xyz", path, chunks), packed=True)

@@ -14,11 +14,13 @@ Scale notes (100 TB posture):
   per-atom dimensions.
 - ``frame_packed()`` lays coords out frame-contiguous and
   (frame_id, atom_id)-sorted per partition: one range shuffle, free
-  when the trajectory is ``packed=True``. It is the feed of every
-  vectorized geometry op, which then runs partition-local. Cache it
-  when running >1 op.
+  when the trajectory is ``packed=True`` — every trajectory loaded
+  from a file is, as its scan's chunks already hold whole sorted
+  frames. It is the feed of every vectorized geometry op, which then
+  runs partition-local. Cache it when running >1 op.
 - slicing/striding are pure frame_id predicates → partition pruning
-  against a frame-range-partitioned Parquet layout.
+  against a frame-range-partitioned Parquet layout, and chunk and
+  frame pruning in a file scan.
 """
 
 from __future__ import annotations
@@ -83,10 +85,15 @@ class Trajectory:
         self.spark = coords.sparkSession
         #: packed=True asserts the coords layout contract: every
         #: partition holds only WHOLE frames, rows sorted by
-        #: (frame_id, atom_id) — e.g. read from frame-bucketed
-        #: parquet or generated per-frame. Lets the vectorized
-        #: geometry path skip its one shuffle. Violations surface as
-        #: a clear error in the kernel's frame-block check.
+        #: (frame_id, atom_id) — e.g. a file scan (``scan_frames``:
+        #: one chunk of whole frames per partition, which every
+        #: loader marks packed), frame-bucketed parquet or per-frame
+        #: generation. Lets the vectorized geometry path skip its one
+        #: shuffle. Derived trajectories (``select_frames``,
+        #: ``atom_slice``, ``join``) and ``load_tables`` (a Parquet
+        #: split can cut a frame) are not packed. Violations surface
+        #: as a clear error in the kernel's frame-block check
+        #: (descending frame ids, unequal atom counts).
         self.packed = packed
         self.index = index
 
@@ -181,10 +188,14 @@ class Trajectory:
         (frames, atoms, 3) numpy blocks for the kernels.
 
         Costs one range-shuffle + in-partition sort, unless the
-        trajectory was constructed with ``packed=True`` (frame-sorted
-        parquet / ordered generation), in which case it is free.
-        Memoized; ``traj.frame_packed().cache()`` before running
-        several geometry ops.
+        trajectory was constructed with ``packed=True`` (a loaded
+        file, frame-sorted parquet, ordered generation), in which
+        case it is the coords themselves: a loaded file's geometry
+        query is then one stage (scan → filter → ``mapInPandas``,
+        one job), over a scan the operator's atom selection cut to
+        the atoms it reads (``sources._arrow.select_ids``). Memoized;
+        ``traj.frame_packed().cache()`` before running several
+        geometry ops.
 
         At 100 TB this is the layout the storage should already have:
         parquet bucketed/sorted by frame ranges makes every geometry
@@ -218,7 +229,12 @@ class Trajectory:
 
     def select_frames(self, frame_ids: list[int]) -> "Trajectory":
         """Keep exactly these frames, renumbered to 0..len-1 in the
-        given order (supports reversal)."""
+        given order (supports reversal). A literal ``frame_id``
+        predicate (BETWEEN, plus IN for sparse ids) goes before the
+        broadcast join, so a file scan decodes only the chunks and
+        frames it admits and Parquet prunes on it."""
+        from dask_traj_spark.sources._arrow import LITERAL_IDS_MAX, select_ids
+
         spark = self.spark
         mapping = spark.createDataFrame(
             [(int(f), i) for i, f in enumerate(frame_ids)],
@@ -229,6 +245,8 @@ class Trajectory:
         def remap(df: DataFrame | None) -> DataFrame | None:
             if df is None:
                 return None
+            if len(frame_ids):
+                df = select_ids(df, "frame_id", frame_ids, LITERAL_IDS_MAX)
             return (
                 df.join(b, "frame_id")
                 .drop("frame_id")

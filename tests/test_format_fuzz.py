@@ -45,6 +45,7 @@ def fixtures(tmp_path_factory):
     from dask_traj_spark.sources import trr as T
     from dask_traj_spark.sources import xtc as X
     from dask_traj_spark.sources import xyz as XY
+    from dask_traj_spark.sources._arrow import ALL_ATOMS
 
     td = tmp_path_factory.mktemp("fmt_fuzz")
     rng = np.random.default_rng(5)
@@ -125,17 +126,17 @@ def fixtures(tmp_path_factory):
 
     def read_gro(p):
         list(G.decode_chunk(
-            p, [(f, o, n) for f, o, n, _t, _b in G.index_gro(p)]
+            p, [(f, o, n) for f, o, n, _t, _b in G.index_gro(p)], ALL_ATOMS
         ))
 
     def read_lmp(p):
         list(L.decode_chunk(
-            p, [(f, o, n, c) for f, o, n, _s, _b, c in L.index_lammpstrj(p)]
+            p, [(f, o, n, c) for f, o, n, _s, _b, c in L.index_lammpstrj(p)], ALL_ATOMS
         ))
 
     def read_arc(p):
         list(R.decode_chunk(
-            p, [(f, o, n) for f, o, n, _b in R.index_arc(p)]
+            p, [(f, o, n) for f, o, n, _b in R.index_arc(p)], ALL_ATOMS
         ))
 
     def read_rst(p):

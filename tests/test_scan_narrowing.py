@@ -1,0 +1,277 @@
+"""Frame-packed, atom-cut file scans.
+
+A loaded trajectory's coords are one ``trajframes`` scan whose
+partitions hold whole frames in (frame_id, atom_id) order, so it is
+built ``packed=True`` and a vectorized geometry query on it is one
+stage. ``select_ids`` — the atom and frame selection of every
+operator and of ``select_frames`` — re-opens a bare scan cut to the
+ids' atom span or frames, so XTC decodes no atom past the span and
+the fixed-stride formats read only its bytes. These tests pin that a
+cut scan returns the rows of the full scan, reads only the cut, and
+that the packed plan holds no shuffle.
+"""
+
+from __future__ import annotations
+
+import ast
+import itertools
+import os
+import struct
+import subprocess
+import sys
+import textwrap
+
+import numpy as np
+import pytest
+
+from dask_traj_spark.operators.distance import compute_distances
+from dask_traj_spark.sources._arrow import ALL_ATOMS, select_ids
+from dask_traj_spark.sources.loaders import load
+from dask_traj_spark.trajectory import Trajectory
+from tests.test_frame_index import INDEXED_FORMATS, N_ATOMS, N_FRAMES, written  # noqa: F401
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+#: prefix, mid-range, sparse In list, single atom
+SELECTIONS = {
+    "prefix": list(range(5)),
+    "mid": list(range(3, 9)),
+    "listed": [1, 5, 9],
+    "single": [7],
+}
+
+
+def _walk(node, out):
+    cls = node.getClass().getSimpleName()
+    out.append(node)
+    if cls == "AdaptiveSparkPlanExec":
+        return _walk(node.executedPlan(), out)
+    if cls.endswith("QueryStageExec"):
+        return _walk(node.plan(), out)
+    ch = node.children()
+    for i in range(ch.size()):
+        _walk(ch.apply(i), out)
+    return out
+
+
+def _scan_rows(df) -> int:
+    """Rows the file scan of an executed DataFrame emitted."""
+    scans = [
+        n for n in _walk(df._jdf.queryExecution().executedPlan(), [])
+        if n.getClass().getSimpleName() == "BatchScanExec"
+    ]
+    assert len(scans) == 1, [n.getClass().getSimpleName() for n in scans]
+    return int(scans[0].metrics().get("numOutputRows").get().value())
+
+
+def _rows(pdf) -> np.ndarray:
+    cols = pdf[["frame_id", "atom_id", "x", "y", "z"]]
+    return cols.sort_values(["frame_id", "atom_id"]).to_numpy()
+
+
+@pytest.mark.parametrize("ext", INDEXED_FORMATS)
+@pytest.mark.parametrize("sel", list(SELECTIONS))
+def test_cut_scan_equals_full_scan(spark, written, ext, sel):  # noqa: F811
+    ids = SELECTIONS[sel]
+    traj = load(spark, written[ext])
+    full = traj.coords.toPandas()
+    want = _rows(full[full["atom_id"].isin(ids)])
+    cut = select_ids(traj.coords, "atom_id", ids)
+    pdf = cut.toPandas()
+    got = _rows(pdf)
+    assert got.shape == (N_FRAMES * len(ids), 5)
+    # bit-equal: the cut scan decodes the same float32 values
+    np.testing.assert_array_equal(got, want)
+    cut.collect()
+    assert _scan_rows(cut) == N_FRAMES * (max(ids) - min(ids) + 1)
+
+
+@pytest.mark.parametrize("ext", INDEXED_FORMATS)
+def test_decode_chunk_span_is_a_slice_of_the_full_decode(written, ext):
+    from dask_traj_spark.sources._arrow import _format_module
+
+    mod = _format_module({".nc": "netcdf3", ".h5": "hdf5"}.get(ext, ext[1:]))
+    (payload, *_) = mod.plan_chunks(written[ext], N_FRAMES)
+    full = dict(mod.decode_chunk(written[ext], payload, ALL_ATOMS))
+    for lo, hi in ((0, 4), (3, 8), (7, 7), (N_ATOMS - 2, N_ATOMS + 5), (N_ATOMS, N_ATOMS + 3)):
+        part = dict(mod.decode_chunk(written[ext], payload, (lo, hi)))
+        assert part.keys() == full.keys()
+        for fid, xyz in part.items():
+            np.testing.assert_array_equal(xyz, full[fid][lo : hi + 1])
+
+
+@pytest.fixture(scope="module")
+def xtc_path(tmp_path_factory):
+    from dask_traj_spark.sources.xtc import _write_xtc_file
+    from tests.golden import box_vectors_from_lengths_angles
+
+    rng = np.random.default_rng(17)
+    xyz = rng.uniform(0, 3, (6, 24, 3)).astype(np.float32)
+    box = np.tile(box_vectors_from_lengths_angles(3.0, 3.0, 3.0, 90.0, 90.0, 90.0), (6, 1, 1))
+    path = str(tmp_path_factory.mktemp("scan_cut") / "t.xtc")
+    _write_xtc_file(path, xyz, np.arange(6, dtype=np.float64), box)
+    return path
+
+
+@pytest.mark.parametrize("ext", [".xtc", ".dcd"])
+def test_select_frames_prunes_the_scan(spark, written, ext):  # noqa: F811
+    """A spec-list payload (XTC) keeps exactly the listed frames; a
+    frame-range payload (DCD) keeps the span of them."""
+    traj = load(spark, written[ext], chunks=4)
+    picked = traj.select_frames([3, 1])
+    full = traj.coords.toPandas()
+    want = full[full["frame_id"].isin([3, 1])].copy()
+    want["frame_id"] = want["frame_id"].map({3: 0, 1: 1})
+    np.testing.assert_array_equal(_rows(picked.coords.toPandas()), _rows(want))
+    picked.coords.collect()
+    read_frames = 2 if ext == ".xtc" else 3
+    assert _scan_rows(picked.coords) == read_frames * N_ATOMS
+
+
+def test_slice_frames_reads_only_the_slice(spark, xtc_path):
+    traj = load(spark, xtc_path, chunks=2)
+    sliced = traj.slice_frames(2, 5)
+    sliced.coords.collect()
+    assert _scan_rows(sliced.coords) == 3 * 24
+    assert sorted(r.frame_id for r in sliced.coords.select("frame_id").distinct().collect()) == [0, 1, 2]
+
+
+def test_loaded_xtc_query_is_one_stage_and_one_job(spark, xtc_path):
+    sc = spark.sparkContext
+    traj = load(spark, xtc_path, chunks=2)
+    assert traj.packed
+    pairs = list(itertools.combinations(range(4, 14), 2))
+    d = compute_distances(traj, pairs, periodic=True, form="vectorized")
+    sc.setJobGroup("packed_scan", "packed scan")
+    try:
+        d.write.format("noop").mode("overwrite").save()
+        assert len(sc.statusTracker().getJobIdsForGroup("packed_scan")) == 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    got = d.collect()
+    plan = d._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "Sort" not in plan, plan
+    assert _scan_rows(d) == 6 * 10  # only atoms 4..13 leave the scan
+    unpacked = Trajectory(traj.coords, traj._frames, traj.unitcell, packed=False, index=traj.index)
+    ref = compute_distances(unpacked, pairs, periodic=True, form="vectorized").collect()
+    assert "Exchange" in compute_distances(
+        unpacked, pairs, periodic=True, form="vectorized"
+    )._jdf.queryExecution().executedPlan().toString()
+    key = lambda r: (r.frame_id, r.pair_id)  # noqa: E731
+    got, ref = sorted(got, key=key), sorted(ref, key=key)
+    assert [key(r) for r in got] == [key(r) for r in ref]
+    a = np.array([r.dist for r in got], dtype=np.float32)
+    b = np.array([r.dist for r in ref], dtype=np.float32)
+    np.testing.assert_array_equal(a.view(np.uint32), b.view(np.uint32))
+
+
+def test_sql_form_self_join_on_a_loaded_file(spark, xtc_path):
+    """Each role of the SQL form's self-join cuts its own scan; the
+    result matches the vectorized form's."""
+    traj = load(spark, xtc_path, chunks=2)
+    pairs = [(0, 20), (3, 4), (11, 2)]
+    key = lambda r: (r.frame_id, r.pair_id)  # noqa: E731
+    sql = sorted(compute_distances(traj, pairs, periodic=False, form="sql").collect(), key=key)
+    vec = sorted(compute_distances(traj, pairs, periodic=False, form="vectorized").collect(), key=key)
+    assert len(sql) == 6 * len(pairs)
+    np.testing.assert_allclose([r.dist for r in sql], [r.dist for r in vec], rtol=1e-6)
+    assert traj.coords.count() == 6 * 24
+
+
+def test_descending_frame_ids_in_a_packed_partition_raise(spark):
+    from pyspark.errors import PythonException
+
+    rows = [(f, a, float(a), 0.0, 0.0) for f in (1, 0) for a in range(3)]
+    coords = spark.createDataFrame(
+        rows, "frame_id long, atom_id int, x float, y float, z float"
+    ).coalesce(1)
+    traj = Trajectory(coords, packed=True)
+    with pytest.raises(PythonException, match="not ascending"):
+        compute_distances(traj, [(0, 1)], periodic=False, form="vectorized", n_atoms=3).collect()
+
+
+# ---- what a cut XTC scan validates -------------------------------------
+
+#: magic, natoms, step, time, box, natoms, precision, minint, maxint, smallidx
+_XTC_HEAD = 4 * 4 + 36 + 4 + 4 + 12 + 12 + 4
+
+
+@pytest.fixture(scope="module")
+def short_stream_xtc(tmp_path_factory):
+    """One 60-atom frame whose bit stream is cut to half its bytes,
+    the frame's byte count rewritten to match: atoms of the first
+    half decode, the stream runs out in the second."""
+    from dask_traj_spark.sources.xtc import _write_xtc_file
+
+    rng = np.random.default_rng(23)
+    d = tmp_path_factory.mktemp("xtc_short")
+    good = str(d / "good.xtc")
+    _write_xtc_file(good, rng.uniform(0, 3, (1, 60, 3)).astype(np.float32), None, None)
+    with open(good, "rb") as fh:
+        raw = fh.read()
+    (nbytes,) = struct.unpack(">i", raw[_XTC_HEAD : _XTC_HEAD + 4])
+    keep = nbytes // 2
+    data = raw[_XTC_HEAD + 4 : _XTC_HEAD + 4 + keep]
+    path = str(d / "short.xtc")
+    with open(path, "wb") as fh:
+        fh.write(raw[:_XTC_HEAD] + struct.pack(">i", keep) + data + b"\0" * (-keep % 4))
+    return good, path
+
+
+def test_cut_xtc_scan_validates_the_prefix_it_decodes(short_stream_xtc):
+    from dask_traj_spark.sources import xtc as X
+
+    good, short = short_stream_xtc
+    (payload,) = X.plan_chunks(short, 10)
+    (_fid, ok), = X.decode_chunk(short, payload, (0, 4))
+    (_fid, want), = X.decode_chunk(good, X.plan_chunks(good, 10)[0], (0, 4))
+    np.testing.assert_array_equal(ok, want)
+    # corrupt before hi: the cut scan still decodes into the fault
+    with pytest.raises(ValueError, match="corrupt XTC"):
+        list(X.decode_chunk(short, payload, (40, 50)))
+    # an uncut scan reaches the fault past any span
+    with pytest.raises(ValueError, match="corrupt XTC"):
+        list(X.decode_chunk(short, payload, ALL_ATOMS))
+
+
+def test_cut_xtc_scan_errors_reach_the_query(spark, short_stream_xtc):
+    from pyspark.errors import PythonException
+
+    _good, short = short_stream_xtc
+    traj = load(spark, short)
+    assert compute_distances(traj, [(0, 4), (1, 2)], periodic=False, form="vectorized").count() == 2
+    with pytest.raises(PythonException, match="corrupt XTC"):
+        compute_distances(traj, [(0, 55), (1, 2)], periodic=False, form="vectorized").collect()
+    with pytest.raises(PythonException, match="corrupt XTC"):
+        traj.coords.count()
+
+
+def test_bare_session_loads_and_queries_a_file(spark, xtc_path):
+    """A session built without ``get_spark`` runs a cut scan: the
+    scan needs no session setting of its own."""
+    pairs = list(itertools.combinations(range(6), 2))
+    code = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {ROOT!r})
+        from pyspark.sql import SparkSession
+        from dask_traj_spark.operators.distance import compute_distances
+        from dask_traj_spark.sources.xtc import load_xtc
+
+        spark = SparkSession.builder.master("local[1]").getOrCreate()
+        d = compute_distances(load_xtc(spark, {xtc_path!r}), {pairs!r}, form="vectorized")
+        rows = sorted((r.frame_id, r.pair_id, r.dist) for r in d.collect())
+        spark.stop()
+        print("ROWS", rows)
+        """
+    )
+    env = dict(os.environ, PYTHONPATH=ROOT, PYSPARK_PYTHON=sys.executable)
+    r = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, timeout=300, env=env
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    line = [ln for ln in r.stdout.splitlines() if ln.startswith("ROWS")][-1]
+    got = ast.literal_eval(line[len("ROWS "):])
+    d = compute_distances(load(spark, xtc_path), pairs, form="vectorized")
+    want = sorted((r.frame_id, r.pair_id, r.dist) for r in d.collect())
+    assert got == want
