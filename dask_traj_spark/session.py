@@ -75,7 +75,7 @@ def get_spark(
     if shuffle_partitions is None and cpus:
         shuffle_partitions = int(cpus)
 
-    # Python workers (UDFs, Python DataSources) unpickle classes from
+    # Python workers (UDFs, the file scans' decode) unpickle classes from
     # this package in separate processes; make sure they can import it
     # even when the driver script added the repo to sys.path manually.
     pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

@@ -1,17 +1,19 @@
-"""The one chunked-frame DataSource every trajectory format reads through.
+"""The one chunked-frame scan every trajectory format reads through.
 
 The reference's loader is one idea (core/dask_traj.py:103-140,
 329-361): index a file's frames, cut the index into chunks, decode
-each chunk lazily. Here that idea is a single Spark 4 Python
-DataSource, ``trajframes``, whose ``format`` option names a format
-module in this package. A format module supplies two functions:
+each chunk lazily. Here the driver makes the chunk plan once per
+load (:func:`scan_frames`), and the scan is ``spark.range`` over the
+chunk ids feeding one ``mapInArrow`` that decodes each chunk through
+a format module of this package. A format module supplies two
+functions:
 
-- ``plan_chunks(path, chunks) -> list[payload]`` runs at planning
-  time and returns one picklable payload per frame-chunk: either a
-  list of per-frame specs, each a tuple whose first item is the
-  frame id (byte offsets for scanned text/XTC formats,
-  :func:`chunk_list`), or a ``(start, count)`` frame range for
-  fixed-stride formats (:func:`chunk_range`);
+- ``plan_chunks(path, chunks) -> list[payload]`` runs on the driver
+  and returns one picklable payload per frame-chunk: either a list
+  of per-frame specs, each a tuple whose first item is the frame id
+  (byte offsets for scanned text/XTC formats, :func:`chunk_list`),
+  or a ``(start, count)`` frame range for fixed-stride formats
+  (:func:`chunk_range`);
 - ``decode_chunk(path, payload, atoms) -> Iterator[(frame_id, xyz)]``
   runs in the scan task and yields each frame of its chunk as an
   ``(m, 3)`` array in nm holding only the atoms of the inclusive
@@ -19,17 +21,23 @@ module in this package. A format module supplies two functions:
   of the frame's ``n`` (:func:`atom_range` clips the span). An
   unfiltered scan passes :data:`ALL_ATOMS`.
 
-A scan can be cut to an atom span and to a set of frames
-(:func:`scan_frames`' ``atoms``/``frames``/``frame_ids``, carried
-as source options): the atom span is the ``atoms`` every
-``decode_chunk`` call gets, so XTC stops its bit-stream loop after
-atom ``hi`` and the fixed-stride formats read only that byte span;
-the frames drop whole chunks, and the frames of a spec-list payload
-(the frame range of a ``(start, count)`` one) that are not asked
-for. :func:`select_ids` — the one atom or frame selection every
-operator and ``select_frames`` use — makes that cut when its input
-is a bare file scan, and keeps its literal predicate over the cut
-scan, so a format that returns a superset stays exact.
+A ``mapInArrow`` over a ``range`` is planned in the JVM, so a query
+on a loaded file starts no Python worker before its decode tasks; a
+Python DataSource would cost every query two worker round trips to
+build the source and plan its partitions (~0.25 s each on a 4-core
+host).
+
+A scan can be cut to an atom span and to a set of frames: the atom
+span is the ``atoms`` every ``decode_chunk`` call gets, so XTC stops
+its bit-stream loop after atom ``hi`` and the fixed-stride formats
+read only that byte span; the frames drop whole chunks, and the
+frames of a spec-list payload (the frame range of a ``(start,
+count)`` one) that are not asked for. :func:`select_ids` — the one
+atom or frame selection every operator, ``select_frames`` and
+``atom_slice`` use — makes that cut when its input is a bare file
+scan, from the plan the scan already holds, and keeps its literal
+predicate over the cut scan, so a format that returns a superset
+stays exact.
 
 A scan partition is one chunk: whole frames in (frame_id, atom_id)
 order, the ``packed=True`` contract of :class:`Trajectory`, so the
@@ -39,7 +47,7 @@ Loaders call :func:`scan_frames`, or :func:`load_indexed` when the
 driver already indexed the file's frames; every writer goes the
 other way through :func:`gather_host`. Every format shares one output
 schema ``(frame_id long, atom_id int, x float, y float, z float)``,
-and ``read()`` yields ``pyarrow.RecordBatch`` objects instead of
+and the decode yields ``pyarrow.RecordBatch`` objects instead of
 per-row tuples: for a frame of N atoms that replaces N tuple
 constructions + N row pickles with one columnar hand-off (zero-copy
 into the JVM via Arrow IPC). Batches hold ~``rows_per_batch`` rows
@@ -55,7 +63,6 @@ from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from dask_traj_spark.operators.mic import BOX_COLS
 from dask_traj_spark.operators.unitcell import lengths_angles_np
@@ -67,10 +74,8 @@ _CELL_COLS = ["a", "b", "c", "alpha", "beta", "gamma"]
 _CELL_SCHEMA = "frame_id long, " + ", ".join(f"{c} float" for c in _CELL_COLS)
 _COORDS_SCHEMA = "frame_id long, atom_id int, x float, y float, z float"
 
-#: an inclusive (lo, hi) id span no predicate has narrowed
-_OPEN = (-(2**63), 2**63 - 1)
 #: the atom span of an unfiltered scan
-ALL_ATOMS = (0, _OPEN[1])
+ALL_ATOMS = (0, 2**63 - 1)
 
 
 def atom_range(atoms: tuple[int, int], n: int) -> tuple[int, int]:
@@ -140,11 +145,6 @@ def _format_module(fmt: str):
     return importlib.import_module(f"{__package__}.{fmt}")
 
 
-class _Chunk(InputPartition):
-    def __init__(self, payload):
-        self.payload = payload
-
-
 def _narrow(payload, frames: tuple[int, int], listed: frozenset | None):
     """A payload cut to the frames in the span ``frames`` (and in
     ``listed``, unless None), or None when none is left. A
@@ -165,95 +165,46 @@ def _narrow(payload, frames: tuple[int, int], listed: frozenset | None):
     return kept or None
 
 
-def _spans(options) -> tuple[tuple[int, int], tuple[int, int], frozenset | None]:
-    """The atom span, frame span and listed frame ids (None: every
-    frame of the span) a scan's options cut it to."""
+class _Scan(NamedTuple):
+    """The arguments of a bare :func:`scan_frames` DataFrame: the
+    chunk payloads of file ``path`` left after any frame cut, decoded
+    by format module ``fmt`` to the inclusive atom-id span ``atoms``."""
 
-    def span(key, default):
-        v = options.get(key)
-        return tuple(int(x) for x in v.split(",")) if v else default
-
-    lo, hi = span("atoms", ALL_ATOMS)
-    ids = options.get("frame_ids")
-    listed = frozenset(int(x) for x in ids.split(",")) if ids else None
-    return (max(lo, 0), hi), span("frames", _OPEN), listed
-
-
-class _FrameChunkReader(DataSourceReader):
-    # holds the format's name, not its module: the reader is pickled
-    # to the scan tasks and a module object is not picklable
-    def __init__(self, options):
-        self.fmt = options["format"]
-        self.path = options["path"]
-        self.chunks = int(options["chunks"])
-        self.atoms, self.frames, self.listed = _spans(options)
-
-    def partitions(self):
-        plan = _format_module(self.fmt).plan_chunks(self.path, self.chunks)
-        cut = (_narrow(p, self.frames, self.listed) for p in plan)
-        return [_Chunk(p) for p in cut if p]
-
-    def read(self, partition):
-        # no chunk left (an empty file, or every frame cut): Spark
-        # reads one None partition
-        if partition is None:
-            return
-        frames = _format_module(self.fmt).decode_chunk(self.path, partition.payload, self.atoms)
-        yield from frames_to_record_batches(frames, self.atoms[0])
-
-
-class FrameChunkSource(DataSource):
-    """``spark.read.format("trajframes").option("format", m)
-    .option("path", p).option("chunks", N).load()``"""
-
-    @classmethod
-    def name(cls):
-        return "trajframes"
-
-    def schema(self):
-        return _COORDS_SCHEMA
-
-    def reader(self, schema):
-        return _FrameChunkReader(self.options)
+    fmt: str
+    path: str
+    payloads: list
+    atoms: tuple[int, int]
 
 
 def scan_frames(
-    spark: SparkSession,
-    fmt: str,
-    path: str,
-    chunks: int,
-    *,
-    atoms: tuple[int, int] = ALL_ATOMS,
-    frames: tuple[int, int] = _OPEN,
-    frame_ids: Iterable[int] | None = None,
+    spark: SparkSession, fmt: str, path: str, plan: list, atoms: tuple[int, int] = ALL_ATOMS
 ) -> DataFrame:
-    """Lazy coords scan of ``path`` through format module ``fmt``,
-    one partition per chunk of ``chunks`` frames, holding only the
-    atoms of the inclusive span ``atoms`` and the frames of the span
-    ``frames`` (of ``frame_ids`` too, when given). Registers the
-    source when the live JVM session does not know it yet: asking
-    the JVM, not a Python-side flag, tells a stopped session from its
-    successor."""
-    manager = spark._jsparkSession.sessionState().dataSourceManager()
-    if not manager.dataSourceExists(FrameChunkSource.name()):
-        spark.dataSource.register(FrameChunkSource)
-    read = (
-        spark.read.format("trajframes")
-        # a given schema spares load() the Python worker that would
-        # infer it (~0.25 s a call); the source is then instantiated
-        # only when a query plans its scan
-        .schema(_COORDS_SCHEMA)
-        .option("format", fmt)
-        .option("path", path)
-        .option("chunks", str(chunks))
-    )
-    if atoms != ALL_ATOMS:
-        read = read.option("atoms", "%d,%d" % atoms)
-    if frames != _OPEN:
-        read = read.option("frames", "%d,%d" % frames)
-    if frame_ids is not None:
-        read = read.option("frame_ids", ",".join(str(int(i)) for i in frame_ids))
-    return read.load()
+    """Lazy coords scan of ``path`` through format module ``fmt``:
+    partition ``i`` of a ``range`` holds chunk id ``i`` of the chunk
+    plan ``plan`` (the format's ``plan_chunks``, made once per load
+    on the driver) and one ``mapInArrow`` decodes it to the atom span
+    ``atoms``, so a partition is one chunk of whole frames in order.
+    The plan travels in one broadcast, so a task carries only its
+    chunk id. No chunk (an empty file, or every frame cut): an empty
+    DataFrame, which decodes nothing."""
+    n = len(plan)
+    if not n:
+        df = spark.createDataFrame([], _COORDS_SCHEMA)
+    else:
+        payloads = spark.sparkContext.broadcast(plan)
+
+        def decode(batches):
+            mod = _format_module(fmt)
+            for batch in batches:
+                for i in batch.column(0).to_pylist():
+                    frames = mod.decode_chunk(path, payloads.value[i], atoms)
+                    yield from frames_to_record_batches(frames, atoms[0])
+
+        df = spark.range(0, n, 1, n).mapInArrow(decode, _COORDS_SCHEMA)
+    # kept on this DataFrame object only: a derived DataFrame
+    # (``where``, ``select``, a join) is a new object without it
+    df._frame_scan = _Scan(fmt, path, plan, atoms)
+    return df
 
 
 #: id selections up to this many distinct ids become LITERAL scan
@@ -267,15 +218,17 @@ def scan_frames(
 LITERAL_IDS_MAX = 4096
 
 
-def _bare_scan_options(df: DataFrame):
-    """The source options of ``df`` when it is a bare, uncached
+def _bare_scan(df: DataFrame) -> _Scan | None:
+    """What ``df`` reads when it is a bare, uncached
     :func:`scan_frames` DataFrame, else None (a cached scan is read
     from its cache, which a new scan would bypass)."""
-    rel = df._jdf.queryExecution().analyzed()
-    if rel.getClass().getSimpleName() != "DataSourceV2Relation" or rel.name() != "trajframes":
+    # vars(), not getattr: DataFrame.__getattr__ looks a missing
+    # name up in the schema
+    scan = vars(df).get("_frame_scan")
+    if scan is None:
         return None
     level = df.storageLevel
-    return None if level.useMemory or level.useDisk else rel.options()
+    return None if level.useMemory or level.useDisk else scan
 
 
 def select_ids(df: DataFrame, col: str, ids, max_listed: int | None = None) -> DataFrame:
@@ -287,16 +240,10 @@ def select_ids(df: DataFrame, col: str, ids, max_listed: int | None = None) -> D
       sparse — unless there are more than ``max_listed``, which
       leaves the BETWEEN a superset for a later join to make exact.
     - When ``df`` is a bare, uncached :func:`scan_frames` DataFrame,
-      the predicate runs over a new scan of the same file cut to the
-      ids' atom span, or to their frames: XTC then decodes no atom
-      past the span and no frame outside it, a fixed-stride format
-      reads only their bytes.
-
-    The cut rides on the new scan's options, never on Spark's filter
-    pushdown: Spark 4.1 keeps the last pushed reader of a Python
-    data source on its table, so every later scan of the same
-    DataFrame — the other side of a self-join, the next query —
-    would read through it.
+      the predicate runs over a new scan of the same chunk plan cut
+      to the ids' atom span, or to their frames: XTC then decodes no
+      atom past the span and no frame outside it, a fixed-stride
+      format reads only their bytes. The file is not planned again.
     """
     ids = sorted({int(i) for i in ids})
     pred = F.col(col).between(ids[0], ids[-1])
@@ -304,21 +251,16 @@ def select_ids(df: DataFrame, col: str, ids, max_listed: int | None = None) -> D
     listed = sparse and (max_listed is None or len(ids) <= max_listed)
     if listed:
         pred = pred & F.col(col).isin(ids)
-    opts = _bare_scan_options(df)
-    if opts is not None:
-        atoms, frames, had = _spans(opts)
+    scan = _bare_scan(df)
+    if scan is not None:
         if col == "atom_id":
-            atoms = (max(atoms[0], ids[0]), min(atoms[1], ids[-1]))
+            lo, hi = scan.atoms
+            scan = scan._replace(atoms=(max(lo, ids[0]), min(hi, ids[-1])))
         else:
-            frames = (max(frames[0], ids[0]), min(frames[1], ids[-1]))
-            if listed:
-                had = frozenset(ids) if had is None else had & frozenset(ids)
-                if not had:
-                    frames = (1, 0)
-        df = scan_frames(
-            df.sparkSession, opts.get("format"), opts.get("path"), int(opts.get("chunks")),
-            atoms=atoms, frames=frames, frame_ids=None if had is None else sorted(had),
-        )
+            keep = frozenset(ids) if listed else None
+            cut = (_narrow(p, (ids[0], ids[-1]), keep) for p in scan.payloads)
+            scan = scan._replace(payloads=[p for p in cut if p])
+        df = scan_frames(df.sparkSession, *scan)
     return df.where(pred)
 
 
@@ -326,7 +268,7 @@ def load_indexed(
     spark: SparkSession,
     fmt: str,
     path: str,
-    chunks: int,
+    plan: list,
     n_frames: int,
     n_atoms,
     *,
@@ -336,9 +278,10 @@ def load_indexed(
     cell=None,
     topology: DataFrame | None = None,
 ) -> Trajectory:
-    """A :func:`scan_frames` Trajectory whose per-frame tables and
-    :class:`FrameIndex` come from the same driver-side index arrays,
-    so they cannot disagree. Frames are numbered ``0..n_frames-1``.
+    """A :func:`scan_frames` Trajectory of the chunk plan ``plan``
+    whose per-frame tables and :class:`FrameIndex` come from the same
+    driver-side index arrays, so they cannot disagree. Frames are
+    numbered ``0..n_frames-1``; the plan is clipped to them.
 
     - ``time`` (F,) → the ``frames`` table, with ``step`` (F,) or
       the frame ids as steps; None → no ``frames`` table.
@@ -376,7 +319,9 @@ def load_indexed(
         unitcell = spark.createDataFrame([tuple(r) for r in cell], _CELL_SCHEMA)
     counts = np.unique(np.asarray(n_atoms, dtype=np.int64))
     index = FrameIndex(ids, int(counts[0]) if len(counts) == 1 else None, host_box)
-    coords = scan_frames(spark, fmt, path, chunks)
+    # the last (start, count) range may run past the last frame
+    plan = [p for p in (_narrow(p, (0, n_frames - 1), None) for p in plan) if p]
+    coords = scan_frames(spark, fmt, path, plan)
     return Trajectory(coords, frames, unitcell, topology, packed=True, index=index)
 
 

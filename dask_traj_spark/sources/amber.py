@@ -181,7 +181,7 @@ def load_mdcrd(
 
     # text frames are variable-width → decode per chunk via pandas
     # (the file set for this niche format is small; the partitioned
-    # DataSource path of the binary formats applies if ever needed)
+    # chunked scan of the binary formats applies if ever needed)
     boxes = []
     frames_iter = _decode_frames(path, n_atoms, has_box, offsets)
     coord_pdfs = []

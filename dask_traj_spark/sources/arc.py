@@ -100,7 +100,7 @@ def load_arc(spark: SparkSession, path: str, chunks: int = 10) -> Trajectory:
         if b is not None
     ]
     return load_indexed(
-        spark, "arc", path, chunks, len(idx),
+        spark, "arc", path, plan_chunks(path, chunks), len(idx),
         time=np.arange(len(idx), dtype=np.float64),
         n_atoms=[n for _f, _o, n, _b in idx],
         cell=cells or None,

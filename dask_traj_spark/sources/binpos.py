@@ -80,7 +80,7 @@ def load_binpos(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory
     format; time falls back to arange, reference S8)."""
     info = read_info(path)
     return load_indexed(
-        spark, "binpos", path, chunks, info.n_frames,
+        spark, "binpos", path, plan_chunks(path, chunks), info.n_frames,
         time=np.arange(info.n_frames, dtype=np.float64),
         n_atoms=info.n_atoms,
     )

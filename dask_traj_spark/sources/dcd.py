@@ -17,7 +17,7 @@ Fixed frame stride ⇒ byte offsets are computable from the header
 alone, so ``plan_chunks`` needs NO file scan (unlike text XYZ): one
 ``(start, count)`` payload per frame-chunk, decoded by seek — the
 reference's chunked lazy load (core/dask_traj.py:103-140,329-361)
-through the shared frame-chunk DataSource (``_arrow.py``).
+through the shared frame-chunk scan (``_arrow.py``).
 Coordinates are converted Å → nm on read (G11).
 
 Two writers: ``write_dcd`` (driver-side collect → one file, for
@@ -243,7 +243,7 @@ def load_dcd(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory:
     # the header counts plan_chunks and decode_chunk trust; no
     # frames table, as before (the format has no time)
     return load_indexed(
-        spark, "dcd", path, chunks, info.n_frames,
+        spark, "dcd", path, plan_chunks(path, chunks), info.n_frames,
         n_atoms=info.n_atoms,
         cell=read_cells(path) or None,
     )

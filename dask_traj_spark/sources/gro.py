@@ -12,7 +12,7 @@ unitcell_vectors]`` (core/dask_traj.py:49). Frame block layout
 
 Like the XYZ source: one driver index pass records per-frame byte
 offsets (plus time and box, which live in the frame header/footer —
-no coordinate parsing), then the shared frame-chunk DataSource
+no coordinate parsing), then the shared frame-chunk scan
 decodes frame chunks in parallel. GRO is topology-bearing:
 ``load_gro`` attaches the topology parsed from the first frame
 (the reference instead hits an unbound-name bug on topology-bearing
@@ -111,7 +111,7 @@ def load_gro(spark: SparkSession, path: str, chunks: int = 10) -> Trajectory:
 
     fids, _offsets, natoms, times, boxes = zip(*idx)
     return load_indexed(
-        spark, "gro", path, chunks, len(idx),
+        spark, "gro", path, plan_chunks(path, chunks), len(idx),
         # time: from 't=' titles when present, else the arange
         # fallback (reference S8, core/dask_traj.py:267-273)
         time=[float(fid) if t is None else t for fid, t in zip(fids, times)],

@@ -155,7 +155,7 @@ def decode_chunk(path: str, payload: tuple[int, int], atoms: tuple[int, int]):
 
 def load_hdf5(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory:
     """Load an MDTraj HDF5 trajectory. Frame chunks parallelize
-    through the shared frame-chunk source (each task opens the file
+    through the shared frame-chunk scan (each task opens the file
     and slices its own frame range) via the h5py-or-vendored backend
     adapter."""
     with _H5File(path) as f:
@@ -179,7 +179,7 @@ def load_hdf5(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory:
 
     # the dataset shape plan_chunks and decode_chunk trust
     return load_indexed(
-        spark, "hdf5", path, chunks, n_frames,
+        spark, "hdf5", path, plan_chunks(path, chunks), n_frames,
         time=time if time else np.arange(n_frames, dtype=np.float64),
         n_atoms=n_atoms,
         cell=cells,
@@ -198,7 +198,7 @@ def load_lh5(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory:
     adapter as :func:`load_hdf5`."""
     with _H5File(path) as f:
         f.shape("XYZList")  # fail on the driver if the dataset is absent
-    return Trajectory(scan_frames(spark, "hdf5", path, chunks), packed=True)
+    return Trajectory(scan_frames(spark, "hdf5", path, plan_chunks(path, chunks)), packed=True)
 
 
 def write_h5_traj(

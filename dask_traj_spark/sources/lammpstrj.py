@@ -18,7 +18,7 @@ tilted bounds (xy/xz/yz) → triclinic vectors. Scaled coordinates
 (``xs ys zs``) are rejected explicitly.
 
 Index pass records byte offsets (coordinates skipped); decode runs
-in partitions via the shared frame-chunk DataSource (``_arrow.py``).
+in partitions via the shared frame-chunk scan (``_arrow.py``).
 """
 
 from __future__ import annotations
@@ -157,7 +157,7 @@ def load_lammpstrj(spark: SparkSession, path: str, chunks: int = 10) -> Trajecto
         raise ValueError(f"empty lammpstrj file: {path}")
     _fids, _offsets, natoms, steps, boxes, _cols = zip(*idx)
     return load_indexed(
-        spark, "lammpstrj", path, chunks, len(idx),
+        spark, "lammpstrj", path, plan_chunks(path, chunks), len(idx),
         time=steps,
         step=steps,
         n_atoms=natoms,

@@ -12,9 +12,11 @@ column-pruned by the Parquet source itself):
     <dir>/unitcell.parquet    optional
     <dir>/topology.parquet    optional
 
-Trajectory files load through the one chunked-frame Python
-DataSource in ``_arrow.py`` (``scan_frames``; analogous to the
-reference's ``load_chunks`` — core/dask_traj.py:103-140): each
+Trajectory files load through the one chunked-frame scan in
+``_arrow.py`` (``scan_frames``; analogous to the reference's
+``load_chunks`` — core/dask_traj.py:103-140): the driver plans the
+chunks once per load and one ``mapInArrow`` over a ``range`` of chunk
+ids decodes them, so a query plans no Python worker call. Each
 format module supplies only ``plan_chunks`` and ``decode_chunk``.
 ``load`` picks the loader from the extension through the
 ``SUPPORTED_EXTENSIONS`` → ``LOADERS`` tables. Unknown extensions
@@ -155,7 +157,7 @@ def load_multi(
 
     The reference is single-file; at real scale a trajectory is
     always a directory of segment files. Each file keeps its own
-    chunked DataSource scan (per-file partitions ⇒ parallel decode
+    chunked frame scan (per-file partitions ⇒ parallel decode
     across files AND chunks); concatenation is the lazy UNION ALL of
     ``Trajectory.join`` (U1), so nothing materializes here.
     """

@@ -196,7 +196,7 @@ def load_netcdf(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory
     # numrecs and the coordinates shape are what plan_chunks and
     # decode_chunk trust
     return load_indexed(
-        spark, "netcdf3", path, chunks, nc.numrecs,
+        spark, "netcdf3", path, plan_chunks(path, chunks), nc.numrecs,
         time=times,
         n_atoms=nc.vars["coordinates"].shape[0],
         cell=cells,

@@ -217,7 +217,7 @@ def load_trr(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory:
     info = read_info(path)
     meta = list(_read_meta(path, info))
     return load_indexed(
-        spark, "trr", path, chunks, info.n_frames,
+        spark, "trr", path, plan_chunks(path, chunks), info.n_frames,
         time=[t for _f, _s, t, _b, _n in meta],
         step=[s for _f, s, _t, _b, _n in meta],
         n_atoms=[n for _f, _s, _t, _b, n in meta],

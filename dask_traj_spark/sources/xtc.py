@@ -635,13 +635,15 @@ def decode_chunk(path: str, offsets: list[tuple[int, int]], atoms: tuple[int, in
 
 
 def load_xtc(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory:
-    """Load a .xtc trajectory: chunked lazy coords scan via the
-    shared frame-chunk source; frames (step/time), per-frame box and
-    the atom and frame counts come from the driver-side header index
-    (no coordinate decode)."""
+    """Load a .xtc trajectory: chunked lazy coords scan; its chunk
+    plan, frames (step/time), per-frame box and the atom and frame
+    counts all come from one driver-side header index (no coordinate
+    decode)."""
     idx = index_xtc(path)
+    # plan_chunks' plan, from this index: the headers are read once
+    plan = chunk_list([(fi.frame_id, fi.offset) for fi in idx], chunks)
     return load_indexed(
-        spark, "xtc", path, chunks, len(idx),
+        spark, "xtc", path, plan, len(idx),
         time=[fi.time for fi in idx],
         step=[fi.step for fi in idx],
         n_atoms=[fi.natoms for fi in idx],

@@ -3,7 +3,7 @@
 The analog of the reference's chunked lazy loader (S1-S3:
 ``core/dask_traj.py:61-140`` builds one delayed ``read_chunk`` per
 frame-chunk; ``:329-361`` seeks and decodes one chunk), through the
-shared frame-chunk DataSource in ``_arrow.py``:
+shared frame-chunk scan in ``_arrow.py``:
 
 - ``plan_chunks`` → one payload per frame-chunk (the driver scans the
   file once to index frame byte offsets — the equivalent of the
@@ -105,6 +105,6 @@ def decode_chunk(path: str, specs: list[tuple[int, int, int]], atoms: tuple[int,
 
 def load_xyz(spark: SparkSession, path: str, chunks: int = 10) -> Trajectory:
     """Load an .xyz text trajectory as a Trajectory (lazy scan via
-    the shared frame-chunk source; time falls back to synthetic frame
+    the shared frame-chunk scan; time falls back to synthetic frame
     numbering — reference S8, core/dask_traj.py:267-273)."""
-    return Trajectory(scan_frames(spark, "xyz", path, chunks), packed=True)
+    return Trajectory(scan_frames(spark, "xyz", path, plan_chunks(path, chunks)), packed=True)

@@ -86,9 +86,10 @@ class Trajectory:
         #: packed=True asserts the coords layout contract: every
         #: partition holds only WHOLE frames, rows sorted by
         #: (frame_id, atom_id) — e.g. a file scan (``scan_frames``:
-        #: one chunk of whole frames per partition, which every
-        #: loader marks packed), frame-bucketed parquet or per-frame
-        #: generation. Lets the vectorized geometry path skip its one
+        #: a chunk plan made on the driver, then one ``mapInArrow``
+        #: partition per chunk decoding its whole frames in order;
+        #: every loader marks it packed), frame-bucketed parquet or
+        #: per-frame generation. Lets the vectorized geometry path skip its one
         #: shuffle. Derived trajectories (``select_frames``,
         #: ``atom_slice``, ``join``) and ``load_tables`` (a Parquet
         #: split can cut a frame) are not packed. Violations surface
@@ -263,15 +264,22 @@ class Trajectory:
     def atom_slice(self, atom_ids: list[int]) -> "Trajectory":
         """Restrict to a subset of atoms, renumbered densely; rebuilds
         the topology dimension (reference inherits mdtraj's eager
-        atom_slice — exercised at tests/test_dask_traj.py:129)."""
+        atom_slice — exercised at tests/test_dask_traj.py:129). A
+        literal ``atom_id`` predicate goes before the broadcast join,
+        so a file scan decodes only the ids' atom span."""
+        from dask_traj_spark.sources._arrow import LITERAL_IDS_MAX, select_ids
+
         spark = self.spark
         mapping = spark.createDataFrame(
             [(int(a), i) for i, a in enumerate(sorted(atom_ids))],
             "atom_id int, new_atom_id int",
         )
         b = F.broadcast(mapping)
+        coords = self.coords
+        if len(atom_ids):
+            coords = select_ids(coords, "atom_id", atom_ids, LITERAL_IDS_MAX)
         coords = (
-            self.coords.join(b, "atom_id")
+            coords.join(b, "atom_id")
             .drop("atom_id")
             .withColumnRenamed("new_atom_id", "atom_id")
             .select("frame_id", "atom_id", "x", "y", "z")

@@ -204,8 +204,10 @@ def test_geometry_on_loaded_xtc_starts_no_job_before_the_action(spark, xtc_traj_
         assert _jobs(sc, "frame_index_sink")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    plan = d._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("BatchScan") == 1 and "trajframes" in plan.lower(), plan
+    from tests.test_scan_narrowing import _decode_nodes
+
+    plan = d._jdf.queryExecution().executedPlan()
+    assert len(_decode_nodes(plan)) == 1, plan.toString()
 
 
 def test_derived_trajectories_carry_no_index(spark, xtc_traj_path):
@@ -220,35 +222,34 @@ def test_derived_trajectories_carry_no_index(spark, xtc_traj_path):
     assert picked.n_frames == 2 and sliced.n_frames == 6
 
 
-def test_trajframes_registers_once_per_live_session(xtc_traj_path):
-    """Loading twice registers the source once; a fresh session after
-    ``spark.stop()`` registers it again. Runs in a subprocess: the
-    test session must not be stopped."""
+def test_scan_runs_in_every_session_a_process_starts(xtc_traj_path):
+    """A load reads in the session it is given: twice in one session,
+    in a fresh ``get_spark()`` after ``spark.stop()``, and in a bare
+    ``SparkSession.builder`` session, none of which registers a data
+    source. Runs in a subprocess: the test session must not be
+    stopped."""
     code = textwrap.dedent(
         f"""
         import sys
         sys.path.insert(0, {ROOT!r})
-        from pyspark.sql.datasource import DataSourceRegistration
+        from pyspark.sql import SparkSession
         from dask_traj_spark.session import get_spark
         from dask_traj_spark.sources.loaders import load
-
-        calls = []
-        register = DataSourceRegistration.register
-        def counted(self, cls):
-            calls.append(cls.name())
-            return register(self, cls)
-        DataSourceRegistration.register = counted
 
         counts = []
         def load_and_count(spark):
             rows = load(spark, {xtc_traj_path!r}).coords.count()
-            counts.append((len(calls), rows))
+            known = spark._jsparkSession.sessionState().dataSourceManager()
+            counts.append((rows, known.dataSourceExists("trajframes")))
 
         spark = get_spark(master="local[1]", shuffle_partitions=1)
         load_and_count(spark)
         load_and_count(spark)
         spark.stop()
         spark = get_spark(master="local[1]", shuffle_partitions=1)
+        load_and_count(spark)
+        spark.stop()
+        spark = SparkSession.builder.master("local[1]").getOrCreate()
         load_and_count(spark)
         spark.stop()
         print("COUNTS", counts)
@@ -259,5 +260,4 @@ def test_trajframes_registers_once_per_live_session(xtc_traj_path):
     )
     assert r.returncode == 0, r.stderr[-3000:]
     line = [ln for ln in r.stdout.splitlines() if ln.startswith("COUNTS")][-1]
-    assert line == "COUNTS [(1, 120), (1, 120), (2, 120)]", line
-    assert "replaced a previously registered data source" not in r.stderr
+    assert line == "COUNTS " + str([(120, False)] * 4), line

@@ -1,7 +1,8 @@
 """Frame-packed, atom-cut file scans.
 
-A loaded trajectory's coords are one ``trajframes`` scan whose
-partitions hold whole frames in (frame_id, atom_id) order, so it is
+A loaded trajectory's coords are one scan — a ``range`` of chunk ids
+and one ``mapInArrow`` that decodes them — whose partitions hold
+whole frames in (frame_id, atom_id) order, so it is
 built ``packed=True`` and a vectorized geometry query on it is one
 stage. ``select_ids`` — the atom and frame selection of every
 operator and of ``select_frames`` — re-opens a bare scan cut to the
@@ -54,14 +55,29 @@ def _walk(node, out):
     return out
 
 
-def _scan_rows(df) -> int:
-    """Rows the file scan of an executed DataFrame emitted."""
-    scans = [
-        n for n in _walk(df._jdf.queryExecution().executedPlan(), [])
-        if n.getClass().getSimpleName() == "BatchScanExec"
+def _under_codegen(node) -> str:
+    """The class of ``node``, or of the operator a codegen wrapper
+    around it holds."""
+    while node.getClass().getSimpleName() in ("InputAdapter", "WholeStageCodegenExec"):
+        node = node.child()
+    return node.getClass().getSimpleName()
+
+
+def _decode_nodes(plan) -> list:
+    """The file-scan decode nodes of an executed plan: each a
+    ``MapInArrowExec`` whose child is the ``range`` of its chunk ids."""
+    return [
+        n for n in _walk(plan, [])
+        if n.getClass().getSimpleName() == "MapInArrowExec"
+        and _under_codegen(n.child()) == "RangeExec"
     ]
+
+
+def _scan_rows(df) -> int:
+    """Rows the file scan of an executed DataFrame decoded."""
+    scans = _decode_nodes(df._jdf.queryExecution().executedPlan())
     assert len(scans) == 1, [n.getClass().getSimpleName() for n in scans]
-    return int(scans[0].metrics().get("numOutputRows").get().value())
+    return int(scans[0].metrics().get("pythonNumRowsReceived").get().value())
 
 
 def _rows(pdf) -> np.ndarray:
@@ -134,6 +150,72 @@ def test_slice_frames_reads_only_the_slice(spark, xtc_path):
     sliced.coords.collect()
     assert _scan_rows(sliced.coords) == 3 * 24
     assert sorted(r.frame_id for r in sliced.coords.select("frame_id").distinct().collect()) == [0, 1, 2]
+
+
+@pytest.mark.parametrize("ext", [".xtc", ".dcd"])
+def test_atom_slice_cuts_the_scan(spark, written, ext):  # noqa: F811
+    traj = load(spark, written[ext])
+    full = traj.coords.toPandas()
+    want = full[full["atom_id"].between(3, 8)].copy()
+    want["atom_id"] -= 3
+    sliced = traj.atom_slice(range(3, 9))
+    # bit-equal: the cut scan decodes the same float32 values
+    np.testing.assert_array_equal(_rows(sliced.coords.toPandas()), _rows(want))
+    sliced.coords.collect()
+    assert _scan_rows(sliced.coords) == N_FRAMES * 6
+
+
+@pytest.mark.parametrize("ext", [".xtc", ".dcd"])
+def test_selecting_no_frame_decodes_nothing(spark, written, ext):  # noqa: F811
+    picked = load(spark, written[ext]).select_frames([N_FRAMES + 3])
+    assert picked.coords.count() == 0
+    assert _decode_nodes(picked.coords._jdf.queryExecution().executedPlan()) == []
+
+
+def test_empty_file_scans_empty(spark, tmp_path):
+    from dask_traj_spark.sources import xtc as X
+    from dask_traj_spark.sources._arrow import scan_frames
+
+    path = tmp_path / "empty.xtc"
+    path.write_bytes(b"")
+    df = scan_frames(spark, "xtc", str(path), X.plan_chunks(str(path), 10))
+    assert df.count() == 0
+    assert df.columns == ["frame_id", "atom_id", "x", "y", "z"]
+    assert _decode_nodes(df._jdf.queryExecution().executedPlan()) == []
+
+
+def test_one_partition_per_kept_chunk(spark, xtc_path):
+    from pyspark.sql import functions as F
+
+    def partitions(df):
+        rows = df.select(F.spark_partition_id().alias("p"), "frame_id").collect()
+        assert df.rdd.getNumPartitions() == len({r.p for r in rows})
+        out = {}
+        for r in rows:
+            out.setdefault(r.p, []).append(r.frame_id)
+        for fids in out.values():
+            assert fids == sorted(fids)
+        return [sorted(set(f)) for _p, f in sorted(out.items())]
+
+    traj = load(spark, xtc_path, chunks=4)
+    assert partitions(traj.coords) == [[0, 1, 2, 3], [4, 5]]
+    cut = select_ids(traj.coords, "frame_id", [1, 5])
+    assert partitions(cut) == [[1], [5]]
+    assert partitions(select_ids(traj.coords, "frame_id", [4, 5])) == [[4, 5]]
+
+
+def test_only_a_bare_uncached_scan_is_cut(spark, xtc_path):
+    from dask_traj_spark.sources._arrow import _bare_scan
+
+    coords = load(spark, xtc_path).coords
+    assert _bare_scan(coords) is not None
+    for derived in (coords.where("atom_id >= 0"), coords.select("*"), coords.join(coords, "frame_id")):
+        assert _bare_scan(derived) is None
+    coords.cache()
+    try:
+        assert _bare_scan(coords) is None
+    finally:
+        coords.unpersist()
 
 
 def test_loaded_xtc_query_is_one_stage_and_one_job(spark, xtc_path):
