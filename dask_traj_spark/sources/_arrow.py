@@ -1,25 +1,24 @@
-"""The one chunked-frame scan every trajectory format reads through.
+"""The one chunked-frame scan every trajectory file format reads through.
 
-The reference's loader is one idea (core/dask_traj.py:103-140,
+The reference's loader is one idea (core/dask_traj.py:61-140,
 329-361): index a file's frames, cut the index into chunks, decode
-each chunk lazily. Here the driver makes the chunk plan once per
-load (:func:`scan_frames`), and the scan is ``spark.range`` over the
-chunk ids feeding one ``mapInArrow`` that decodes each chunk through
-a format module of this package. A format module supplies two
-functions:
+each chunk lazily. Here that idea is written once. A loader indexes
+its file on the driver (header fields, a text pass, or a fixed-stride
+frame count) and hands the index to :func:`load_indexed`, the one way
+a trajectory file becomes a :class:`Trajectory` and the one place its
+frames are cut into chunks. The scan (:func:`scan_frames`) is
+``spark.range`` over the chunk ids feeding one ``mapInArrow`` that
+decodes each chunk through the format module's only read function:
 
-- ``plan_chunks(path, chunks) -> list[payload]`` runs on the driver
-  and returns one picklable payload per frame-chunk: either a list
-  of per-frame specs, each a tuple whose first item is the frame id
-  (byte offsets for scanned text/XTC formats, :func:`chunk_list`),
-  or a ``(start, count)`` frame range for fixed-stride formats
-  (:func:`chunk_range`);
 - ``decode_chunk(path, payload, atoms) -> Iterator[(frame_id, xyz)]``
   runs in the scan task and yields each frame of its chunk as an
   ``(m, 3)`` array in nm holding only the atoms of the inclusive
   atom-id span ``atoms = (lo, hi)``: atoms ``lo..min(hi, n - 1)``
   of the frame's ``n`` (:func:`atom_range` clips the span). An
-  unfiltered scan passes :data:`ALL_ATOMS`.
+  unfiltered scan passes :data:`ALL_ATOMS`. A payload is either a
+  run of the loader's per-frame specs, each a tuple whose first item
+  is the frame id (byte offsets of a scanned text or XTC file), or a
+  ``(start, count)`` frame range of a fixed-stride format.
 
 A ``mapInArrow`` over a ``range`` is planned in the JVM, so a query
 on a loaded file starts no Python worker before its decode tasks; a
@@ -29,30 +28,27 @@ host).
 
 A scan can be cut to an atom span and to a set of frames: the atom
 span is the ``atoms`` every ``decode_chunk`` call gets, so XTC stops
-its bit-stream loop after atom ``hi`` and the fixed-stride formats
-read only that byte span; the frames drop whole chunks, and the
-frames of a spec-list payload (the frame range of a ``(start,
-count)`` one) that are not asked for. :func:`select_ids` — the one
-atom or frame selection every operator, ``select_frames`` and
-``atom_slice`` use — makes that cut when its input is a bare file
-scan, from the plan the scan already holds, and keeps its literal
-predicate over the cut scan, so a format that returns a superset
-stays exact.
+its bit-stream loop after atom ``hi``, the text formats stop reading
+lines there and the fixed-stride formats read only that byte span;
+the frames drop whole chunks, and the frames of a spec-list payload
+(the frame range of a ``(start, count)`` one) that are not asked for.
+:func:`select_ids` — the one atom or frame selection every operator,
+``select_frames``, ``atom_slice`` and ``join`` use — makes that cut
+when its input is a bare file scan, from the plan the scan already
+holds, and keeps its literal predicate over the cut scan, so a format
+that returns a superset stays exact.
 
 A scan partition is one chunk: whole frames in (frame_id, atom_id)
-order, the ``packed=True`` contract of :class:`Trajectory`, so the
-trajectories :func:`scan_frames` feeds are built packed.
-
-Loaders call :func:`scan_frames`, or :func:`load_indexed` when the
-driver already indexed the file's frames; every writer goes the
-other way through :func:`gather_host`. Every format shares one output
-schema ``(frame_id long, atom_id int, x float, y float, z float)``,
-and the decode yields ``pyarrow.RecordBatch`` objects instead of
-per-row tuples: for a frame of N atoms that replaces N tuple
-constructions + N row pickles with one columnar hand-off (zero-copy
-into the JVM via Arrow IPC). Batches hold ~``rows_per_batch`` rows
-(several frames per batch — Arrow overhead is per-batch, so tiny
-frames are coalesced).
+order, the ``packed=True`` contract of :class:`Trajectory`, so every
+loaded trajectory is packed and carries the :class:`FrameIndex` of
+its driver-side index. Every writer goes the other way through
+:func:`gather_host`. Every format shares one output schema
+``(frame_id long, atom_id int, x float, y float, z float)``, and the
+decode yields ``pyarrow.RecordBatch`` objects instead of per-row
+tuples: for a frame of N atoms that replaces N tuple constructions +
+N row pickles with one columnar hand-off (zero-copy into the JVM via
+Arrow IPC). Batches hold ~``rows_per_batch`` rows (several frames per
+batch — Arrow overhead is per-batch, so tiny frames are coalesced).
 """
 
 from __future__ import annotations
@@ -137,8 +133,9 @@ def chunk_list(items: list, chunks: int) -> list[list]:
 
 
 def chunk_range(n_frames: int, chunks: int) -> list[tuple[int, int]]:
-    """``(start, count)`` payloads for a fixed-stride format."""
-    return [(s, chunks) for s in range(0, n_frames, chunks)]
+    """Cut frames ``0..n_frames-1`` of a fixed-stride format into
+    exact ``(start, count)`` runs of ``chunks``."""
+    return [(s, min(chunks, n_frames - s)) for s in range(0, n_frames, chunks)]
 
 
 def _format_module(fmt: str):
@@ -181,9 +178,10 @@ def scan_frames(
 ) -> DataFrame:
     """Lazy coords scan of ``path`` through format module ``fmt``:
     partition ``i`` of a ``range`` holds chunk id ``i`` of the chunk
-    plan ``plan`` (the format's ``plan_chunks``, made once per load
-    on the driver) and one ``mapInArrow`` decodes it to the atom span
-    ``atoms``, so a partition is one chunk of whole frames in order.
+    plan ``plan`` (cut once per load on the driver by
+    :func:`load_indexed`) and one ``mapInArrow`` decodes it to the
+    atom span ``atoms``, so a partition is one chunk of whole frames
+    in order.
     The plan travels in one broadcast, so a task carries only its
     chunk id. No chunk (an empty file, or every frame cut): an empty
     DataFrame, which decodes nothing."""
@@ -268,26 +266,32 @@ def load_indexed(
     spark: SparkSession,
     fmt: str,
     path: str,
-    plan: list,
-    n_frames: int,
-    n_atoms,
+    frames,
+    chunks: int,
     *,
+    n_atoms,
     time=None,
     step=None,
     box=None,
     cell=None,
     topology: DataFrame | None = None,
 ) -> Trajectory:
-    """A :func:`scan_frames` Trajectory of the chunk plan ``plan``
-    whose per-frame tables and :class:`FrameIndex` come from the same
-    driver-side index arrays, so they cannot disagree. Frames are
-    numbered ``0..n_frames-1``; the plan is clipped to them.
+    """The one way a trajectory file becomes a :class:`Trajectory`: a
+    packed :func:`scan_frames` of format module ``fmt``, whose chunk
+    plan, per-frame tables and :class:`FrameIndex` all come from the
+    loader's own driver-side index, so they cannot disagree.
 
-    - ``time`` (F,) → the ``frames`` table, with ``step`` (F,) or
-      the frame ids as steps; None → no ``frames`` table.
+    - ``frames``: the per-frame specs the loader's index pass built,
+      each a tuple whose first item is the frame id ``0..F-1``, cut
+      into runs of ``chunks`` (:func:`chunk_list`); or, for a
+      fixed-stride format, its frame count F, cut into exact
+      ``(start, count)`` ranges (:func:`chunk_range`). Either way the
+      chunk is ``decode_chunk``'s payload.
     - ``n_atoms``: the per-frame atom counts the index read, or the
       one header count ``decode_chunk`` trusts. Recorded only when
       every frame agrees; otherwise ``Trajectory.n_atoms`` counts.
+    - ``time`` (F,) → the ``frames`` table, with ``step`` (F,) or
+      the frame ids as steps; None → no ``frames`` table.
     - ``box`` (F, 3, 3) vectors in nm → a vector ``unitcell`` table.
       The float32 vectors also become the host-side box, unless a
       frame's lengths or angles are not finite (a zero box), which
@@ -296,14 +300,19 @@ def load_indexed(
       nm and degrees → a lengths/angles ``unitcell`` table, with no
       host-side box.
     """
+    if isinstance(frames, list):
+        n_frames, plan = len(frames), chunk_list(frames, chunks)
+    else:
+        n_frames = int(frames)
+        plan = chunk_range(n_frames, chunks)
     ids = np.arange(n_frames, dtype=np.int64)
-    frames = None
+    frames_df = None
     if time is not None:
         # reshape, not zip: a per-frame array of the wrong length
         # raises instead of silently dropping frames
         times = np.asarray(time, dtype=np.float64).reshape(n_frames)
         steps = ids if step is None else np.asarray(step, dtype=np.int64).reshape(n_frames)
-        frames = spark.createDataFrame(
+        frames_df = spark.createDataFrame(
             list(zip(ids.tolist(), times.tolist(), steps.tolist())), _FRAMES_SCHEMA
         )
     unitcell = host_box = None
@@ -319,10 +328,8 @@ def load_indexed(
         unitcell = spark.createDataFrame([tuple(r) for r in cell], _CELL_SCHEMA)
     counts = np.unique(np.asarray(n_atoms, dtype=np.int64))
     index = FrameIndex(ids, int(counts[0]) if len(counts) == 1 else None, host_box)
-    # the last (start, count) range may run past the last frame
-    plan = [p for p in (_narrow(p, (0, n_frames - 1), None) for p in plan) if p]
     coords = scan_frames(spark, fmt, path, plan)
-    return Trajectory(coords, frames, unitcell, topology, packed=True, index=index)
+    return Trajectory(coords, frames_df, unitcell, topology, packed=True, index=index)
 
 
 class HostFrames(NamedTuple):

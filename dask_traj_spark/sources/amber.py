@@ -23,6 +23,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import SparkSession
 
+from dask_traj_spark.sources._arrow import atom_range, load_indexed
 from dask_traj_spark.trajectory import Trajectory
 
 ANGSTROM_TO_NM = 0.1
@@ -104,54 +105,55 @@ def load_restart(spark: SparkSession, path: str, **_options) -> Trajectory:
 
 
 def index_mdcrd(path: str, n_atoms: int):
-    """→ (has_box, [(frame_id, byte_offset)]). Frame extent is a
-    fixed line count (ceil(3n/10) coord lines [+1 box line]), so one
-    cheap line pass indexes the file; box presence is auto-detected
-    from the first candidate box line (exactly 3 values)."""
-    import os
-
+    """One line pass → (specs [(frame_id, offset, n_atoms)], box
+    lengths [(a, b, c)] in Å, or None for a file without box lines).
+    A frame is ceil(3n/10) coordinate lines [+1 box line]; lines can
+    vary in width, so offsets are read, not computed. Box presence is
+    auto-detected from the first candidate box line (exactly 3
+    values); a trailing partial frame is dropped."""
+    if n_atoms < 1:
+        raise ValueError(f"an mdcrd frame needs n_atoms >= 1, got {n_atoms}")
     coord_lines = (3 * n_atoms + 9) // 10
-    size = os.path.getsize(path)
+    specs: list[tuple[int, int, int]] = []
+    boxes: list[tuple[float, float, float]] = []
+    has_box = None
     with open(path, "rb") as f:
         f.readline()  # title
-        first = f.tell()
-        for _ in range(coord_lines):
-            f.readline()
-        pos = f.tell()
-        nxt = f.readline()
-        has_box = len(nxt.split()) == 3 if nxt else False
-        frame_lines = coord_lines + (1 if has_box else 0)
-        # frames are fixed BYTE stride only if lines are; re-scan
-        # line-wise (text widths can vary) recording offsets
-        f.seek(first)
-        offsets = []
-        fid = 0
-        while f.tell() < size:
-            offsets.append((fid, f.tell()))
-            for _ in range(frame_lines):
-                if not f.readline():
-                    offsets.pop()
+        while True:
+            offset = f.tell()
+            if not all([f.readline() for _ in range(coord_lines)]):
+                break
+            if has_box is None:
+                pos = f.tell()
+                has_box = len(f.readline().split()) == 3
+                f.seek(pos)
+            if has_box:
+                line = f.readline()
+                if not line:
                     break
-            else:
-                fid += 1
-                continue
-            break
-    return has_box, offsets
+                a, b, c = (float(v) for v in line.split()[:3])
+                boxes.append((a, b, c))
+            specs.append((len(specs), offset, n_atoms))
+    return specs, boxes if has_box else None
 
 
-def _decode_frames(path: str, n_atoms: int, has_box: bool, specs):
-    coord_lines = (3 * n_atoms + 9) // 10
+def decode_chunk(path: str, specs, atoms: tuple[int, int]):
+    """specs: [(frame_id, offset, n_atoms)] → yield (frame_id,
+    xyz (m, 3) float32 nm) of the ``atoms`` span; lines after it are
+    not read."""
     with open(path, "rb") as f:
-        for fid, off in specs:
-            f.seek(off)
+        for fid, offset, n in specs:
+            lo, stop = atom_range(atoms, n)
+            f.seek(offset)
             vals: list[float] = []
-            for _ in range(coord_lines):
-                s = f.readline().decode(errors="replace")
-                s = s.rstrip("\n")
+            for _ in range((3 * stop + 9) // 10):
+                s = f.readline().decode(errors="replace").rstrip("\n")
                 vals.extend(
                     float(s[i : i + 8]) for i in range(0, len(s), 8) if s[i : i + 8].strip()
                 )
-            xyz = np.array(vals[: 3 * n_atoms], dtype=np.float64).reshape(n_atoms, 3)
+            if len(vals) < 3 * stop:
+                raise ValueError(f"malformed mdcrd coordinates in frame {fid}")
+            xyz = np.array(vals[3 * lo : 3 * stop], dtype=np.float64).reshape(-1, 3)
             yield fid, (xyz * ANGSTROM_TO_NM).astype(np.float32)
 
 
@@ -162,10 +164,11 @@ def load_mdcrd(
     top: "str | None" = None,
     chunks: int = 100,
 ) -> Trajectory:
-    """AMBER ASCII trajectory. The atom count comes from ``n_atoms=``
-    or a ``top=`` topology file (the format itself has none)."""
-    import pandas as pd
-
+    """AMBER ASCII trajectory: a lazy scan of the one-pass frame
+    index, time = frame number, box lengths (90° angles) from the
+    same pass. The atom count comes from ``n_atoms=`` or a ``top=``
+    topology file (the format itself has none)."""
+    topo = None
     if n_atoms is None:
         if top is None:
             raise ValueError(
@@ -175,54 +178,17 @@ def load_mdcrd(
 
         topo = load_topology(spark, top)
         n_atoms = topo.count()
-    else:
-        topo = None
-    has_box, offsets = index_mdcrd(path, n_atoms)
-
-    # text frames are variable-width → decode per chunk via pandas
-    # (the file set for this niche format is small; the partitioned
-    # chunked scan of the binary formats applies if ever needed)
-    boxes = []
-    frames_iter = _decode_frames(path, n_atoms, has_box, offsets)
-    coord_pdfs = []
-    for fid, xyz in frames_iter:
-        coord_pdfs.append(
-            pd.DataFrame(
-                {
-                    "frame_id": np.full(n_atoms, fid, dtype=np.int64),
-                    "atom_id": np.arange(n_atoms, dtype=np.int32),
-                    "x": xyz[:, 0],
-                    "y": xyz[:, 1],
-                    "z": xyz[:, 2],
-                }
-            )
-        )
-    coords = spark.createDataFrame(
-        pd.concat(coord_pdfs, ignore_index=True),
-        schema="frame_id long, atom_id int, x float, y float, z float",
+    specs, boxes = index_mdcrd(path, n_atoms)
+    cells = None
+    if boxes is not None:
+        cells = [
+            (fid, *(v * ANGSTROM_TO_NM for v in box), 90.0, 90.0, 90.0)
+            for fid, box in enumerate(boxes)
+        ]
+    return load_indexed(
+        spark, "amber", path, specs, chunks,
+        time=np.arange(len(specs), dtype=np.float64),
+        n_atoms=n_atoms,
+        cell=cells,
+        topology=topo,
     )
-    if has_box:
-        coord_lines = (3 * n_atoms + 9) // 10
-        with open(path, "rb") as f:
-            for fid, off in offsets:
-                f.seek(off)
-                for _ in range(coord_lines):
-                    f.readline()
-                a, b, c = (float(v) for v in f.readline().split()[:3])
-                boxes.append((fid, a * ANGSTROM_TO_NM, b * ANGSTROM_TO_NM,
-                              c * ANGSTROM_TO_NM, 90.0, 90.0, 90.0))
-    frames = spark.createDataFrame(
-        [(fid, float(fid), fid) for fid, _off in offsets],
-        "frame_id long, time double, step long",
-    )
-    unitcell = None
-    if boxes:
-        unitcell = spark.createDataFrame(
-            boxes,
-            "frame_id long, a float, b float, c float, "
-            "alpha float, beta float, gamma float",
-        )
-    traj = Trajectory(coords, frames=frames, unitcell=unitcell)
-    if topo is not None:
-        traj.topology = topo
-    return traj

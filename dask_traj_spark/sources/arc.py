@@ -15,7 +15,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import atom_range, chunk_list, load_indexed
+from dask_traj_spark.sources._arrow import atom_range, load_indexed
 from dask_traj_spark.trajectory import Trajectory
 
 ANGSTROM_TO_NM = 0.1
@@ -84,11 +84,6 @@ def decode_chunk(path: str, specs, atoms: tuple[int, int]):
             yield fid, xyz
 
 
-def plan_chunks(path: str, chunks: int) -> list[list[tuple]]:
-    specs = [(f, off, n) for f, off, n, _b in index_arc(path)]
-    return chunk_list(specs, chunks)
-
-
 def load_arc(spark: SparkSession, path: str, chunks: int = 10) -> Trajectory:
     """Load a Tinker .arc trajectory (time = arange fallback, S8)."""
     idx = index_arc(path)
@@ -99,9 +94,10 @@ def load_arc(spark: SparkSession, path: str, chunks: int = 10) -> Trajectory:
         for fid, _o, _n, b in idx
         if b is not None
     ]
+    specs = [(f, off, n) for f, off, n, _b in idx]
     return load_indexed(
-        spark, "arc", path, plan_chunks(path, chunks), len(idx),
+        spark, "arc", path, specs, chunks,
         time=np.arange(len(idx), dtype=np.float64),
-        n_atoms=[n for _f, _o, n, _b in idx],
+        n_atoms=[n for _f, _o, n in specs],
         cell=cells or None,
     )

@@ -15,7 +15,7 @@ import struct
 import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import atom_range, chunk_range, gather_host, load_indexed
+from dask_traj_spark.sources._arrow import atom_range, gather_host, load_indexed
 from dask_traj_spark.trajectory import Trajectory
 
 MAGIC = b"fxyz"
@@ -66,10 +66,6 @@ def write_binpos(traj: Trajectory, path: str) -> None:
             f.write(ang[fid].tobytes())
 
 
-def plan_chunks(path: str, chunks: int) -> list[tuple[int, int]]:
-    return chunk_range(read_info(path).n_frames, chunks)
-
-
 def decode_chunk(path: str, payload: tuple[int, int], atoms: tuple[int, int]):
     start, count = payload
     return _read_frames(path, read_info(path), start, count, atoms)
@@ -80,7 +76,7 @@ def load_binpos(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory
     format; time falls back to arange, reference S8)."""
     info = read_info(path)
     return load_indexed(
-        spark, "binpos", path, plan_chunks(path, chunks), info.n_frames,
+        spark, "binpos", path, info.n_frames, chunks,
         time=np.arange(info.n_frames, dtype=np.float64),
         n_atoms=info.n_atoms,
     )

@@ -14,8 +14,9 @@ is wrapped in 4-byte little-endian length prefix/suffix):
   (all x, all y, all z) in Å.
 
 Fixed frame stride ⇒ byte offsets are computable from the header
-alone, so ``plan_chunks`` needs NO file scan (unlike text XYZ): one
-``(start, count)`` payload per frame-chunk, decoded by seek — the
+alone, so the load needs NO file scan (unlike text XYZ): the header's
+frame count is cut into one ``(start, count)`` payload per
+frame-chunk, decoded by seek — the
 reference's chunked lazy load (core/dask_traj.py:103-140,329-361)
 through the shared frame-chunk scan (``_arrow.py``).
 Coordinates are converted Å → nm on read (G11).
@@ -38,7 +39,6 @@ from pyspark.sql import SparkSession
 from dask_traj_spark.sources._arrow import (
     ALL_ATOMS,
     atom_range,
-    chunk_range,
     gather_host,
     load_indexed,
 )
@@ -225,11 +225,6 @@ def write_dcd(
     _write_dcd_file(path, host.xyz, host.cell, step_interval)
 
 
-def plan_chunks(path: str, chunks: int) -> list[tuple[int, int]]:
-    # header-only planning: offsets are arithmetic, no scan
-    return chunk_range(read_info(path).n_frames, chunks)
-
-
 def decode_chunk(path: str, payload: tuple[int, int], atoms: tuple[int, int]):
     start, count = payload
     return _read_frames(path, read_info(path), start, count, atoms)
@@ -240,10 +235,10 @@ def load_dcd(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory:
     records (tiny: 48 bytes/frame) are indexed driver-side into the
     per-frame unitcell dimension."""
     info = read_info(path)
-    # the header counts plan_chunks and decode_chunk trust; no
-    # frames table, as before (the format has no time)
+    # the header counts decode_chunk trusts; no frames table, as
+    # before (the format has no time)
     return load_indexed(
-        spark, "dcd", path, plan_chunks(path, chunks), info.n_frames,
+        spark, "dcd", path, info.n_frames, chunks,
         n_atoms=info.n_atoms,
         cell=read_cells(path) or None,
     )

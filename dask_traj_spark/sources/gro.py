@@ -24,7 +24,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import atom_range, chunk_list, gather_host, load_indexed
+from dask_traj_spark.sources._arrow import atom_range, gather_host, load_indexed
 from dask_traj_spark.trajectory import Trajectory
 
 
@@ -96,11 +96,6 @@ def decode_chunk(path: str, specs, atoms: tuple[int, int]):
             yield fid, xyz
 
 
-def plan_chunks(path: str, chunks: int) -> list[list[tuple]]:
-    specs = [(f, off, n) for f, off, n, _t, _b in index_gro(path)]
-    return chunk_list(specs, chunks)
-
-
 def load_gro(spark: SparkSession, path: str, chunks: int = 10) -> Trajectory:
     """Load a (multi-frame) .gro file: chunked lazy coords scan,
     driver-side time/box index, topology from the first frame."""
@@ -109,9 +104,9 @@ def load_gro(spark: SparkSession, path: str, chunks: int = 10) -> Trajectory:
         raise ValueError(f"empty GRO file: {path}")
     from dask_traj_spark.sources.topology import load_topology
 
-    fids, _offsets, natoms, times, boxes = zip(*idx)
+    fids, offsets, natoms, times, boxes = zip(*idx)
     return load_indexed(
-        spark, "gro", path, plan_chunks(path, chunks), len(idx),
+        spark, "gro", path, list(zip(fids, offsets, natoms)), chunks,
         # time: from 't=' titles when present, else the arange
         # fallback (reference S8, core/dask_traj.py:267-273)
         time=[float(fid) if t is None else t for fid, t in zip(fids, times)],

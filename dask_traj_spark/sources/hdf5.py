@@ -39,13 +39,7 @@ import json
 import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import (
-    atom_range,
-    chunk_range,
-    gather_host,
-    load_indexed,
-    scan_frames,
-)
+from dask_traj_spark.sources._arrow import atom_range, gather_host, load_indexed
 from dask_traj_spark.trajectory import Trajectory
 
 try:  # pragma: no cover - h5py absent in the test container
@@ -132,19 +126,13 @@ def _coords_name(f) -> str:
     return "coordinates" if "coordinates" in f else "XYZList"
 
 
-def plan_chunks(path: str, chunks: int) -> list[tuple[int, int]]:
-    with _H5File(path) as f:
-        n_frames = f.shape(_coords_name(f))[0]
-    return chunk_range(n_frames, chunks)
-
-
 def decode_chunk(path: str, payload: tuple[int, int], atoms: tuple[int, int]):
     """Slice one frame range, then the ``atoms`` span; LH5's int16
     fixed point is nm × 1000."""
     start, count = payload
     with _H5File(path) as f:
         name = _coords_name(f)
-        xyz = f.read(name, start, min(count, f.shape(name)[0] - start))
+        xyz = f.read(name, start, count)
     lo, stop = atom_range(atoms, xyz.shape[1])
     xyz = xyz[:, lo:stop]
     if name == "XYZList":
@@ -177,9 +165,9 @@ def load_hdf5(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory:
             raw = f._h["topology"][0]
             topo_json = raw.decode() if isinstance(raw, bytes) else str(raw)
 
-    # the dataset shape plan_chunks and decode_chunk trust
+    # the dataset shape decode_chunk trusts
     return load_indexed(
-        spark, "hdf5", path, plan_chunks(path, chunks), n_frames,
+        spark, "hdf5", path, n_frames, chunks,
         time=time if time else np.arange(n_frames, dtype=np.float64),
         n_atoms=n_atoms,
         cell=cells,
@@ -197,8 +185,9 @@ def load_lh5(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory:
     1000. No time, no unit cell. Same chunked scan and backend
     adapter as :func:`load_hdf5`."""
     with _H5File(path) as f:
-        f.shape("XYZList")  # fail on the driver if the dataset is absent
-    return Trajectory(scan_frames(spark, "hdf5", path, plan_chunks(path, chunks)), packed=True)
+        # fails on the driver if the dataset is absent
+        n_frames, n_atoms, _ = f.shape("XYZList")
+    return load_indexed(spark, "hdf5", path, n_frames, chunks, n_atoms=n_atoms)
 
 
 def write_h5_traj(

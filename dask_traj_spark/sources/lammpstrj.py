@@ -26,7 +26,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import atom_range, chunk_list, load_indexed
+from dask_traj_spark.sources._arrow import atom_range, load_indexed
 from dask_traj_spark.trajectory import Trajectory
 
 ANGSTROM_TO_NM = 0.1
@@ -143,11 +143,6 @@ def decode_chunk(path: str, specs, atoms: tuple[int, int]):
             yield fid, (xyz[order] * ANGSTROM_TO_NM).astype(np.float32)
 
 
-def plan_chunks(path: str, chunks: int) -> list[list[tuple]]:
-    specs = [(f, off, n, cols) for f, off, n, _s, _b, cols in index_lammpstrj(path)]
-    return chunk_list(specs, chunks)
-
-
 def load_lammpstrj(spark: SparkSession, path: str, chunks: int = 10) -> Trajectory:
     """Load a .lammpstrj dump: chunked lazy coords scan, box vectors
     (nm) from the bounds lines, step from TIMESTEP (time = step,
@@ -155,9 +150,9 @@ def load_lammpstrj(spark: SparkSession, path: str, chunks: int = 10) -> Trajecto
     idx = index_lammpstrj(path)
     if not idx:
         raise ValueError(f"empty lammpstrj file: {path}")
-    _fids, _offsets, natoms, steps, boxes, _cols = zip(*idx)
+    fids, offsets, natoms, steps, boxes, cols = zip(*idx)
     return load_indexed(
-        spark, "lammpstrj", path, plan_chunks(path, chunks), len(idx),
+        spark, "lammpstrj", path, list(zip(fids, offsets, natoms, cols)), chunks,
         time=steps,
         step=steps,
         n_atoms=natoms,

@@ -12,12 +12,15 @@ column-pruned by the Parquet source itself):
     <dir>/unitcell.parquet    optional
     <dir>/topology.parquet    optional
 
-Trajectory files load through the one chunked-frame scan in
-``_arrow.py`` (``scan_frames``; analogous to the reference's
-``load_chunks`` — core/dask_traj.py:103-140): the driver plans the
-chunks once per load and one ``mapInArrow`` over a ``range`` of chunk
-ids decodes them, so a query plans no Python worker call. Each
-format module supplies only ``plan_chunks`` and ``decode_chunk``.
+Every multi-frame trajectory file loads the same way (analogous to
+the reference's ``load_chunks`` — core/dask_traj.py:103-140): its
+loader indexes the file once on the driver and hands the index to
+``_arrow.load_indexed``, which cuts it into chunks and returns a
+packed ``Trajectory`` with a ``FrameIndex``; one ``mapInArrow`` over
+a ``range`` of chunk ids decodes them, so a query plans no Python
+worker call. A format module supplies only the index pass its loader
+runs and ``decode_chunk``. Single-frame restarts (AMBER restart,
+``.ncrst``) are parsed on the driver.
 ``load`` picks the loader from the extension through the
 ``SUPPORTED_EXTENSIONS`` → ``LOADERS`` tables. Unknown extensions
 raise NotImplementedError exactly like the reference's

@@ -29,7 +29,7 @@ import struct
 import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import atom_range, chunk_range, gather_host, load_indexed
+from dask_traj_spark.sources._arrow import atom_range, gather_host, load_indexed
 from dask_traj_spark.trajectory import Trajectory
 
 ANGSTROM_TO_NM = 0.1
@@ -155,17 +155,12 @@ class NC3File:
         ).reshape(v.shape)
 
 
-def plan_chunks(path: str, chunks: int) -> list[tuple[int, int]]:
-    return chunk_range(NC3File(path).numrecs, chunks)
-
-
 def decode_chunk(path: str, payload: tuple[int, int], atoms: tuple[int, int]):
     start, count = payload
     nc = NC3File(path)
-    end = min(start + count, nc.numrecs)
     rows = atom_range(atoms, nc.vars["coordinates"].shape[0])
     with open(path, "rb") as f:
-        for fid in range(start, end):
+        for fid in range(start, start + count):
             xyz = nc.read_record(f, "coordinates", fid, rows).astype(np.float64)
             yield fid, (xyz * ANGSTROM_TO_NM).astype(np.float32)
 
@@ -193,10 +188,9 @@ def load_netcdf(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory
                 )
                 for r in range(nc.numrecs)
             ]
-    # numrecs and the coordinates shape are what plan_chunks and
-    # decode_chunk trust
+    # numrecs and the coordinates shape are what decode_chunk trusts
     return load_indexed(
-        spark, "netcdf3", path, plan_chunks(path, chunks), nc.numrecs,
+        spark, "netcdf3", path, nc.numrecs, chunks,
         time=times,
         n_atoms=nc.vars["coordinates"].shape[0],
         cell=cells,

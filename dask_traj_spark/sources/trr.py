@@ -28,7 +28,6 @@ from pyspark.sql import SparkSession
 from dask_traj_spark.sources._arrow import (
     ALL_ATOMS,
     atom_range,
-    chunk_range,
     gather_host,
     load_indexed,
 )
@@ -201,10 +200,6 @@ def _write_trr_file(
             f.write(xyz[fid].astype(">f4").tobytes())
 
 
-def plan_chunks(path: str, chunks: int) -> list[tuple[int, int]]:
-    return chunk_range(read_info(path).n_frames, chunks)
-
-
 def decode_chunk(path: str, payload: tuple[int, int], atoms: tuple[int, int]):
     start, count = payload
     for fid, _step, _t, _box, xyz in _read_frames(path, read_info(path), start, count, atoms):
@@ -217,7 +212,7 @@ def load_trr(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory:
     info = read_info(path)
     meta = list(_read_meta(path, info))
     return load_indexed(
-        spark, "trr", path, plan_chunks(path, chunks), info.n_frames,
+        spark, "trr", path, info.n_frames, chunks,
         time=[t for _f, _s, t, _b, _n in meta],
         step=[s for _f, s, _t, _b, _n in meta],
         n_atoms=[n for _f, _s, _t, _b, n in meta],

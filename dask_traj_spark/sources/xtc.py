@@ -20,8 +20,8 @@ a faithful pure-Python implementation of that public algorithm
 
 Frame blocks are variable-length ⇒ ``index_xtc`` scans headers once
 (seek-skip per frame, reading ~60 bytes each) to build the offset
-index; ``plan_chunks`` then gives chunked parallel reads exactly
-like the DCD/XYZ sources. Decoding runs inside partitions —
+index, which ``load_indexed`` cuts into chunks for parallel reads
+exactly like the DCD/XYZ sources. Decoding runs inside partitions —
 parallel across frame-chunks.
 
 ``write_xtc`` emits real delta-run compression
@@ -46,7 +46,6 @@ from pyspark.sql import SparkSession
 from dask_traj_spark.sources._arrow import (
     ALL_ATOMS,
     atom_range,
-    chunk_list,
     gather_host,
     load_indexed,
 )
@@ -620,10 +619,6 @@ def _write_xtc_file(
                 f.write(b"\x00" * pad)
 
 
-def plan_chunks(path: str, chunks: int) -> list[list[tuple[int, int]]]:
-    return chunk_list([(fi.frame_id, fi.offset) for fi in index_xtc(path)], chunks)
-
-
 def decode_chunk(path: str, offsets: list[tuple[int, int]], atoms: tuple[int, int]):
     """Yield (frame_id, xyz of the ``atoms`` span) for
     [(frame_id, byte_offset)]."""
@@ -640,10 +635,8 @@ def load_xtc(spark: SparkSession, path: str, chunks: int = 100) -> Trajectory:
     counts all come from one driver-side header index (no coordinate
     decode)."""
     idx = index_xtc(path)
-    # plan_chunks' plan, from this index: the headers are read once
-    plan = chunk_list([(fi.frame_id, fi.offset) for fi in idx], chunks)
     return load_indexed(
-        spark, "xtc", path, plan, len(idx),
+        spark, "xtc", path, [(fi.frame_id, fi.offset) for fi in idx], chunks,
         time=[fi.time for fi in idx],
         step=[fi.step for fi in idx],
         n_atoms=[fi.natoms for fi in idx],

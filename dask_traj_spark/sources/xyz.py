@@ -5,10 +5,11 @@ The analog of the reference's chunked lazy loader (S1-S3:
 frame-chunk; ``:329-361`` seeks and decodes one chunk), through the
 shared frame-chunk scan in ``_arrow.py``:
 
-- ``plan_chunks`` → one payload per frame-chunk (the driver scans the
-  file once to index frame byte offsets — the equivalent of the
-  reference's eager ``len(f)`` frame count; for cluster-scale files
-  the index would live in a sidecar, the read path is unchanged);
+- ``index_xyz`` → the driver scans the file once to index frame byte
+  offsets and atom counts (the equivalent of the reference's eager
+  ``len(f)`` frame count; for cluster-scale files the index would
+  live in a sidecar, the read path is unchanged), which
+  ``load_indexed`` cuts into chunks;
 - ``decode_chunk`` → seek to the chunk's byte offsets and decode its
   frames.
 
@@ -20,9 +21,10 @@ core/dask_traj.py:241-242).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import SparkSession
 
-from dask_traj_spark.sources._arrow import ALL_ATOMS, atom_range, chunk_list, scan_frames
+from dask_traj_spark.sources._arrow import atom_range, load_indexed
 from dask_traj_spark.trajectory import Trajectory
 
 ANGSTROM_TO_NM = 0.1
@@ -62,16 +64,10 @@ def index_xyz(path: str) -> list[tuple[int, int, int]]:
     return frames
 
 
-def _decode_frame_arrays(
-    path: str,
-    specs: list[tuple[int, int, int]],
-    scale: float,
-    atoms: tuple[int, int] = ALL_ATOMS,
-):
-    """Yield (frame_id, xyz (m, 3) float32) for the given frame specs,
-    holding the ``atoms`` span; lines after it are not read."""
-    import numpy as np
-
+def decode_chunk(path: str, specs: list[tuple[int, int, int]], atoms: tuple[int, int]):
+    """specs: [(frame_id, offset, n_atoms)] → yield (frame_id,
+    xyz (m, 3) float32 nm) of the ``atoms`` span; lines after it are
+    not read."""
     with _open(path) as f:
         for fid, offset, n in specs:
             lo, stop = atom_range(atoms, n)
@@ -91,20 +87,13 @@ def _decode_frame_arrays(
                     )
                 rows.append(parts[1:4])
             # parse + scale in float64, then narrow once to FLOAT
-            xyz = (np.array(rows[lo:], dtype=np.float64).reshape(-1, 3) * scale).astype(np.float32)
+            xyz = (np.array(rows[lo:], dtype=np.float64).reshape(-1, 3) * ANGSTROM_TO_NM).astype(np.float32)
             yield fid, xyz
 
 
-def plan_chunks(path: str, chunks: int) -> list[list[tuple[int, int, int]]]:
-    return chunk_list(index_xyz(path), chunks)
-
-
-def decode_chunk(path: str, specs: list[tuple[int, int, int]], atoms: tuple[int, int]):
-    return _decode_frame_arrays(path, specs, ANGSTROM_TO_NM, atoms)
-
-
 def load_xyz(spark: SparkSession, path: str, chunks: int = 10) -> Trajectory:
-    """Load an .xyz text trajectory as a Trajectory (lazy scan via
-    the shared frame-chunk scan; time falls back to synthetic frame
-    numbering — reference S8, core/dask_traj.py:267-273)."""
-    return Trajectory(scan_frames(spark, "xyz", path, plan_chunks(path, chunks)), packed=True)
+    """Load an .xyz text trajectory as a Trajectory: a lazy scan of
+    the one-pass frame index; time falls back to synthetic frame
+    numbering (reference S8, core/dask_traj.py:267-273)."""
+    specs = index_xyz(path)
+    return load_indexed(spark, "xyz", path, specs, chunks, n_atoms=[n for _f, _o, n in specs])

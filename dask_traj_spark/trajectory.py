@@ -64,9 +64,10 @@ class Trajectory:
     frames : DataFrame(frame_id, time, step) or None
     unitcell : DataFrame(frame_id, a..gamma and/or ax..cz) or None
     topology : DataFrame(atom_id, name, element, mass, ...) or None
-    index : FrameIndex or None — only a loader that built the tables
-        above from its own header index passes one; derived
-        trajectories (slices, joins) carry none and count instead.
+    index : FrameIndex or None — every multi-frame file loader passes
+        the one its driver-side index pass built, with the tables
+        above (``sources._arrow.load_indexed``); derived trajectories
+        (slices, joins) and table loads carry none and count instead.
     """
 
     def __init__(
@@ -113,8 +114,9 @@ class Trajectory:
     def n_atoms(self) -> int:
         if self.index is not None and self.index.n_atoms is not None:
             return self.index.n_atoms
-        # a full countDistinct over coords: for a file source this
-        # decodes every frame
+        # a full countDistinct over coords: only a trajectory without
+        # an index (derived, table-loaded, or a file whose frames
+        # disagree) pays it; for a file scan it decodes every frame
         row = self.coords.agg(F.countDistinct("atom_id").alias("n")).first()
         return int(row["n"])
 
@@ -364,20 +366,8 @@ class Trajectory:
         n_left = self.n_frames
         left = self
         if discard_overlapping_frames:
-            last = self.coords.filter(F.col("frame_id") == n_left - 1)
-            first = other.coords.filter(F.col("frame_id") == 0)
-            mismatch = (
-                last.alias("l")
-                .join(first.alias("r"), "atom_id")
-                .where(
-                    (F.abs(F.col("l.x") - F.col("r.x")) > overlap_atol)
-                    | (F.abs(F.col("l.y") - F.col("r.y")) > overlap_atol)
-                    | (F.abs(F.col("l.z") - F.col("r.z")) > overlap_atol)
-                )
-                .limit(1)
-                .count()
-            )
-            if mismatch == 0:
+            mismatch = self._boundary_mismatch(other, n_left - 1, overlap_atol)
+            if mismatch.limit(1).count() == 0:
                 left = self.slice_frames(0, n_left - 1)
                 n_left -= 1
 
@@ -398,6 +388,21 @@ class Trajectory:
             cat(left._frames, other._frames),
             cat(left.unitcell, other.unitcell),
             self.topology,
+        )
+
+    def _boundary_mismatch(self, other: "Trajectory", last: int, atol: float) -> DataFrame:
+        """The atoms whose coords in frame ``last`` of this trajectory
+        and frame 0 of ``other`` differ by more than ``atol`` nm. Each
+        frame is picked through ``select_ids``, so a file scan decodes
+        only that one frame."""
+        from dask_traj_spark.sources._arrow import select_ids
+
+        a = select_ids(self.coords, "frame_id", [last]).alias("l")
+        b = select_ids(other.coords, "frame_id", [0]).alias("r")
+        return a.join(b, "atom_id").where(
+            (F.abs(F.col("l.x") - F.col("r.x")) > atol)
+            | (F.abs(F.col("l.y") - F.col("r.y")) > atol)
+            | (F.abs(F.col("l.z") - F.col("r.z")) > atol)
         )
 
     # ---- equality / content hash (U2) -------------------------------

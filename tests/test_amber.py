@@ -86,6 +86,13 @@ class TestMdcrd:
         with pytest.raises(ValueError, match="n_atoms"):
             dts.load(spark, path)
 
+    def test_index_rejects_a_frame_without_atoms(self, mdcrd_file):
+        from dask_traj_spark.sources.amber import index_mdcrd
+
+        path, _ = mdcrd_file
+        with pytest.raises(ValueError, match="n_atoms"):
+            index_mdcrd(path, 0)
+
     def test_load_with_pdb_top(self, spark, tmp_path):
         import dask_traj_spark as dts
 

@@ -48,12 +48,13 @@ def test_dcd_round_trip(spark, small_traj, tmp_path):
 
 
 def test_dcd_partitions_are_chunked(spark, small_traj, tmp_path):
-    from dask_traj_spark.sources.dcd import plan_chunks, write_dcd
+    import dask_traj_spark as dts
+    from dask_traj_spark.sources.dcd import write_dcd
 
     traj, _ = small_traj
     path = str(tmp_path / "t.dcd")
     write_dcd(traj, path)
-    parts = plan_chunks(path, 5)
+    parts = dts.load(spark, path, chunks=5).coords._frame_scan.payloads
     assert len(parts) == 3  # 12 frames / 5 per chunk
     assert [start for start, _count in parts] == [0, 5, 10]
 

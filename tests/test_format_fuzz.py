@@ -122,7 +122,7 @@ def fixtures(tmp_path_factory):
         list(T._read_meta(p, info))
 
     def read_xyz(p):
-        list(XY._decode_frame_arrays(p, XY.index_xyz(p), 0.1))
+        list(XY.decode_chunk(p, XY.index_xyz(p), ALL_ATOMS))
 
     def read_gro(p):
         list(G.decode_chunk(
@@ -143,8 +143,8 @@ def fixtures(tmp_path_factory):
         A.read_restart(p)
 
     def read_mdcrd(p):
-        has_box, offsets = A.index_mdcrd(p, na)
-        list(A._decode_frames(p, na, has_box, offsets))
+        specs, _boxes = A.index_mdcrd(p, na)
+        list(A.decode_chunk(p, specs, ALL_ATOMS))
 
     return td, [
         (".xtc", open(px, "rb").read(), read_xtc),

@@ -33,7 +33,14 @@ ANGLES = [(90.0, 90.0, 90.0), (90.0, 90.0, 90.0), (60.0, 60.0, 90.0), (70.0, 80.
 LENGTHS = [(3.0, 3.0, 3.0), (3.1, 2.9, 3.0), (3.0, 3.0, 3.0), (3.2, 3.1, 2.8)]
 
 VECTOR_FORMATS = [".xtc", ".trr", ".gro", ".lammpstrj"]
-INDEXED_FORMATS = VECTOR_FORMATS + [".arc", ".dcd", ".binpos", ".nc", ".h5"]
+INDEXED_FORMATS = VECTOR_FORMATS + [".arc", ".dcd", ".binpos", ".nc", ".h5", ".xyz", ".lh5", ".mdcrd"]
+#: load options a format needs: mdcrd carries no atom count
+LOAD_OPTIONS = {".mdcrd": {"n_atoms": N_ATOMS}}
+
+
+def load_written(spark, written, ext, **options):
+    """``load`` one of the ``written`` files with its format's options."""
+    return load(spark, written[ext], **LOAD_OPTIONS.get(ext, {}), **options)
 
 
 def _lammpstrj(xyz_nm, boxes_nm) -> str:
@@ -59,6 +66,24 @@ def _lammpstrj(xyz_nm, boxes_nm) -> str:
     return "".join(out)
 
 
+def _xyz(xyz_nm) -> str:
+    out = []
+    for f, xyz in enumerate(xyz_nm * 10):
+        out += [f"{len(xyz)}\nframe {f}\n"]
+        out += [f"C {x!r} {y!r} {z!r}\n" for x, y, z in xyz]
+    return "".join(out)
+
+
+def _mdcrd(xyz_nm, lengths_nm) -> str:
+    """10F8.3 coordinate lines, then the box lengths line (Å)."""
+    out = ["title\n"]
+    for xyz, ln in zip(xyz_nm * 10, np.asarray(lengths_nm) * 10):
+        vals = xyz.ravel()
+        out += ["".join(f"{v:8.3f}" for v in vals[i : i + 10]) + "\n" for i in range(0, len(vals), 10)]
+        out += ["".join(f"{v:8.3f}" for v in ln) + "\n"]
+    return "".join(out)
+
+
 def _arc(xyz_nm, lengths_nm, angles) -> str:
     out = []
     for xyz, ln, an in zip(xyz_nm * 10, np.asarray(lengths_nm) * 10, angles):
@@ -73,11 +98,12 @@ def _arc(xyz_nm, lengths_nm, angles) -> str:
 @pytest.fixture(scope="module")
 def written(spark, tmp_path_factory):
     """One small varied-box trajectory, written by each format's own
-    writer (text fixtures for LAMMPS and Tinker, which have none)."""
+    writer (text fixtures for LAMMPS, Tinker, XYZ and mdcrd, which have
+    none)."""
     from dask_traj_spark.sources.binpos import write_binpos
     from dask_traj_spark.sources.dcd import write_dcd
     from dask_traj_spark.sources.gro import write_gro
-    from dask_traj_spark.sources.hdf5 import write_h5_traj
+    from dask_traj_spark.sources.hdf5 import write_h5_traj, write_lh5
     from dask_traj_spark.sources.netcdf3 import write_netcdf
     from dask_traj_spark.sources.trr import write_trr
     from dask_traj_spark.sources.xtc import write_xtc
@@ -93,7 +119,7 @@ def written(spark, tmp_path_factory):
     for ext, write in (
         (".xtc", write_xtc), (".trr", write_trr), (".gro", write_gro),
         (".dcd", write_dcd), (".binpos", write_binpos), (".nc", write_netcdf),
-        (".h5", write_h5_traj),
+        (".h5", write_h5_traj), (".lh5", write_lh5),
     ):
         write(traj, paths[ext])
     boxes = np.stack([box_vectors_from_lengths_angles(*ln, *an) for ln, an in zip(LENGTHS, ANGLES)])
@@ -101,18 +127,57 @@ def written(spark, tmp_path_factory):
         fh.write(_lammpstrj(xyz.astype(np.float64), boxes))
     with open(paths[".arc"], "w") as fh:
         fh.write(_arc(xyz.astype(np.float64), LENGTHS, ANGLES))
+    with open(paths[".xyz"], "w") as fh:
+        fh.write(_xyz(xyz.astype(np.float64)))
+    with open(paths[".mdcrd"], "w") as fh:
+        fh.write(_mdcrd(xyz.astype(np.float64), LENGTHS))
     return paths
 
 
 @pytest.mark.parametrize("ext", INDEXED_FORMATS)
+def test_every_file_format_loads_packed_and_indexed(spark, written, ext):
+    traj = load_written(spark, written, ext)
+    assert traj.packed is True
+    assert traj.index is not None
+    np.testing.assert_array_equal(traj.index.frame_ids, np.arange(N_FRAMES))
+
+
+@pytest.mark.parametrize("ext", INDEXED_FORMATS)
 def test_index_dimensions_equal_counted(spark, written, ext):
-    traj = load(spark, written[ext])
+    traj = load_written(spark, written, ext)
     assert traj.index is not None and traj.index.n_atoms is not None
     counted = Trajectory(traj.coords)
     assert (traj.n_atoms, traj.n_frames) == (counted.n_atoms, counted.n_frames)
     assert (traj.n_atoms, traj.n_frames) == (N_ATOMS, N_FRAMES)
     # only formats that index box vectors carry a host-side box
     assert (traj.index.box is not None) == (ext in VECTOR_FORMATS)
+
+
+@pytest.mark.parametrize(
+    "ext, module, index",
+    [
+        (".gro", "gro", "index_gro"),
+        (".arc", "arc", "index_arc"),
+        (".lammpstrj", "lammpstrj", "index_lammpstrj"),
+        (".mdcrd", "amber", "index_mdcrd"),
+    ],
+)
+def test_text_formats_index_their_file_once_per_load(spark, written, monkeypatch, ext, module, index):
+    """A text loader's one index pass gives the chunk plan too: the
+    plan is not made by a second pass over the file."""
+    import importlib
+
+    mod = importlib.import_module(f"dask_traj_spark.sources.{module}")
+    real, calls = getattr(mod, index), []
+
+    def counted(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(mod, index, counted)
+    traj = load_written(spark, written, ext, chunks=3)
+    assert [len(p) for p in traj.coords._frame_scan.payloads] == [3, 1]
+    assert len(calls) == 1
 
 
 @pytest.mark.parametrize("ext", VECTOR_FORMATS)

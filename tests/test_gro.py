@@ -63,10 +63,10 @@ def test_gro_box_and_topology(spark, gro_file):
 
 
 def test_gro_partitioned_scan(spark, gro_file):
-    from dask_traj_spark.sources.gro import plan_chunks
+    import dask_traj_spark as dts
 
     path, _ = gro_file
-    parts = plan_chunks(path, 3)
+    parts = dts.load(spark, path, chunks=3).coords._frame_scan.payloads
     assert [len(p) for p in parts] == [3, 1]
 
 

@@ -219,8 +219,9 @@ def test_tng_recognized_unimplemented(spark, tmp_path):
 def test_every_supported_extension_resolves_to_a_loader():
     """No session needed: every kind in the extension table has an
     importable loader, so ``load`` never meets a kind it cannot
-    dispatch, and every chunked format module keeps both halves of
-    the frame-chunk contract."""
+    dispatch, and every chunked format module keeps the one
+    frame-chunk contract: it decodes chunks, and leaves cutting them
+    to ``load_indexed``."""
     import importlib
 
     from dask_traj_spark.sources.loaders import SUPPORTED_EXTENSIONS, loader_for
@@ -228,9 +229,10 @@ def test_every_supported_extension_resolves_to_a_loader():
     for ext, kind in SUPPORTED_EXTENSIONS.items():
         assert callable(loader_for(kind)), ext
     for fmt in ("xyz", "xtc", "dcd", "trr", "gro", "arc", "binpos",
-                "lammpstrj", "netcdf3", "hdf5"):
+                "lammpstrj", "netcdf3", "hdf5", "amber"):
         mod = importlib.import_module(f"dask_traj_spark.sources.{fmt}")
-        assert callable(mod.plan_chunks) and callable(mod.decode_chunk), fmt
+        assert callable(mod.decode_chunk), fmt
+        assert not hasattr(mod, "plan_chunks"), fmt
 
 
 def test_select_atoms_sql_predicate(traj_triclinic):

@@ -51,12 +51,13 @@ def test_round_trip(spark, nc_file):
     np.testing.assert_allclose([la["a"], la["alpha"]], [6.0, 90.0], atol=1e-6)
 
 
-def test_partitions(nc_file):
-    from dask_traj_spark.sources.netcdf3 import plan_chunks
+def test_partitions(spark, nc_file):
+    import dask_traj_spark as dts
 
     p, _ = nc_file
-    parts = plan_chunks(p, 3)
-    assert parts == [(0, 3), (3, 3), (6, 3)]
+    parts = dts.load(spark, p, chunks=3).coords._frame_scan.payloads
+    # 8 frames: the last range is cut to the frames the file holds
+    assert parts == [(0, 3), (3, 3), (6, 2)]
 
 
 def test_rejects_non_netcdf(tmp_path):

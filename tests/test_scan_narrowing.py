@@ -29,7 +29,13 @@ from dask_traj_spark.operators.distance import compute_distances
 from dask_traj_spark.sources._arrow import ALL_ATOMS, select_ids
 from dask_traj_spark.sources.loaders import load
 from dask_traj_spark.trajectory import Trajectory
-from tests.test_frame_index import INDEXED_FORMATS, N_ATOMS, N_FRAMES, written  # noqa: F401
+from tests.test_frame_index import (  # noqa: F401
+    INDEXED_FORMATS,
+    N_ATOMS,
+    N_FRAMES,
+    load_written,
+    written,
+)
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -73,11 +79,12 @@ def _decode_nodes(plan) -> list:
     ]
 
 
-def _scan_rows(df) -> int:
-    """Rows the file scan of an executed DataFrame decoded."""
+def _scan_rows(df, n_scans: int = 1) -> int:
+    """Rows the ``n_scans`` file scans of an executed DataFrame
+    decoded."""
     scans = _decode_nodes(df._jdf.queryExecution().executedPlan())
-    assert len(scans) == 1, [n.getClass().getSimpleName() for n in scans]
-    return int(scans[0].metrics().get("pythonNumRowsReceived").get().value())
+    assert len(scans) == n_scans, [n.getClass().getSimpleName() for n in scans]
+    return sum(int(n.metrics().get("pythonNumRowsReceived").get().value()) for n in scans)
 
 
 def _rows(pdf) -> np.ndarray:
@@ -89,7 +96,7 @@ def _rows(pdf) -> np.ndarray:
 @pytest.mark.parametrize("sel", list(SELECTIONS))
 def test_cut_scan_equals_full_scan(spark, written, ext, sel):  # noqa: F811
     ids = SELECTIONS[sel]
-    traj = load(spark, written[ext])
+    traj = load_written(spark, written, ext)
     full = traj.coords.toPandas()
     want = _rows(full[full["atom_id"].isin(ids)])
     cut = select_ids(traj.coords, "atom_id", ids)
@@ -103,11 +110,12 @@ def test_cut_scan_equals_full_scan(spark, written, ext, sel):  # noqa: F811
 
 
 @pytest.mark.parametrize("ext", INDEXED_FORMATS)
-def test_decode_chunk_span_is_a_slice_of_the_full_decode(written, ext):
+def test_decode_chunk_span_is_a_slice_of_the_full_decode(spark, written, ext):
     from dask_traj_spark.sources._arrow import _format_module
 
-    mod = _format_module({".nc": "netcdf3", ".h5": "hdf5"}.get(ext, ext[1:]))
-    (payload, *_) = mod.plan_chunks(written[ext], N_FRAMES)
+    scan = load_written(spark, written, ext, chunks=N_FRAMES).coords._frame_scan
+    mod = _format_module(scan.fmt)
+    (payload, *_) = scan.payloads
     full = dict(mod.decode_chunk(written[ext], payload, ALL_ATOMS))
     for lo, hi in ((0, 4), (3, 8), (7, 7), (N_ATOMS - 2, N_ATOMS + 5), (N_ATOMS, N_ATOMS + 3)):
         part = dict(mod.decode_chunk(written[ext], payload, (lo, hi)))
@@ -173,12 +181,10 @@ def test_selecting_no_frame_decodes_nothing(spark, written, ext):  # noqa: F811
 
 
 def test_empty_file_scans_empty(spark, tmp_path):
-    from dask_traj_spark.sources import xtc as X
-    from dask_traj_spark.sources._arrow import scan_frames
-
     path = tmp_path / "empty.xtc"
     path.write_bytes(b"")
-    df = scan_frames(spark, "xtc", str(path), X.plan_chunks(str(path), 10))
+    df = load(spark, str(path), chunks=10).coords
+    assert df._frame_scan.payloads == []
     assert df.count() == 0
     assert df.columns == ["frame_id", "atom_id", "x", "y", "z"]
     assert _decode_nodes(df._jdf.queryExecution().executedPlan()) == []
@@ -247,6 +253,58 @@ def test_loaded_xtc_query_is_one_stage_and_one_job(spark, xtc_path):
     np.testing.assert_array_equal(a.view(np.uint32), b.view(np.uint32))
 
 
+def test_loaded_mdcrd_query_is_one_decode_and_no_exchange(spark, written):  # noqa: F811
+    traj = load_written(spark, written, ".mdcrd", chunks=2)
+    pairs = list(itertools.combinations(range(2, 9), 2))
+    d = compute_distances(traj, pairs, periodic=True, form="vectorized")
+    d.collect()
+    plan = d._jdf.queryExecution().executedPlan()
+    assert len(_decode_nodes(plan)) == 1, plan.toString()
+    assert "Exchange" not in plan.toString(), plan.toString()
+    assert _scan_rows(d) == N_FRAMES * 7
+
+
+@pytest.fixture(scope="module")
+def overlapping_files(spark, tmp_path_factory):
+    """XTC and DCD file pairs whose second file starts with the first
+    file's last frame (frames 0..3 and 3..5 of one trajectory)."""
+    from dask_traj_spark.sources.dcd import write_dcd
+    from dask_traj_spark.sources.loaders import from_wide_pandas
+    from dask_traj_spark.sources.xtc import write_xtc
+
+    rng = np.random.default_rng(29)
+    xyz = rng.uniform(0, 3, (6, 10, 3)).astype(np.float32)
+    d = tmp_path_factory.mktemp("join_overlap")
+    paths = {}
+    for ext, write in ((".xtc", write_xtc), (".dcd", write_dcd)):
+        paths[ext] = []
+        for name, frames in (("a", xyz[:4]), ("b", xyz[3:])):
+            paths[ext].append(str(d / f"{name}{ext}"))
+            write(from_wide_pandas(spark, frames), paths[ext][-1])
+    return paths
+
+
+@pytest.mark.parametrize("ext", [".xtc", ".dcd"])
+def test_join_overlap_check_decodes_only_the_boundary_frames(spark, overlapping_files, ext):
+    a, b = (load(spark, p, chunks=2) for p in overlapping_files[ext])
+    mismatch = a._boundary_mismatch(b, a.n_frames - 1, 2e-3)
+    assert mismatch.collect() == []
+    assert _scan_rows(mismatch, n_scans=2) == 2 * 10
+
+
+@pytest.mark.parametrize("ext", [".xtc", ".dcd"])
+def test_join_discarding_the_overlap_on_loaded_files(spark, overlapping_files, ext):
+    a, b = (load(spark, p, chunks=2) for p in overlapping_files[ext])
+    xa, xb = a.to_numpy()[0], b.to_numpy()[0]
+    joined = a.join(b, discard_overlapping_frames=True)
+    assert joined.n_frames == 6
+    np.testing.assert_array_equal(joined.to_numpy()[0], np.concatenate([xa, xb[1:]]))
+    # no overlap (b's frames shifted): every frame is kept
+    shifted = b.select_frames([1, 2])
+    kept = a.join(shifted, discard_overlapping_frames=True)
+    np.testing.assert_array_equal(kept.to_numpy()[0], np.concatenate([xa, xb[1:]]))
+
+
 def test_sql_form_self_join_on_a_loaded_file(spark, xtc_path):
     """Each role of the SQL form's self-join cuts its own scan; the
     result matches the vectorized form's."""
@@ -300,13 +358,14 @@ def short_stream_xtc(tmp_path_factory):
     return good, path
 
 
-def test_cut_xtc_scan_validates_the_prefix_it_decodes(short_stream_xtc):
+def test_cut_xtc_scan_validates_the_prefix_it_decodes(spark, short_stream_xtc):
     from dask_traj_spark.sources import xtc as X
 
     good, short = short_stream_xtc
-    (payload,) = X.plan_chunks(short, 10)
+    (payload,) = load(spark, short, chunks=10).coords._frame_scan.payloads
+    (good_payload,) = load(spark, good, chunks=10).coords._frame_scan.payloads
     (_fid, ok), = X.decode_chunk(short, payload, (0, 4))
-    (_fid, want), = X.decode_chunk(good, X.plan_chunks(good, 10)[0], (0, 4))
+    (_fid, want), = X.decode_chunk(good, good_payload, (0, 4))
     np.testing.assert_array_equal(ok, want)
     # corrupt before hi: the cut scan still decodes into the fault
     with pytest.raises(ValueError, match="corrupt XTC"):

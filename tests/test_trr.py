@@ -50,10 +50,10 @@ def test_trr_round_trip_exact(spark, trr_file):
 
 
 def test_trr_partitioned_scan(spark, trr_file):
-    from dask_traj_spark.sources.trr import plan_chunks
+    import dask_traj_spark as dts
 
     p, _ = trr_file
-    parts = plan_chunks(p, 4)
+    parts = dts.load(spark, p, chunks=4).coords._frame_scan.payloads
     assert [start for start, _count in parts] == [0, 4, 8]
 
 
