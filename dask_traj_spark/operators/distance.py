@@ -18,7 +18,12 @@ Each operator has two equivalent physical strategies (SURVEY.md §7.1):
   already long-format.
 
 A new operator is a kernel plus one :func:`map_frame_blocks` call,
-or the role stitch plus the MIC step.
+or the role stitch plus the MIC step.  The trajectory analyses share
+three relational shapes, each written once: the banded time-lag
+self-join (:func:`_lag_join`: MSD, VACF, scalar ACF), the cell-list
+join (:func:`_cell_join`: neighbor pairs, neighbors of a selection)
+and the mass-weighted feed (:func:`_mass_weighted`: COM, Rg,
+gyration tensor).
 
 ``form="auto"`` picks vectorized for ≥512 pairs.
 
@@ -192,6 +197,83 @@ def _displacements_sql(traj, arr: np.ndarray, periodic: bool) -> DataFrame:
     )
 
 
+def _mass_weighted(traj, topology: DataFrame | None, op: str) -> DataFrame:
+    """coords ⋈ broadcast(atom_id, mass DOUBLE): the feed of every
+    mass-weighted aggregate (COM, Rg, gyration tensor).  ``topology``
+    defaults to the trajectory's own; ``op`` names the caller in the
+    error raised when neither has masses."""
+    top = topology if topology is not None else traj.topology
+    if top is None:
+        raise ValueError(f"{op} requires a topology with masses")
+    m = F.broadcast(top.select("atom_id", F.col("mass").cast("double").alias("mass")))
+    return traj.coords.join(m, "atom_id")
+
+
+def _lag_join(df: DataFrame, t: str, lo: int, hi: int, target: dict, key: str | None = None):
+    """The banded time-lag self-join, grouped by lag (BIGINT): each
+    origin row explodes lags ``lo..hi`` and shifts its time ``t`` by
+    the lag; the target side carries ``target`` (alias → column of
+    ``df``); the sides equi-join on (``key``, shifted time).  O(rows·L)
+    with L small — no per-lag rescan and no all-(t, t') quadratic
+    join; the explode bounds the band like the binned range join in
+    rangejoin.py.  The origin keeps ``df``'s own columns, so an
+    aggregate reads a value at t as its name and at t+lag as its
+    alias."""
+    origin = df.select(
+        *[c for c in df.columns if c != t],
+        F.explode(F.sequence(F.lit(lo), F.lit(int(hi)))).alias("lag"),
+        (F.col(t) + F.col("lag")).alias("_tf"),
+    )
+    tgt = df.select(
+        *([F.col(key).alias("_tkey")] if key else []),
+        F.col(t).alias("_tt"),
+        *[F.col(c).alias(a) for a, c in target.items()],
+    )
+    on = F.col("_tf") == F.col("_tt")
+    if key:
+        on = (F.col(key) == F.col("_tkey")) & on
+    return origin.join(tgt, on).groupBy(F.col("lag").cast("long").alias("lag"))
+
+
+def _cell_join(traj, cutoff: float, fixed: dict, shifted: dict, fixed_ids=None, shifted_ids=None) -> DataFrame:
+    """The cell-list spatial join: atoms are binned into cubic cells of
+    edge ``cutoff``; a pair can only be within range if its cells
+    differ by ≤1 in every axis, so the ``shifted`` side explodes to
+    its 27 neighboring cells and the join is a plain equi-join on
+    (frame_id, cell).  Each candidate pair matches EXACTLY once (the
+    unique offset = cell_fixed − cell_shifted).  ``fixed``/``shifted``
+    map each side's output columns to the binned coords' (atom_id and
+    DOUBLE x, y, z); ``*_ids`` restrict a side to those atoms
+    (:func:`_atom_role_restrict`)."""
+    inv = 1.0 / float(cutoff)
+    cell = lambda col: F.floor(F.col(col).cast("double") * F.lit(inv)).cast("long")  # noqa: E731
+    base = traj.coords.select(
+        "frame_id",
+        "atom_id",
+        *[F.col(c).cast("double").alias(c) for c in "xyz"],
+        *[cell(c).alias(f"c{c}") for c in "xyz"],
+    )
+
+    def side(cols: dict, ids) -> DataFrame:
+        b = base if ids is None else _atom_role_restrict(base, ids)
+        return b.select("frame_id", *[F.col(c).alias(a) for a, c in cols.items()], "cx", "cy", "cz")
+
+    offsets = F.array(
+        *[
+            F.struct(F.lit(dx).alias("ox"), F.lit(dy).alias("oy"), F.lit(dz).alias("oz"))
+            for dx in (-1, 0, 1)
+            for dy in (-1, 0, 1)
+            for dz in (-1, 0, 1)
+        ]
+    )
+    near = side(shifted, shifted_ids).select(
+        "frame_id", *shifted, F.explode(offsets).alias("o"), "cx", "cy", "cz"
+    ).select(
+        "frame_id", *shifted, *[(F.col(f"c{c}") + F.col(f"o.o{c}")).alias(f"c{c}") for c in "xyz"]
+    )
+    return side(fixed, fixed_ids).join(near, ["frame_id", "cx", "cy", "cz"])
+
+
 # ----------------------------------------------------- vectorized forms
 #
 # Input layout: traj.frame_packed() — long-format PRIMITIVE columns,
@@ -252,12 +334,14 @@ _NOT_PACKED = (
 )
 
 
-def _iter_frame_blocks(batches):
+def _iter_frame_blocks(batches, ascending: bool = True):
     """Regroup an Arrow-batch iterator into complete-frame pandas
     blocks: a frame straddling two batches is carried forward until
-    its last row has arrived (input is frame-contiguous + sorted).
-    Frame ids that descend anywhere in the partition raise: the
-    carried frame joins each batch, so every step is checked."""
+    its last row has arrived (input is frame-contiguous).  With
+    ``ascending``, frame ids that descend anywhere in the partition
+    raise: the carried frame joins each batch, so every step is
+    checked.  A stream's partition may hold its micro-batch's files
+    in any order, so there frames ascend only within a file."""
     import pandas as pd
 
     carry = None
@@ -267,13 +351,15 @@ def _iter_frame_blocks(batches):
         if carry is not None:
             pdf = pd.concat([carry, pdf], ignore_index=True)
         fids = pdf["frame_id"].to_numpy()
-        if (fids[1:] < fids[:-1]).any():
+        if ascending and (fids[1:] < fids[:-1]).any():
             bad = int(np.argmax(fids[1:] < fids[:-1]))
             raise ValueError(
                 f"frame ids are not ascending ({fids[bad]} then "
                 f"{fids[bad + 1]}) — {_NOT_PACKED}"
             )
-        cut = int(np.searchsorted(fids, fids[-1]))
+        # the last frame's rows: the trailing run of its id
+        other = np.flatnonzero(fids != fids[-1])
+        cut = int(other[-1]) + 1 if len(other) else 0
         if cut > 0:
             yield pdf.iloc[:cut]
             carry = pdf.iloc[cut:].reset_index(drop=True)
@@ -288,7 +374,9 @@ def _block_arrays(block, box_lookup):
     box (B,3,3)|None, ortho (B,)|None).  The box comes from the
     driver-collected ``box_lookup`` when given, else there is none
     (non-periodic)."""
-    fids, counts = np.unique(block["frame_id"].to_numpy(), return_counts=True)
+    f = block["frame_id"].to_numpy()
+    starts = np.flatnonzero(np.r_[True, f[1:] != f[:-1]])
+    fids, counts = f[starts], np.diff(np.r_[starts, len(f)])
     n_at = int(counts[0])
     if not (counts == n_at).all():
         raise ValueError(
@@ -361,14 +449,17 @@ def map_frame_blocks(
     in ONE broadcast.  ``atoms`` (sorted, unique) restricts the feed
     to those atoms, so a block's atom axis holds exactly them in that
     order (see :func:`_packed_input`).  Frames with no unitcell row are dropped on the
-    periodic path.  Plan: feed → ``mapInPandas``, no shuffle on a
+    periodic path.  A block's frames come in feed order: ascending,
+    except on a stream (:func:`_iter_frame_blocks`).  Plan: feed → ``mapInPandas``, no shuffle on a
     packed trajectory."""
     packed, lookup = _packed_input(traj, periodic, atoms=atoms)
     b = traj.spark.sparkContext.broadcast((const, lookup))
 
+    ascending = not packed.isStreaming
+
     def gen(batches):
         c, box_lookup = b.value
-        for block in _iter_frame_blocks(batches):
+        for block in _iter_frame_blocks(batches, ascending):
             fids, xyz, box, ortho = _block_arrays(block, box_lookup)
             if len(fids):
                 yield fn(fids, xyz, box, ortho, c)
@@ -510,11 +601,7 @@ def compute_center_of_mass(traj, topology: DataFrame | None = None) -> DataFrame
     collapses n_atoms rows to one per frame before any exchange.
     Reference: geometry/distance.py:282-337 (float64 accumulation,
     masses normalized to sum 1 — :319-320)."""
-    top = topology if topology is not None else traj.topology
-    if top is None:
-        raise ValueError("compute_center_of_mass requires a topology with masses")
-    m = F.broadcast(top.select("atom_id", F.col("mass").cast("double").alias("mass")))
-    j = traj.coords.join(m, "atom_id")
+    j = _mass_weighted(traj, topology, "compute_center_of_mass")
     return (
         j.groupBy("frame_id")
         .agg(
@@ -600,12 +687,8 @@ def compute_radius_of_gyration(traj, topology: DataFrame | None = None) -> DataF
     aggregation — no com join-back, no second pass over coords.
     Beyond-reference (the reference has no Rg; mdtraj's
     ``compute_rg`` is the public API shape being matched)."""
-    top = topology if topology is not None else traj.topology
-    if top is None:
-        raise ValueError("compute_radius_of_gyration requires a topology with masses")
-    m = F.broadcast(top.select("atom_id", F.col("mass").cast("double").alias("mass")))
     x, y, z = (F.col(c).cast("double") for c in ("x", "y", "z"))
-    j = traj.coords.join(m, "atom_id")
+    j = _mass_weighted(traj, topology, "compute_radius_of_gyration")
     agg = j.groupBy("frame_id").agg(
         F.sum(F.col("mass") * (x * x + y * y + z * z)).alias("srr"),
         F.sum(F.col("mass") * x).alias("sx"),
@@ -648,18 +731,16 @@ def rdf_histogram(
     )
 
 
-def neighbor_pairs(traj, cutoff: float, n_atoms: int | None = None) -> DataFrame:
+def neighbor_pairs(traj, cutoff: float) -> DataFrame:
     """All atom pairs within ``cutoff`` per frame WITHOUT enumerating
     the O(n²) pair list — the cell-list spatial self-join every
     neighbor-search / contact-map workload needs at scale.
 
-    Atoms are binned into cubic cells of edge ``cutoff``; a pair can
-    only be within range if its cells differ by ≤1 in every axis, so
-    one side explodes to its 27 neighboring cells and the join is a
-    plain equi-join on (frame_id, cell).  Each candidate pair matches
-    EXACTLY once (the unique offset = cell_i − cell_j), so no
-    dedup pass is needed; the exact distance filter then trims the
-    shell corners.  Cost is O(n · local density), one shuffle on
+    One symmetric :func:`_cell_join` (the j side explodes its 27
+    neighbor cells) kept at i < j: each candidate pair matches
+    exactly once, so no dedup pass is needed; the exact distance
+    filter then trims the shell corners.  Cost is O(n · local
+    density), one shuffle on
     (frame, cell) — vs the O(n²) broadcast-pairs join of
     ``compute_distances``, which is the right tool only for a
     driver-enumerated pair list.
@@ -669,55 +750,11 @@ def neighbor_pairs(traj, cutoff: float, n_atoms: int | None = None) -> DataFrame
     by the box vectors; same plan shape).  Value path matches G1:
     float32 components, float32 final sqrt.
     """
-    c = traj.coords
-    inv = 1.0 / float(cutoff)
-    cell = lambda col: F.floor(F.col(col).cast("double") * F.lit(inv)).cast("long")  # noqa: E731
-    base = c.select(
-        "frame_id",
-        F.col("atom_id"),
-        F.col("x").cast("double").alias("x"),
-        F.col("y").cast("double").alias("y"),
-        F.col("z").cast("double").alias("z"),
-        cell("x").alias("cx"),
-        cell("y").alias("cy"),
-        cell("z").alias("cz"),
-    )
-    offsets = F.array(
-        *[
-            F.struct(F.lit(dx).alias("ox"), F.lit(dy).alias("oy"), F.lit(dz).alias("oz"))
-            for dx in (-1, 0, 1)
-            for dy in (-1, 0, 1)
-            for dz in (-1, 0, 1)
-        ]
-    )
-    left = base.select(
-        "frame_id",
-        F.col("atom_id").alias("i"),
-        F.col("x").alias("x1"),
-        F.col("y").alias("y1"),
-        F.col("z").alias("z1"),
-        "cx", "cy", "cz",
-    )
-    right = (
-        base.select(
-            "frame_id",
-            F.col("atom_id").alias("j"),
-            F.col("x").alias("x2"),
-            F.col("y").alias("y2"),
-            F.col("z").alias("z2"),
-            F.explode(offsets).alias("o"),
-            "cx", "cy", "cz",
-        )
-        .select(
-            "frame_id", "j", "x2", "y2", "z2",
-            (F.col("cx") + F.col("o.ox")).alias("cx"),
-            (F.col("cy") + F.col("o.oy")).alias("cy"),
-            (F.col("cz") + F.col("o.oz")).alias("cz"),
-        )
-    )
-    cand = left.join(right, ["frame_id", "cx", "cy", "cz"]).where(
-        F.col("i") < F.col("j")
-    )
+    cand = _cell_join(
+        traj, cutoff,
+        {"i": "atom_id", "x1": "x", "y1": "y", "z1": "z"},
+        {"j": "atom_id", "x2": "x", "y2": "y", "z2": "z"},
+    ).where(F.col("i") < F.col("j"))
     fx = (F.col("x2") - F.col("x1")).cast("float").cast("double")
     fy = (F.col("y2") - F.col("y1")).cast("float").cast("double")
     fz = (F.col("z2") - F.col("z1")).cast("float").cast("double")
@@ -733,12 +770,10 @@ def mean_squared_displacement(traj, max_lag: int) -> DataFrame:
     τ = 1..max_lag → (lag BIGINT, n_samples BIGINT, msd DOUBLE) —
     the diffusion analysis every MD workflow runs.
 
-    Plan shape: a BANDED time-lag self-join — one side explodes its
-    ``max_lag`` target frames (O(rows·L), L small), the other joins
+    Plan shape: the banded time-lag self-join (:func:`_lag_join`) —
+    one side explodes its ``max_lag`` target frames, the other joins
     on the (atom_id, frame_id) equi-key; partial+final average per
-    lag.  No per-lag rescan of the trajectory and no all-(t,t')
-    quadratic join — the explode bounds the band exactly like the
-    binned range join in rangejoin.py."""
+    lag."""
     c = traj.coords.select(
         "atom_id",
         "frame_id",
@@ -746,33 +781,14 @@ def mean_squared_displacement(traj, max_lag: int) -> DataFrame:
         F.col("y").cast("double").alias("y"),
         F.col("z").cast("double").alias("z"),
     )
-    lags = F.sequence(F.lit(1), F.lit(int(max_lag)))
-    origin = c.select(
-        "atom_id",
-        "x", "y", "z",
-        F.explode(lags).alias("lag"),
-        (F.col("frame_id") + F.col("lag")).alias("tf"),
-    )
-    target = c.select(
-        F.col("atom_id").alias("t_atom"),
-        F.col("frame_id").alias("t_frame"),
-        F.col("x").alias("x2"),
-        F.col("y").alias("y2"),
-        F.col("z").alias("z2"),
-    )
     dx = F.col("x2") - F.col("x")
     dy = F.col("y2") - F.col("y")
     dz = F.col("z2") - F.col("z")
-    return (
-        origin.join(
-            target,
-            (F.col("atom_id") == F.col("t_atom")) & (F.col("tf") == F.col("t_frame")),
-        )
-        .groupBy(F.col("lag").cast("long").alias("lag"))
-        .agg(
-            F.count(F.lit(1)).alias("n_samples"),
-            F.avg(dx * dx + dy * dy + dz * dz).alias("msd"),
-        )
+    return _lag_join(
+        c, "frame_id", 1, max_lag, {"x2": "x", "y2": "y", "z2": "z"}, key="atom_id"
+    ).agg(
+        F.count(F.lit(1)).alias("n_samples"),
+        F.avg(dx * dx + dy * dy + dz * dz).alias("msd"),
     )
 
 
@@ -807,35 +823,16 @@ def velocity_autocorrelation(traj, max_lag: int) -> DataFrame:
         (F.lead("y").over(w) - F.col("y")).alias("vy"),
         (F.lead("z").over(w) - F.col("z")).alias("vz"),
     ).where(F.col("vx").isNotNull())
-    lags = F.sequence(F.lit(0), F.lit(int(max_lag)))
-    origin = v.select(
-        "atom_id",
-        "vx", "vy", "vz",
-        F.explode(lags).alias("lag"),
-        (F.col("frame_id") + F.col("lag")).alias("tf"),
-    )
-    target = v.select(
-        F.col("atom_id").alias("t_atom"),
-        F.col("frame_id").alias("t_frame"),
-        F.col("vx").alias("wx"),
-        F.col("vy").alias("wy"),
-        F.col("vz").alias("wz"),
-    )
     dot = (
         F.col("vx") * F.col("wx")
         + F.col("vy") * F.col("wy")
         + F.col("vz") * F.col("wz")
     )
-    return (
-        origin.join(
-            target,
-            (F.col("atom_id") == F.col("t_atom")) & (F.col("tf") == F.col("t_frame")),
-        )
-        .groupBy(F.col("lag").cast("long").alias("lag"))
-        .agg(
-            F.count(F.lit(1)).alias("n_samples"),
-            F.avg(dot).alias("vacf"),
-        )
+    return _lag_join(
+        v, "frame_id", 0, max_lag, {"wx": "vx", "wy": "vy", "wz": "vz"}, key="atom_id"
+    ).agg(
+        F.count(F.lit(1)).alias("n_samples"),
+        F.avg(dot).alias("vacf"),
     )
 
 
@@ -863,13 +860,9 @@ def gyration_tensor(traj, topology: DataFrame | None = None,
 
     100-TB posture: one agg keyed on frame_id; the eigen math is 21
     scalar expressions per frame row, fused in codegen."""
-    top = topology if topology is not None else traj.topology
-    if top is None:
-        raise ValueError("gyration_tensor requires a topology with masses")
-    m = F.broadcast(top.select("atom_id", F.col("mass").cast("double").alias("mass")))
     x, y, z = (F.col(c).cast("double") for c in ("x", "y", "z"))
     w = F.col("mass")
-    agg = traj.coords.join(m, "atom_id").groupBy("frame_id").agg(
+    agg = _mass_weighted(traj, topology, "gyration_tensor").groupBy("frame_id").agg(
         F.sum(w * x * x).alias("sxx"), F.sum(w * y * y).alias("syy"),
         F.sum(w * z * z).alias("szz"), F.sum(w * x * y).alias("sxy"),
         F.sum(w * x * z).alias("sxz"), F.sum(w * y * z).alias("syz"),
@@ -1006,24 +999,13 @@ def scalar_autocorrelation(
     table); the banded join and agg are over n_frames·L rows."""
     q = (
         F.round(F.col(value_col).cast("double") * ACF_GRID, 0) / ACF_GRID
-    ).alias("v")
+    ).alias("va")
     s = series.select(F.col(key_col).alias("t"), q)
-    lags = F.sequence(F.lit(0), F.lit(int(max_lag)))
-    origin = s.select(
-        "t", F.col("v").alias("va"),
-        F.explode(lags).alias("lag"),
-        (F.col("t") + F.col("lag")).alias("tt"),
-    )
-    target = s.select(F.col("t").alias("t2"), F.col("v").alias("vb"))
-    return (
-        origin.join(target, F.col("tt") == F.col("t2"))
-        .groupBy(F.col("lag").cast("long").alias("lag"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("va") * F.col("vb")).alias("sum_ab"),
-            F.sum("va").alias("sum_a"),
-            F.sum("vb").alias("sum_b"),
-        )
+    return _lag_join(s, "t", 0, max_lag, {"vb": "va"}).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("va") * F.col("vb")).alias("sum_ab"),
+        F.sum("va").alias("sum_a"),
+        F.sum("vb").alias("sum_b"),
     )
 
 
@@ -1199,50 +1181,14 @@ def compute_neighbors(
     The query atoms themselves are excluded; ``haystack_indices``
     restricts the searched side (default: all atoms).
 
-    Plan: the ``neighbor_pairs`` cell-list shape, asymmetric — the
-    (tiny) query side explodes its 27 neighbor cells and the
-    haystack joins on (frame_id, cell); cost O((|query|·27 +
+    Plan: :func:`_cell_join`, asymmetric — the (tiny) query side
+    explodes its 27 neighbor cells and the haystack joins on
+    (frame_id, cell); cost O((|query|·27 +
     n_haystack) · local density), never the O(n·|query|) brute
     force the oracle runs at gate scale."""
     qset = sorted({int(i) for i in query_indices})
     if not qset:
         raise ValueError("query_indices must be non-empty")
-    c = traj.coords
-    inv = 1.0 / float(cutoff)
-    cell = lambda col: F.floor(F.col(col).cast("double") * F.lit(inv)).cast("long")  # noqa: E731
-    base = c.select(
-        "frame_id",
-        "atom_id",
-        F.col("x").cast("double").alias("x"),
-        F.col("y").cast("double").alias("y"),
-        F.col("z").cast("double").alias("z"),
-        cell("x").alias("cx"), cell("y").alias("cy"), cell("z").alias("cz"),
-    )
-    hay = base
-    if haystack_indices is not None:
-        hay = _atom_role_restrict(base, haystack_indices)
-    q = _atom_role_restrict(base, qset)
-    offsets = F.array(
-        *[
-            F.struct(F.lit(dx).alias("ox"), F.lit(dy).alias("oy"),
-                     F.lit(dz).alias("oz"))
-            for dx in (-1, 0, 1)
-            for dy in (-1, 0, 1)
-            for dz in (-1, 0, 1)
-        ]
-    )
-    qx = q.select(
-        "frame_id",
-        F.col("atom_id").alias("qid"),
-        F.col("x").alias("qx"), F.col("y").alias("qy"), F.col("z").alias("qz"),
-        F.explode(offsets).alias("o"),
-        "cx", "cy", "cz",
-    ).select(
-        "frame_id", "qid", "qx", "qy", "qz",
-        (F.col("cx") + F.col("o.ox")).alias("cx"),
-        (F.col("cy") + F.col("o.oy")).alias("cy"),
-        (F.col("cz") + F.col("o.oz")).alias("cz"),
-    )
     d2 = (
         (F.col("x") - F.col("qx")) * (F.col("x") - F.col("qx"))
         + (F.col("y") - F.col("qy")) * (F.col("y") - F.col("qy"))
@@ -1250,7 +1196,12 @@ def compute_neighbors(
     )
     r2 = float(cutoff) * float(cutoff)
     return (
-        hay.join(qx, ["frame_id", "cx", "cy", "cz"])
+        _cell_join(
+            traj, cutoff,
+            {"atom_id": "atom_id", "x": "x", "y": "y", "z": "z"},
+            {"qid": "atom_id", "qx": "x", "qy": "y", "qz": "z"},
+            fixed_ids=haystack_indices, shifted_ids=qset,
+        )
         .where((F.col("atom_id") != F.col("qid")) & (d2 <= F.lit(r2)))
         .select("frame_id", "atom_id")
         .distinct()

@@ -71,34 +71,15 @@ def read_restart(path: str):
 def load_restart(spark: SparkSession, path: str, **_options) -> Trajectory:
     """Single-frame AMBER restart → Trajectory (driver-side parse —
     the file is one frame by definition)."""
-    import pandas as pd
+    from dask_traj_spark.sources.loaders import from_wide_pandas
 
     xyz, time, box = read_restart(path)
-    n = xyz.shape[1]
-    coords = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "frame_id": np.zeros(n, dtype=np.int64),
-                "atom_id": np.arange(n, dtype=np.int32),
-                "x": xyz[0, :, 0],
-                "y": xyz[0, :, 1],
-                "z": xyz[0, :, 2],
-            }
-        ),
-        schema="frame_id long, atom_id int, x float, y float, z float",
+    return from_wide_pandas(
+        spark, xyz,
+        time=[time if time is not None else 0.0],
+        unitcell_lengths=None if box is None else [box[:3]],
+        unitcell_angles=None if box is None else [box[3:]],
     )
-    frames = spark.createDataFrame(
-        [(0, float(time) if time is not None else 0.0, 0)],
-        "frame_id long, time double, step long",
-    )
-    unitcell = None
-    if box is not None:
-        unitcell = spark.createDataFrame(
-            [(0, *[float(v) for v in box])],
-            "frame_id long, a float, b float, c float, "
-            "alpha float, beta float, gamma float",
-        )
-    return Trajectory(coords, frames=frames, unitcell=unitcell)
 
 
 # -------------------------------------------------------------- mdcrd
@@ -110,7 +91,8 @@ def index_mdcrd(path: str, n_atoms: int):
     A frame is ceil(3n/10) coordinate lines [+1 box line]; lines can
     vary in width, so offsets are read, not computed. Box presence is
     auto-detected from the first candidate box line (exactly 3
-    values); a trailing partial frame is dropped."""
+    values; for one atom, from the line count: :func:`_one_atom_box`);
+    a trailing partial frame is dropped."""
     if n_atoms < 1:
         raise ValueError(f"an mdcrd frame needs n_atoms >= 1, got {n_atoms}")
     coord_lines = (3 * n_atoms + 9) // 10
@@ -126,6 +108,8 @@ def index_mdcrd(path: str, n_atoms: int):
             if has_box is None:
                 pos = f.tell()
                 has_box = len(f.readline().split()) == 3
+                if has_box and n_atoms == 1:
+                    has_box = _one_atom_box(path, f)
                 f.seek(pos)
             if has_box:
                 line = f.readline()
@@ -135,6 +119,22 @@ def index_mdcrd(path: str, n_atoms: int):
                 boxes.append((a, b, c))
             specs.append((len(specs), offset, n_atoms))
     return specs, boxes if has_box else None
+
+
+def _one_atom_box(path: str, f) -> bool:
+    """Box presence in a 1-atom mdcrd, where every line (coordinates
+    and box alike) has 3 values: a box-bearing file has 2 lines a
+    frame, so an odd count of lines after the title means no box; an
+    even count fits both layouts and raises."""
+    f.seek(0)
+    f.readline()  # title
+    n_lines = sum(1 for _ in f)
+    if n_lines % 2 == 0:
+        raise ValueError(
+            f"{path}: ambiguous 1-atom mdcrd — its {n_lines} lines read as "
+            f"{n_lines} frames without a box or {n_lines // 2} with one"
+        )
+    return False
 
 
 def decode_chunk(path: str, specs, atoms: tuple[int, int]):

@@ -35,7 +35,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dask_traj_spark import schemas
-from dask_traj_spark.trajectory import Trajectory
+from dask_traj_spark.trajectory import FrameIndex, Trajectory
 
 #: extension → loader kind; mirrors the reference's ``file_returns``
 #: dispatch (core/dask_traj.py:26-56). Formats we can parse today
@@ -311,7 +311,10 @@ def from_wide_pandas(
     topology_rows=None,
 ) -> Trajectory:
     """Build a Trajectory from driver-side numpy arrays (tests,
-    small data): xyz (n_frames, n_atoms, 3) float32 → long coords."""
+    small data, single-frame restart files): xyz (n_frames, n_atoms,
+    3) float32 → long coords, frame ids 0..n_frames-1.  The counts
+    ride in a ``FrameIndex``; its box is left None, since the unit
+    cell's vectors are derived in SQL."""
     import numpy as np
     import pandas as pd
 
@@ -368,7 +371,8 @@ def from_wide_pandas(
     if topology_rows is not None:
         topology = spark.createDataFrame(topology_rows, schema=schemas.TOPOLOGY_SCHEMA)
 
-    return Trajectory(coords, frames, unitcell, topology)
+    index = FrameIndex(np.arange(n_frames, dtype=np.int64), n_atoms)
+    return Trajectory(coords, frames, unitcell, topology, index=index)
 
 
 def partition_file_stats(coords_path: str) -> dict[int, int]:

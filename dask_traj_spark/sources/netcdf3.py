@@ -201,7 +201,7 @@ def load_ncrestart(spark: SparkSession, path: str, **_options) -> Trajectory:
     """AMBER NetCDF restart (.ncrst): single frame, non-record
     ``coordinates(atom, spatial)`` double + scalar time + cell vars.
     Driver-side parse (one frame by definition)."""
-    import pandas as pd
+    from dask_traj_spark.sources.loaders import from_wide_pandas
 
     nc = NC3File(path)
     if "coordinates" not in nc.vars or nc.vars["coordinates"].record:
@@ -218,30 +218,12 @@ def load_ncrestart(spark: SparkSession, path: str, **_options) -> Trajectory:
             ln = nc.read_nonrecord(f, "cell_lengths").astype(np.float64).ravel()
             an = nc.read_nonrecord(f, "cell_angles").astype(np.float64).ravel()
             cell = (*(v * ANGSTROM_TO_NM for v in ln[:3]), *an[:3])
-    n = xyz.shape[0]
-    coords = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "frame_id": np.zeros(n, dtype=np.int64),
-                "atom_id": np.arange(n, dtype=np.int32),
-                "x": (xyz[:, 0] * ANGSTROM_TO_NM).astype(np.float32),
-                "y": (xyz[:, 1] * ANGSTROM_TO_NM).astype(np.float32),
-                "z": (xyz[:, 2] * ANGSTROM_TO_NM).astype(np.float32),
-            }
-        ),
-        schema="frame_id long, atom_id int, x float, y float, z float",
+    return from_wide_pandas(
+        spark, (xyz * ANGSTROM_TO_NM).astype(np.float32)[None],
+        time=[time],
+        unitcell_lengths=None if cell is None else [cell[:3]],
+        unitcell_angles=None if cell is None else [cell[3:]],
     )
-    frames = spark.createDataFrame(
-        [(0, time, 0)], "frame_id long, time double, step long"
-    )
-    unitcell = None
-    if cell is not None:
-        unitcell = spark.createDataFrame(
-            [(0, *[float(v) for v in cell])],
-            "frame_id long, a float, b float, c float, "
-            "alpha float, beta float, gamma float",
-        )
-    return Trajectory(coords, frames=frames, unitcell=unitcell)
 
 
 # --------------------------------------------------------------- sink

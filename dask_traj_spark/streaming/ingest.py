@@ -384,60 +384,45 @@ def stream_coords_to_bucketed(
 def streaming_distances(
     coords: DataFrame, atom_pairs, periodic_box=None
 ) -> DataFrame:
-    """The G1 distance operator on a coords STREAM — same kernel
-    (``operators/kernels.py::distances_np``), same output schema as
-    the batch form, running stateless per micro-batch in append
-    mode. Contract (same as the batch packed feed): each streamed
-    file holds whole frames, so every Arrow batch sees complete
-    (frame, atom) groups. ``periodic_box``: optional (3,3) ndarray
-    applied to every frame (streams carry no unitcell table);
-    None = no MIC."""
+    """The G1 distance operator on a coords STREAM — the batch
+    vectorized form's frame-block map and kernel
+    (``operators/kernels.py::distances_np``) and output schema,
+    running stateless per micro-batch in append mode.  Contract (the
+    packed feed's): each streamed file holds whole frames in
+    (frame_id, atom_id) order; a frame may cross Arrow batches.
+    ``periodic_box``: optional (3,3) ndarray applied to every frame
+    (streams carry no unitcell table); None = no MIC."""
     import numpy as np
-    import pandas as pd
 
+    from dask_traj_spark.operators.distance import _long_rows, _map_index_blocks
     from dask_traj_spark.operators.kernels import distances_np
+    from dask_traj_spark.trajectory import Trajectory
 
     arr = np.asarray(list(atom_pairs), dtype=np.int32).reshape(-1, 2)
-    pi, pj = arr[:, 0].copy(), arr[:, 1].copy()
-    box = None
-    ortho = None
+    n_sel = len(np.unique(arr))
+    box1 = is_ortho = None
     if periodic_box is not None:
         box1 = np.asarray(periodic_box, dtype=np.float64).reshape(1, 3, 3)
         # orthogonality decided once driver-side (G8 branch)
         off = np.abs(box1[0]) - np.diag(np.diag(box1[0]))
         is_ortho = bool((np.abs(off) < 1e-9).all())
-        box, ortho = box1, np.array([is_ortho])
 
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            for fid, g in pdf.groupby("frame_id", sort=True):
-                g = g.sort_values("atom_id")
-                xyz = g[["x", "y", "z"]].to_numpy(dtype=np.float32)[None]
-                if pi.max() >= xyz.shape[1] or pj.max() >= xyz.shape[1]:
-                    raise ValueError(
-                        f"frame {fid}: pair index beyond {xyz.shape[1]} atoms "
-                        "(partial frame in micro-batch? files must hold "
-                        "whole frames)"
-                    )
-                d = distances_np(
-                    xyz,
-                    pi,
-                    pj,
-                    box if box is not None else None,
-                    ortho if ortho is not None else None,
-                )[0]
-                yield pd.DataFrame(
-                    {
-                        "frame_id": np.full(len(arr), fid, dtype="int64"),
-                        "pair_id": np.arange(len(arr), dtype="int32"),
-                        "dist": d,
-                    }
-                )
+    def kernel(fids, xyz, _box, _ortho, p):
+        if xyz.shape[1] != n_sel:
+            raise ValueError(
+                f"frame {fids[0]}: {xyz.shape[1]} of the {n_sel} atoms the "
+                "pairs read (pair index beyond the frame's atoms?)"
+            )
+        box = ortho = None
+        if box1 is not None:
+            box = np.broadcast_to(box1, (len(fids), 3, 3))
+            ortho = np.full(len(fids), is_ortho)
+        d = distances_np(xyz, p[:, 0], p[:, 1], box, ortho)
+        return _long_rows(fids, "pair_id", len(p), dist=d.ravel())
 
-    return coords.mapInPandas(
-        gen, schema="frame_id long, pair_id int, dist float"
+    return _map_index_blocks(
+        Trajectory(coords, packed=True), arr, kernel,
+        schemas.DISTANCES_SCHEMA, periodic=False,
     )
 
 

@@ -50,6 +50,25 @@ class TestRestart:
         np.testing.assert_allclose(got[0], xyz * 0.1, atol=1e-6)
 
 
+    def test_restart_carries_counts_and_sql_box_vectors(self, spark, tmp_path):
+        import dask_traj_spark as dts
+        from dask_traj_spark.operators.unitcell import with_box_vectors
+
+        xyz = np.array([[1.0, 2.0, 3.0], [4.0, 5.0, 6.0], [7.0, 8.0, 9.0]])
+        p = tmp_path / "tri.rst7"
+        p.write_text(_fmt_restart(xyz, time=3.0, box=[20.0, 21.0, 22.0, 80.0, 95.0, 100.0]))
+        traj = dts.load(spark, str(p))
+        # the counts come from the parse, not from a job; the box
+        # vectors stay SQL-derived, so the index holds none
+        assert traj.index is not None and traj.index.box is None
+        assert traj.index.n_atoms == 3 and list(traj.index.frame_ids) == [0]
+        cell = traj.unitcell.select("frame_id", "a", "b", "c", "alpha", "beta", "gamma")
+        assert cell.first() == (0, *np.float32([2.0, 2.1, 2.2, 80.0, 95.0, 100.0]).tolist())
+        assert traj.unitcell_vectors.collect() == with_box_vectors(cell).select(
+            *traj.unitcell_vectors.columns
+        ).collect()
+
+
 class TestMdcrd:
     @pytest.fixture(scope="class")
     def mdcrd_file(self, tmp_path_factory):
@@ -92,6 +111,40 @@ class TestMdcrd:
         path, _ = mdcrd_file
         with pytest.raises(ValueError, match="n_atoms"):
             index_mdcrd(path, 0)
+
+    @staticmethod
+    def _one_atom(tmp_path, rows):
+        p = tmp_path / "one.mdcrd"
+        p.write_text("t\n" + "".join("".join(f"{v:8.3f}" for v in r) + "\n" for r in rows))
+        return str(p)
+
+    def test_one_atom_two_frames_without_box_is_ambiguous(self, tmp_path):
+        from dask_traj_spark.sources.amber import index_mdcrd
+
+        # two box-less frames read exactly like one frame with a box
+        path = self._one_atom(tmp_path, [(1.0, 2.0, 3.0), (4.0, 5.0, 6.0)])
+        with pytest.raises(ValueError, match="ambiguous"):
+            index_mdcrd(path, 1)
+
+    def test_one_atom_odd_line_count_has_no_box(self, spark, tmp_path):
+        import dask_traj_spark as dts
+        from dask_traj_spark.sources.amber import index_mdcrd
+
+        rows = [(1.0, 2.0, 3.0), (4.0, 5.0, 6.0), (7.0, 8.0, 9.0)]
+        path = self._one_atom(tmp_path, rows)
+        specs, boxes = index_mdcrd(path, 1)
+        assert [s[0] for s in specs] == [0, 1, 2] and boxes is None
+        traj = dts.load(spark, path, n_atoms=1)
+        assert not traj.have_unitcell
+        np.testing.assert_allclose(traj.to_numpy()[0][:, 0], np.array(rows) * 0.1, atol=1e-6)
+
+    def test_one_atom_with_box_is_ambiguous(self, tmp_path):
+        from dask_traj_spark.sources.amber import index_mdcrd
+
+        box = (25.0, 26.0, 27.0)
+        path = self._one_atom(tmp_path, [(1.0, 2.0, 3.0), box, (4.0, 5.0, 6.0), box])
+        with pytest.raises(ValueError, match="ambiguous"):
+            index_mdcrd(path, 1)
 
     def test_load_with_pdb_top(self, spark, tmp_path):
         import dask_traj_spark as dts

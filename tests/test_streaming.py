@@ -443,9 +443,15 @@ def test_stream_ingest_restart_is_exactly_once(spark, tmp_path_factory):
     spark.sql("DROP TABLE IF EXISTS restart_ingest_test")
 
 
-def test_streaming_distances_match_batch(spark, coords_stream_dir):
+_ARROW_BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+
+@pytest.mark.parametrize("batch_rows", [None, 30], ids=["default", "frame_crosses_batch"])
+def test_streaming_distances_match_batch(spark, coords_stream_dir, batch_rows):
     """G1 on a stream: identical kernel, identical results to the
-    batch vectorized form, stateless append mode."""
+    batch vectorized form, stateless append mode — also when an Arrow
+    batch (30 rows) is smaller than a frame (50 atoms), so frames
+    cross batches."""
     import numpy as np
 
     from dask_traj_spark.streaming.ingest import (
@@ -454,10 +460,17 @@ def test_streaming_distances_match_batch(spark, coords_stream_dir):
     )
 
     pairs = [(0, 1), (2, 40), (7, 33)]
-    s = streaming_distances(stream_coords(spark, coords_stream_dir), pairs)
-    _run_to_memory(s, "dist_stream", "append")
+    name = f"dist_stream_{batch_rows or 'default'}"
+    old = spark.conf.get(_ARROW_BATCH)
+    if batch_rows is not None:
+        spark.conf.set(_ARROW_BATCH, str(batch_rows))
+    try:
+        s = streaming_distances(stream_coords(spark, coords_stream_dir), pairs)
+        _run_to_memory(s, name, "append")
+    finally:
+        spark.conf.set(_ARROW_BATCH, old)
     got = (
-        spark.sql("SELECT * FROM dist_stream")
+        spark.sql(f"SELECT * FROM {name}")
         .orderBy("frame_id", "pair_id")
         .toPandas()
     )
@@ -472,6 +485,9 @@ def test_streaming_distances_match_batch(spark, coords_stream_dir):
         .toPandas()
     )
     assert len(got) == len(want) > 0
+    np.testing.assert_array_equal(
+        got[["frame_id", "pair_id"]].to_numpy(), want[["frame_id", "pair_id"]].to_numpy()
+    )
     np.testing.assert_array_equal(got["dist"].to_numpy(), want["dist"].to_numpy())
 
 
