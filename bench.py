@@ -6,7 +6,7 @@ thunk, an iteration count, a warm-up count, the record it lands in
 (headline ``queries``, ``times_detail`` or ``scale_10x``) and, for a
 10x row, the name of its 1x partner.  ``Bench.timed`` runs any row;
 ``Bench.build`` assembles ``bench_detail.json`` and the capped
-headline.  Four tiers run in order, every time:
+headline.  Four tiers run in order:
 
 1. ``CANONICAL`` — the BASELINE.md workload shape: 1,251 frames ×
    22,561 atoms, distances over 124,750 pairs
@@ -26,7 +26,10 @@ headline.  Four tiers run in order, every time:
    partner (~1.0 linear, >2 super-linear).
 4. ``LOCAL12`` — the canonical one-pass again on a ``local[12]``
    session, the apples-to-apples comparison with the reference's
-   12-thread LocalCluster.
+   12-thread LocalCluster. It runs only on a host with at least 12
+   CPUs: on fewer, 12 task slots time the CPU count, not the
+   engine, so the detail record lists the row as skipped (with the
+   CPU count) and the headline leaves it out.
 
 Every row is bracketed by a fixed-work CPU probe (one probe closes a
 row and opens the next), so host noise is attributable per entry
@@ -393,6 +396,7 @@ SCALE = [
 ]
 
 LOCAL12 = [Row("canonical_onepass_local12", _canonical_pass, n=5)]
+LOCAL12_CPUS = 12
 
 TIERS = (CANONICAL, SUITE, SCALE, LOCAL12)
 ROWS = [r for tier in TIERS for r in tier if isinstance(r, Row)]
@@ -495,6 +499,12 @@ class Bench:
         self.probes = {"start_s": start_probe}
         self.last_probe = start_probe
         self.retimed: dict[str, list[float]] = {}
+        self.skipped: dict[str, str] = {}
+
+    def skip(self, tier: list, why: str) -> None:
+        for row in tier:
+            if isinstance(row, Row):
+                self.skipped[row.name] = why
 
     def mark(self, key: str) -> None:
         self.probes[key] = self.last_probe = _cpu_probe()
@@ -596,6 +606,7 @@ class Bench:
             # [warm-up, timed iterations] per row; a retimed row adds 2
             "best_of": {r.name: [r.warmup, r.n] for r in ROWS},
             "retimed": self.retimed,
+            "skipped": self.skipped,
             "retime_prior_source": prior_source,
             "master": master,
             "cpus": os.environ.get("SPARK_GRAFT_CPUS"),
@@ -682,13 +693,17 @@ def main() -> None:
         bench.ctx.close()
     spark.stop()
 
-    spark12 = _session(
-        app_name="dask-traj-spark-bench-12", master="local[12]", shuffle_partitions=12
-    )
-    bench.ctx = Inputs(spark12, sf_dir)
-    _noop(_canonical_pass(bench.ctx, WARM_FRAMES))
-    bench.run(LOCAL12)
-    spark12.stop()
+    cpus = len(os.sched_getaffinity(0))
+    if cpus >= LOCAL12_CPUS:
+        spark12 = _session(
+            app_name="dask-traj-spark-bench-12", master="local[12]", shuffle_partitions=12
+        )
+        bench.ctx = Inputs(spark12, sf_dir)
+        _noop(_canonical_pass(bench.ctx, WARM_FRAMES))
+        bench.run(LOCAL12)
+        spark12.stop()
+    else:
+        bench.skip(LOCAL12, f"{cpus} CPUs, fewer than {LOCAL12_CPUS}")
     bench.mark("end_s")
 
     detail, line = bench.build(sf, master, prior_source)

@@ -369,11 +369,12 @@ def _iter_frame_blocks(batches, ascending: bool = True):
         yield carry
 
 
-def _block_arrays(block, box_lookup):
+def _block_arrays(block, box_lookup, n_atoms: int | None = None):
     """Complete-frame block → (frame_ids (B,), xyz (B, n_atoms, 3),
     box (B,3,3)|None, ortho (B,)|None).  The box comes from the
     driver-collected ``box_lookup`` when given, else there is none
-    (non-periodic)."""
+    (non-periodic).  With ``n_atoms``, every frame must hold exactly
+    that many atoms (a kernel indexes them by position)."""
     f = block["frame_id"].to_numpy()
     starts = np.flatnonzero(np.r_[True, f[1:] != f[:-1]])
     fids, counts = f[starts], np.diff(np.r_[starts, len(f)])
@@ -382,6 +383,11 @@ def _block_arrays(block, box_lookup):
         raise ValueError(
             f"frame blocks have unequal atom counts — {_NOT_PACKED}; "
             f"counts={dict(zip(fids, counts))}"
+        )
+    if n_atoms is not None and n_at != n_atoms:
+        raise ValueError(
+            f"frame {fids[0]} holds {n_at} of the {n_atoms} atoms the "
+            "query reads: atoms are missing from the trajectory"
         )
     xyz = np.stack(
         [
@@ -456,11 +462,12 @@ def map_frame_blocks(
     b = traj.spark.sparkContext.broadcast((const, lookup))
 
     ascending = not packed.isStreaming
+    n_atoms = None if atoms is None else len(atoms)
 
     def gen(batches):
         c, box_lookup = b.value
         for block in _iter_frame_blocks(batches, ascending):
-            fids, xyz, box, ortho = _block_arrays(block, box_lookup)
+            fids, xyz, box, ortho = _block_arrays(block, box_lookup, n_atoms)
             if len(fids):
                 yield fn(fids, xyz, box, ortho, c)
 

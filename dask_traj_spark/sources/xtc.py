@@ -14,9 +14,15 @@ The bit stream encodes quantized integer coordinates
 (``round(x * precision)``) as either whole-range triples
 (``sizeofints`` bits across the min→max range) or runs of small
 deltas from a sliding ``magicints`` window, with the classic
-water-molecule first/second-atom interchange. The decoder below is
-a faithful pure-Python implementation of that public algorithm
-(bit_length arithmetic replaces the C big-int byte loops).
+water-molecule first/second-atom interchange. ``decode_frame``
+parses and checks the frame header in Python and hands the bit
+stream to a small C loop (``xtc_decode.c``, built on first use and
+loaded through ctypes by ``xtc_native``) that bounds-checks every
+byte it reads; the int→float step stays in NumPy. Where no C
+compiler is present it runs ``_decode_payload_py``, a pure-Python
+implementation of the same public algorithm (bit_length arithmetic
+replaces the C big-int byte loops), which the tests also hold the
+compiled loop to, triple for triple.
 
 Frame blocks are variable-length ⇒ ``index_xtc`` scans headers once
 (seek-skip per frame, reading ~60 bytes each) to build the offset
@@ -38,11 +44,13 @@ cannot write any format (SURVEY.md S11).
 
 from __future__ import annotations
 
+import ctypes
 import struct
 
 import numpy as np
 from pyspark.sql import SparkSession
 
+from dask_traj_spark.sources import xtc_native
 from dask_traj_spark.sources._arrow import (
     ALL_ATOMS,
     atom_range,
@@ -64,57 +72,6 @@ MAGICINTS = [
     13316085, 16777216,
 ]
 FIRSTIDX = 9
-
-
-class _BitReader:
-    """Big-endian bit stream over the opaque data block (the C
-    receivebits state machine: lastbyte/lastbits byte feeder)."""
-
-    __slots__ = ("buf", "cnt", "lastbyte", "lastbits")
-
-    def __init__(self, buf: bytes):
-        self.buf = buf
-        self.cnt = 0
-        self.lastbyte = 0
-        self.lastbits = 0
-
-    def bits(self, nbits: int) -> int:
-        mask = (1 << nbits) - 1
-        num = 0
-        lastbyte, lastbits, cnt, buf = self.lastbyte, self.lastbits, self.cnt, self.buf
-        while nbits >= 8:
-            lastbyte = ((lastbyte << 8) | buf[cnt]) & 0xFFFFFFFF
-            cnt += 1
-            num |= (lastbyte >> lastbits) << (nbits - 8)
-            nbits -= 8
-        if nbits > 0:
-            if lastbits < nbits:
-                lastbits += 8
-                lastbyte = ((lastbyte << 8) | buf[cnt]) & 0xFFFFFFFF
-                cnt += 1
-            lastbits -= nbits
-            num |= (lastbyte >> lastbits) & ((1 << nbits) - 1)
-        self.lastbyte, self.lastbits, self.cnt = lastbyte, lastbits, cnt
-        return num & mask
-
-    def ints(self, num_of_bits: int, sizes: tuple[int, int, int]) -> list[int]:
-        """receiveints(3, ...): read the packed big-int (8-bit chunks,
-        little-endian byte significance) then peel off sizes[2],
-        sizes[1]; the remainder is nums[0]."""
-        nbytes = 0
-        big = 0
-        nb = num_of_bits
-        while nb > 8:
-            big |= self.bits(8) << (8 * nbytes)
-            nbytes += 1
-            nb -= 8
-        if nb > 0:
-            big |= self.bits(nb) << (8 * nbytes)
-        n2 = big % sizes[2]
-        big //= sizes[2]
-        n1 = big % sizes[1]
-        n0 = big // sizes[1]
-        return [n0, n1, n2]
 
 
 def _read_xdr_int(f) -> int:
@@ -255,21 +212,58 @@ def decode_frame(
         bitsizeint = [0, 0, 0]
         bitsize = (sizeint[0] * sizeint[1] * sizeint[2]).bit_length()
 
+    lo, stop = atom_range(atoms, natoms)
+    args = (data, nbytes, lo, stop, minint, sizeint, bitsize, bitsizeint, smallidx)
+    lib = xtc_native.library()
+    i, ints = _decode_payload_py(*args) if lib is None else _decode_payload_native(lib, *args)
+    if i > natoms:
+        raise ValueError(f"XTC run decodes {i} atoms of {natoms}")
+    return step, time, box, (ints * (1.0 / precision)).astype(np.float32)
+
+
+def _decode_payload_native(
+    lib, data, nbytes, lo, stop, minint, sizeint, bitsize, bitsizeint, smallidx
+) -> tuple[int, np.ndarray]:
+    """:func:`_decode_payload_py` run by the compiled loop of
+    ``xtc_decode.c`` (``lib``, from :func:`xtc_native.library`)."""
+    if not (0 <= lo <= stop and 0 <= nbytes <= len(data)):
+        raise ValueError(f"XTC decode span {lo}..{stop} or size {nbytes} out of range")
+    trip = ctypes.c_int64 * 3
+    out = np.empty((stop - lo, 3), dtype=np.int64)
+    info = ctypes.c_int64(0)
+    n = lib.xtc_decode_ints(
+        data, nbytes, lo, stop, trip(*minint), trip(*sizeint),
+        bitsize, trip(*bitsizeint), smallidx, out.ctypes.data, ctypes.byref(info),
+    )
+    if n == xtc_native.OVERRUN:
+        raise ValueError("corrupt XTC coordinate payload")
+    if n == xtc_native.DRIFT:
+        raise ValueError(f"XTC smallidx {info.value} drifted out of range")
+    return n, out
+
+
+def _decode_payload_py(
+    data, nbytes, lo, stop, minint, sizeint, bitsize, bitsizeint, smallidx
+) -> tuple[int, np.ndarray]:
+    """The integer bit-stream loop of one frame's payload (the first
+    ``nbytes`` bytes of ``data``) → (atoms decoded, int64 (stop - lo,
+    3) triples of the emitted atoms ``lo..stop-1``). It decodes atoms
+    until ``stop`` is reached; a run can carry it past ``stop`` (and
+    past the frame's atom count, which the caller checks).
+    ``bitsize == 0`` selects the per-axis ``bitsizeint`` fields.
+
+    The reference for ``xtc_decode.c``, which mirrors it line for
+    line, and the decoder wherever that cannot be built. All state
+    lives in locals: ~5× fewer Python-level calls than a bit-reader
+    object, ~275k atoms/s."""
     smaller = MAGICINTS[max(FIRSTIDX, smallidx - 1)] // 2
     small = MAGICINTS[smallidx] // 2
     ssmall = MAGICINTS[smallidx]
-
-    # Inlined bit-reader state machine (the _BitReader logic with all
-    # state in locals — ~5× fewer Python-level calls than the class
-    # form; this loop decodes ~275k atoms/s and is the hot path of
-    # every partition scan).
-    lo, stop = atom_range(atoms, natoms)
     try:
-        buf = data
+        buf = data[:nbytes]
         cnt = 0
         lastbyte = 0
         lastbits = 0
-        inv = 1.0 / precision
         vals: list[int] = []  # interleaved integer x,y,z per emitted atom
         append = vals.append
         minx, miny, minz = minint
@@ -406,11 +400,7 @@ def decode_frame(
                 small = MAGICINTS[smallidx] // 2
             ssmall = MAGICINTS[smallidx]
 
-        if i > natoms:
-            raise ValueError(f"XTC run decodes {i} atoms of {natoms}")
-        out = (
-            np.array(vals[3 * lo : 3 * stop], dtype=np.int64).reshape(-1, 3) * inv
-        ).astype(np.float32)
+        ints = np.array(vals[3 * lo : 3 * stop], dtype=np.int64).reshape(-1, 3)
     except (IndexError, ZeroDivisionError) as e:
         # a corrupt bit stream can claim runs that consume more
         # bytes than the payload holds (IndexError) or degenerate
@@ -418,11 +408,12 @@ def decode_frame(
         # contract is ValueError, never a raw internal error out of
         # a Spark task
         raise ValueError("corrupt XTC coordinate payload") from e
-    return step, time, box, out
+    return i, ints
 
 
 class _BitWriter:
-    """Big-endian bit stream writer (inverse of _BitReader)."""
+    """Big-endian bit stream writer (the inverse of the decode loop's
+    byte feeder)."""
 
     __slots__ = ("out", "acc", "nacc")
 
@@ -440,7 +431,7 @@ class _BitWriter:
         self.acc &= (1 << self.nacc) - 1
 
     def ints(self, nums: list[int], num_of_bits: int, sizes: tuple[int, int, int]) -> None:
-        """Inverse of _BitReader.ints: pack into one big int then
+        """receiveints(3, ...) inverted: pack into one big int then
         emit as 8-bit chunks, little-endian byte significance."""
         big = (nums[0] * sizes[1] + nums[1]) * sizes[2] + nums[2]
         nb = num_of_bits

@@ -399,7 +399,6 @@ def streaming_distances(
     from dask_traj_spark.trajectory import Trajectory
 
     arr = np.asarray(list(atom_pairs), dtype=np.int32).reshape(-1, 2)
-    n_sel = len(np.unique(arr))
     box1 = is_ortho = None
     if periodic_box is not None:
         box1 = np.asarray(periodic_box, dtype=np.float64).reshape(1, 3, 3)
@@ -408,11 +407,6 @@ def streaming_distances(
         is_ortho = bool((np.abs(off) < 1e-9).all())
 
     def kernel(fids, xyz, _box, _ortho, p):
-        if xyz.shape[1] != n_sel:
-            raise ValueError(
-                f"frame {fids[0]}: {xyz.shape[1]} of the {n_sel} atoms the "
-                "pairs read (pair index beyond the frame's atoms?)"
-            )
         box = ortho = None
         if box1 is not None:
             box = np.broadcast_to(box1, (len(fids), 3, 3))

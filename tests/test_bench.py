@@ -87,6 +87,18 @@ def test_output_keys_match_the_committed_record(bench):
     assert len(line) <= bench.HEADLINE_CAP
 
 
+def test_skipped_local12_stays_out_of_the_headline(bench):
+    b = bench.Bench(None, 0.5)
+    b.rec[bench.HEADLINE]["session_start"] = 1.0
+    for row in bench.ROWS:
+        if row not in bench.LOCAL12:
+            b.record(row, [1.0] * row.n, [0.5, 0.5])
+    b.skip(bench.LOCAL12, "4 CPUs, fewer than 12")
+    detail, line = b.build(0.1, "local[4]", None)
+    assert "canonical_onepass_local12" not in json.loads(line)["queries"]
+    assert detail["skipped"] == {"canonical_onepass_local12": "4 CPUs, fewer than 12"}
+
+
 def test_linearity_is_10x_over_ten_times_1x(bench):
     b = _filled(bench)
     b.rec[bench.SCALE_10X]["t16_bm25_10x"] = 5.0

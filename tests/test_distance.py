@@ -422,3 +422,23 @@ def test_compute_neighbors_matches_brute_force(spark):
         for r in compute_neighbors(traj, cutoff, qs, haystack_indices=hay).collect()
     }
     assert got2 == {(f, a) for f, a in want if a % 2 == 0}
+
+
+def test_missing_atoms_raise_a_valueerror_in_the_vectorized_form(spark):
+    """A trajectory whose frames lack an atom the pairs read: the
+    vectorized kernel is told so by name instead of indexing past the
+    block, and the SQL form joins away the pairs it cannot form."""
+    from pyspark.errors import PythonException
+    from pyspark.sql import functions as F
+
+    from dask_traj_spark.sources.loaders import from_wide_pandas
+    from dask_traj_spark.trajectory import Trajectory
+
+    xyz = np.arange(3 * 4 * 3, dtype=np.float32).reshape(3, 4, 3)
+    full = from_wide_pandas(spark, xyz)
+    holey = Trajectory(full.coords.where(F.col("atom_id") != 1), index=full.index)
+    pairs = [(0, 1), (0, 2)]
+    with pytest.raises(PythonException, match="ValueError: frame 0 holds 2 of the 3 atoms"):
+        compute_distances(holey, pairs, periodic=False, form="vectorized").collect()
+    rows = compute_distances(holey, pairs, periodic=False, form="sql").collect()
+    assert sorted((r.frame_id, r.pair_id) for r in rows) == [(0, 1), (1, 1), (2, 1)]

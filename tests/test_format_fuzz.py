@@ -159,6 +159,22 @@ def fixtures(tmp_path_factory):
     ]
 
 
+def _mutants(src: bytes, rng):
+    """The corpus of one valid file: single-byte mutations, 4-byte
+    bursts, then prefixes, suffixes and doubled prefixes."""
+    for _ in range(150):
+        b = bytearray(src)
+        b[rng.integers(0, len(b))] = rng.integers(0, 256)
+        yield bytes(b)
+    for _ in range(60):
+        b = bytearray(src)
+        p0 = int(rng.integers(0, max(1, len(b) - 4)))
+        b[p0:p0 + 4] = bytes(rng.integers(0, 256, 4))
+        yield bytes(b)
+    for cut in range(1, len(src), max(1, len(src) // 30)):
+        yield from (src[:cut], src[cut:], src[:cut] * 2)
+
+
 def test_format_readers_exception_contract_under_mutation(fixtures):
     td, targets = fixtures
     rng = np.random.default_rng(97)
@@ -176,29 +192,57 @@ def test_format_readers_exception_contract_under_mutation(fixtures):
                     signal.alarm(0)
 
             probe(src)  # the unmutated fixture must parse
-            for _ in range(150):
-                b = bytearray(src)
-                b[rng.integers(0, len(b))] = rng.integers(0, 256)
+            for b in _mutants(src, rng):
                 try:
-                    probe(bytes(b))
+                    probe(b)
                 except ALLOWED:
                     pass
-            for _ in range(60):
-                b = bytearray(src)
-                p0 = int(rng.integers(0, max(1, len(b) - 4)))
-                b[p0:p0 + 4] = bytes(rng.integers(0, 256, 4))
-                try:
-                    probe(bytes(b))
-                except ALLOWED:
-                    pass
-            for cut in range(1, len(src), max(1, len(src) // 30)):
-                for pb in (src[:cut], src[cut:], src[:cut] * 2):
-                    try:
-                        probe(pb)
-                    except ALLOWED:
-                        pass
     finally:
         signal.signal(signal.SIGALRM, old)
+
+
+def test_xtc_corpus_fails_alike_under_both_decoders(fixtures, monkeypatch):
+    """Every XTC file of the mutation corpus decodes to the same
+    float32 frames with the compiled loop and the Python loop, or
+    raises the same ValueError under both. XTC is the first target,
+    so seed 97 draws the very corpus the contract test above runs."""
+    import io
+
+    from dask_traj_spark.sources import xtc as X
+    from dask_traj_spark.sources import xtc_native
+    from tests.test_xtc import native_library
+
+    _td, targets = fixtures
+    ext, src, _reader = targets[0]
+    assert ext == ".xtc"
+    lib = native_library()
+
+    def read(payload, use_lib):
+        frames = []
+        with monkeypatch.context() as m:
+            m.setattr(xtc_native, "library", lambda: use_lib)
+            f = io.BytesIO(payload)
+            try:
+                while f.tell() < len(payload):
+                    frames.append(X.decode_frame(f)[3].tobytes())
+            except ValueError as e:
+                return frames, str(e)
+        return frames, None
+
+    failed = 0
+    old = signal.signal(signal.SIGALRM, _alarm_handler)
+    try:
+        for b in _mutants(src, np.random.default_rng(97)):
+            signal.alarm(5)
+            try:
+                native, python = read(b, lib), read(b, None)
+            finally:
+                signal.alarm(0)
+            assert native == python
+            failed += python[1] is not None
+    finally:
+        signal.signal(signal.SIGALRM, old)
+    assert failed > 100
 
 
 def test_dcd_header_frame_count_bounded_by_file_size(fixtures, tmp_path):
