@@ -9,13 +9,13 @@ Each operator has two equivalent physical strategies (SURVEY.md §7.1):
   column expressions, MIC included (:func:`_displacements`, see
   ``mic.py``). Catalyst gets full pushdown/pruning visibility; used
   as the auditable cross-check and for small pair sets.
-- ``form="vectorized"`` — the throughput path: the frame-contiguous
-  long rows of ``traj.frame_packed()`` (one range shuffle, free on a
-  packed trajectory such as a loaded file, whose scan is then cut to
-  the atoms the index set reads) feed ``mapInPandas``, which runs the
-  numpy kernels in ``kernels.py`` over complete-frame blocks
-  (:func:`map_frame_blocks`); zero further shuffles; output is
-  already long-format.
+- ``form="vectorized"`` — the throughput path: one ``mapInArrow``
+  runs the numpy kernels in ``kernels.py`` over complete-frame blocks
+  of ``traj.frame_packed()`` (:func:`map_frame_blocks`; one range
+  shuffle, free on a packed trajectory) and hands each block's output
+  back as one Arrow record batch; zero further shuffles. On a loaded
+  file the same task decodes the chunk, cut to the atoms the index
+  set reads, so the query runs one Python stage.
 
 A new operator is a kernel plus one :func:`map_frame_blocks` call,
 or the role stitch plus the MIC step.  The trajectory analyses share
@@ -50,7 +50,7 @@ from dask_traj_spark.operators.mic import (
     orthogonality_expr,
 )
 from dask_traj_spark.operators.unitcell import lengths_angles_np
-from dask_traj_spark.sources._arrow import LITERAL_IDS_MAX, select_ids
+from dask_traj_spark.sources._arrow import LITERAL_IDS_MAX, frame_feed, select_ids
 
 _VECTORIZED_THRESHOLD = 512
 
@@ -334,38 +334,43 @@ _NOT_PACKED = (
 )
 
 
-def _iter_frame_blocks(batches, ascending: bool = True):
-    """Regroup an Arrow-batch iterator into complete-frame pandas
-    blocks: a frame straddling two batches is carried forward until
-    its last row has arrived (input is frame-contiguous).  With
-    ``ascending``, frame ids that descend anywhere in the partition
-    raise: the carried frame joins each batch, so every step is
-    checked.  A stream's partition may hold its micro-batch's files
-    in any order, so there frames ascend only within a file."""
-    import pandas as pd
-
+def _frame_blocks(batches, cap: int, ascending: bool = True):
+    """Regroup an Arrow-batch iterator into complete-frame blocks,
+    each a dict of NumPy columns holding whole frames and at most
+    ``cap`` rows (one frame, when a frame alone holds more): a frame
+    straddling two batches is carried forward until its last row has
+    arrived (input is frame-contiguous).  With ``ascending``, frame
+    ids that descend anywhere in the partition raise: the carried
+    frame joins each batch, so every step is checked.  A stream's
+    partition may hold its micro-batch's files in any order, so there
+    frames ascend only within a file."""
     carry = None
-    for pdf in batches:
-        if len(pdf) == 0:
+    for batch in batches:
+        if not batch.num_rows:
             continue
+        cols = {
+            name: col.to_numpy(zero_copy_only=False)
+            for name, col in zip(batch.schema.names, batch.columns)
+        }
         if carry is not None:
-            pdf = pd.concat([carry, pdf], ignore_index=True)
-        fids = pdf["frame_id"].to_numpy()
+            cols = {name: np.concatenate([carry[name], col]) for name, col in cols.items()}
+        fids = cols["frame_id"]
         if ascending and (fids[1:] < fids[:-1]).any():
             bad = int(np.argmax(fids[1:] < fids[:-1]))
             raise ValueError(
                 f"frame ids are not ascending ({fids[bad]} then "
                 f"{fids[bad + 1]}) — {_NOT_PACKED}"
             )
-        # the last frame's rows: the trailing run of its id
-        other = np.flatnonzero(fids != fids[-1])
-        cut = int(other[-1]) + 1 if len(other) else 0
-        if cut > 0:
-            yield pdf.iloc[:cut]
-            carry = pdf.iloc[cut:].reset_index(drop=True)
-        else:
-            carry = pdf
-    if carry is not None and len(carry):
+        # frame starts; the last frame may go on in the next batch
+        starts = np.flatnonzero(np.r_[True, fids[1:] != fids[:-1]])
+        i, last = 0, len(starts) - 1
+        while i < last:
+            j = int(np.searchsorted(starts, starts[i] + cap, "right")) - 1
+            j = min(max(j, i + 1), last)
+            yield {name: col[starts[i] : starts[j]] for name, col in cols.items()}
+            i = j
+        carry = {name: col[starts[last] :] for name, col in cols.items()}
+    if carry is not None:
         yield carry
 
 
@@ -375,7 +380,7 @@ def _block_arrays(block, box_lookup, n_atoms: int | None = None):
     driver-collected ``box_lookup`` when given, else there is none
     (non-periodic).  With ``n_atoms``, every frame must hold exactly
     that many atoms (a kernel indexes them by position)."""
-    f = block["frame_id"].to_numpy()
+    f = block["frame_id"]
     starts = np.flatnonzero(np.r_[True, f[1:] != f[:-1]])
     fids, counts = f[starts], np.diff(np.r_[starts, len(f)])
     n_at = int(counts[0])
@@ -390,11 +395,7 @@ def _block_arrays(block, box_lookup, n_atoms: int | None = None):
             "query reads: atoms are missing from the trajectory"
         )
     xyz = np.stack(
-        [
-            block["x"].to_numpy(dtype=np.float32).reshape(-1, n_at),
-            block["y"].to_numpy(dtype=np.float32).reshape(-1, n_at),
-            block["z"].to_numpy(dtype=np.float32).reshape(-1, n_at),
-        ],
+        [block[c].astype(np.float32, copy=False).reshape(-1, n_at) for c in "xyz"],
         axis=-1,
     )
     if box_lookup is not None:
@@ -405,32 +406,32 @@ def _block_arrays(block, box_lookup, n_atoms: int | None = None):
     return fids, xyz, None, None
 
 
-def _packed_input(
-    traj,
-    periodic: bool,
-    atoms: np.ndarray | None = None,
-):
-    """The vectorized feed: frame-packed coords, optionally filtered
-    to the atoms the index set actually references (a literal
-    JVM-side predicate, :func:`select_ids` — with 500 of 22k
-    atoms selected this cuts the Arrow feed ~45×; on a loaded file the
-    predicate reaches the scan, which decodes only that atom span),
-    projected to the 4 columns the kernel reads.
+def _arrow_schema(schema):
+    """The Arrow schema of a Spark schema (a StructType or DDL)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
 
-    Returns (feed_df, box_lookup); the box rides as a driver-collected
-    per-frame lookup (:class:`_BoxLookup`), None unless ``periodic``
-    and the trajectory has a unitcell.
+    return to_arrow_schema(DataType.fromDDL(schema) if isinstance(schema, str) else schema)
 
-    When ``atoms`` is given the caller must remap its indices to
-    positions in the sorted unique atom list (np.searchsorted) —
-    frames in the feed then contain exactly those atoms in sorted
-    order.
-    """
-    lookup = _BoxLookup.from_traj(traj) if periodic and traj.have_unitcell else None
-    feed = traj.frame_packed()
-    if atoms is not None:
-        feed = select_ids(feed, "atom_id", atoms)
-    return feed.select("frame_id", "x", "y", "z"), lookup
+
+def _record_batch(cols: dict, schema):
+    """A kernel's NumPy (or Arrow) columns as one record batch of the
+    Arrow ``schema``, cast as ``mapInPandas`` casts."""
+    import pyarrow as pa
+
+    arrays = []
+    for f in schema:
+        col = cols[f.name]
+        arrays.append(col if isinstance(col, pa.Array) else pa.array(col, type=f.type, safe=False))
+    return pa.RecordBatch.from_arrays(arrays, schema=schema)
+
+
+def _block_cap(spark) -> int:
+    """Rows per frame block: the session's Arrow batch size, the cap
+    of the batches the JVM feeds a map (none when it is not
+    positive)."""
+    cap = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    return cap if cap > 0 else 2**62
 
 
 def map_frame_blocks(
@@ -450,28 +451,46 @@ def map_frame_blocks(
     ``fn(fids, xyz, box, ortho, const)`` gets a block's frame ids
     (B,), coordinates (B, n_atoms, 3) float32, box (B, 3, 3) and
     orthogonality flags (B,) (both None unless ``periodic`` and the
-    trajectory has a unitcell), and ``const``; it returns a pandas
-    frame matching ``schema``.  ``const`` and the box lookup travel
-    in ONE broadcast.  ``atoms`` (sorted, unique) restricts the feed
-    to those atoms, so a block's atom axis holds exactly them in that
-    order (see :func:`_packed_input`).  Frames with no unitcell row are dropped on the
-    periodic path.  A block's frames come in feed order: ascending,
-    except on a stream (:func:`_iter_frame_blocks`).  Plan: feed → ``mapInPandas``, no shuffle on a
-    packed trajectory."""
-    packed, lookup = _packed_input(traj, periodic, atoms=atoms)
+    trajectory has a unitcell), and ``const``; it returns a dict of
+    ``schema``'s columns, NumPy arrays or Arrow arrays, which becomes
+    one record batch.  ``const`` and the box lookup travel in ONE
+    broadcast.  ``atoms`` (sorted, unique) restricts the feed to
+    those atoms, so a block's atom axis holds exactly them in that
+    order — with 500 of 22k atoms selected this cuts the feed ~45×.
+    Frames with no unitcell row are dropped on the periodic path.  A
+    block holds at most ``spark.sql.execution.arrow.maxRecordsPerBatch``
+    rows of whole frames, in feed order: ascending, except on a
+    stream (:func:`_frame_blocks`).
+
+    Plan: one ``mapInArrow``, no shuffle on a packed trajectory.  On
+    a loaded file it runs over the ``range`` of chunk ids and decodes
+    each chunk in the same task, cut to the atoms' span
+    (:func:`~dask_traj_spark.sources._arrow.frame_feed`): one Python
+    stage per task.  Any other feed (Parquet, derived, cached,
+    streaming) reaches the same loop through the JVM."""
+    lookup = _BoxLookup.from_traj(traj) if periodic and traj.have_unitcell else None
+    feed = frame_feed(traj.frame_packed(), atoms)
     b = traj.spark.sparkContext.broadcast((const, lookup))
-
-    ascending = not packed.isStreaming
+    ascending = not feed.source.isStreaming
     n_atoms = None if atoms is None else len(atoms)
+    cap = _block_cap(traj.spark)
+    out_schema = _arrow_schema(schema)
+    # the task closes over this, not over ``feed``: a DataFrame does
+    # not pickle
+    batches_of = feed.batches
 
-    def gen(batches):
+    def task(batches):
         c, box_lookup = b.value
-        for block in _iter_frame_blocks(batches, ascending):
+        for block in _frame_blocks(batches_of(batches), cap, ascending):
             fids, xyz, box, ortho = _block_arrays(block, box_lookup, n_atoms)
             if len(fids):
-                yield fn(fids, xyz, box, ortho, c)
+                yield _record_batch(fn(fids, xyz, box, ortho, c), out_schema)
 
-    return packed.mapInPandas(gen, schema)
+    out = feed.source.mapInArrow(task, schema)
+    # kept on this DataFrame object only: the cut scan its tasks
+    # decode, None when the JVM feeds them
+    out._fused_scan = feed.scan
+    return out
 
 
 def _map_index_blocks(traj, arr: np.ndarray, fn, schema, periodic: bool) -> DataFrame:
@@ -486,18 +505,23 @@ def _map_index_blocks(traj, arr: np.ndarray, fn, schema, periodic: bool) -> Data
     )
 
 
-def _long_rows(fids: np.ndarray, id_col: str, n: int, **values):
+def _long_rows(fids: np.ndarray, id_col: str, n: int, **values) -> dict:
     """Long output of a per-(frame, index) kernel: frame_id repeated,
     ``id_col`` 0..n-1 tiled, then the raveled value columns."""
-    import pandas as pd
+    return {
+        "frame_id": np.repeat(fids, n),
+        id_col: np.tile(np.arange(n, dtype=np.int32), len(fids)),
+        **values,
+    }
 
-    return pd.DataFrame(
-        {
-            "frame_id": np.repeat(fids, n),
-            id_col: np.tile(np.arange(n, dtype=np.int32), len(fids)),
-            **values,
-        }
-    )
+
+def _list_column(rows: np.ndarray):
+    """One Arrow list per row of a 2-D array, zero-copy: the flat
+    values under row offsets."""
+    import pyarrow as pa
+
+    offsets = np.arange(rows.shape[0] + 1, dtype=np.int32) * rows.shape[1]
+    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(rows.reshape(-1)))
 
 
 def _vectorized_pair_op(
@@ -506,10 +530,8 @@ def _vectorized_pair_op(
     n_pairs = len(arr)
 
     def wide(fids, xyz, box, ortho, p):
-        import pandas as pd
-
         d = kernels.distances_np(xyz, p[:, 0], p[:, 1], box, ortho)
-        return pd.DataFrame({"frame_id": fids, "dists": list(d)})
+        return {"frame_id": fids, "dists": _list_column(d)}
 
     def dists(fids, xyz, box, ortho, p):
         d = kernels.distances_np(xyz, p[:, 0], p[:, 1], box, ortho)

@@ -1,13 +1,14 @@
-"""Numpy kernels for the Arrow-vectorized (pandas-UDF) fast paths.
+"""Numpy kernels for the Arrow-vectorized fast paths.
 
 These are the engine's own vectorized implementations of the math
 whose semantics the reference documents (it delegates the hot loops
 to MDTraj's C/SSE extension — ``geometry/distance.py:53-63``,
 ``geometry/angle.py:48-52``; the pure-array slow paths at
 ``distance.py:209-236`` and ``angle.py:142-176`` define the
-semantics we reproduce). They run inside ``mapInPandas`` over wide
-per-frame rows, so each invocation sees a batch of frames and is
-fully vectorized over (frames × pairs).
+semantics we reproduce). They run inside the frame-block
+``mapInArrow`` of ``distance.map_frame_blocks``, so each invocation
+sees a block of whole frames and is fully vectorized over
+(frames × pairs).
 
 All inputs float32; intermediate MIC math in float32 (matching the
 reference's float32 envelope); means accumulate in float64 (as the

@@ -30,7 +30,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
-from dask_traj_spark.operators.distance import map_frame_blocks
+from dask_traj_spark.operators.distance import _list_column, map_frame_blocks
 
 
 def pca_fit(traj, atoms, k: int = 3):
@@ -42,17 +42,13 @@ def pca_fit(traj, atoms, k: int = 3):
     dim = 3 * m
 
     def partials(fids, xyz, _box, _ortho, _const):
-        import pandas as pd
-
         x = xyz.reshape(len(fids), dim).astype(np.float64)
         g = x.T @ x
-        return pd.DataFrame(
-            {
-                "n": [len(fids)],
-                "s": [x.sum(axis=0).tolist()],
-                "g": [g.reshape(-1).tolist()],
-            }
-        )
+        return {
+            "n": np.array([len(fids)]),
+            "s": _list_column(x.sum(axis=0)[None]),
+            "g": _list_column(g.reshape(1, -1)),
+        }
 
     schema = "n long, s array<double>, g array<double>"
     rows = map_frame_blocks(traj, partials, schema, atoms=sel).collect()
@@ -89,14 +85,10 @@ def pca_project(traj, atoms, mean, components) -> DataFrame:
              np.asarray(components, dtype=np.float64))
 
     def gen(fids, xyz, _box, _ortho, c):
-        import pandas as pd
-
         mu, comps = c
         x = xyz.reshape(len(fids), dim).astype(np.float64) - mu
         proj = x @ comps.T  # (B, k)
-        return pd.DataFrame(
-            {"frame_id": fids, "pc": [row.tolist() for row in proj]}
-        )
+        return {"frame_id": fids, "pc": _list_column(proj)}
 
     return map_frame_blocks(
         traj, gen, "frame_id long, pc array<double>", atoms=sel, const=const
@@ -115,10 +107,8 @@ def _features_df(traj, sel) -> DataFrame:
     dim = 3 * len(sel)
 
     def gen(fids, xyz, _box, _ortho, _const):
-        import pandas as pd
-
         x = xyz.reshape(len(fids), dim).astype(np.float64)
-        return pd.DataFrame({"frame_id": fids, "f": [row.tolist() for row in x]})
+        return {"frame_id": fids, "f": _list_column(x)}
 
     return map_frame_blocks(traj, gen, "frame_id long, f array<double>", atoms=sel)
 

@@ -22,9 +22,10 @@ is exact in double, making the operator oracle-gateable.
 ``rmsd_topk`` adds the deterministic (rmsd asc, frame_id asc) top-k
 — distributed top-k via one tiny window over n_frames rows.
 
-For rotation-aligned (Kabsch) RMSD, the vectorized path is
-``kernels``-style ``mapInPandas`` over packed frames; provided as
-``frame_rmsd_aligned`` with the 3×3 SVD per frame in numpy.
+For rotation-aligned (Kabsch) RMSD, the vectorized path is the
+frame-block ``mapInArrow`` map over packed frames
+(``distance.map_frame_blocks``); provided as ``frame_rmsd_aligned``
+with the 3×3 SVD per frame in numpy.
 """
 
 from __future__ import annotations
@@ -124,8 +125,6 @@ def frame_rmsd_aligned(traj, query_frame: int) -> DataFrame:
     q = _query_frame(traj, query_frame)
 
     def kernel(fids, xyz, _box, _ortho, qc):
-        import pandas as pd
-
         out = np.empty(len(fids), dtype=np.float64)
         for i in range(len(fids)):
             p, _, s, _, d = _kabsch(xyz[i], qc)
@@ -133,7 +132,7 @@ def frame_rmsd_aligned(traj, query_frame: int) -> DataFrame:
             s[-1] *= d
             msd = ((p ** 2).sum() + (qc ** 2).sum() - 2 * s.sum()) / len(qc)
             out[i] = np.sqrt(max(msd, 0.0))
-        return pd.DataFrame({"frame_id": fids, "rmsd": out})
+        return {"frame_id": fids, "rmsd": out}
 
     return map_frame_blocks(traj, kernel, "frame_id long, rmsd double", const=q)
 
@@ -144,19 +143,21 @@ def superpose(traj, query_frame: int) -> DataFrame:
     return the transformed coordinates (frame_id, atom_id, x, y, z
     FLOAT) — the coordinate-mutating counterpart of
     ``frame_rmsd_aligned`` (same public API shape as mdtraj
-    ``Trajectory.superpose``).  Runs as one Arrow-batched
-    ``mapInPandas`` over packed frames: per frame an SVD of the 3×3
-    covariance, with the det(U·Vᵀ) reflection guard, then one matmul
-    over the frame's atoms.  The query frame maps onto its own
+    ``Trajectory.superpose``).  Runs as one ``mapInArrow`` over
+    packed frames: per frame an SVD of the 3×3 covariance, with the
+    det(U·Vᵀ) reflection guard, then one matmul over the frame's
+    atoms.  The query frame maps onto its own
     centered coordinates.  Contract gate: the plain (unaligned) RMSD
     of the output against the centered query equals
     ``frame_rmsd_aligned`` of the input (x7)."""
     import numpy as np
-    import pandas as pd
 
     from dask_traj_spark.operators.distance import (
+        _arrow_schema,
         _block_arrays,
-        _iter_frame_blocks,
+        _block_cap,
+        _frame_blocks,
+        _record_batch,
     )
 
     q = _query_frame(traj, query_frame)
@@ -165,28 +166,30 @@ def superpose(traj, query_frame: int) -> DataFrame:
     # its own loop, not map_frame_blocks: the transform re-emits each
     # row's atom_id, so its feed carries atom_id past the kernel
     packed = traj.frame_packed().select("frame_id", "atom_id", "x", "y", "z")
+    schema = "frame_id long, atom_id int, x float, y float, z float"
+    out_schema = _arrow_schema(schema)
+    cap = _block_cap(traj.spark)
 
     def gen(batches):
         qc = b_q.value
-        for block in _iter_frame_blocks(batches):
+        for block in _frame_blocks(batches, cap):
             fids, xyz, _, _ = _block_arrays(block, None)
             aligned = np.empty(xyz.shape, dtype=np.float32)
             for i in range(len(fids)):
                 p, u, _, vt, d = _kabsch(xyz[i], qc)
                 aligned[i] = p @ (u @ np.diag([1.0, 1.0, d]) @ vt)
-            yield pd.DataFrame(
+            yield _record_batch(
                 {
-                    "frame_id": block["frame_id"].to_numpy(),
-                    "atom_id": block["atom_id"].to_numpy(),
+                    "frame_id": block["frame_id"],
+                    "atom_id": block["atom_id"],
                     "x": aligned[..., 0].ravel(),
                     "y": aligned[..., 1].ravel(),
                     "z": aligned[..., 2].ravel(),
-                }
+                },
+                out_schema,
             )
 
-    return packed.mapInPandas(
-        gen, "frame_id long, atom_id int, x float, y float, z float"
-    )
+    return packed.mapInArrow(gen, schema)
 
 
 def compute_rmsf(traj) -> DataFrame:

@@ -478,7 +478,7 @@ FROM acc
 
 @register("g1_distances_vec", _f32_dist_vec())
 def q_distances_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver gate for the vectorized (mapInPandas + numpy) distance
+    """Driver gate for the vectorized (mapInArrow + numpy) distance
     path — the same code the bench's canonical_distances runs — so the
     throughput path carries oracle evidence, not just pytest."""
     from dask_traj_spark.operators.distance import compute_distances

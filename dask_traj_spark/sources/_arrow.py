@@ -36,7 +36,11 @@ the frames drop whole chunks, and the frames of a spec-list payload
 ``select_frames``, ``atom_slice`` and ``join`` use — makes that cut
 when its input is a bare file scan, from the plan the scan already
 holds, and keeps its literal predicate over the cut scan, so a format
-that returns a superset stays exact.
+that returns a superset stays exact. A frame-block map over a bare
+scan (``operators.distance.map_frame_blocks``) does not read the
+scan's output: :func:`frame_feed` runs the scan task's own decode in
+the map task, over the same cut and predicate, so decode and kernel
+share one Python stage.
 
 A scan partition is one chunk: whole frames in (frame_id, atom_id)
 order, the ``packed=True`` contract of :class:`Trajectory`, so every
@@ -173,6 +177,17 @@ class _Scan(NamedTuple):
     atoms: tuple[int, int]
 
 
+def _decode(fmt: str, path: str, atoms: tuple[int, int], plan: list, chunk_ids) -> Iterator["object"]:
+    """The body of every scan task: chunks ``chunk_ids`` of the chunk
+    plan ``plan`` of ``path``, decoded by format module ``fmt`` to the
+    atom span ``atoms``, as record batches in the shared coords
+    schema."""
+    mod = _format_module(fmt)
+    for i in chunk_ids:
+        frames = mod.decode_chunk(path, plan[i], atoms)
+        yield from frames_to_record_batches(frames, atoms[0])
+
+
 def scan_frames(
     spark: SparkSession, fmt: str, path: str, plan: list, atoms: tuple[int, int] = ALL_ATOMS
 ) -> DataFrame:
@@ -192,11 +207,8 @@ def scan_frames(
         payloads = spark.sparkContext.broadcast(plan)
 
         def decode(batches):
-            mod = _format_module(fmt)
             for batch in batches:
-                for i in batch.column(0).to_pylist():
-                    frames = mod.decode_chunk(path, payloads.value[i], atoms)
-                    yield from frames_to_record_batches(frames, atoms[0])
+                yield from _decode(fmt, path, atoms, payloads.value, batch.column(0).to_pylist())
 
         df = spark.range(0, n, 1, n).mapInArrow(decode, _COORDS_SCHEMA)
     # kept on this DataFrame object only: a derived DataFrame
@@ -229,6 +241,40 @@ def _bare_scan(df: DataFrame) -> _Scan | None:
     return None if level.useMemory or level.useDisk else scan
 
 
+class _IdRange(NamedTuple):
+    """The literal predicate of :func:`select_ids`: ids BETWEEN ``lo``
+    and ``hi``, and IN ``listed`` unless it is None."""
+
+    lo: int
+    hi: int
+    listed: list | None
+
+    @classmethod
+    def of(cls, ids, max_listed: int | None = None) -> "_IdRange":
+        ids = sorted({int(i) for i in ids})
+        sparse = len(ids) < ids[-1] - ids[0] + 1
+        listed = sparse and (max_listed is None or len(ids) <= max_listed)
+        return cls(ids[0], ids[-1], ids if listed else None)
+
+    def column(self, col: str):
+        pred = F.col(col).between(self.lo, self.hi)
+        return pred if self.listed is None else pred & F.col(col).isin(self.listed)
+
+    def mask(self, values: np.ndarray) -> np.ndarray:
+        """The predicate over a task's NumPy column."""
+        keep = (values >= self.lo) & (values <= self.hi)
+        return keep if self.listed is None else keep & np.isin(values, self.listed)
+
+    def cut(self, scan: _Scan, col: str) -> _Scan:
+        """``scan`` cut to the ids' atom span, or to their frames."""
+        if col == "atom_id":
+            lo, hi = scan.atoms
+            return scan._replace(atoms=(max(lo, self.lo), min(hi, self.hi)))
+        keep = None if self.listed is None else frozenset(self.listed)
+        cut = (_narrow(p, (self.lo, self.hi), keep) for p in scan.payloads)
+        return scan._replace(payloads=[p for p in cut if p])
+
+
 def select_ids(df: DataFrame, col: str, ids, max_listed: int | None = None) -> DataFrame:
     """``df`` restricted to the rows whose ``col`` (``atom_id`` or
     ``frame_id``) is in the non-empty id set ``ids``.
@@ -243,23 +289,77 @@ def select_ids(df: DataFrame, col: str, ids, max_listed: int | None = None) -> D
       atom past the span and no frame outside it, a fixed-stride
       format reads only their bytes. The file is not planned again.
     """
-    ids = sorted({int(i) for i in ids})
-    pred = F.col(col).between(ids[0], ids[-1])
-    sparse = len(ids) < ids[-1] - ids[0] + 1
-    listed = sparse and (max_listed is None or len(ids) <= max_listed)
-    if listed:
-        pred = pred & F.col(col).isin(ids)
+    sel = _IdRange.of(ids, max_listed)
     scan = _bare_scan(df)
     if scan is not None:
-        if col == "atom_id":
-            lo, hi = scan.atoms
-            scan = scan._replace(atoms=(max(lo, ids[0]), min(hi, ids[-1])))
-        else:
-            keep = frozenset(ids) if listed else None
-            cut = (_narrow(p, (ids[0], ids[-1]), keep) for p in scan.payloads)
-            scan = scan._replace(payloads=[p for p in cut if p])
-        df = scan_frames(df.sparkSession, *scan)
-    return df.where(pred)
+        df = scan_frames(df.sparkSession, *sel.cut(scan, col))
+    return df.where(sel.column(col))
+
+
+class FrameFeed(NamedTuple):
+    """Where a map task over frame blocks gets its coords: a task over
+    ``source`` reads them as ``batches(its input batches)``, Arrow
+    record batches holding at least ``frame_id, x, y, z``, frames
+    whole and in order within a partition. ``scan`` is the cut scan
+    the task decodes itself, None when the JVM feeds it."""
+
+    source: DataFrame
+    batches: object
+    scan: _Scan | None
+
+
+def _passed_on(batches):
+    return batches
+
+
+def frame_feed(df: DataFrame, atom_ids=None) -> FrameFeed:
+    """The coords of the frame-packed ``df``, restricted to the atom
+    ids ``atom_ids`` (None: every atom), as a map task's feed.
+
+    - ``df`` a bare, uncached :func:`scan_frames` DataFrame with a
+      chunk left: ``source`` is the ``range`` over the chunk ids of
+      the scan cut to the ids' atom span, and the map task decodes
+      each chunk itself (the body of the scan's own task) and applies
+      :func:`select_ids`' literal predicate, so a format that returns
+      a superset stays exact. Decode and map share one Python stage;
+      the coordinates never become a table.
+    - Otherwise (Parquet, derived, cached, streaming): ``source`` is
+      ``df`` under the same predicate, projected to ``frame_id, x, y,
+      z``, and the JVM feeds its Arrow batches to the task.
+    """
+    sel = None if atom_ids is None else _IdRange.of(atom_ids)
+    scan = _bare_scan(df)
+    if scan is None or not scan.payloads:
+        if sel is not None:
+            df = df.where(sel.column("atom_id"))
+        return FrameFeed(df.select("frame_id", "x", "y", "z"), _passed_on, None)
+    if sel is not None:
+        scan = sel.cut(scan, "atom_id")
+    n = len(scan.payloads)
+    payloads = df.sparkSession.sparkContext.broadcast(scan.payloads)
+    # the task takes the plan from the broadcast, not from ``scan``
+    fmt, path, atoms = scan.fmt, scan.path, scan.atoms
+
+    def batches(chunk_ids):
+        for ids in chunk_ids:
+            for batch in _decode(fmt, path, atoms, payloads.value, ids.column(0).to_pylist()):
+                if sel is not None:
+                    keep = sel.mask(batch.column("atom_id").to_numpy())
+                    if not keep.all():
+                        batch = batch.filter(keep)
+                yield batch
+
+    return FrameFeed(df.sparkSession.range(0, n, 1, n), batches, scan)
+
+
+def _table(spark: SparkSession, schema: str, *cols: np.ndarray) -> DataFrame:
+    """A per-frame table of the DDL ``schema`` from its NumPy columns,
+    handed to Spark as one Arrow table (a local relation: no Python
+    rows, no RDD)."""
+    import pyarrow as pa
+
+    names = [f.split()[0] for f in schema.split(", ")]
+    return spark.createDataFrame(pa.table(dict(zip(names, cols))), schema)
 
 
 def load_indexed(
@@ -312,20 +412,16 @@ def load_indexed(
         # raises instead of silently dropping frames
         times = np.asarray(time, dtype=np.float64).reshape(n_frames)
         steps = ids if step is None else np.asarray(step, dtype=np.int64).reshape(n_frames)
-        frames_df = spark.createDataFrame(
-            list(zip(ids.tolist(), times.tolist(), steps.tolist())), _FRAMES_SCHEMA
-        )
+        frames_df = _table(spark, _FRAMES_SCHEMA, ids, times, steps)
     unitcell = host_box = None
     if box is not None:
         vecs = np.asarray(box, dtype=np.float32).reshape(n_frames, 3, 3)
-        unitcell = spark.createDataFrame(
-            [(i, *v) for i, v in zip(ids.tolist(), vecs.reshape(-1, 9).tolist())],
-            _BOX_SCHEMA,
-        )
+        unitcell = _table(spark, _BOX_SCHEMA, ids, *vecs.reshape(-1, 9).T)
         if np.isfinite(lengths_angles_np(vecs)).all():
             host_box = vecs
     elif cell is not None:
-        unitcell = spark.createDataFrame([tuple(r) for r in cell], _CELL_SCHEMA)
+        rows = np.asarray([tuple(r) for r in cell], dtype=np.float64).reshape(-1, 7)
+        unitcell = _table(spark, _CELL_SCHEMA, rows[:, 0].astype(np.int64), *rows[:, 1:].astype(np.float32).T)
     counts = np.unique(np.asarray(n_atoms, dtype=np.int64))
     index = FrameIndex(ids, int(counts[0]) if len(counts) == 1 else None, host_box)
     coords = scan_frames(spark, fmt, path, plan)

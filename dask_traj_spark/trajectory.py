@@ -194,9 +194,10 @@ class Trajectory:
         trajectory was constructed with ``packed=True`` (a loaded
         file, frame-sorted parquet, ordered generation), in which
         case it is the coords themselves: a loaded file's geometry
-        query is then one stage (scan → filter → ``mapInPandas``,
-        one job), over a scan the operator's atom selection cut to
-        the atoms it reads (``sources._arrow.select_ids``). Memoized;
+        query is then one stage and one Python node (a
+        ``mapInArrow`` over the chunk ids that decodes each chunk,
+        cut to the atoms the operator reads, and runs the kernel in
+        the same task: ``sources._arrow.frame_feed``). Memoized;
         ``traj.frame_packed().cache()`` before running several
         geometry ops.
 

@@ -2,12 +2,13 @@
 
 Usage:
     python scripts/dump_plans.py --out plans/r12 --suffix _after \
-        [--sf DIR] [--repo PATH] q1 [q2 ...]
+        --sf DIR [--repo PATH] q1 [q2 ...]
 
-``--repo`` lets the same script run against a historical worktree
-(e.g. the round-11 tree) to capture the "before" plans; the script
-inserts that path at the head of ``sys.path`` before importing the
-package.  Iterative queries (PageRank, components, BPE) execute their
+``--sf`` is the directory of the registry's Parquet tables.
+``--repo`` (default: the checkout this script sits in) lets the same
+script run against a historical worktree (e.g. the round-11 tree) to
+capture the "before" plans; the script inserts that path at the head
+of ``sys.path`` before importing the package.  Iterative queries (PageRank, components, BPE) execute their
 driver loop while the DataFrame is being built; the dumped plan is the
 final returned frame's plan (the per-round shape is pinned separately
 by tests/test_plans.py).
@@ -21,7 +22,8 @@ import sys
 from contextlib import redirect_stdout
 
 args = sys.argv[1:]
-out_dir, suffix, sf_dir, repo, names = "plans/r12", "_after", "/root/testdata/sf0.001", "/root/repo", []
+out_dir, suffix, sf_dir, names = "plans/r12", "_after", None, []
+repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 i = 0
 while i < len(args):
     if args[i] == "--out":
@@ -39,6 +41,8 @@ while i < len(args):
     else:
         names.append(args[i])
         i += 1
+if sf_dir is None:
+    sys.exit(__doc__)
 
 sys.path.insert(0, repo)
 

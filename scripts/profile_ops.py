@@ -1,7 +1,7 @@
 """Ad-hoc operator-level profile (direct operator calls, not just
 registry entries) for interleaved before/after comparisons.
 
-Usage: python scripts/profile_ops.py w1 [w2 ...] [--sf DIR] [--iters N]
+Usage: python scripts/profile_ops.py w1 [w2 ...] --sf DIR [--iters N]
                                         [--repo PATH] [--tag LABEL]
 
 Workloads (production/hashed modes, mirroring bench.py's direct
@@ -15,15 +15,19 @@ operator entries):
     d18_rounds     pagerank(winnow graph, n_iter=8) [d18 shape]
     q:<name>       any registry query by name
 
-``--repo`` points at a historical worktree (the before side); run
+``--sf`` is the directory of the Parquet tables.  ``--repo``
+(default: the checkout this script sits in) points at a historical
+worktree (the before side); run
 A/B/A/B in alternating processes on the same warm host.
 """
 
+import os
 import sys
 import time
 
 args = sys.argv[1:]
-sf_dir, iters, repo, tag, names = "/root/testdata/sf0.1", 3, "/root/repo", "", []
+sf_dir, iters, tag, names = None, 3, "", []
+repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 i = 0
 while i < len(args):
     if args[i] == "--sf":
@@ -41,6 +45,8 @@ while i < len(args):
     else:
         names.append(args[i])
         i += 1
+if sf_dir is None:
+    sys.exit(__doc__)
 
 sys.path.insert(0, repo)
 

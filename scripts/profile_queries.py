@@ -1,15 +1,19 @@
 """Ad-hoc profile: time registry queries at a given SF dir.
 
-Usage: python scripts/profile_queries.py q1 [q2 ...] [--sf DIR] [--iters N]
+Usage: python scripts/profile_queries.py q1 [q2 ...] --sf DIR [--iters N]
                                          [--repo PATH]
 
-``--repo`` profiles a historical worktree (before/after comparisons).
+``--sf`` is the directory of the registry's Parquet tables.
+``--repo`` (default: the checkout this script sits in) profiles a
+historical worktree (before/after comparisons).
 """
+import os
 import sys
 import time
 
 args = sys.argv[1:]
-sf_dir, iters, repo, names = "/root/testdata/sf0.1", 3, "/root/repo", []
+sf_dir, iters, names = None, 3, []
+repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 i = 0
 while i < len(args):
     if args[i] == "--sf":
@@ -24,6 +28,8 @@ while i < len(args):
     else:
         names.append(args[i])
         i += 1
+if sf_dir is None:
+    sys.exit(__doc__)
 
 sys.path.insert(0, repo)
 

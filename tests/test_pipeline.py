@@ -2224,7 +2224,7 @@ class TestAdviceR5Regressions:
         BETWEEN fast path must not fire and feed atom 3 (ADVICE r4)."""
         import numpy as np
 
-        from dask_traj_spark.operators.distance import _packed_input
+        from dask_traj_spark.sources._arrow import frame_feed
         from dask_traj_spark.sources.loaders import from_wide_pandas
 
         import pandas as pd
@@ -2250,8 +2250,7 @@ class TestAdviceR5Regressions:
         from dask_traj_spark.trajectory import Trajectory
 
         traj = Trajectory(coords)
-        feed, _ = _packed_input(traj, periodic=False,
-                                atoms=np.array([1, 2, 2, 4]))
+        feed = frame_feed(traj.frame_packed(), np.array([1, 2, 2, 4])).source
         atoms_fed = sorted(
             {int(r["x"]) % 10 for r in feed.collect()}
         )

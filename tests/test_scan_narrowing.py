@@ -4,10 +4,12 @@ A loaded trajectory's coords are one scan — a ``range`` of chunk ids
 and one ``mapInArrow`` that decodes them — whose partitions hold
 whole frames in (frame_id, atom_id) order, so it is
 built ``packed=True`` and a vectorized geometry query on it is one
-stage. ``select_ids`` — the atom and frame selection of every
-operator and of ``select_frames`` — re-opens a bare scan cut to the
-ids' atom span or frames, so XTC decodes no atom past the span and
-the fixed-stride formats read only its bytes. These tests pin that a
+stage: its frame-block map decodes the chunks itself, in one Python
+node over the ``range`` of chunk ids. ``select_ids`` — the atom and
+frame selection of every operator and of ``select_frames`` —
+re-opens a bare scan cut to the ids' atom span or frames, so XTC
+decodes no atom past the span and the fixed-stride formats read only
+its bytes. These tests pin that a
 cut scan returns the rows of the full scan, reads only the cut, and
 that the packed plan holds no shuffle.
 """
@@ -224,6 +226,24 @@ def test_only_a_bare_uncached_scan_is_cut(spark, xtc_path):
         coords.unpersist()
 
 
+def _python_nodes(plan) -> list:
+    """The nodes of an executed plan that run Python."""
+    return [
+        n for n in _walk(plan, [])
+        if any(k in n.getClass().getSimpleName() for k in ("Python", "InPandas", "InArrow"))
+    ]
+
+
+def _assert_one_fused_stage(df):
+    """``df`` ran exactly one Python node, the map over the ``range``
+    of chunk ids that decodes them, and no filter, exchange or sort."""
+    plan = df._jdf.queryExecution().executedPlan()
+    (node,) = _python_nodes(plan)
+    assert _decode_nodes(plan) == [node], plan.toString()
+    names = [n.getClass().getSimpleName() for n in _walk(plan, [])]
+    assert not [c for c in names if "Filter" in c or "Exchange" in c or "Sort" in c], names
+
+
 def test_loaded_xtc_query_is_one_stage_and_one_job(spark, xtc_path):
     sc = spark.sparkContext
     traj = load(spark, xtc_path, chunks=2)
@@ -237,9 +257,10 @@ def test_loaded_xtc_query_is_one_stage_and_one_job(spark, xtc_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     got = d.collect()
-    plan = d._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan and "Sort" not in plan, plan
-    assert _scan_rows(d) == 6 * 10  # only atoms 4..13 leave the scan
+    _assert_one_fused_stage(d)
+    # the map's tasks decode only atoms 4..13, of every chunk
+    assert d._fused_scan.atoms == (4, 13)
+    assert d._fused_scan.payloads == traj.coords._frame_scan.payloads
     unpacked = Trajectory(traj.coords, traj._frames, traj.unitcell, packed=False, index=traj.index)
     ref = compute_distances(unpacked, pairs, periodic=True, form="vectorized").collect()
     assert "Exchange" in compute_distances(
@@ -257,11 +278,118 @@ def test_loaded_mdcrd_query_is_one_decode_and_no_exchange(spark, written):  # no
     traj = load_written(spark, written, ".mdcrd", chunks=2)
     pairs = list(itertools.combinations(range(2, 9), 2))
     d = compute_distances(traj, pairs, periodic=True, form="vectorized")
-    d.collect()
-    plan = d._jdf.queryExecution().executedPlan()
-    assert len(_decode_nodes(plan)) == 1, plan.toString()
-    assert "Exchange" not in plan.toString(), plan.toString()
-    assert _scan_rows(d) == N_FRAMES * 7
+    assert d.count() == N_FRAMES * len(pairs)
+    _assert_one_fused_stage(d)
+    assert d._fused_scan.atoms == (2, 8)
+    assert len(d._fused_scan.payloads) == 2
+
+
+def _jvm_fed(traj) -> Trajectory:
+    """``traj`` over a derived DataFrame of its scan: still packed,
+    but no longer a bare scan, so the JVM feeds its frame-block map."""
+    return Trajectory(
+        traj.coords.select("*"), traj._frames, traj.unitcell, packed=True, index=traj.index
+    )
+
+
+@pytest.mark.parametrize("ext", INDEXED_FORMATS)
+def test_fused_map_equals_jvm_fed_map(spark, written, ext):  # noqa: F811
+    """Decoding in the map task gives the bits of the JVM-fed map, for
+    every selection shape, distances and angles, with and without the
+    periodic box (each side one job over the union of its queries)."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame, functions as F
+
+    from dask_traj_spark.operators.angle import compute_angles
+
+    traj = load_written(spark, written, ext, chunks=3)
+    sides = {True: (traj, []), False: (_jvm_fed(traj), [])}
+    n_rows = 0
+    for sel, ids in SELECTIONS.items():
+        pairs = list(itertools.combinations(ids, 2)) or [(ids[0], ids[0])]
+        triplets = [tuple(ids[(k + j) % len(ids)] for j in range(3)) for k in range(len(ids))]
+        for periodic in (True, False):
+            for op, idx, key, value in (
+                (compute_distances, pairs, "pair_id", "dist"),
+                (compute_angles, triplets, "triplet_id", "angle_rad"),
+            ):
+                n_rows += N_FRAMES * len(idx)
+                for fused, (t, dfs) in sides.items():
+                    df = op(t, idx, periodic=periodic, form="vectorized")
+                    assert (df._fused_scan is not None) == fused
+                    tag = F.lit(f"{sel} {periodic} {value}").alias("tag")
+                    dfs.append(df.select(tag, "frame_id", F.col(key).alias("id"), F.col(value).alias("v")))
+
+    def bits(dfs):
+        rows = sorted(reduce(DataFrame.unionAll, dfs).collect())
+        assert len(rows) == n_rows
+        vals = np.array([r.v for r in rows], dtype=np.float32).view(np.uint32)
+        return [r[:3] for r in rows], vals
+
+    (keys, got), (want_keys, want) = (bits(dfs) for _t, dfs in sides.values())
+    assert keys == want_keys
+    np.testing.assert_array_equal(got, want)
+
+
+@pytest.mark.parametrize("fused", [True, False], ids=["fused", "jvm_fed"])
+def test_missing_atoms_raise_in_the_map(spark, xtc_path, fused):
+    """An index past the frames' atoms, admitted by a larger
+    ``n_atoms``, leaves the map a block short of atoms: the same
+    error on either feed."""
+    from pyspark.errors import PythonException
+
+    traj = load(spark, xtc_path)
+    traj = traj if fused else _jvm_fed(traj)
+    d = compute_distances(traj, [(0, 50), (1, 2)], periodic=False, form="vectorized", n_atoms=60)
+    assert (d._fused_scan is not None) == fused
+    with pytest.raises(PythonException, match="atoms are missing"):
+        d.collect()
+
+
+def test_cached_scan_feeds_the_map_through_the_jvm(spark, xtc_path):
+    traj = load(spark, xtc_path, chunks=2)
+    pairs = list(itertools.combinations(range(3, 9), 2))
+    want = sorted(compute_distances(traj, pairs, periodic=True, form="vectorized").collect())
+    traj.coords.cache()
+    try:
+        d = compute_distances(traj, pairs, periodic=True, form="vectorized")
+        assert d._fused_scan is None
+        assert sorted(d.collect()) == want
+        plan = d._jdf.queryExecution().executedPlan()
+        names = [n.getClass().getSimpleName() for n in _walk(plan, [])]
+        assert "InMemoryTableScanExec" in names, names
+        (node,) = [n for n in _python_nodes(plan) if n not in _decode_nodes(plan)]
+        assert node.getClass().getSimpleName() == "MapInArrowExec"
+        assert "MapInPandasExec" not in names
+    finally:
+        traj.coords.unpersist()
+
+
+@pytest.mark.parametrize("cap", [50, 10])
+@pytest.mark.parametrize("fused", [True, False], ids=["fused", "jvm_fed"])
+def test_frame_blocks_keep_to_the_arrow_batch_cap(spark, xtc_path, cap, fused):
+    """A block holds whole frames and at most the session's Arrow
+    batch size of rows, or one frame when a frame holds more."""
+    from dask_traj_spark.operators.distance import map_frame_blocks
+
+    def sizes(fids, xyz, _box, _ortho, _c):
+        return {"frame_id": fids[:1], "rows": np.array([xyz.shape[0] * xyz.shape[1]])}
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(cap))
+    try:
+        traj = load(spark, xtc_path, chunks=6)
+        traj = traj if fused else _jvm_fed(traj)
+        out = map_frame_blocks(traj, sizes, "frame_id long, rows long")
+        assert (out._fused_scan is not None) == fused
+        rows = [r.rows for r in out.collect()]
+    finally:
+        spark.conf.set(key, old)
+    assert sum(rows) == 6 * 24
+    assert all(r % 24 == 0 for r in rows), rows
+    assert max(rows) == (48 if cap == 50 else 24), rows
 
 
 @pytest.fixture(scope="module")
