@@ -50,7 +50,13 @@ from dask_traj_spark.operators.mic import (
     orthogonality_expr,
 )
 from dask_traj_spark.operators.unitcell import lengths_angles_np
-from dask_traj_spark.sources._arrow import LITERAL_IDS_MAX, frame_feed, select_ids
+from dask_traj_spark.sources._arrow import (
+    LITERAL_IDS_MAX,
+    arrow_column,
+    frame_feed,
+    numpy_column,
+    select_ids,
+)
 
 _VECTORIZED_THRESHOLD = 512
 
@@ -291,9 +297,9 @@ class _BoxLookup:
     """Driver-collected per-frame box: frame_id → (3,3) vectors +
     orthogonality flag, queried with searchsorted inside kernels.
 
-    Scale note: one row per frame (n_frames ≪ n_rows), collected
-    once per operator call and broadcast with the kernel's
-    constants."""
+    Scale note: one row per frame (n_frames ≪ n_rows), built once per
+    trajectory and unit-cell table, and broadcast with each operator
+    call's kernel constants."""
 
     def __init__(self, ids, vecs, ortho):
         self.ids = ids
@@ -302,20 +308,30 @@ class _BoxLookup:
 
     @classmethod
     def from_traj(cls, traj):
+        """The trajectory's lookup, kept on it (as ``frame_packed``
+        keeps its DataFrame) for as long as its ``unitcell`` is the
+        same table: from the index's box vectors, else collected from
+        ``unitcell`` in one Spark job, which later calls skip."""
+        kept = getattr(traj, "_box_lookup", None)
+        if kept is not None and kept[0] is traj.unitcell:
+            return kept[1]
         if traj.index is not None and traj.index.box is not None:
             # the loader's own box vectors: no Spark job
             ang = lengths_angles_np(traj.index.box)[:, 3:]
-            return cls(traj.index.frame_ids, traj.index.box, kernels.is_orthogonal_np(ang))
-        pdf = (
-            traj.unitcell_full()
-            .select("frame_id", *_BOX_COLS, "alpha", "beta", "gamma")
-            .toPandas()
-            .sort_values("frame_id")
-        )
-        ids = pdf["frame_id"].to_numpy()
-        vecs = pdf[_BOX_COLS].to_numpy(dtype=np.float32).reshape(-1, 3, 3)
-        ang = pdf[["alpha", "beta", "gamma"]].to_numpy(dtype=np.float32)
-        return cls(ids, vecs, kernels.is_orthogonal_np(ang))
+            lookup = cls(traj.index.frame_ids, traj.index.box, kernels.is_orthogonal_np(ang))
+        else:
+            pdf = (
+                traj.unitcell_full()
+                .select("frame_id", *_BOX_COLS, "alpha", "beta", "gamma")
+                .toPandas()
+                .sort_values("frame_id")
+            )
+            ids = pdf["frame_id"].to_numpy()
+            vecs = pdf[_BOX_COLS].to_numpy(dtype=np.float32).reshape(-1, 3, 3)
+            ang = pdf[["alpha", "beta", "gamma"]].to_numpy(dtype=np.float32)
+            lookup = cls(ids, vecs, kernels.is_orthogonal_np(ang))
+        traj._box_lookup = (traj.unitcell, lookup)
+        return lookup
 
     def get(self, frame_ids):
         """→ (keep, box, ortho): ``keep`` masks the frames that have a
@@ -337,19 +353,21 @@ _NOT_PACKED = (
 def _frame_blocks(batches, cap: int, ascending: bool = True):
     """Regroup an Arrow-batch iterator into complete-frame blocks,
     each a dict of NumPy columns holding whole frames and at most
-    ``cap`` rows (one frame, when a frame alone holds more): a frame
-    straddling two batches is carried forward until its last row has
-    arrived (input is frame-contiguous).  With ``ascending``, frame
-    ids that descend anywhere in the partition raise: the carried
-    frame joins each batch, so every step is checked.  A stream's
-    partition may hold its micro-batch's files in any order, so there
-    frames ascend only within a file."""
+    ``cap`` rows (one frame, when a frame alone holds more).  A block
+    is given out once the frame after it would not fit; the frames
+    that still fit, the batch's last frame among them (it may go on in
+    the next batch: input is frame-contiguous), are carried into the
+    next batch, and given out as the last block when none follows.
+    With ``ascending``, frame ids that descend anywhere in the
+    partition raise: the carried frames join each batch, so every step
+    is checked.  A stream's partition may hold its micro-batch's files
+    in any order, so there frames ascend only within a file."""
     carry = None
     for batch in batches:
         if not batch.num_rows:
             continue
         cols = {
-            name: col.to_numpy(zero_copy_only=False)
+            name: numpy_column(col)
             for name, col in zip(batch.schema.names, batch.columns)
         }
         if carry is not None:
@@ -361,15 +379,16 @@ def _frame_blocks(batches, cap: int, ascending: bool = True):
                 f"frame ids are not ascending ({fids[bad]} then "
                 f"{fids[bad + 1]}) — {_NOT_PACKED}"
             )
-        # frame starts; the last frame may go on in the next batch
         starts = np.flatnonzero(np.r_[True, fids[1:] != fids[:-1]])
         i, last = 0, len(starts) - 1
         while i < last:
-            j = int(np.searchsorted(starts, starts[i] + cap, "right")) - 1
-            j = min(max(j, i + 1), last)
+            # frames i..j-1 fit the cap, frame j does not (or is last)
+            j = max(int(np.searchsorted(starts, starts[i] + cap, "right")) - 1, i + 1)
+            if j == last and len(fids) - starts[i] <= cap:
+                break
             yield {name: col[starts[i] : starts[j]] for name, col in cols.items()}
             i = j
-        carry = {name: col[starts[last] :] for name, col in cols.items()}
+        carry = {name: col[starts[i] :] for name, col in cols.items()}
     if carry is not None:
         yield carry
 
@@ -422,7 +441,7 @@ def _record_batch(cols: dict, schema):
     arrays = []
     for f in schema:
         col = cols[f.name]
-        arrays.append(col if isinstance(col, pa.Array) else pa.array(col, type=f.type, safe=False))
+        arrays.append(col if isinstance(col, pa.Array) else arrow_column(col, f.type))
     return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
@@ -521,7 +540,7 @@ def _list_column(rows: np.ndarray):
     import pyarrow as pa
 
     offsets = np.arange(rows.shape[0] + 1, dtype=np.int32) * rows.shape[1]
-    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(rows.reshape(-1)))
+    return pa.ListArray.from_arrays(arrow_column(offsets), arrow_column(rows.reshape(-1)))
 
 
 def _vectorized_pair_op(

@@ -86,6 +86,63 @@ def atom_range(atoms: tuple[int, int], n: int) -> tuple[int, int]:
     return lo, max(lo, min(atoms[1] + 1, n))
 
 
+def _numpy_dtype(arrow_type) -> np.dtype | None:
+    """The NumPy dtype of a fixed-width numeric Arrow type, else None."""
+    import pyarrow as pa
+
+    for kind, test in (
+        ("f", pa.types.is_floating),
+        ("i", pa.types.is_signed_integer),
+        ("u", pa.types.is_unsigned_integer),
+    ):
+        if test(arrow_type):
+            return np.dtype(f"{kind}{arrow_type.bit_width // 8}")
+    return None
+
+
+def numpy_column(col) -> np.ndarray:
+    """An Arrow array as NumPy, equal to ``col.to_numpy(zero_copy_only=
+    False)``: a read-only view of a numeric array's value buffer (from
+    its slice offset), or, with nulls, a copy with NaN at the nulls
+    (integers as float64).  Read from the buffers, because pyarrow's
+    own conversion imports pandas, which adds ~60 MB to every Python
+    worker that reads a batch; other types still go through it."""
+    dtype = _numpy_dtype(col.type)
+    if dtype is None:
+        return col.to_numpy(zero_copy_only=False)
+    if not len(col):
+        return np.empty(0, dtype)
+    validity, data = col.buffers()
+    values = np.frombuffer(data, dtype, len(col), col.offset * dtype.itemsize)
+    if not col.null_count:
+        return values
+    bits = np.unpackbits(
+        np.frombuffer(validity, np.uint8), count=col.offset + len(col), bitorder="little"
+    )
+    out = values.astype(dtype if dtype.kind == "f" else np.float64)
+    out[bits[col.offset :] == 0] = np.nan
+    return out
+
+
+def arrow_column(values, arrow_type=None):
+    """A 1-D NumPy column as an Arrow array of ``arrow_type`` (default:
+    the column's own type) built over its buffer, equal to
+    ``pa.array(values, type=arrow_type, safe=False)``: the cast is
+    NumPy's ``astype``, which rounds and wraps as Arrow's unsafe cast
+    does.  Built from the buffer, because ``pa.array`` imports pandas
+    (see :func:`numpy_column`); other types still go through it."""
+    import pyarrow as pa
+
+    values = np.asarray(values)
+    dtype = values.dtype if arrow_type is None else _numpy_dtype(arrow_type)
+    if dtype is None or values.ndim != 1 or values.dtype.kind not in "iuf":
+        return pa.array(values, type=arrow_type, safe=False)
+    values = np.ascontiguousarray(values.astype(dtype, copy=False))
+    if arrow_type is None:
+        arrow_type = pa.from_numpy_dtype(dtype)
+    return pa.Array.from_buffers(arrow_type, len(values), [None, pa.py_buffer(values)])
+
+
 def frames_to_record_batches(
     frame_iter: Iterable[tuple[int, "np.ndarray"]],
     lo: int = 0,
@@ -105,11 +162,9 @@ def frames_to_record_batches(
         xyz = np.concatenate(cols, axis=0)
         batch = pa.record_batch(
             [
-                pa.array(np.concatenate(fids)),
-                pa.array(np.concatenate(aids)),
-                pa.array(np.ascontiguousarray(xyz[:, 0])),
-                pa.array(np.ascontiguousarray(xyz[:, 1])),
-                pa.array(np.ascontiguousarray(xyz[:, 2])),
+                arrow_column(np.concatenate(fids)),
+                arrow_column(np.concatenate(aids)),
+                *(arrow_column(xyz[:, k]) for k in range(3)),
             ],
             names=["frame_id", "atom_id", "x", "y", "z"],
         )
@@ -344,9 +399,9 @@ def frame_feed(df: DataFrame, atom_ids=None) -> FrameFeed:
         for ids in chunk_ids:
             for batch in _decode(fmt, path, atoms, payloads.value, ids.column(0).to_pylist()):
                 if sel is not None:
-                    keep = sel.mask(batch.column("atom_id").to_numpy())
+                    keep = sel.mask(numpy_column(batch.column("atom_id")))
                     if not keep.all():
-                        batch = batch.filter(keep)
+                        batch = batch.take(arrow_column(np.flatnonzero(keep)))
                 yield batch
 
     return FrameFeed(df.sparkSession.range(0, n, 1, n), batches, scan)

@@ -30,11 +30,16 @@ unimplemented-format path (core/dask_traj.py:167-169).
 from __future__ import annotations
 
 import importlib
+import json
 import os
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dask_traj_spark import schemas
+from dask_traj_spark.operators.mic import BOX_COLS
+from dask_traj_spark.operators.unitcell import lengths_angles_np
+from dask_traj_spark.sources._arrow import _CELL_COLS, numpy_column
 from dask_traj_spark.trajectory import FrameIndex, Trajectory
 
 #: extension → loader kind; mirrors the reference's ``file_returns``
@@ -187,24 +192,150 @@ def _extension(path: str) -> str:
     return os.path.splitext(base)[1].lower()
 
 
+#: the footer key under which Spark's Parquet writer stores the
+#: table's Spark schema, as JSON
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _listed(name: str) -> bool:
+    """Whether Spark's file listing reads the file or directory
+    ``name``: not hidden (``.``), and not private (``_``) unless it is
+    a hive ``k=v`` directory."""
+    return not (name.startswith(".") or (name.startswith("_") and "=" not in name))
+
+
+def _footer_schema(spark: SparkSession, path: str):
+    """The schema Spark's Parquet inference gives table ``path``, read
+    on the driver from its first data file's footer (about 1 ms, no
+    Spark job), or None where only inference gives it: the footer has
+    no Spark schema (another writer wrote the table), summary files
+    (``_metadata``, ``_common_metadata``) exist, which inference reads
+    first, schema merging is on, or the footer cannot be read.  Spark's
+    inference reads this same key when it is there and assumes, as
+    this does, that every data file agrees."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    if spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower() == "true":
+        return None
+    first = path if os.path.isfile(path) else None
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if _listed(d))
+        for name in sorted(files):
+            if name in ("_metadata", "_common_metadata"):
+                return None
+            if first is None and _listed(name):
+                first = os.path.join(root, name)
+    if first is None:
+        return None
+    try:
+        meta = pq.read_schema(first).metadata or {}
+        return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    except (KeyError, ValueError, OSError, pa.ArrowException):
+        return None
+
+
+def read_table(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``: the same schema, hive partition
+    columns included, and the same rows, but with the schema from
+    :func:`_footer_schema` where it gives one, so the load starts no
+    schema-inference job."""
+    schema = _footer_schema(spark, path)
+    return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+
+
+def _tables(spark: SparkSession, directory: str) -> dict[str, DataFrame | None]:
+    """The layout's ``coords``/``frames``/``unitcell``/``topology``
+    tables through :func:`read_table`, None where one is absent."""
+    out = {}
+    for name in ("coords", "frames", "unitcell", "topology"):
+        p = os.path.join(directory, f"{name}.parquet")
+        out[name] = read_table(spark, p) if os.path.exists(p) else None
+    if out["coords"] is None:
+        raise FileNotFoundError(f"{directory}/coords.parquet not found")
+    return out
+
+
+def _table_index(directory: str, tables: dict, lo: int = 0, hi: int = 2**63 - 1) -> FrameIndex | None:
+    """The :class:`FrameIndex` of a table layout's frames ``lo <=
+    frame_id < hi``, read on the driver with pyarrow from its small
+    dimension tables; None without a ``frames`` table, or when its ids
+    hold a null or repeat.
+
+    - ``frame_ids``: the ``frames`` table's ids, sorted.
+    - ``box``: the float32 ``ax..cz`` vectors, by the rule of
+      ``_arrow.load_indexed``: only when ``unitcell`` stores float
+      vectors and no lengths/angles, holds no null, its ids equal
+      ``frame_ids``, and every frame's lengths and angles are finite
+      (a zero box keeps the Spark-collected lookup and its error).
+    - ``n_atoms``: None. No dimension table holds an atom count the
+      coords must agree with, so ``Trajectory.n_atoms`` counts.
+    """
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import FloatType
+
+    def read(name: str, cols: list[str]):
+        """Table ``name``'s columns ``cols`` as NumPy, the first one
+        its integer frame ids, rows in the frame range; None when the
+        table cannot be read or a column holds a null."""
+        try:
+            t = pq.read_table(os.path.join(directory, f"{name}.parquet"), columns=cols)
+        except (OSError, pa.ArrowException):
+            return None
+        if any(col.null_count for col in t.columns):
+            return None
+        arrays = [numpy_column(col.combine_chunks()) for col in t.columns]
+        if arrays[0].dtype.kind not in "iu":
+            return None
+        keep = (arrays[0] >= lo) & (arrays[0] < hi)
+        return [a[keep] for a in arrays]
+
+    frames, unitcell = tables["frames"], tables["unitcell"]
+    got = None if frames is None or "frame_id" not in frames.columns else read("frames", ["frame_id"])
+    if got is None:
+        return None
+    ids = np.sort(got[0]).astype(np.int64)
+    if (ids[1:] == ids[:-1]).any():
+        return None
+    box = None
+    if (
+        unitcell is not None
+        and "frame_id" in unitcell.columns
+        and all(c in unitcell.columns and unitcell.schema[c].dataType == FloatType() for c in BOX_COLS)
+        and not set(_CELL_COLS) & set(unitcell.columns)
+    ):
+        got = read("unitcell", ["frame_id", *BOX_COLS])
+        if got is not None:
+            order = np.argsort(got[0], kind="stable")
+            vecs = np.stack(got[1:], axis=-1)[order].reshape(-1, 3, 3)
+            if np.array_equal(got[0][order], ids) and np.isfinite(lengths_angles_np(vecs)).all():
+                box = vecs
+    return FrameIndex(ids, None, box)
+
+
 def load_tables(spark: SparkSession, directory: str) -> Trajectory:
     """Load the canonical Parquet table layout. A ``frame_bucket``
     hive-partition column (written by ``save_tables(...,
     bucket_frames=N)``) is dropped after the scan — it exists purely
-    so frame-range predicates prune whole directories."""
-    def opt(name: str) -> DataFrame | None:
-        p = os.path.join(directory, f"{name}.parquet")
-        return spark.read.parquet(p) if os.path.exists(p) else None
+    so frame-range predicates prune whole directories.
 
-    coords = opt("coords")
-    if coords is None:
-        raise FileNotFoundError(f"{directory}/coords.parquet not found")
+    The load starts no Spark job: every table's schema comes from a
+    footer (:func:`read_table`), and the ``FrameIndex`` from the
+    ``frames`` and ``unitcell`` tables read on the driver
+    (:func:`_table_index`), so ``n_frames`` and a periodic vectorized
+    operator's box start none either. The index carries frame ids and
+    a vector box, but no atom count."""
+    t = _tables(spark, directory)
     # normalize column ORDER, not just the set: after a dynamic
     # partition-overwrite compaction the scan can surface data
     # columns in a different order, and positional consumers
     # (exceptAll, union, packed feeds) would silently mismatch
-    coords = coords.select("frame_id", "atom_id", "x", "y", "z")
-    return Trajectory(coords, opt("frames"), opt("unitcell"), opt("topology"))
+    coords = t["coords"].select("frame_id", "atom_id", "x", "y", "z")
+    return Trajectory(
+        coords, t["frames"], t["unitcell"], t["topology"], index=_table_index(directory, t)
+    )
 
 
 def save_tables(
@@ -225,8 +356,6 @@ def save_tables(
     (PartitionFilters in the scan node), the parquet-source analog
     of the reference's chunk culling (core/dask_traj.py:212).
     """
-    from pyspark.sql import functions as F
-
     coords = traj.coords
     path = os.path.join(directory, "coords.parquet")
     if bucket_frames:
@@ -254,8 +383,6 @@ def save_tables(
     ):
         if df is not None:
             df.write.mode(mode).parquet(os.path.join(directory, f"{name}.parquet"))
-    import json
-
     with open(os.path.join(directory, "_traj_meta.json"), "w") as fh:
         json.dump({"bucket_frames": bucket_frames}, fh)
 
@@ -269,17 +396,14 @@ def load_frame_range(
     before any I/O — a frame_id predicate alone cannot prune a
     directory keyed on a derived column, so the engine derives it
     from the stored metadata."""
-    import json
-
-    from pyspark.sql import functions as F
-
     meta_path = os.path.join(directory, "_traj_meta.json")
     n = None
     if os.path.exists(meta_path):
         with open(meta_path) as fh:
             n = json.load(fh).get("bucket_frames")
-    coords = spark.read.parquet(os.path.join(directory, "coords.parquet"))
+    t = _tables(spark, directory)
     pred = (F.col("frame_id") >= lo) & (F.col("frame_id") < hi)
+    coords = t["coords"]
     if n and "frame_bucket" in coords.columns:
         pred = (
             pred
@@ -290,16 +414,18 @@ def load_frame_range(
     if "frame_bucket" in coords.columns:
         coords = coords.drop("frame_bucket")
 
-    def opt(name: str) -> DataFrame | None:
-        p = os.path.join(directory, f"{name}.parquet")
-        if not os.path.exists(p):
+    def in_range(df: DataFrame | None) -> DataFrame | None:
+        if df is None:
             return None
-        return spark.read.parquet(p).where(
-            (F.col("frame_id") >= lo) & (F.col("frame_id") < hi)
-        )
+        return df.where((F.col("frame_id") >= lo) & (F.col("frame_id") < hi))
 
-    t = load_tables(spark, directory)
-    return Trajectory(coords, opt("frames"), opt("unitcell"), t.topology)
+    return Trajectory(
+        coords,
+        in_range(t["frames"]),
+        in_range(t["unitcell"]),
+        t["topology"],
+        index=_table_index(directory, t, lo, hi),
+    )
 
 
 def from_wide_pandas(
@@ -315,7 +441,6 @@ def from_wide_pandas(
     3) float32 → long coords, frame ids 0..n_frames-1.  The counts
     ride in a ``FrameIndex``; its box is left None, since the unit
     cell's vectors are derived in SQL."""
-    import numpy as np
     import pandas as pd
 
     xyz = np.asarray(xyz, dtype=np.float32)

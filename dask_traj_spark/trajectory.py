@@ -39,13 +39,15 @@ from dask_traj_spark.operators.unitcell import (
 
 @dataclass(frozen=True)
 class FrameIndex:
-    """Dimensions a loader's driver-side header index already read,
-    so that asking for them starts no Spark job (the reference counts
-    frames and atoms eagerly at load the same way,
-    core/dask_traj.py:61-100).
+    """Dimensions a loader already read on the driver, so that asking
+    for them starts no Spark job (the reference counts frames and atoms
+    eagerly at load the same way, core/dask_traj.py:61-100): a file
+    loader's header index, or a table load's ``frames`` and
+    ``unitcell`` tables (``sources.loaders._table_index``).
 
     ``frame_ids`` (F,) int64 ascending: one per frame of ``coords``.
-    ``n_atoms``: the atom count every frame agrees on, else None.
+    ``n_atoms``: the atom count every frame agrees on, else None
+    (always None for a table load: no small table holds it).
     ``box``: (F, 3, 3) float32 box vectors in nm, bit-equal to the
     trajectory's ``unitcell`` vector columns, or None.
     """
@@ -66,8 +68,10 @@ class Trajectory:
     topology : DataFrame(atom_id, name, element, mass, ...) or None
     index : FrameIndex or None — every multi-frame file loader passes
         the one its driver-side index pass built, with the tables
-        above (``sources._arrow.load_indexed``); derived trajectories
-        (slices, joins) and table loads carry none and count instead.
+        above (``sources._arrow.load_indexed``); a table load passes
+        frame ids and a vector box, but no atom count
+        (``sources.loaders.load_tables``); derived trajectories
+        (slices, joins) carry none and count instead.
     """
 
     def __init__(
@@ -114,9 +118,10 @@ class Trajectory:
     def n_atoms(self) -> int:
         if self.index is not None and self.index.n_atoms is not None:
             return self.index.n_atoms
-        # a full countDistinct over coords: only a trajectory without
-        # an index (derived, table-loaded, or a file whose frames
-        # disagree) pays it; for a file scan it decodes every frame
+        # a full countDistinct over coords: only a trajectory whose
+        # index holds no atom count (derived, table-loaded, or a file
+        # whose frames disagree) pays it; for a file scan it decodes
+        # every frame
         row = self.coords.agg(F.countDistinct("atom_id").alias("n")).first()
         return int(row["n"])
 

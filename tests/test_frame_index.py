@@ -2,10 +2,12 @@
 
 Loaders that index every frame on the driver hand ``n_atoms``,
 ``n_frames`` and, for formats that store box vectors, the per-frame
-box to the ``Trajectory``. These tests pin that the index equals what
-Spark would count or derive, that geometry calls on a loaded file
-start no Spark job before the action, and that derived trajectories
-fall back to counting.
+box to the ``Trajectory``; a Parquet table load hands frame ids and a
+vector box. These tests pin that the index equals what Spark would
+count or derive, that geometry calls on a loaded file start no Spark
+job before the action, that a periodic call's box lookup is collected
+once per trajectory, and that derived trajectories fall back to
+counting.
 """
 
 from __future__ import annotations
@@ -22,7 +24,7 @@ import pytest
 from dask_traj_spark.operators.distance import _BoxLookup, compute_distances
 from dask_traj_spark.operators.angle import compute_angles
 from dask_traj_spark.operators.unitcell import lengths_angles_np, with_lengths_and_angles
-from dask_traj_spark.sources.loaders import from_wide_pandas, load
+from dask_traj_spark.sources.loaders import from_wide_pandas, load, save_tables
 from dask_traj_spark.trajectory import Trajectory
 from tests.golden import box_vectors_from_lengths_angles
 
@@ -131,6 +133,9 @@ def written(spark, tmp_path_factory):
         fh.write(_xyz(xyz.astype(np.float64)))
     with open(paths[".mdcrd"], "w") as fh:
         fh.write(_mdcrd(xyz.astype(np.float64), LENGTHS))
+    # a Parquet table layout whose unit cell stores vectors only
+    paths["tables"] = str(d / "tables")
+    save_tables(Trajectory(traj.coords, traj._frames, traj.unitcell_vectors), paths["tables"])
     return paths
 
 
@@ -180,9 +185,10 @@ def test_text_formats_index_their_file_once_per_load(spark, written, monkeypatch
     assert len(calls) == 1
 
 
-@pytest.mark.parametrize("ext", VECTOR_FORMATS)
+@pytest.mark.parametrize("ext", VECTOR_FORMATS + ["tables"])
 def test_host_box_lookup_equals_spark_derived(spark, written, ext):
     traj = load(spark, written[ext])
+    assert traj.index.box is not None
     host = _BoxLookup.from_traj(traj)
     derived = _BoxLookup.from_traj(Trajectory(traj.coords, unitcell=traj.unitcell))
     np.testing.assert_array_equal(host.ids, derived.ids)
@@ -273,6 +279,37 @@ def test_geometry_on_loaded_xtc_starts_no_job_before_the_action(spark, xtc_traj_
 
     plan = d._jdf.queryExecution().executedPlan()
     assert len(_decode_nodes(plan)) == 1, plan.toString()
+
+
+def test_box_lookup_is_collected_once_per_trajectory(spark, written):
+    """A DCD index holds no box, so the first periodic vectorized call
+    collects the unit cell; the calls after it reuse that lookup and
+    start no job before their action, with the rows a fresh
+    trajectory gives."""
+    sc = spark.sparkContext
+    traj = load(spark, written[".dcd"])
+    pairs = list(itertools.combinations(range(6), 2))
+    triplets = [(0, 1, 2), (3, 4, 5), (7, 2, 9)]
+    compute_distances(traj, pairs[:3], periodic=True, form="vectorized")
+    sc.setJobGroup("box_lookup_kept", "kept")
+    try:
+        d = compute_distances(traj, pairs, periodic=True, form="vectorized")
+        a = compute_angles(traj, triplets, periodic=True, form="vectorized")
+        assert _jobs(sc, "box_lookup_kept") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    fresh = load(spark, written[".dcd"])
+    for got, want in (
+        (d, compute_distances(fresh, pairs, periodic=True, form="vectorized")),
+        (a, compute_angles(load(spark, written[".dcd"]), triplets, periodic=True, form="vectorized")),
+    ):
+        cols = got.columns
+        g = got.orderBy(*cols[:2]).toPandas()
+        w = want.orderBy(*cols[:2]).toPandas()
+        np.testing.assert_array_equal(g[cols[:2]].to_numpy(), w[cols[:2]].to_numpy())
+        np.testing.assert_array_equal(
+            g[cols[2]].to_numpy().view(np.uint32), w[cols[2]].to_numpy().view(np.uint32)
+        )
 
 
 def test_derived_trajectories_carry_no_index(spark, xtc_traj_path):

@@ -392,6 +392,95 @@ def test_frame_blocks_keep_to_the_arrow_batch_cap(spark, xtc_path, cap, fused):
     assert max(rows) == (48 if cap == 50 else 24), rows
 
 
+def _coords_batch(fids: np.ndarray):
+    import pyarrow as pa
+
+    from dask_traj_spark.sources._arrow import arrow_column
+
+    xyz = np.arange(3 * len(fids), dtype=np.float32).reshape(3, -1)
+    return pa.record_batch(
+        [arrow_column(fids), *(arrow_column(c) for c in xyz)], names=["frame_id", "x", "y", "z"]
+    )
+
+
+@pytest.mark.parametrize(
+    "cuts", [[144], [100, 44], [30] * 4 + [24]], ids=["one_batch", "frame_crosses", "small_batches"]
+)
+def test_frame_blocks_fill_the_cap(cuts):
+    """6 frames × 24 atoms at cap 50 make three 48-row blocks, however
+    the batches cut them: no frame is held back as a block of its own
+    when it fits beside the frame before it."""
+    from dask_traj_spark.operators.distance import _frame_blocks
+
+    batch = _coords_batch(np.repeat(np.arange(6, dtype=np.int64), 24))
+    offsets = np.cumsum([0, *cuts])
+    batches = [batch.slice(o, n) for o, n in zip(offsets, cuts)]
+    blocks = list(_frame_blocks(batches, 50))
+    assert [len(b["frame_id"]) for b in blocks] == [48, 48, 48]
+    for name in ("frame_id", "x", "y", "z"):
+        got = np.concatenate([b[name] for b in blocks])
+        np.testing.assert_array_equal(got, batch.column(name).to_numpy())
+
+
+def test_arrow_columns_read_and_build_without_pandas_conversion():
+    """The buffer reads equal pyarrow's own conversions, through slice
+    offsets and nulls, and the casts equal its unsafe cast."""
+    import pyarrow as pa
+
+    from dask_traj_spark.sources._arrow import arrow_column, numpy_column
+
+    for col in (
+        pa.array([1, None, 3, 4], pa.int64()).slice(1),
+        pa.array([1.5, None, 3.0], pa.float32()),
+        pa.array(np.arange(10, dtype=np.int32)).slice(3, 4),
+        pa.array([None, None], pa.uint16()).slice(1),
+        pa.array([], pa.float64()),
+        pa.array(["a", "b"]),
+    ):
+        got, want = numpy_column(col), col.to_numpy(zero_copy_only=False)
+        assert got.dtype == want.dtype, col.type
+        np.testing.assert_array_equal(got, want)
+    rng = np.random.default_rng(2)
+    values = np.r_[rng.normal(0.0, 1e3, 64), np.nan, np.inf, 1e300, 5e-324]
+    for v, t in (
+        (values, pa.float32()),
+        (values[:64], pa.float64()),
+        (np.array([2**40 + 5, -(2**31) - 1, 7]), pa.int32()),
+        (np.array([1.7, -1.7, 2.5]), pa.int64()),
+        (values[::2], None),
+    ):
+        with np.errstate(over="ignore"):
+            got, want = arrow_column(v, t), pa.array(v, type=t, safe=False)
+        # bytes, not equals(): NaN is not equal to itself
+        assert got.type == want.type and got.null_count == want.null_count == 0
+        assert numpy_column(got).tobytes() == numpy_column(want).tobytes(), t
+
+
+def test_fused_task_leaves_pandas_unimported(spark, xtc_path):
+    """A fused loaded-XTC frame-block task (decode, atom cut, blocks,
+    kernel, record batch) never imports pandas, which would add ~60 MB
+    to the Python worker. An extra worker environment variable gives
+    the query its own worker pool, so no worker that earlier tests
+    used (and may have given pandas) runs it."""
+    from dask_traj_spark.operators.distance import map_frame_blocks
+
+    def probe(fids, _xyz, _box, _ortho, _c):
+        import sys
+
+        return {"frame_id": fids[:1], "pandas": np.array(["pandas" in sys.modules], dtype=np.int64)}
+
+    sc = spark.sparkContext
+    sc.environment["DASK_TRAJ_SPARK_FRESH_WORKER"] = "1"
+    try:
+        traj = load(spark, xtc_path, chunks=2)
+        out = map_frame_blocks(traj, probe, "frame_id long, pandas long", atoms=np.arange(3, 9), periodic=True)
+        assert out._fused_scan is not None
+        flags = [r.pandas for r in out.collect()]
+    finally:
+        del sc.environment["DASK_TRAJ_SPARK_FRESH_WORKER"]
+    assert flags == [0, 0, 0]
+
+
 @pytest.fixture(scope="module")
 def overlapping_files(spark, tmp_path_factory):
     """XTC and DCD file pairs whose second file starts with the first
