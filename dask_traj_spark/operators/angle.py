@@ -90,14 +90,13 @@ def compute_angles(
     )
 
 
+def _angles(fids, xyz, box, ortho, t, first):
+    ang = kernels.angles_np(xyz, t[:, 0], t[:, 1], t[:, 2], box, ortho)
+    return _long_rows(fids, "triplet_id", first, len(t), angle_rad=ang.ravel())
+
+
 def _vectorized_angles(traj, arr: np.ndarray, periodic: bool) -> DataFrame:
-    n_trip = len(arr)
-
-    def kernel(fids, xyz, box, ortho, t):
-        ang = kernels.angles_np(xyz, t[:, 0], t[:, 1], t[:, 2], box, ortho)
-        return _long_rows(fids, "triplet_id", n_trip, angle_rad=ang.ravel())
-
-    return _map_index_blocks(traj, arr, kernel, schemas.ANGLES_SCHEMA, periodic)
+    return _map_index_blocks(traj, arr, _angles, schemas.ANGLES_SCHEMA, periodic)
 
 
 def compute_dihedrals(
@@ -180,15 +179,14 @@ def compute_dihedrals(
     )
 
 
+def _dihedrals(fids, xyz, box, ortho, q, first):
+    d = kernels.dihedrals_np(xyz, q[:, 0], q[:, 1], q[:, 2], q[:, 3], box, ortho)
+    return _long_rows(fids, "quartet_id", first, len(q), dihedral_rad=d.reshape(-1))
+
+
 def _vectorized_dihedrals(traj, arr: np.ndarray, periodic: bool) -> DataFrame:
-    n_q = len(arr)
-
-    def kernel(fids, xyz, box, ortho, q):
-        d = kernels.dihedrals_np(xyz, q[:, 0], q[:, 1], q[:, 2], q[:, 3], box, ortho)
-        return _long_rows(fids, "quartet_id", n_q, dihedral_rad=d.reshape(-1))
-
     return _map_index_blocks(
-        traj, arr, kernel, "frame_id long, quartet_id int, dihedral_rad float", periodic
+        traj, arr, _dihedrals, "frame_id long, quartet_id int, dihedral_rad float", periodic
     )
 
 

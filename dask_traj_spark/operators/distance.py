@@ -13,9 +13,13 @@ Each operator has two equivalent physical strategies (SURVEY.md §7.1):
   runs the numpy kernels in ``kernels.py`` over complete-frame blocks
   of ``traj.frame_packed()`` (:func:`map_frame_blocks`; one range
   shuffle, free on a packed trajectory) and hands each block's output
-  back as one Arrow record batch; zero further shuffles. On a loaded
-  file the same task decodes the chunk, cut to the atoms the index
-  set reads, so the query runs one Python stage.
+  back as Arrow record batches; zero further shuffles. An index
+  kernel (pairs, triplets, quartets) runs tile by tile, each tile one
+  record batch of at most the session's Arrow batch size of rows
+  (:func:`_index_tiles`), so the JVM takes in one tile while the next
+  is computed and a task never holds a whole block's output. On a
+  loaded file the same task decodes the chunk, cut to the atoms the
+  index set reads, so the query runs one Python stage.
 
 A new operator is a kernel plus one :func:`map_frame_blocks` call,
 or the role stitch plus the MIC step.  The trajectory analyses share
@@ -472,7 +476,9 @@ def map_frame_blocks(
     orthogonality flags (B,) (both None unless ``periodic`` and the
     trajectory has a unitcell), and ``const``; it returns a dict of
     ``schema``'s columns, NumPy arrays or Arrow arrays, which becomes
-    one record batch.  ``const`` and the box lookup travel in ONE
+    one record batch, or an iterable of such dicts, each its own
+    record batch, given out as it is made (:func:`_index_tiles`).
+    ``const`` and the box lookup travel in ONE
     broadcast.  ``atoms`` (sorted, unique) restricts the feed to
     those atoms, so a block's atom axis holds exactly them in that
     order — with 500 of 22k atoms selected this cuts the feed ~45×.
@@ -503,7 +509,9 @@ def map_frame_blocks(
         for block in _frame_blocks(batches_of(batches), cap, ascending):
             fids, xyz, box, ortho = _block_arrays(block, box_lookup, n_atoms)
             if len(fids):
-                yield _record_batch(fn(fids, xyz, box, ortho, c), out_schema)
+                result = fn(fids, xyz, box, ortho, c)
+                for cols in [result] if isinstance(result, dict) else result:
+                    yield _record_batch(cols, out_schema)
 
     out = feed.source.mapInArrow(task, schema)
     # kept on this DataFrame object only: the cut scan its tasks
@@ -512,24 +520,56 @@ def map_frame_blocks(
     return out
 
 
-def _map_index_blocks(traj, arr: np.ndarray, fn, schema, periodic: bool) -> DataFrame:
+def _map_index_blocks(
+    traj, arr: np.ndarray, fn, schema, periodic: bool, frames_only: bool = False
+) -> DataFrame:
     """:func:`map_frame_blocks` for an atom-index kernel (pairs,
     triplets, quartets): the feed carries only the atoms ``arr``
-    references, and ``const`` is ``arr`` remapped to positions on
-    that restricted atom axis."""
+    references, and the kernel ``fn(fids, xyz, box, ortho, idx,
+    first)`` runs over each block in tiles (:func:`_index_tiles`) of
+    at most the session's Arrow batch size of rows, ``idx`` being the
+    tile's run of ``arr`` remapped to positions on that restricted
+    atom axis."""
     sel = np.unique(arr)
     const = np.searchsorted(sel, arr).astype(np.int32)
+    cap = _block_cap(traj.spark)
+
+    def tiles(fids, xyz, box, ortho, idx):
+        return _index_tiles(fn, fids, xyz, box, ortho, idx, cap, frames_only)
+
     return map_frame_blocks(
-        traj, fn, schema, atoms=sel, periodic=periodic, const=const
+        traj, tiles, schema, atoms=sel, periodic=periodic, const=const
     )
 
 
-def _long_rows(fids: np.ndarray, id_col: str, n: int, **values) -> dict:
-    """Long output of a per-(frame, index) kernel: frame_id repeated,
-    ``id_col`` 0..n-1 tiled, then the raveled value columns."""
+def _index_tiles(fn, fids, xyz, box, ortho, idx, cap: int, frames_only: bool = False):
+    """Run the index kernel ``fn`` over a block's (frame, index row)
+    grid one tile at a time, in row order, and yield each tile's
+    columns.  While a frame's ``n`` index rows fit ``cap``, a tile is
+    ``max(1, cap // n)`` whole frames; past it, one frame with its
+    index rows cut into runs of ``cap``.  ``frames_only`` (one output
+    row per frame, a list of ``n`` values) never cuts a frame.  ``fn``
+    gets the tile's frames and index rows, and the position of the
+    first of these in the whole index set (its first output id).  The
+    kernels are elementwise over (frame, index row), so the tiles hold
+    the bits of one call on the whole block."""
+    n = len(idx)
+    per = max(1, n if frames_only else min(n, cap))
+    step = max(1, cap // per)
+    for a in range(0, len(fids), step):
+        f = slice(a, a + step)
+        b, o = (None, None) if box is None else (box[f], ortho[f])
+        for lo in range(0, n, per):
+            yield fn(fids[f], xyz[f], b, o, idx[lo : lo + per], lo)
+
+
+def _long_rows(fids: np.ndarray, id_col: str, first: int, n: int, **values) -> dict:
+    """Long output of an index kernel's tile: frame_id repeated,
+    ``id_col`` first..first+n-1 tiled, then the raveled value
+    columns."""
     return {
         "frame_id": np.repeat(fids, n),
-        id_col: np.tile(np.arange(n, dtype=np.int32), len(fids)),
+        id_col: np.tile(np.arange(first, first + n, dtype=np.int32), len(fids)),
         **values,
     }
 
@@ -543,33 +583,34 @@ def _list_column(rows: np.ndarray):
     return pa.ListArray.from_arrays(arrow_column(offsets), arrow_column(rows.reshape(-1)))
 
 
+def _wide(fids, xyz, box, ortho, p, _first):
+    d = kernels.distances_np(xyz, p[:, 0], p[:, 1], box, ortho)
+    return {"frame_id": fids, "dists": _list_column(d)}
+
+
+def _dists(fids, xyz, box, ortho, p, first):
+    d = kernels.distances_np(xyz, p[:, 0], p[:, 1], box, ortho)
+    return _long_rows(fids, "pair_id", first, len(p), dist=d.ravel())
+
+
+def _vectors(fids, xyz, box, ortho, p, first):
+    d = kernels.displacements_np(xyz, p[:, 0], p[:, 1], box, ortho)
+    return _long_rows(
+        fids, "pair_id", first, len(p),
+        dx=d[..., 0].ravel(), dy=d[..., 1].ravel(), dz=d[..., 2].ravel(),
+    )
+
+
 def _vectorized_pair_op(
     traj, arr: np.ndarray, periodic: bool, want_vectors: bool, wide_output: bool = False
 ) -> DataFrame:
-    n_pairs = len(arr)
-
-    def wide(fids, xyz, box, ortho, p):
-        d = kernels.distances_np(xyz, p[:, 0], p[:, 1], box, ortho)
-        return {"frame_id": fids, "dists": _list_column(d)}
-
-    def dists(fids, xyz, box, ortho, p):
-        d = kernels.distances_np(xyz, p[:, 0], p[:, 1], box, ortho)
-        return _long_rows(fids, "pair_id", n_pairs, dist=d.ravel())
-
-    def vectors(fids, xyz, box, ortho, p):
-        d = kernels.displacements_np(xyz, p[:, 0], p[:, 1], box, ortho)
-        return _long_rows(
-            fids, "pair_id", n_pairs,
-            dx=d[..., 0].ravel(), dy=d[..., 1].ravel(), dz=d[..., 2].ravel(),
-        )
-
     if want_vectors:
-        fn, schema = vectors, schemas.DISPLACEMENTS_SCHEMA
+        fn, schema = _vectors, schemas.DISPLACEMENTS_SCHEMA
     elif wide_output:
-        fn, schema = wide, schemas.DISTANCES_WIDE_SCHEMA
+        fn, schema = _wide, schemas.DISTANCES_WIDE_SCHEMA
     else:
-        fn, schema = dists, schemas.DISTANCES_SCHEMA
-    return _map_index_blocks(traj, arr, fn, schema, periodic)
+        fn, schema = _dists, schemas.DISTANCES_SCHEMA
+    return _map_index_blocks(traj, arr, fn, schema, periodic, frames_only=wide_output)
 
 
 # ------------------------------------------------------------ public API

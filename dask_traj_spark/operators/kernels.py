@@ -7,8 +7,10 @@ to MDTraj's C/SSE extension — ``geometry/distance.py:53-63``,
 ``distance.py:209-236`` and ``angle.py:142-176`` define the
 semantics we reproduce). They run inside the frame-block
 ``mapInArrow`` of ``distance.map_frame_blocks``, so each invocation
-sees a block of whole frames and is fully vectorized over
-(frames × pairs).
+sees whole frames and is fully vectorized over (frames × pairs): a
+tile of a block (``distance._index_tiles``) of at most the session's
+Arrow batch size of output rows, so the same math runs on any cut of
+the (frame, index row) grid.
 
 All inputs float32; intermediate MIC math in float32 (matching the
 reference's float32 envelope); means accumulate in float64 (as the

@@ -406,13 +406,13 @@ def streaming_distances(
         off = np.abs(box1[0]) - np.diag(np.diag(box1[0]))
         is_ortho = bool((np.abs(off) < 1e-9).all())
 
-    def kernel(fids, xyz, _box, _ortho, p):
+    def kernel(fids, xyz, _box, _ortho, p, first):
         box = ortho = None
         if box1 is not None:
             box = np.broadcast_to(box1, (len(fids), 3, 3))
             ortho = np.full(len(fids), is_ortho)
         d = distances_np(xyz, p[:, 0], p[:, 1], box, ortho)
-        return _long_rows(fids, "pair_id", len(p), dist=d.ravel())
+        return _long_rows(fids, "pair_id", first, len(p), dist=d.ravel())
 
     return _map_index_blocks(
         Trajectory(coords, packed=True), arr, kernel,

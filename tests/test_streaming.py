@@ -446,12 +446,16 @@ def test_stream_ingest_restart_is_exactly_once(spark, tmp_path_factory):
 _ARROW_BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 
-@pytest.mark.parametrize("batch_rows", [None, 30], ids=["default", "frame_crosses_batch"])
+@pytest.mark.parametrize(
+    "batch_rows", [None, 30, 2], ids=["default", "frame_crosses_batch", "frame_crosses_batch_and_tile"]
+)
 def test_streaming_distances_match_batch(spark, coords_stream_dir, batch_rows):
     """G1 on a stream: identical kernel, identical results to the
     batch vectorized form, stateless append mode — also when an Arrow
     batch (30 rows) is smaller than a frame (50 atoms), so frames
-    cross batches."""
+    cross batches, and when it (2 rows) is smaller than the pair set
+    too, so each frame's 3 pairs are cut into tiles of 2 and 1 and
+    the second tile's pair ids must start at 2."""
     import numpy as np
 
     from dask_traj_spark.streaming.ingest import (
