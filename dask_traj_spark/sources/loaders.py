@@ -29,9 +29,11 @@ unimplemented-format path (core/dask_traj.py:167-169).
 
 from __future__ import annotations
 
+import functools
 import importlib
 import json
 import os
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -204,6 +206,23 @@ def _listed(name: str) -> bool:
     return not (name.startswith(".") or (name.startswith("_") and "=" not in name))
 
 
+def _table_files(path: str) -> tuple[list[str], bool]:
+    """The data files Spark's listing reads for table ``path`` (the
+    path itself when it is a file, else every listed file under it, in
+    sorted order), and whether summary files (``_metadata``,
+    ``_common_metadata``) sit among them."""
+    if os.path.isfile(path):
+        return [path], False
+    files, summary = [], False
+    for root, dirs, names in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if _listed(d))
+        for name in sorted(names):
+            summary |= name in ("_metadata", "_common_metadata")
+            if _listed(name):
+                files.append(os.path.join(root, name))
+    return files, summary
+
+
 def _footer_schema(spark: SparkSession, path: str):
     """The schema Spark's Parquet inference gives table ``path``, read
     on the driver from its first data file's footer (about 1 ms, no
@@ -219,21 +238,95 @@ def _footer_schema(spark: SparkSession, path: str):
 
     if spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower() == "true":
         return None
-    first = path if os.path.isfile(path) else None
-    for root, dirs, files in os.walk(path):
-        dirs[:] = sorted(d for d in dirs if _listed(d))
-        for name in sorted(files):
-            if name in ("_metadata", "_common_metadata"):
-                return None
-            if first is None and _listed(name):
-                first = os.path.join(root, name)
-    if first is None:
+    files, summary = _table_files(path)
+    if summary or not files:
         return None
     try:
-        meta = pq.read_schema(first).metadata or {}
+        meta = pq.read_schema(files[0]).metadata or {}
         return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
     except (KeyError, ValueError, OSError, pa.ArrowException):
         return None
+
+
+class CoordsFooters(NamedTuple):
+    """What a coords table's Parquet footers prove
+    (:func:`coords_footers`): the atom count every frame holds, or
+    None, and whether Spark's scan of the table gives whole frames per
+    partition in ascending frame order."""
+
+    n_atoms: int | None
+    frame_ordered: bool
+
+
+def _id_range(row_group, column: int | None):
+    """``(min, max)`` of an integer column in a row group's statistics,
+    or None when the column is absent, its statistics are missing, or
+    it may hold a null."""
+    stats = None if column is None else row_group.column(column).statistics
+    if (
+        stats is None
+        or not stats.has_min_max
+        or not stats.has_null_count
+        or stats.null_count
+        or stats.physical_type not in ("INT32", "INT64")
+    ):
+        return None
+    return int(stats.min), int(stats.max)
+
+
+def coords_footers(path: str, frame_ids: np.ndarray | None) -> CoordsFooters:
+    """Read the row-group statistics of every data file of the coords
+    table ``path`` on the driver with pyarrow (no Spark job) and keep
+    what they prove; ``frame_ids`` are the index's ascending frame ids.
+
+    - ``n_atoms`` is ``max(atom_id) + 1`` when every row group has
+      ``frame_id`` and ``atom_id`` statistics and no null, the least
+      ``atom_id`` is 0, the least and greatest ``frame_id`` are
+      ``frame_ids``' first and last, and the table holds
+      ``len(frame_ids) * n_atoms`` rows.
+    - ``frame_ordered`` holds when the rows sit in ONE data file whose
+      row groups' ``frame_id`` ranges ascend and do not overlap, in
+      file order. Spark reads each row group whole into one split and
+      gives the splits of one file back in offset order, so every scan
+      partition holds whole frames and the frames ascend across them.
+      Several files do not qualify: Spark orders file splits by size,
+      not by frame.
+    """
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    groups = []  # per non-empty row group: rows, frame_id and atom_id ranges
+    files = 0
+    try:
+        for f in _table_files(path)[0]:
+            meta = pq.read_metadata(f)
+            col = {meta.schema.column(j).path: j for j in range(meta.num_columns)}
+            rgs = [meta.row_group(i) for i in range(meta.num_row_groups)]
+            rgs = [rg for rg in rgs if rg.num_rows]
+            files += bool(rgs)
+            groups += [
+                (rg.num_rows, _id_range(rg, col.get("frame_id")), _id_range(rg, col.get("atom_id")))
+                for rg in rgs
+            ]
+    except (OSError, pa.ArrowException):
+        return CoordsFooters(None, False)
+    frames = [g[1] for g in groups]
+    ordered = (
+        files == 1
+        and None not in frames
+        and all(a[1] < b[0] for a, b in zip(frames, frames[1:]))
+    )
+    n_atoms = None
+    if frame_ids is not None and len(frame_ids) and groups and all(g[1] and g[2] for g in groups):
+        n = max(g[2][1] for g in groups) + 1
+        if (
+            min(g[2][0] for g in groups) == 0
+            and min(f[0] for f in frames) == frame_ids[0]
+            and max(f[1] for f in frames) == frame_ids[-1]
+            and sum(g[0] for g in groups) == len(frame_ids) * n
+        ):
+            n_atoms = n
+    return CoordsFooters(n_atoms, ordered)
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
@@ -270,7 +363,9 @@ def _table_index(directory: str, tables: dict, lo: int = 0, hi: int = 2**63 - 1)
       ``frame_ids``, and every frame's lengths and angles are finite
       (a zero box keeps the Spark-collected lookup and its error).
     - ``n_atoms``: None. No dimension table holds an atom count the
-      coords must agree with, so ``Trajectory.n_atoms`` counts.
+      coords must agree with; the first ``Trajectory.n_atoms`` of a
+      ``load_tables`` trajectory takes it from the coords footers
+      (:func:`coords_footers`) where they prove it, else counts.
     """
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -326,16 +421,26 @@ def load_tables(spark: SparkSession, directory: str) -> Trajectory:
     ``frames`` and ``unitcell`` tables read on the driver
     (:func:`_table_index`), so ``n_frames`` and a periodic vectorized
     operator's box start none either. The index carries frame ids and
-    a vector box, but no atom count."""
+    a vector box. The atom count and the frame order of the coords
+    come from their Parquet footers (:func:`coords_footers`), read
+    once, by the first ``n_atoms`` or ``frame_packed()``: where the
+    footers prove them, ``n_atoms`` starts no job and the vectorized
+    feed sorts each scan partition in place instead of range-shuffling
+    the table."""
     t = _tables(spark, directory)
     # normalize column ORDER, not just the set: after a dynamic
     # partition-overwrite compaction the scan can surface data
     # columns in a different order, and positional consumers
     # (exceptAll, union, packed feeds) would silently mismatch
     coords = t["coords"].select("frame_id", "atom_id", "x", "y", "z")
-    return Trajectory(
-        coords, t["frames"], t["unitcell"], t["topology"], index=_table_index(directory, t)
+    index = _table_index(directory, t)
+    traj = Trajectory(coords, t["frames"], t["unitcell"], t["topology"], index=index)
+    traj._read_footers = functools.partial(
+        coords_footers,
+        os.path.join(directory, "coords.parquet"),
+        None if index is None else index.frame_ids,
     )
+    return traj
 
 
 def save_tables(

@@ -16,8 +16,10 @@ Scale notes (100 TB posture):
   (frame_id, atom_id)-sorted per partition: one range shuffle, free
   when the trajectory is ``packed=True`` — every trajectory loaded
   from a file is, as its scan's chunks already hold whole sorted
-  frames. It is the feed of every vectorized geometry op, which then
-  runs partition-local. Cache it when running >1 op.
+  frames — and a sort in place when a table load's coords footers
+  prove the scan's frame order. It is the feed of every vectorized
+  geometry op, which then runs partition-local. Cache it when running
+  >1 op.
 - slicing/striding are pure frame_id predicates → partition pruning
   against a frame-range-partitioned Parquet layout, and chunk and
   frame pruning in a file scan.
@@ -25,7 +27,7 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from functools import cached_property
 
 import numpy as np
@@ -46,8 +48,15 @@ class FrameIndex:
     ``unitcell`` tables (``sources.loaders._table_index``).
 
     ``frame_ids`` (F,) int64 ascending: one per frame of ``coords``.
-    ``n_atoms``: the atom count every frame agrees on, else None
-    (always None for a table load: no small table holds it).
+    ``n_atoms``: the atom count every frame agrees on, else None. A
+    table load starts with None (no small table holds it); its first
+    ``Trajectory.n_atoms`` fills it from the coords Parquet footers
+    where they prove it (``sources.loaders.coords_footers``: no null,
+    atom ids from 0, the index's first and last frame, and F × n_atoms
+    rows). One limit: footers cannot tell a table that repeats a
+    ``(frame_id, atom_id)`` key while dropping another from a whole
+    one; the per-frame atom-count check of a geometry query's frame
+    blocks is what catches it.
     ``box``: (F, 3, 3) float32 box vectors in nm, bit-equal to the
     trajectory's ``unitcell`` vector columns, or None.
     """
@@ -69,10 +78,18 @@ class Trajectory:
     index : FrameIndex or None — every multi-frame file loader passes
         the one its driver-side index pass built, with the tables
         above (``sources._arrow.load_indexed``); a table load passes
-        frame ids and a vector box, but no atom count
-        (``sources.loaders.load_tables``); derived trajectories
-        (slices, joins) carry none and count instead.
+        frame ids and a vector box, and its coords footers may give
+        the atom count later (``sources.loaders.load_tables``);
+        ``select_frames`` and ``atom_slice`` derive one from their
+        input's where it provably holds (see each); other derived
+        trajectories (joins) carry none and count instead.
     """
+
+    #: ``load_tables`` sets this to a function of no arguments that
+    #: reads the coords table's Parquet footers
+    #: (``sources.loaders.coords_footers``); None on any other
+    #: trajectory
+    _read_footers = None
 
     def __init__(
         self,
@@ -97,7 +114,9 @@ class Trajectory:
         #: per-frame generation. Lets the vectorized geometry path skip its one
         #: shuffle. Derived trajectories (``select_frames``,
         #: ``atom_slice``, ``join``) and ``load_tables`` (a Parquet
-        #: split can cut a frame) are not packed. Violations surface
+        #: split can cut a frame) are not packed; a table load whose
+        #: footers prove its frame order gets a sort in place instead
+        #: (``frame_packed``). Violations surface
         #: as a clear error in the kernel's frame-block check
         #: (descending frame ids, unequal atom counts).
         self.packed = packed
@@ -115,13 +134,27 @@ class Trajectory:
         return self.coords.select("frame_id").distinct().count()
 
     @cached_property
+    def _footers(self):
+        """What the coords Parquet footers of a ``load_tables``
+        trajectory prove (``sources.loaders.CoordsFooters``), read on
+        the driver at most once, by the first ``n_atoms`` or
+        ``frame_packed()``; None for any other trajectory."""
+        return None if self._read_footers is None else self._read_footers()
+
+    @cached_property
     def n_atoms(self) -> int:
+        """Atoms per frame: the index's count; for a table load, the
+        count its coords footers prove (kept on the index, so
+        ``select_frames`` and ``atom_slice`` carry it on); else one
+        ``countDistinct`` job over coords."""
+        if self._footers is not None and self._footers.n_atoms is not None:
+            self.index = replace(self.index, n_atoms=self._footers.n_atoms)
         if self.index is not None and self.index.n_atoms is not None:
             return self.index.n_atoms
         # a full countDistinct over coords: only a trajectory whose
-        # index holds no atom count (derived, table-loaded, or a file
-        # whose frames disagree) pays it; for a file scan it decodes
-        # every frame
+        # index holds no atom count (derived, a table its footers do
+        # not prove, or a file whose frames disagree) pays it; for a
+        # file scan it decodes every frame
         row = self.coords.agg(F.countDistinct("atom_id").alias("n")).first()
         return int(row["n"])
 
@@ -202,9 +235,14 @@ class Trajectory:
         query is then one stage and one Python node (a
         ``mapInArrow`` over the chunk ids that decodes each chunk,
         cut to the atoms the operator reads, and runs the kernel in
-        the same task: ``sources._arrow.frame_feed``). Memoized;
-        ``traj.frame_packed().cache()`` before running several
-        geometry ops.
+        the same task: ``sources._arrow.frame_feed``). A
+        ``load_tables`` trajectory whose coords footers prove the
+        scan's frame order (one data file, row-group frame ranges
+        ascending without overlap: ``sources.loaders.coords_footers``)
+        gets only the in-partition sort, which restores the atom order
+        footers cannot prove: one stage, no ``Exchange``, no sampling
+        job. Memoized; ``traj.frame_packed().cache()`` before running
+        several geometry ops.
 
         At 100 TB this is the layout the storage should already have:
         parquet bucketed/sorted by frame ranges makes every geometry
@@ -214,6 +252,8 @@ class Trajectory:
             return self._packed_df
         if self.packed:
             self._packed_df = self.coords
+        elif self._footers is not None and self._footers.frame_ordered:
+            self._packed_df = self.coords.sortWithinPartitions("frame_id", "atom_id")
         else:
             self._packed_df = self.coords.repartitionByRange(
                 "frame_id"
@@ -238,10 +278,15 @@ class Trajectory:
 
     def select_frames(self, frame_ids: list[int]) -> "Trajectory":
         """Keep exactly these frames, renumbered to 0..len-1 in the
-        given order (supports reversal). A literal ``frame_id``
-        predicate (BETWEEN, plus IN for sparse ids) goes before the
-        broadcast join, so a file scan decodes only the chunks and
-        frames it admits and Parquet prunes on it."""
+        given order (supports reversal and repeats). A literal
+        ``frame_id`` predicate (BETWEEN, plus IN for sparse ids) goes
+        before the broadcast join, so a file scan decodes only the
+        chunks and frames it admits and Parquet prunes on it.
+
+        When every id is one of the index's frame ids, the result's
+        index holds ``0..len-1``, the atom count and the box rows in
+        the given order, so its counts start no job; an id the index
+        lacks leaves it without one."""
         from dask_traj_spark.sources._arrow import LITERAL_IDS_MAX, select_ids
 
         spark = self.spark
@@ -262,11 +307,20 @@ class Trajectory:
                 .withColumnRenamed("new_frame_id", "frame_id")
             )
 
+        index = None
+        if self.index is not None and len(frame_ids):
+            have = self.index.frame_ids
+            want = np.asarray(frame_ids, dtype=np.int64)
+            rows = np.minimum(np.searchsorted(have, want), len(have) - 1)
+            if len(have) and (have[rows] == want).all():
+                box = None if self.index.box is None else self.index.box[rows]
+                index = FrameIndex(np.arange(len(want), dtype=np.int64), self.index.n_atoms, box)
         return Trajectory(
             remap(self.coords),
             remap(self._frames),
             remap(self.unitcell),
             self.topology,
+            index=index,
         )
 
     def atom_slice(self, atom_ids: list[int]) -> "Trajectory":
@@ -274,12 +328,19 @@ class Trajectory:
         the topology dimension (reference inherits mdtraj's eager
         atom_slice — exercised at tests/test_dask_traj.py:129). A
         literal ``atom_id`` predicate goes before the broadcast join,
-        so a file scan decodes only the ids' atom span."""
+        so a file scan decodes only the ids' atom span. Repeated ids
+        count once, and ids no atom has (negative, or past a known
+        atom count) are dropped, so the new ids are dense.
+
+        With a known atom count the index carries on: the same frames
+        and box, and as many atoms as the distinct ids kept."""
         from dask_traj_spark.sources._arrow import LITERAL_IDS_MAX, select_ids
 
         spark = self.spark
+        known = None if self.index is None else self.index.n_atoms
+        atom_ids = sorted({int(a) for a in atom_ids if a >= 0 and (known is None or a < known)})
         mapping = spark.createDataFrame(
-            [(int(a), i) for i, a in enumerate(sorted(atom_ids))],
+            [(a, i) for i, a in enumerate(atom_ids)],
             "atom_id int, new_atom_id int",
         )
         b = F.broadcast(mapping)
@@ -299,7 +360,8 @@ class Trajectory:
                 .drop("atom_id")
                 .withColumnRenamed("new_atom_id", "atom_id")
             )
-        return Trajectory(coords, self._frames, self.unitcell, topology)
+        index = replace(self.index, n_atoms=len(atom_ids)) if known and atom_ids else None
+        return Trajectory(coords, self._frames, self.unitcell, topology, index=index)
 
     def select_atoms(self, predicate: str) -> "Trajectory":
         """``atom_slice`` by a SQL predicate over the topology

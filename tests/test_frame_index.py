@@ -6,8 +6,8 @@ box to the ``Trajectory``; a Parquet table load hands frame ids and a
 vector box. These tests pin that the index equals what Spark would
 count or derive, that geometry calls on a loaded file start no Spark
 job before the action, that a periodic call's box lookup is collected
-once per trajectory, and that derived trajectories fall back to
-counting.
+once per trajectory, and that derived trajectories keep the
+dimensions they provably know.
 """
 
 from __future__ import annotations
@@ -312,16 +312,45 @@ def test_box_lookup_is_collected_once_per_trajectory(spark, written):
         )
 
 
-def test_derived_trajectories_carry_no_index(spark, xtc_traj_path):
+def test_derived_trajectories_keep_the_index(spark, xtc_traj_path):
+    """``atom_slice`` and ``select_frames`` carry the dimensions they
+    provably know, so counting them starts no job and gives Spark's
+    counts; a frame id the index lacks leaves ``select_frames``
+    without an index."""
+    sc = spark.sparkContext
     traj = load(spark, xtc_traj_path, chunks=2)
     assert traj.index is not None and traj.n_atoms == 20
-    sliced = traj.atom_slice(range(5))
-    picked = traj.select_frames([0, 2])
-    for derived, n_atoms in ((sliced, 5), (picked, 20)):
-        assert derived.index is None
+    derived = {
+        "atom_slice": (traj.atom_slice(range(5)), 5, 6),
+        # a repeated id counts once; ids past the last atom, or
+        # negative, name no atom
+        "atom_slice_repeats": (traj.atom_slice([7, 3, 3, 19, 20, -1]), 3, 6),
+        "select_frames": (traj.select_frames([0, 2]), 20, 2),
+        "reversed": (traj.select_frames([5, 4, 3, 2, 1, 0]), 20, 6),
+        "repeated": (traj.select_frames([1, 1, 3]), 20, 3),
+        "sliced": (traj.slice_frames(step=2), 20, 3),
+    }
+    sc.setJobGroup("derived_index", "derived")
+    try:
+        for name, (t, n_atoms, n_frames) in derived.items():
+            assert t.index is not None, name
+            assert (t.n_atoms, t.n_frames) == (n_atoms, n_frames), name
+        assert _jobs(sc, "derived_index") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    for name, (t, n_atoms, n_frames) in derived.items():
+        counted = Trajectory(t.coords)
+        assert (counted.n_atoms, counted.n_frames) == (n_atoms, n_frames), name
         with pytest.raises(ValueError, match="outside"):
-            compute_distances(derived, [(0, n_atoms)], form="vectorized")
-    assert picked.n_frames == 2 and sliced.n_frames == 6
+            compute_distances(t, [(0, n_atoms)], form="vectorized")
+        # the carried box rows are the remapped unit cell's
+        lookup = _BoxLookup.from_traj(Trajectory(t.coords, t._frames, t.unitcell))
+        np.testing.assert_array_equal(lookup.ids, t.index.frame_ids)
+        np.testing.assert_array_equal(lookup.vecs, t.index.box)
+    np.testing.assert_array_equal(derived["reversed"][0].index.box, traj.index.box[::-1])
+    absent = traj.select_frames([0, 6])
+    assert absent.index is None
+    assert absent.n_frames == 1 and absent.n_atoms == 20
 
 
 def test_scan_runs_in_every_session_a_process_starts(xtc_traj_path):
