@@ -55,6 +55,7 @@ from dask_traj_spark.operators.mic import (
     orthogonality_expr,
 )
 from dask_traj_spark.operators.unitcell import lengths_angles_np
+from dask_traj_spark.session import shared_broadcast
 from dask_traj_spark.sources._arrow import (
     LITERAL_IDS_MAX,
     arrow_column,
@@ -520,7 +521,7 @@ def _map_blocks(traj, fn, schema, atoms, periodic: bool, const, cap: int) -> Dat
     """:func:`map_frame_blocks` with blocks of at most ``cap`` rows."""
     lookup = _BoxLookup.from_traj(traj) if periodic and traj.have_unitcell else None
     feed = frame_feed(traj.frame_packed(), atoms)
-    b = traj.spark.sparkContext.broadcast((const, lookup))
+    b = shared_broadcast(traj.spark.sparkContext, (const, lookup))
     ascending = not feed.source.isStreaming
     n_atoms = None if atoms is None else len(atoms)
     out_schema = _arrow_schema(schema)

@@ -32,6 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from dask_traj_spark.session import shared_broadcast
+
 QGRID = 4096.0
 
 
@@ -161,7 +163,7 @@ def superpose(traj, query_frame: int) -> DataFrame:
     )
 
     q = _query_frame(traj, query_frame)
-    b_q = traj.spark.sparkContext.broadcast(q)
+    b_q = shared_broadcast(traj.spark.sparkContext, q)
 
     # its own loop, not map_frame_blocks: the transform re-emits each
     # row's atom_id, so its feed carries atom_id past the kernel

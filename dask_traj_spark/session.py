@@ -10,9 +10,12 @@ DuckDB oracle.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import pickle
 import re
 
+from pyspark.serializers import pickle_protocol
 from pyspark.sql import SparkSession
 
 
@@ -120,6 +123,17 @@ def get_spark(
         # 25/18 s immediately after a forced GC.  5 min matches the
         # long-running-cluster guidance for shuffle-heavy apps.
         .config("spark.cleaner.periodicGC.interval", "5min")
+        # Python workers fork from the package daemon. PySpark's worker
+        # calls importlib.invalidate_caches() on every task, which
+        # re-reads the directory of pyspark.zip and the py4j zip once
+        # per zipimporter: 0.08-0.23 s of CPU a task, measured on
+        # 4-core hosts, where an empty task's round trip is ~0.07 s
+        # without it. The daemon re-reads an archive only when its
+        # inode, size or mtime changed, so a file added with
+        # addPyFile stays importable (dask_traj_spark/_daemon.py).
+        # extra_conf {"spark.python.daemon.module": "pyspark.daemon"}
+        # restores the stock daemon.
+        .config("spark.python.daemon.module", "dask_traj_spark._daemon")
     )
     if extra_conf:
         for k, v in extra_conf.items():
@@ -130,6 +144,26 @@ def get_spark(
     spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def shared_broadcast(sc, value):
+    """``sc.broadcast(value)``, made once per distinct content per
+    SparkContext: a later call whose value pickles to the same bytes
+    gets the same broadcast back.
+
+    PySpark deletes a broadcast's driver-side file only in
+    ``Broadcast.destroy()``, and no query may destroy one while a
+    DataFrame that reads it lives, so a broadcast per query call left
+    one file per call in the driver's temp directory until the
+    session stopped. With this, repeated queries over the same plan
+    or index set share one file. A distinct value still gets its own,
+    which lives as long as the SparkContext (the table of them is an
+    attribute of ``sc``)."""
+    key = hashlib.blake2b(pickle.dumps(value, pickle_protocol), digest_size=32).digest()
+    made = vars(sc).setdefault("_shared_broadcasts", {})
+    if key not in made:
+        made[key] = sc.broadcast(value)
+    return made[key]
 
 
 def release_local_checkpoint(df) -> bool:

@@ -63,16 +63,33 @@ from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import (
+    DataType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from dask_traj_spark.operators.mic import BOX_COLS
 from dask_traj_spark.operators.unitcell import lengths_angles_np
+from dask_traj_spark.session import shared_broadcast
 from dask_traj_spark.trajectory import FrameIndex, Trajectory
 
-_FRAMES_SCHEMA = "frame_id long, time double, step long"
-_BOX_SCHEMA = "frame_id long, " + ", ".join(f"{c} float" for c in BOX_COLS)
+
+def _fields(*cols: tuple[str, DataType]) -> StructType:
+    """A schema of nullable fields, as Spark parses a DDL string (built
+    in Python: a DDL string is parsed by the JVM on every use)."""
+    return StructType([StructField(name, typ) for name, typ in cols])
+
+
 _CELL_COLS = ["a", "b", "c", "alpha", "beta", "gamma"]
-_CELL_SCHEMA = "frame_id long, " + ", ".join(f"{c} float" for c in _CELL_COLS)
-_COORDS_SCHEMA = "frame_id long, atom_id int, x float, y float, z float"
+_FRAMES_SCHEMA = _fields(("frame_id", LongType()), ("time", DoubleType()), ("step", LongType()))
+_BOX_SCHEMA = _fields(("frame_id", LongType()), *((c, FloatType()) for c in BOX_COLS))
+_CELL_SCHEMA = _fields(("frame_id", LongType()), *((c, FloatType()) for c in _CELL_COLS))
+_COORDS_SCHEMA = _fields(("frame_id", LongType()), ("atom_id", IntegerType()), *((c, FloatType()) for c in "xyz"))
 
 #: the atom span of an unfiltered scan
 ALL_ATOMS = (0, 2**63 - 1)
@@ -259,7 +276,7 @@ def scan_frames(
     if not n:
         df = spark.createDataFrame([], _COORDS_SCHEMA)
     else:
-        payloads = spark.sparkContext.broadcast(plan)
+        payloads = shared_broadcast(spark.sparkContext, plan)
 
         def decode(batches):
             for batch in batches:
@@ -391,7 +408,7 @@ def frame_feed(df: DataFrame, atom_ids=None) -> FrameFeed:
     if sel is not None:
         scan = sel.cut(scan, "atom_id")
     n = len(scan.payloads)
-    payloads = df.sparkSession.sparkContext.broadcast(scan.payloads)
+    payloads = shared_broadcast(df.sparkSession.sparkContext, scan.payloads)
     # the task takes the plan from the broadcast, not from ``scan``
     fmt, path, atoms = scan.fmt, scan.path, scan.atoms
 
@@ -407,14 +424,13 @@ def frame_feed(df: DataFrame, atom_ids=None) -> FrameFeed:
     return FrameFeed(df.sparkSession.range(0, n, 1, n), batches, scan)
 
 
-def _table(spark: SparkSession, schema: str, *cols: np.ndarray) -> DataFrame:
-    """A per-frame table of the DDL ``schema`` from its NumPy columns,
-    handed to Spark as one Arrow table (a local relation: no Python
-    rows, no RDD)."""
+def _table(spark: SparkSession, schema: StructType, *cols: np.ndarray) -> DataFrame:
+    """A per-frame table of ``schema`` from its NumPy columns, handed
+    to Spark as one Arrow table (a local relation: no Python rows, no
+    RDD)."""
     import pyarrow as pa
 
-    names = [f.split()[0] for f in schema.split(", ")]
-    return spark.createDataFrame(pa.table(dict(zip(names, cols))), schema)
+    return spark.createDataFrame(pa.table(dict(zip(schema.names, cols))), schema)
 
 
 def load_indexed(

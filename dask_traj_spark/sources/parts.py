@@ -23,6 +23,7 @@ import struct
 import numpy as np
 from pyspark.sql import functions as F
 
+from dask_traj_spark.session import shared_broadcast
 from dask_traj_spark.sources._arrow import _rows_for, gather_host
 from dask_traj_spark.sources.dcd import _write_dcd_file, read_info
 from dask_traj_spark.sources.trr import _write_trr_file
@@ -58,8 +59,8 @@ def write_traj_parts(
     os.makedirs(directory, exist_ok=True)
 
     host = gather_host(traj, xyz=False)
-    b_meta = traj.spark.sparkContext.broadcast(
-        (host.frame_ids, host.time, host.box, host.cell)
+    b_meta = shared_broadcast(
+        traj.spark.sparkContext, (host.frame_ids, host.time, host.box, host.cell)
     )
     fpp = int(frames_per_part)
     coords = traj.coords.withColumn(

@@ -392,3 +392,23 @@ def test_scan_runs_in_every_session_a_process_starts(xtc_traj_path):
     assert r.returncode == 0, r.stderr[-3000:]
     line = [ln for ln in r.stdout.splitlines() if ln.startswith("COUNTS")][-1]
     assert line == "COUNTS " + str([(120, False)] * 4), line
+
+
+def test_load_schemas_equal_their_ddl_parse(spark):
+    """The schemas ``load_indexed`` builds its tables and scans with
+    are built in Python; each equals Spark's parse of the DDL string it
+    replaced, nullability included."""
+    from pyspark.sql.types import DataType
+
+    from dask_traj_spark.sources import _arrow
+
+    box = ", ".join(f"{c} float" for c in _arrow.BOX_COLS)
+    cell = ", ".join(f"{c} float" for c in ("a", "b", "c", "alpha", "beta", "gamma"))
+    ddl = {
+        "_FRAMES_SCHEMA": "frame_id long, time double, step long",
+        "_BOX_SCHEMA": "frame_id long, " + box,
+        "_CELL_SCHEMA": "frame_id long, " + cell,
+        "_COORDS_SCHEMA": "frame_id long, atom_id int, x float, y float, z float",
+    }
+    for name, text in ddl.items():
+        assert getattr(_arrow, name) == DataType.fromDDL(text), name
