@@ -19,7 +19,9 @@ Each operator has two equivalent physical strategies (SURVEY.md §7.1):
   (:func:`_index_tiles`), so the JVM takes in one tile while the next
   is computed and a task never holds a whole block's output. On a
   loaded file the same task decodes the chunk, cut to the atoms the
-  index set reads, so the query runs one Python stage.
+  index set reads, and on a table load whose footers prove the frame
+  order it streams its run of Parquet row groups, so the query runs
+  one Python stage with no JVM scan.
 
 A new operator is a kernel plus one :func:`map_frame_blocks` call,
 or the role stitch plus the MIC step.  The trajectory analyses share
@@ -510,10 +512,15 @@ def map_frame_blocks(
 
     Plan: one ``mapInArrow``, no shuffle on a packed trajectory.  On
     a loaded file it runs over the ``range`` of chunk ids and decodes
-    each chunk in the same task, cut to the atoms' span
+    each chunk in the same task, cut to the atoms' span; on a table
+    load whose coords footers prove the frame order (one data file,
+    row-group frame ranges ascending without overlap) it runs over a
+    ``range`` of row-group runs and each task streams its run with
+    pyarrow, in (frame_id, atom_id) order
     (:func:`~dask_traj_spark.sources._arrow.frame_feed`): one Python
-    stage per task.  Any other feed (Parquet, derived, cached,
-    streaming) reaches the same loop through the JVM."""
+    stage per task, no file scan.  Any other feed (several Parquet
+    files, derived, cached, streaming) reaches the same loop through
+    the JVM."""
     return _map_blocks(traj, fn, schema, atoms, periodic, const, _block_cap(traj.spark))
 
 
@@ -540,8 +547,8 @@ def _map_blocks(traj, fn, schema, atoms, periodic: bool, const, cap: int) -> Dat
 
     out = feed.source.mapInArrow(task, schema)
     # kept on this DataFrame object only: the cut scan its tasks
-    # decode, None when the JVM feeds them
-    out._fused_scan = feed.scan
+    # decode and the row groups they read, None when the JVM feeds them
+    out._fused_scan, out._fused_row_groups = feed.scan, feed.row_groups
     return out
 
 

@@ -30,7 +30,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
-from dask_traj_spark.operators.distance import _list_column, map_frame_blocks
+from dask_traj_spark.operators.distance import _arrow_schema, _list_column, _record_batch, map_frame_blocks
+from dask_traj_spark.sources._arrow import numpy_column
 
 
 def pca_fit(traj, atoms, k: int = 3):
@@ -138,30 +139,33 @@ def tica_fit(traj, atoms, lag: int, k: int = 3, eps: float = 1e-10):
     b = feats.select(F.col("frame_id").alias("tt"), F.col("f").alias("fb"))
     pairs = a.join(b, "tt")
 
-    def partials(batches):
-        import pandas as pd
+    schema = (
+        "n long, sa array<double>, sb array<double>, "
+        "gaa array<double>, gbb array<double>, gab array<double>"
+    )
+    out_schema = _arrow_schema(schema)
 
-        for pdf in batches:
-            if not len(pdf):
+    def partials(batches):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            xa = np.stack(pdf["fa"].to_numpy())
-            xb = np.stack(pdf["fb"].to_numpy())
-            yield pd.DataFrame(
+            xa, xb = (
+                numpy_column(batch.column(c).flatten()).reshape(batch.num_rows, dim)
+                for c in ("fa", "fb")
+            )
+            yield _record_batch(
                 {
-                    "n": [len(xa)],
-                    "sa": [xa.sum(0).tolist()],
-                    "sb": [xb.sum(0).tolist()],
-                    "gaa": [(xa.T @ xa).reshape(-1).tolist()],
-                    "gbb": [(xb.T @ xb).reshape(-1).tolist()],
-                    "gab": [(xa.T @ xb).reshape(-1).tolist()],
-                }
+                    "n": np.array([len(xa)]),
+                    "sa": _list_column(xa.sum(0)[None]),
+                    "sb": _list_column(xb.sum(0)[None]),
+                    "gaa": _list_column((xa.T @ xa).reshape(1, -1)),
+                    "gbb": _list_column((xb.T @ xb).reshape(1, -1)),
+                    "gab": _list_column((xa.T @ xb).reshape(1, -1)),
+                },
+                out_schema,
             )
 
-    rows = pairs.mapInPandas(
-        partials,
-        "n long, sa array<double>, sb array<double>, "
-        "gaa array<double>, gbb array<double>, gab array<double>",
-    ).collect()
+    rows = pairs.mapInArrow(partials, schema).collect()
     if not rows:
         raise ValueError(f"no (t, t+{lag}) pairs — trajectory too short")
     n = sum(r["n"] for r in rows)

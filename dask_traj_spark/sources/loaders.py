@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from dask_traj_spark import schemas
 from dask_traj_spark.operators.mic import BOX_COLS
 from dask_traj_spark.operators.unitcell import lengths_angles_np
-from dask_traj_spark.sources._arrow import _CELL_COLS, numpy_column
+from dask_traj_spark.sources._arrow import _CELL_COLS, numpy_batch, numpy_column, take_rows
 from dask_traj_spark.trajectory import FrameIndex, Trajectory
 
 #: extension → loader kind; mirrors the reference's ``file_returns``
@@ -258,6 +258,38 @@ class CoordsFooters(NamedTuple):
     frame_ordered: bool
 
 
+#: the frame range ``[lo, hi)`` of a whole table
+ALL_FRAMES = (-(2**63), 2**63 - 1)
+#: the columns a fused table task reads, in the coords schema's order
+_COORDS_COLS = ("frame_id", "atom_id", "x", "y", "z")
+
+
+class _Group(NamedTuple):
+    """A non-empty row group of a coords data file, from its footer:
+    its file's position in the table's file list, its own position in
+    that file, its rows, its ``frame_id`` and ``atom_id`` ranges
+    (:func:`_id_range`), and its first byte and compressed bytes."""
+
+    file: int
+    index: int
+    rows: int
+    frames: tuple[int, int] | None
+    atoms: tuple[int, int] | None
+    start: int
+    size: int
+
+
+class _DataFile(NamedTuple):
+    """A coords data file as its footer was read: ``(st_size,
+    st_mtime_ns)`` of the file read, every row group's row count, and
+    the column paths."""
+
+    path: str
+    stamp: tuple[int, int]
+    rows: tuple[int, ...]
+    columns: frozenset
+
+
 def _id_range(row_group, column: int | None):
     """``(min, max)`` of an integer column in a row group's statistics,
     or None when the column is absent, its statistics are missing, or
@@ -274,16 +306,70 @@ def _id_range(row_group, column: int | None):
     return int(stats.min), int(stats.max)
 
 
-def coords_footers(path: str, frame_ids: np.ndarray | None) -> CoordsFooters:
+def _first_byte(row_group) -> int:
+    """Where a row group starts in its file, as Parquet's reader takes
+    it when it assigns row groups to splits: its first column chunk's
+    dictionary page, else its first data page."""
+    c = row_group.column(0)
+    dict_at = c.dictionary_page_offset if c.has_dictionary_page else None
+    return dict_at if dict_at and dict_at < c.data_page_offset else c.data_page_offset
+
+
+def _row_groups(path: str) -> tuple[list[_DataFile], list[_Group]] | None:
+    """Every data file of the coords table ``path`` and its non-empty
+    row groups, read from the footers on the driver with pyarrow (no
+    Spark job); None when a footer cannot be read. Each file is
+    stamped through the handle its footer is read from."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    files, groups = [], []
+    try:
+        for f in _table_files(path)[0]:
+            with open(f, "rb") as fh:
+                st = os.fstat(fh.fileno())
+                meta = pq.read_metadata(fh)
+            col = {meta.schema.column(j).path: j for j in range(meta.num_columns)}
+            rgs = [meta.row_group(i) for i in range(meta.num_row_groups)]
+            groups += [
+                _Group(
+                    len(files),
+                    i,
+                    rg.num_rows,
+                    _id_range(rg, col.get("frame_id")),
+                    _id_range(rg, col.get("atom_id")),
+                    _first_byte(rg),
+                    sum(rg.column(j).total_compressed_size for j in range(rg.num_columns)),
+                )
+                for i, rg in enumerate(rgs)
+                if rg.num_rows
+            ]
+            files.append(
+                _DataFile(f, (st.st_size, st.st_mtime_ns), tuple(rg.num_rows for rg in rgs), frozenset(col))
+            )
+    except (OSError, pa.ArrowException):
+        return None
+    return files, groups
+
+
+def coords_footers(
+    path: str, frame_ids: np.ndarray | None, frames: tuple[int, int] = ALL_FRAMES, groups=None
+) -> CoordsFooters:
     """Read the row-group statistics of every data file of the coords
     table ``path`` on the driver with pyarrow (no Spark job) and keep
-    what they prove; ``frame_ids`` are the index's ascending frame ids.
+    what they prove about its frames ``lo <= frame_id < hi``
+    (``frames``); ``frame_ids`` are the index's ascending frame ids in
+    that range, and ``groups`` what :func:`_row_groups` already read
+    (None reads it).
 
     - ``n_atoms`` is ``max(atom_id) + 1`` when every row group has
-      ``frame_id`` and ``atom_id`` statistics and no null, the least
-      ``atom_id`` is 0, the least and greatest ``frame_id`` are
-      ``frame_ids``' first and last, and the table holds
-      ``len(frame_ids) * n_atoms`` rows.
+      ``frame_id`` statistics and no null, and, over the row groups
+      wholly inside the range, ``atom_id`` statistics and no null, the
+      least ``atom_id`` is 0, the least and greatest ``frame_id`` are
+      ``frame_ids``' first and last, and they hold ``len(frame_ids) *
+      n_atoms`` rows. A row group that straddles the range holds an
+      unknown share of its frames, so the frames it holds fall outside
+      the counted span and nothing is proven.
     - ``frame_ordered`` holds when the rows sit in ONE data file whose
       row groups' ``frame_id`` ranges ascend and do not overlap, in
       file order. Spark reads each row group whole into one split and
@@ -292,41 +378,152 @@ def coords_footers(path: str, frame_ids: np.ndarray | None) -> CoordsFooters:
       Several files do not qualify: Spark orders file splits by size,
       not by frame.
     """
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    groups = []  # per non-empty row group: rows, frame_id and atom_id ranges
-    files = 0
-    try:
-        for f in _table_files(path)[0]:
-            meta = pq.read_metadata(f)
-            col = {meta.schema.column(j).path: j for j in range(meta.num_columns)}
-            rgs = [meta.row_group(i) for i in range(meta.num_row_groups)]
-            rgs = [rg for rg in rgs if rg.num_rows]
-            files += bool(rgs)
-            groups += [
-                (rg.num_rows, _id_range(rg, col.get("frame_id")), _id_range(rg, col.get("atom_id")))
-                for rg in rgs
-            ]
-    except (OSError, pa.ArrowException):
+    if groups is None:
+        groups = _row_groups(path)
+    if groups is None:
         return CoordsFooters(None, False)
-    frames = [g[1] for g in groups]
+    spans = [g.frames for g in groups[1]]
     ordered = (
-        files == 1
-        and None not in frames
-        and all(a[1] < b[0] for a, b in zip(frames, frames[1:]))
+        len({g.file for g in groups[1]}) == 1
+        and None not in spans
+        and all(a[1] < b[0] for a, b in zip(spans, spans[1:]))
     )
+    lo, hi = frames
+    inside = [g for g in groups[1] if g.frames and lo <= g.frames[0] and g.frames[1] < hi]
     n_atoms = None
-    if frame_ids is not None and len(frame_ids) and groups and all(g[1] and g[2] for g in groups):
-        n = max(g[2][1] for g in groups) + 1
+    if frame_ids is not None and len(frame_ids) and inside and None not in spans and all(g.atoms for g in inside):
+        n = max(g.atoms[1] for g in inside) + 1
         if (
-            min(g[2][0] for g in groups) == 0
-            and min(f[0] for f in frames) == frame_ids[0]
-            and max(f[1] for f in frames) == frame_ids[-1]
-            and sum(g[0] for g in groups) == len(frame_ids) * n
+            min(g.atoms[0] for g in inside) == 0
+            and min(g.frames[0] for g in inside) == frame_ids[0]
+            and max(g.frames[1] for g in inside) == frame_ids[-1]
+            and sum(g.rows for g in inside) == len(frame_ids) * n
         ):
             n_atoms = n
     return CoordsFooters(n_atoms, ordered)
+
+
+class RowGroupPlan(NamedTuple):
+    """What a fused task over a table load whose footers prove the
+    frame order reads itself (``_arrow.frame_feed``): the row groups
+    of the coords table's one data file ``path`` that hold frames
+    ``lo <= frame_id < hi`` (``frames``), as :class:`_Group` records,
+    and the file's ``stamp`` ``(st_size, st_mtime_ns)`` and every row
+    group's row count (``rows``) when its footer was read."""
+
+    path: str
+    stamp: tuple[int, int]
+    rows: tuple[int, ...]
+    groups: tuple[_Group, ...]
+    frames: tuple[int, int]
+
+    def runs(self, df: DataFrame) -> list[list[int]]:
+        """The plan's row groups (positions in ``groups``) cut into the
+        runs Spark's scan of the file reads as its splits, one run per
+        task: splits of ``FilePartition.maxSplitBytes`` bytes, a row
+        group in the split that holds its midpoint, splits with no row
+        group dropped. Empty (the JVM feeds the map) when the session
+        skips corrupt or missing files, or when the packed DataFrame
+        ``df`` reads cached data: a task reading the file would not."""
+        jspark = df.sparkSession._jsparkSession
+        conf = jspark.sessionState().conf()
+        cached = "InMemoryRelation" in df._jdf.queryExecution().withCachedData().toString()
+        if conf.ignoreCorruptFiles() or conf.ignoreMissingFiles() or cached:
+            return []
+        open_cost = conf.filesOpenCostInBytes()
+        least = conf.filesMinPartitionNum()
+        least = least.get() if least.isDefined() else jspark.leafNodeDefaultParallelism()
+        per_core = (self.stamp[0] + open_cost) // least
+        split = max(1, min(conf.filesMaxPartitionBytes(), max(open_cost, per_core)))
+        runs: dict[int, list[int]] = {}
+        for i, g in enumerate(self.groups):
+            runs.setdefault((g.start + g.size // 2) // split, []).append(i)
+        return [runs[k] for k in sorted(runs)]
+
+    def read(self, run: list[int], atoms, batch_size: int):
+        """The body of a fused table task: the row groups ``run`` as
+        record batches of the coords columns, cut to the frame range
+        and to the rows whose ``atom_id`` the ``_arrow._IdRange``
+        ``atoms`` admits (None: every atom), in (frame_id, atom_id)
+        order. Raises, naming the file, when the file's stamp or row
+        counts are not the ones its footer was read with."""
+        import pyarrow.parquet as pq
+
+        with open(self.path, "rb") as fh:
+            st = os.fstat(fh.fileno())
+            # buffered: pages stream through a 64 KiB buffer instead of
+            # each column chunk being read whole
+            pf = pq.ParquetFile(fh, buffer_size=1 << 16)
+            meta = pf.metadata
+            rows = tuple(meta.row_group(i).num_rows for i in range(meta.num_row_groups))
+            if (st.st_size, st.st_mtime_ns) != self.stamp or rows != self.rows:
+                raise RuntimeError(
+                    f"{self.path} changed after its footers were read (size, mtime_ns "
+                    f"{self.stamp} -> {(st.st_size, st.st_mtime_ns)}, row groups "
+                    f"{len(self.rows)} -> {len(rows)}): load the table again"
+                )
+            for i in run:
+                yield from self._group(pf, self.groups[i], atoms, batch_size)
+
+    def _group(self, pf, group: _Group, atoms, batch_size: int):
+        """One row group's cut rows. A check over its key columns comes
+        first, in O(rows) as their batches stream, carrying the last
+        key across batches; the rows are streamed when their keys
+        ascend, else sorted whole."""
+        lo, hi = self.frames
+        straddles = group.frames[0] < lo or group.frames[1] >= hi
+
+        def read(columns):
+            # one thread: the task runs in one Spark slot, and each
+            # decode thread holds its own buffers
+            batches = pf.iter_batches(batch_size, row_groups=[group.index], columns=list(columns), use_threads=False)
+            for batch in batches:
+                f = numpy_column(batch.column("frame_id"))
+                keep = None if atoms is None else atoms.mask(numpy_column(batch.column("atom_id")))
+                if straddles:
+                    keep = (f >= lo) & (f < hi) if keep is None else keep & (f >= lo) & (f < hi)
+                if keep is None or keep.all():
+                    yield batch
+                elif keep.any():
+                    yield take_rows(batch, keep)
+
+        last = None
+        for batch in read(_COORDS_COLS[:2]):
+            f, a = (numpy_column(batch.column(k)) for k in _COORDS_COLS[:2])
+            if last is not None:
+                f, a = np.r_[last[0], f], np.r_[last[1], a]
+            df, da = np.diff(f), np.diff(a)
+            if ((df < 0) | ((df == 0) & (da < 0))).any():
+                break
+            last = f[-1:], a[-1:]
+        else:
+            yield from read(_COORDS_COLS)
+            return
+        parts = list(read(_COORDS_COLS))
+        cols = {k: np.concatenate([numpy_column(b.column(k)) for b in parts]) for k in _COORDS_COLS}
+        order = np.lexsort((cols["atom_id"], cols["frame_id"]))
+        for s in range(0, len(order), batch_size):
+            rows = order[s : s + batch_size]
+            yield numpy_batch([c[rows] for c in cols.values()], cols)
+
+
+def read_footers(path: str, frame_ids: np.ndarray | None, frames: tuple[int, int] = ALL_FRAMES):
+    """One read of the coords table ``path``'s footers →
+    (:func:`coords_footers`' proof, the :class:`RowGroupPlan` of its
+    frames ``frames`` or None). The plan needs the proven frame order,
+    every column of the coords schema in the file, ``atom_id``
+    statistics with no null in every row group, and a row group that
+    holds a frame of the range."""
+    groups = _row_groups(path)
+    footers = coords_footers(path, frame_ids, frames, groups)
+    if not footers.frame_ordered:
+        return footers, None
+    data = groups[0][groups[1][0].file]
+    lo, hi = frames
+    kept = tuple(g for g in groups[1] if g.frames[1] >= lo and g.frames[0] < hi)
+    if not kept or not set(_COORDS_COLS) <= data.columns or not all(g.atoms for g in groups[1]):
+        return footers, None
+    return footers, RowGroupPlan(data.path, data.stamp, data.rows, kept, frames)
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
@@ -423,10 +620,11 @@ def load_tables(spark: SparkSession, directory: str) -> Trajectory:
     operator's box start none either. The index carries frame ids and
     a vector box. The atom count and the frame order of the coords
     come from their Parquet footers (:func:`coords_footers`), read
-    once, by the first ``n_atoms`` or ``frame_packed()``: where the
-    footers prove them, ``n_atoms`` starts no job and the vectorized
-    feed sorts each scan partition in place instead of range-shuffling
-    the table."""
+    once, by the first ``n_atoms`` or ``frame_packed()``
+    (:func:`read_footers`): where the footers prove them, ``n_atoms``
+    starts no job, ``frame_packed()`` sorts each scan partition in
+    place instead of range-shuffling the table, and a vectorized query
+    reads the row groups in its own map tasks (:class:`RowGroupPlan`)."""
     t = _tables(spark, directory)
     # normalize column ORDER, not just the set: after a dynamic
     # partition-overwrite compaction the scan can surface data
@@ -436,7 +634,7 @@ def load_tables(spark: SparkSession, directory: str) -> Trajectory:
     index = _table_index(directory, t)
     traj = Trajectory(coords, t["frames"], t["unitcell"], t["topology"], index=index)
     traj._read_footers = functools.partial(
-        coords_footers,
+        read_footers,
         os.path.join(directory, "coords.parquet"),
         None if index is None else index.frame_ids,
     )
@@ -500,7 +698,11 @@ def load_frame_range(
     ``frame_bucket`` predicate so whole hive partitions are pruned
     before any I/O — a frame_id predicate alone cannot prune a
     directory keyed on a derived column, so the engine derives it
-    from the stored metadata."""
+    from the stored metadata. The coords footers are read as
+    ``load_tables`` reads them, over the range (:func:`read_footers`):
+    the atom count from the row groups wholly inside it, the frame
+    order of one data file, and a fused feed that skips the row groups
+    outside the range and cuts those that straddle it."""
     meta_path = os.path.join(directory, "_traj_meta.json")
     n = None
     if os.path.exists(meta_path):
@@ -524,13 +726,15 @@ def load_frame_range(
             return None
         return df.where((F.col("frame_id") >= lo) & (F.col("frame_id") < hi))
 
-    return Trajectory(
-        coords,
-        in_range(t["frames"]),
-        in_range(t["unitcell"]),
-        t["topology"],
-        index=_table_index(directory, t, lo, hi),
+    index = _table_index(directory, t, lo, hi)
+    traj = Trajectory(coords, in_range(t["frames"]), in_range(t["unitcell"]), t["topology"], index=index)
+    traj._read_footers = functools.partial(
+        read_footers,
+        os.path.join(directory, "coords.parquet"),
+        None if index is None else index.frame_ids,
+        (lo, hi),
     )
+    return traj
 
 
 def from_wide_pandas(

@@ -17,7 +17,8 @@ Scale notes (100 TB posture):
   when the trajectory is ``packed=True`` — every trajectory loaded
   from a file is, as its scan's chunks already hold whole sorted
   frames — and a sort in place when a table load's coords footers
-  prove the scan's frame order. It is the feed of every vectorized
+  prove the scan's frame order (whose vectorized ops then read the row
+  groups in their own tasks). It is the feed of every vectorized
   geometry op, which then runs partition-local. Cache it when running
   >1 op.
 - slicing/striding are pure frame_id predicates → partition pruning
@@ -85,10 +86,10 @@ class Trajectory:
         trajectories (joins) carry none and count instead.
     """
 
-    #: ``load_tables`` sets this to a function of no arguments that
-    #: reads the coords table's Parquet footers
-    #: (``sources.loaders.coords_footers``); None on any other
-    #: trajectory
+    #: ``load_tables`` and ``load_frame_range`` set this to a function
+    #: of no arguments that reads the coords table's Parquet footers
+    #: (``sources.loaders.read_footers``: what they prove, and the row
+    #: groups a fused feed reads); None on any other trajectory
     _read_footers = None
 
     def __init__(
@@ -134,12 +135,19 @@ class Trajectory:
         return self.coords.select("frame_id").distinct().count()
 
     @cached_property
+    def _footer_read(self):
+        """The coords Parquet footers of a table load, read on the
+        driver at most once, by the first ``n_atoms`` or
+        ``frame_packed()``: (what they prove, the
+        ``sources.loaders.RowGroupPlan`` or None); (None, None) for
+        any other trajectory."""
+        return (None, None) if self._read_footers is None else self._read_footers()
+
+    @property
     def _footers(self):
-        """What the coords Parquet footers of a ``load_tables``
-        trajectory prove (``sources.loaders.CoordsFooters``), read on
-        the driver at most once, by the first ``n_atoms`` or
-        ``frame_packed()``; None for any other trajectory."""
-        return None if self._read_footers is None else self._read_footers()
+        """What the coords footers prove
+        (``sources.loaders.CoordsFooters``), or None."""
+        return self._footer_read[0]
 
     @cached_property
     def n_atoms(self) -> int:
@@ -236,13 +244,18 @@ class Trajectory:
         ``mapInArrow`` over the chunk ids that decodes each chunk,
         cut to the atoms the operator reads, and runs the kernel in
         the same task: ``sources._arrow.frame_feed``). A
-        ``load_tables`` trajectory whose coords footers prove the
-        scan's frame order (one data file, row-group frame ranges
-        ascending without overlap: ``sources.loaders.coords_footers``)
-        gets only the in-partition sort, which restores the atom order
-        footers cannot prove: one stage, no ``Exchange``, no sampling
-        job. Memoized; ``traj.frame_packed().cache()`` before running
-        several geometry ops.
+        ``load_tables`` or ``load_frame_range`` trajectory whose coords
+        footers prove the scan's frame order (one data file, row-group
+        frame ranges ascending without overlap:
+        ``sources.loaders.coords_footers``) gets only the in-partition
+        sort, which restores the atom order footers cannot prove: one
+        stage, no ``Exchange``, no sampling job. A vectorized query does
+        not read that DataFrame: its map tasks stream the file's row
+        groups themselves and restore the order there
+        (``sources.loaders.RowGroupPlan``, kept on the DataFrame), so
+        the JVM neither scans nor sorts. Memoized;
+        ``traj.frame_packed().cache()`` before running several geometry
+        ops (a cached one feeds them through the JVM).
 
         At 100 TB this is the layout the storage should already have:
         parquet bucketed/sorted by frame ranges makes every geometry
@@ -254,6 +267,10 @@ class Trajectory:
             self._packed_df = self.coords
         elif self._footers is not None and self._footers.frame_ordered:
             self._packed_df = self.coords.sortWithinPartitions("frame_id", "atom_id")
+            # kept on this DataFrame object only, as a file scan keeps
+            # its chunk plan: the row groups a fused map task reads
+            # itself (``sources._arrow.frame_feed``)
+            self._packed_df._row_groups = self._footer_read[1]
         else:
             self._packed_df = self.coords.repartitionByRange(
                 "frame_id"
